@@ -38,16 +38,16 @@ object Tuning {
     math.max(1L, math.min(want, ceil)).toInt
   }
 
-  /** Total on-disk size of a staged local directory (the streaming
-    * queries' backlog measurement — at stream start the whole backlog is
-    * the upper bound of state volume).
+  /** Total size of the files under `path` (a directory or one file; 0
+    * when it does not exist), measured through the Hadoop `FileSystem`
+    * of its scheme — the streaming queries' backlog measurement (at
+    * stream start the whole backlog is the upper bound of state volume).
     */
-  def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    walk(new java.io.File(path))
+  def dirBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try p.getFileSystem(spark.sessionState.newHadoopConf())
+      .getContentSummary(p).getLength
+    catch { case _: java.io.FileNotFoundException => 0L }
   }
 
   /** Size estimate of a DataFrame from Catalyst statistics (exact file

@@ -196,6 +196,15 @@ object ClusterIndex {
     (relabeled.unionByName(freshFirst), Seq(cc))
   }
 
+  /** Drop a `localCheckpoint`'s blocks. `Dataset.unpersist` only
+    * uncaches `cache()`d plans, so the checkpointed RDD is unpersisted
+    * directly; the frame must have no readers left.
+    */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   /** Fold a batch of fresh near-dup pairs (columns `id_a`, `id_b` — a
     * [[DedupIndex.fold]]/[[ApssIndex.fold]] result) into the maintained
     * labels: compute the changed labels against the prior state, commit
@@ -238,12 +247,15 @@ object ClusterIndex {
       val prior = resolved(spark, dir, name, v).persist()
       val (changed, handles) = changedLabels(freshCk, prior)
       // the write is this operator's single action over the cached
-      // frames — unpersist them afterwards so a long-lived session
-      // calling fold() repeatedly doesn't accumulate cached blocks
-      // (r10, advisor)
+      // frames and the checkpointed pairs — release them all afterwards
+      // (the returned frame reads the written delta) so a long-lived
+      // session calling fold() repeatedly doesn't accumulate blocks
       try changed.write.mode("overwrite")
         .parquet(deltaPath(dir, name, v, g))
-      finally (prior +: handles).foreach(_.unpersist())
+      finally {
+        (prior +: handles).foreach(_.unpersist())
+        releaseCheckpoint(freshCk)
+      }
     }
     val marker = new org.apache.hadoop.fs.Path(
       s"${foldsDir(dir, name, v)}/g$g.ok")

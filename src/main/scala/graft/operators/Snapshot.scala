@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.io.SingleFile
+import graft.conf.Tuning
+import graft.io.{FooterSchema, SingleFile}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -43,7 +44,11 @@ final case class SnapshotOptions(
   *    so later actions never touch the replaced one;
   *  - at scale the snapshot should live as a parquet *directory* partitioned
   *    by PK bucket (`useDirectoryLayout`), keeping the merge shuffle aligned
-  *    run over run; single-file mode is reference parity for small state.
+  *    run over run; single-file mode is reference parity for small state;
+  *  - job budget of a single-file parquet merge below the
+  *    [[graft.conf.Tuning.withSmallInputScope]] gate: ONE Spark job (the
+  *    shuffle and the write). Both reads resolve their schema from the
+  *    footer ([[graft.io.FooterSchema]]) instead of an inference job.
   */
 object Snapshot {
 
@@ -59,7 +64,7 @@ object Snapshot {
     val parquetPath = s"$snapshotDir/$stream.snapshot.parquet"
     val csvPath = s"$snapshotDir/$stream.snapshot.csv"
     if (SingleFile.exists(spark, parquetPath))
-      Some(spark.read.parquet(parquetPath))
+      Some(FooterSchema.read(spark, parquetPath))
     else if (SingleFile.exists(spark, csvPath))
       Some(spark.read
         .option("header", "true").option("inferSchema", "true")
@@ -122,6 +127,10 @@ object Snapshot {
       }
     }
 
+  /** `a + b` for non-negative sizes, saturating at `Long.MaxValue`. */
+  private def addBytes(a: Long, b: Long): Long =
+    if (a > Long.MaxValue - b) Long.MaxValue else a + b
+
   private def snapshotPath(
       snapshotDir: String, stream: String, useCsv: Boolean): String =
     s"$snapshotDir/$stream.snapshot.${if (useCsv) "csv" else "parquet"}"
@@ -183,7 +192,14 @@ object Snapshot {
             }
           else (localized, data)
         val merged = Upsert.keepLast(oldC, dataC, opts.pk)
-        try writeSnapshot(spark, merged, path, opts)
+        // a single-file merge below the size gate runs its shuffle and
+        // write as one job; the directory layout keeps its PK partitioning
+        val scopeBytes =
+          if (opts.directoryLayout && !opts.useCsv) Long.MaxValue
+          else addBytes(
+            Tuning.estimatedBytes(old), Tuning.estimatedBytes(data))
+        try Tuning.withSmallInputScope(spark, scopeBytes)(
+          writeSnapshot(spark, merged, path, opts))
         catch {
           case e: Exception if opts.coerceTypes => throw new RuntimeException(
             "Snapshot failed while trying to convert field during " +
@@ -194,7 +210,7 @@ object Snapshot {
           if (opts.useCsv) spark.read
             .option("header", "true").option("inferSchema", "true")
             .options(opts.csvOptions).csv(path)
-          else spark.read.parquet(path))
+          else FooterSchema.read(spark, path))
 
       case (Some(data), _) => // first snapshot or overwrite
         writeSnapshot(spark, data, path, opts)

@@ -353,7 +353,7 @@ object DedupQueries {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, graft.conf.Tuning.partitionsForBytes(
-      spark, graft.conf.Tuning.dirBytes(staged)).toString)
+      spark, graft.conf.Tuning.dirBytes(spark, staged)).toString)
     try {
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -994,7 +994,8 @@ object DedupQueries {
     // r10: size-gated fixed-cost scope over build and per-batch folds
     // (AQE off + bytes-derived partitions below the gate; unchanged at
     // scale)
-    val corpusBytes = graft.conf.Tuning.dirBytes(s"$dir/documents.parquet")
+    val corpusBytes =
+      graft.conf.Tuning.dirBytes(spark, s"$dir/documents.parquet")
     graft.conf.Tuning.withSmallInputScope(spark, corpusBytes) {
       DedupIndex.build(spark, docs.filter(col("doc_id") % 3 === 1),
         idxDir, "docs", "doc_id", "text",
@@ -1254,7 +1255,8 @@ object DedupQueries {
     // r10: size-gated fixed-cost scope over the build and the per-batch
     // folds (AQE off + bytes-derived partitions below the gate — each
     // action one job instead of one per exchange; unchanged at scale)
-    val corpusBytes = graft.conf.Tuning.dirBytes(s"$dir/documents.parquet")
+    val corpusBytes =
+      graft.conf.Tuning.dirBytes(spark, s"$dir/documents.parquet")
     graft.conf.Tuning.withSmallInputScope(spark, corpusBytes) {
       ApssIndex.build(spark, docs.filter(col("doc_id") % 3 === 1),
         idxDir, "docs", "doc_id", "text", floorPermil = 550, k = 3)
@@ -1417,7 +1419,8 @@ object DedupQueries {
     // working set far larger than the input bytes — serializing it was
     // measured at +6 s), and connectedComponents size-gates its own
     // contraction rounds internally on the measured edge count.
-    val corpusBytes = graft.conf.Tuning.dirBytes(s"$dir/documents.parquet")
+    val corpusBytes =
+      graft.conf.Tuning.dirBytes(spark, s"$dir/documents.parquet")
     graft.conf.Tuning.withSmallInputScope(spark, corpusBytes) {
       DedupIndex.build(spark, seed, idxDir, "docs", "doc_id", "text",
         k = 3, numHashes = 128, bandRows = 2)

@@ -58,7 +58,7 @@ object EventQueries {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, graft.conf.Tuning.partitionsForBytes(
-      spark, graft.conf.Tuning.dirBytes(stagedDir)).toString)
+      spark, graft.conf.Tuning.dirBytes(spark, stagedDir)).toString)
     try start.awaitTermination() finally spark.conf.set(key, prev)
   }
 

@@ -650,7 +650,8 @@ object RetrievalQueries {
     // r10: size-gated fixed-cost scope over the build and per-batch folds
     // (AQE off + bytes-derived partitions below the gate; unchanged at
     // scale) — each sign/write action runs as one job
-    val corpusBytes = graft.conf.Tuning.dirBytes(s"$dir/documents.parquet")
+    val corpusBytes =
+      graft.conf.Tuning.dirBytes(spark, s"$dir/documents.parquet")
     graft.conf.Tuning.withSmallInputScope(spark, corpusBytes) {
       SearchIndex.build(spark, docs.filter(col("doc_id") % 2 === 0),
         idxDir, "docs", "doc_id", "text")

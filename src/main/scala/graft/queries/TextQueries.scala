@@ -2241,7 +2241,7 @@ object TextQueries {
         // explosion — size-gate the fixed-cost scope on the staged
         // backlog bytes (one job per state swap below the gate)
         graft.conf.Tuning.withSmallInputScope(batch.sparkSession,
-          graft.conf.Tuning.dirBytes(staged)) {
+          graft.conf.Tuning.dirBytes(batch.sparkSession, staged)) {
           val batchCounts = Dsir.countsFromPairs(
             Dsir.hashedFeatures(
               batch.withColumn("_dsir_target", col("lang") === "en"),

@@ -3,14 +3,19 @@ package graft.sources
 import graft.catalog.CatalogSchema
 import graft.catalog.CatalogSchema.Catalog
 import graft.conf.GluestickConf
+import graft.io.FooterSchema
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.{Charset, StandardCharsets}
+import java.util.Locale
 
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
@@ -41,7 +46,10 @@ final case class ReaderOptions(
   *    frame per cast, ref: src/reader.ts:73-81);
   *  - parquet key-value footer metadata is read for real via
   *    `ParquetFileReader` — the reference stubs this with a warning
-  *    (ref: src/reader.ts:147-157).
+  *    (ref: src/reader.ts:147-157);
+  *  - `get` runs no Spark job for a single parquet file (schema from the
+  *    footer, [[graft.io.FooterSchema]]) or a single CSV file with
+  *    `catalogTypes` (header read through the `FileSystem`).
   */
 final class Reader(
     val spark: SparkSession,
@@ -124,7 +132,7 @@ final class Reader(
       filepath: String,
       options: ReaderOptions): Option[DataFrame] =
     loggedRead(stream, filepath) {
-      val df = spark.read.parquet(filepath)
+      val df = FooterSchema.read(spark, filepath)
       if (!options.catalogTypes) df
       else {
         // Per-column lenient cast (ref: src/reader.ts:73-81 try/warn).
@@ -158,12 +166,10 @@ final class Reader(
         else {
           // Catalog dtypes become the *read schema* (single pass over the
           // data — the typed scan replaces Polars' dtype option,
-          // ref: src/reader.ts:100-105). Header columns come from a 0-row
-          // probe (ref: src/reader.ts:262) that must honor the same CSV
-          // options (delimiter etc.) as the real read.
-          val headers = spark.read.option("header", "true")
-            .option("quote", "\"").options(options.csvOptions).csv(filepath)
-            .schema.fieldNames.toSeq
+          // ref: src/reader.ts:100-105). Header columns
+          // (ref: src/reader.ts:262) must honor the same CSV options
+          // (delimiter etc.) as the real read.
+          val headers = csvHeader(filepath, options.csvOptions)
           val st = for {
             catalog <- readCatalog()
             cs <- catalog.find(stream)
@@ -190,6 +196,59 @@ final class Reader(
           try_to_timestamp(col(c), lit("yyyy-MM-dd"))))
       }
     }
+
+  /** CSV header names as Spark's CSV reader resolves them. For a single
+    * file the first non-blank, non-comment line is read through the
+    * `FileSystem` and parsed by Spark's CSV reader over a one-line
+    * Dataset — same options, same header rules, no job. Directories,
+    * `multiLine`, a custom `lineSep`, or no such line take the 0-row
+    * probe over the path (one job).
+    */
+  private def csvHeader(
+      filepath: String, csvOptions: Map[String, String]): Seq[String] = {
+    def reader = spark.read.option("header", "true")
+      .option("quote", "\"").options(csvOptions)
+    firstCsvLine(filepath, csvOptions) match {
+      case Some(line) =>
+        // no type inference: it would run a job and cannot rename columns
+        reader.option("inferSchema", "false")
+          .csv(spark.createDataset(Seq(line))(Encoders.STRING))
+          .schema.fieldNames.toSeq
+      case None => reader.csv(filepath).schema.fieldNames.toSeq
+    }
+  }
+
+  /** The line Spark's CSV inference takes the header from: the first one
+    * that is not blank and does not start with the `comment` character,
+    * decoded with `encoding` (Hadoop's line reader drops a UTF-8 BOM).
+    * None where that line is not a plain line of one file.
+    */
+  private def firstCsvLine(
+      filepath: String, csvOptions: Map[String, String]): Option[String] = {
+    val o = csvOptions.map { case (k, v) => k.toLowerCase(Locale.ROOT) -> v }
+    val comment = o.get("comment")
+    if (o.get("multiline").exists(_.equalsIgnoreCase("true")) ||
+        o.contains("linesep") || comment.exists(_.length != 1)) None
+    else {
+      val p = new Path(filepath)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      if (!fs.getFileStatus(p).isFile) None
+      else {
+        val charset = Charset.forName(
+          o.getOrElse("encoding", o.getOrElse("charset", "UTF-8")))
+        val in = new BufferedReader(
+          new InputStreamReader(fs.open(p), charset))
+        try {
+          val first = Option(in.readLine()).map(l =>
+            if (charset == StandardCharsets.UTF_8) l.stripPrefix("\uFEFF")
+            else l)
+          (first.iterator ++
+            Iterator.continually(in.readLine()).takeWhile(_ != null))
+            .find(l => l.trim.nonEmpty && !comment.exists(l.startsWith))
+        } finally in.close()
+      }
+    }
+  }
 
   /** Parquet footer key-value metadata (S5). The reference stubs this
     * (ref: src/reader.ts:141-160 returns `{}` with a warning); Spark's

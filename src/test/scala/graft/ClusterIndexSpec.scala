@@ -41,6 +41,18 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     assert(maintained(41L) == 20L) // the chained merge landed
   }
 
+  test("repeated folds in one session leave no persisted RDDs behind") {
+    val dir = tmpDir("clidx_leak")
+    ClusterIndex.build(spark, pairs((1L, 2L)), dir, "d")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    (1L to 20L).foreach { i =>
+      ClusterIndex.fold(spark, pairs((10 * i, 10 * i + 1)), dir, "d").count()
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size <= before,
+      spark.sparkContext.getPersistentRDDs.values.mkString("\n"))
+    assert(lab(ClusterIndex.labels(spark, dir, "d")).size == 42)
+  }
+
   test("a fresh node below the stored min relabels the whole component") {
     val dir = tmpDir("clidx_min")
     ClusterIndex.build(spark, pairs((10L, 11L), (11L, 12L)), dir, "d")

@@ -716,20 +716,6 @@ class SingerSourceSpec extends AnyFunSuite with SparkSpec {
       s"""{"type":["object","null"],"properties":{$props}},""" +
       """"key_properties":[]}"""
 
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.graftbench.BusFlush.flush(spark) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
-
   test("mergeSchemas over 1000 files infers via ONE Spark job, not driver opens") {
     val dir = tmpDir("singer_dist_infer")
     new java.io.File(dir).mkdirs()
@@ -747,7 +733,7 @@ class SingerSourceSpec extends AnyFunSuite with SparkSpec {
         schemaLine("t", props) + "\n" + rec + "\n")
     }
     var schema: org.apache.spark.sql.types.StructType = null
-    val jobs = countJobs {
+    val jobs = jobsRunBy {
       schema = spark.read.format("graft-singer")
         .option("mergeSchemas", "true").load(dir).schema
     }
@@ -773,7 +759,7 @@ class SingerSourceSpec extends AnyFunSuite with SparkSpec {
         schemaLine("t", idP) + "\n" +
           s"""{"type":"RECORD","stream":"t","record":{"id":$i}}""" + "\n")
     }
-    val jobs = countJobs {
+    val jobs = jobsRunBy {
       val s = spark.read.format("graft-singer")
         .option("mergeSchemas", "true").load(dir).schema
       assert(s.fieldNames.toSeq == Seq("id"))

@@ -27,4 +27,26 @@ trait SparkSpec {
       }, prefix)
     d.toString
   }
+
+  /** Spark jobs `body` submits from this thread (jobs of other threads
+    * sharing the session are not counted).
+    */
+  def jobsRunBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobTag"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(key) == tag)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, tag)
+    try { body; org.apache.spark.graftbench.BusFlush.flush(spark) }
+    finally { sc.setLocalProperty(key, null); sc.removeSparkListener(l) }
+    jobs.get
+  }
 }
