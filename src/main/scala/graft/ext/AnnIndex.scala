@@ -55,12 +55,9 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex {
 
-  private def layoutDir(dir: String, name: String): String =
-    s"$dir/$name.annindex"
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def index(spark: SparkSession, dir: String, name: String) =
+    graft.io.VersionedIndex(spark, s"$dir/$name.annindex",
+      s"ann index '$name' at $dir")
 
   /** Newest committed version, if the index exists — the shared
     * [[graft.io.VersionPointer]] contract: `<version> ok` records,
@@ -69,54 +66,14 @@ object AnnIndex {
     */
   def currentVersion(
       spark: SparkSession, dir: String, name: String): Option[Int] =
-    graft.io.VersionPointer.current(spark, layoutDir(dir, name))
+    index(spark, dir, name).current
 
   /** Committed versions still inside the retention window — the
     * time-travel targets the readers' `atVersion` accepts.
     */
   def versions(
-      spark: SparkSession, dir: String, name: String): Seq[Int] = {
-    val cur = currentVersion(spark, dir, name)
-    graft.io.VersionPointer.versionDirs(spark, layoutDir(dir, name))
-      .filter(v => cur.exists(v <= _))
-  }
-
-  private def resolveRead(
-      spark: SparkSession, dir: String, name: String,
-      atVersion: Option[Int]): Int =
-    graft.io.VersionPointer.resolveRead(spark, layoutDir(dir, name),
-      atVersion, s"ann index '$name' at $dir")
-
-  private def commitVersion(
-      spark: SparkSession, dir: String, name: String, version: Int): Unit =
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), version)
-
-  private def centroidsPath(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/centroids"
-
-  // r10: memoized per-version artifact schemas — see DedupIndex.readStored
-  // (schema-inferring reads each pay a footer job; artifact schemas are
-  // frozen per version). Invalidated per version dir on writeVersion's
-  // orphan drop (a rebuild of the same version number may change types).
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def readStored(
-      spark: SparkSession, schemaKey: String, path: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(
-      schemaKey, p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(path)
-  }
-
-  private def invalidateSchemas(
-      dir: String, name: String, v: Int): Unit = {
-    val prefix = s"${layoutDir(dir, name)}/v$v/"
-    schemaCache.keySet.removeIf(_.startsWith(prefix))
-    ()
-  }
-
-  private def postingsPath(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/postings"
+      spark: SparkSession, dir: String, name: String): Seq[Int] =
+    index(spark, dir, name).versions
 
   /** The frozen quantizer of the current (or a retained historical)
     * version.
@@ -124,36 +81,28 @@ object AnnIndex {
   def centroids(
       spark: SparkSession, dir: String, name: String,
       atVersion: Option[Int] = None): DataFrame = {
-    val v = resolveRead(spark, dir, name, atVersion)
-    readStored(spark, centroidsPath(dir, name, v),
-      centroidsPath(dir, name, v))
+    val ix = index(spark, dir, name)
+    ix.artifact(ix.resolve(atVersion), "centroids")
   }
 
+  /** Writes the IVF artifacts of (unpublished) version `version`. */
   private def writeVersion(
-      spark: SparkSession, corpus: DataFrame, dir: String, name: String,
-      idCol: String, vecCol: String, numCentroids: Int, dim: Int,
-      version: Int): Unit = {
-    // `version` is by construction uncommitted (callers pass
-    // currentVersion+1): drop any orphan dir a failed predecessor left,
-    // or its errorifexists writes below would fail permanently until
-    // someone hand-deleted the orphan
-    dropVersionDir(spark, dir, name, version)
-    invalidateSchemas(dir, name, version)
+      ix: graft.io.VersionedIndex, corpus: DataFrame, idCol: String,
+      vecCol: String, numCentroids: Int, dim: Int, version: Int): Unit = {
     // lloydCentroids' seed assignment uses the fused graft_ivf_cells —
     // register here so a fresh session can build without having run an
     // ivfTopK* query first
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.HyperplaneExpressions.register(spark)
+    graft.functions.VectorExpressions.register(ix.spark)
+    graft.functions.HyperplaneExpressions.register(ix.spark)
     val cent = Similarity.lloydCentroids(
       corpus, idCol, vecCol, numCentroids, dim)
     cent.coalesce(1).write.mode("errorifexists")
-      .parquet(centroidsPath(dir, name, version))
-    val frozen = readStored(spark, centroidsPath(dir, name, version),
-      centroidsPath(dir, name, version))
+      .parquet(ix.path(version, "centroids"))
+    val frozen = ix.artifact(version, "centroids")
     Similarity.assignCells(corpus, idCol, vecCol, frozen, probes = 1)
       .select(col(idCol), col(vecCol), col("__cell").as("cell"))
       .write.mode("errorifexists").partitionBy("cell")
-      .parquet(postingsPath(dir, name, version))
+      .parquet(ix.path(version, "postings"))
   }
 
   /** Train + write version 1 (or N+1 over an existing index — a manual
@@ -164,41 +113,11 @@ object AnnIndex {
       spark: SparkSession, corpus: DataFrame, dir: String, name: String,
       idCol: String, vecCol: String, numCentroids: Int = 16,
       dim: Int = 64, retainVersions: Int = 2): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(0) + 1
-    writeVersion(spark, corpus, dir, name, idCol, vecCol, numCentroids,
-      dim, v)
-    commitVersion(spark, dir, name, v)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v, retainVersions)
-  }
-
-  /** GC one version dir through the Hadoop FS API (the
-    * BucketedSnapshot.dropVersion pattern) — a java.io.File delete is a
-    * silent no-op on any non-local or scheme-qualified filesystem and
-    * would leak every superseded version's centroids + postings.
-    */
-  private def dropVersionDir(
-      spark: SparkSession, dir: String, name: String, v: Int): Unit =
-    graft.io.VersionPointer.dropDir(spark, s"${layoutDir(dir, name)}/v$v")
-
-  private def foldsDir(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/_folds"
-
-  private def deltaPath(dir: String, name: String, v: Int, g: Long): String =
-    s"${layoutDir(dir, name)}/v$v/deltas/g$g"
-
-  private val FoldMarkerRe = """g(\d+)\.ok""".r
-
-  /** Generations with a committed fold marker in this version. */
-  private def committedFolds(
-      spark: SparkSession, dir: String, name: String, v: Int): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(foldsDir(dir, name, v))
-    val f = fs(spark, p.toString)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq.flatMap(_.getPath.getName match {
-      case FoldMarkerRe(g) => Some(g.toLong)
-      case _ => None
-    }).sorted
+    val ix = index(spark, dir, name)
+    val v = ix.current.getOrElse(0) + 1
+    ix.publish(v, retainVersions) {
+      writeVersion(ix, corpus, idCol, vecCol, numCentroids, dim, v)
+    }
   }
 
   /** All committed postings of version `v`: the base plus every
@@ -208,11 +127,9 @@ object AnnIndex {
     * as conflicting directory structures) and unioned by name; the cell
     * partition column prunes per branch exactly as it does on one root.
     */
-  private def readPostings(
-      spark: SparkSession, dir: String, name: String, v: Int): DataFrame =
-    (postingsPath(dir, name, v) +:
-      committedFolds(spark, dir, name, v).map(deltaPath(dir, name, v, _)))
-      .map(readStored(spark, postingsPath(dir, name, v), _))
+  private def readPostings(ix: graft.io.VersionedIndex, v: Int): DataFrame =
+    (ix.path(v, "postings") +: ix.committedFolds(v).map(ix.delta(v, _)))
+      .map(ix.read(ix.path(v, "postings"), _))
       .reduce(_.unionByName(_))
 
   /** Fold new vectors into the current version: assign against the
@@ -236,31 +153,18 @@ object AnnIndex {
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
       idCol: String, vecCol: String,
       generation: Option[Long] = None): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"ann index '$name' at $dir does not exist — build() it first"))
-    require(!hasCodebooks(spark, dir, name, v),
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    require(!hasCodebooks(ix, v),
       s"ann index '$name' at $dir is a PQ index — fold() would leave its " +
         "code postings stale; use foldPq()")
-    val cent = readStored(spark, centroidsPath(dir, name, v),
-      centroidsPath(dir, name, v))
-    val committed = committedFolds(spark, dir, name, v)
-    val g = generation.getOrElse(committed.lastOption.getOrElse(0L) + 1L)
-    if (committed.contains(g)) return // committed replay: pure no-op
-    require(committed.forall(_ < g),
-      s"fold generation $g is below already-committed generations " +
-        s"${committed.filter(_ > g).mkString(", ")} — out-of-order " +
-        "batch identities would make the replay no-op ambiguous")
-    Similarity.assignCells(fresh, idCol, vecCol, cent, probes = 1)
-      .select(col(idCol), col(vecCol), col("__cell").as("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(deltaPath(dir, name, v, g))
-    val marker = new org.apache.hadoop.fs.Path(
-      s"${foldsDir(dir, name, v)}/g$g.ok")
-    val f = fs(spark, marker.toString)
-    val out = f.create(marker, false)
-    try out.write("ok".getBytes("UTF-8")) finally out.close()
-    ()
+    val cent = ix.artifact(v, "centroids")
+    ix.fold(v, generation) { g =>
+      Similarity.assignCells(fresh, idCol, vecCol, cent, probes = 1)
+        .select(col(idCol), col(vecCol), col("__cell").as("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(ix.delta(v, g))
+    }
   }
 
   /** Re-train the quantizer over the accumulated corpus into version
@@ -273,51 +177,37 @@ object AnnIndex {
       spark: SparkSession, dir: String, name: String, idCol: String,
       vecCol: String, numCentroids: Int = 16, dim: Int = 64,
       retainVersions: Int = 2): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"ann index '$name' at $dir does not exist — build() it first"))
-    require(!hasCodebooks(spark, dir, name, v),
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    require(!hasCodebooks(ix, v),
       s"ann index '$name' at $dir is a PQ index — retrain() would drop " +
         "its codebooks and codes; use retrainPq()")
-    val corpus = readPostings(spark, dir, name, v)
+    val corpus = readPostings(ix, v)
       .select(col(idCol), col(vecCol))
       // materialize before the promote: the lazy plan reads version v,
       // which retainVersions = 1 GCs right after
       .localCheckpoint()
-    writeVersion(spark, corpus, dir, name, idCol, vecCol, numCentroids,
-      dim, v + 1)
-    commitVersion(spark, dir, name, v + 1)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v + 1, retainVersions)
+    try ix.publish(v + 1, retainVersions) {
+      writeVersion(ix, corpus, idCol, vecCol, numCentroids, dim, v + 1)
+    } finally graft.io.VersionedIndex.releaseCheckpoint(corpus)
   }
 
   // ---- persisted IVF-PQ: codebooks + packed code postings ----------------
 
-  private def codebooksPath(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/codebooks"
+  private def codesDelta(
+      ix: graft.io.VersionedIndex, v: Int, g: Long): String =
+    ix.path(v, s"codes_deltas/g$g")
 
-  private def codesPath(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/codes"
-
-  private def codesDeltaPath(
-      dir: String, name: String, v: Int, g: Long): String =
-    s"${layoutDir(dir, name)}/v$v/codes_deltas/g$g"
-
-  private def hasCodebooks(
-      spark: SparkSession, dir: String, name: String, v: Int): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(codebooksPath(dir, name, v))
-    fs(spark, p.toString).exists(p)
-  }
+  private def hasCodebooks(ix: graft.io.VersionedIndex, v: Int): Boolean =
+    ix.exists(ix.path(v, "codebooks"))
 
   /** All committed code postings of version `v` (base + committed fold
     * deltas), UNPACKED to (cid, cell, m, cw) rows for the ADC join.
     */
   private def readCodes(
-      spark: SparkSession, dir: String, name: String, v: Int,
-      idCol: String): DataFrame =
-    (codesPath(dir, name, v) +:
-      committedFolds(spark, dir, name, v).map(codesDeltaPath(dir, name, v, _)))
-      .map(readStored(spark, codesPath(dir, name, v), _))
+      ix: graft.io.VersionedIndex, v: Int, idCol: String): DataFrame =
+    (ix.path(v, "codes") +: ix.committedFolds(v).map(codesDelta(ix, v, _)))
+      .map(ix.read(ix.path(v, "codes"), _))
       .reduce(_.unionByName(_))
       .select(col(idCol).as("cid"), col("cell"),
         posexplode(col("codes")).as(Seq("m", "cw")))
@@ -370,44 +260,41 @@ object AnnIndex {
       idCol: String, vecCol: String, numCentroids: Int = 16,
       dim: Int = 64, numSub: Int = 8, codebookSize: Int = 16,
       retainVersions: Int = 2): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(0) + 1
-    buildPqAt(spark, corpus, dir, name, idCol, vecCol, numCentroids, dim,
-      numSub, codebookSize, v)
-    commitVersion(spark, dir, name, v)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.current.getOrElse(0) + 1
+    ix.publish(v, retainVersions) {
+      buildPqAt(ix, corpus, idCol, vecCol, numCentroids, dim, numSub,
+        codebookSize, v)
+    }
   }
 
-  /** Writes (uncommitted) PQ version `version`: IVF artifacts via
-    * [[writeVersion]] (which first drops any orphan dir), then the
-    * frozen-seed codebooks and the packed code postings.
+  /** Writes (unpublished) PQ version `version`: IVF artifacts via
+    * [[writeVersion]], then the frozen-seed codebooks and the packed code
+    * postings.
     */
   private def buildPqAt(
-      spark: SparkSession, corpus: DataFrame, dir: String, name: String,
-      idCol: String, vecCol: String, numCentroids: Int, dim: Int,
-      numSub: Int, codebookSize: Int, version: Int): Unit = {
+      ix: graft.io.VersionedIndex, corpus: DataFrame, idCol: String,
+      vecCol: String, numCentroids: Int, dim: Int, numSub: Int,
+      codebookSize: Int, version: Int): Unit = {
     require(dim % numSub == 0,
       s"buildPq: dim $dim not divisible by numSub $numSub")
     val subDim = dim / numSub
-    writeVersion(spark, corpus, dir, name, idCol, vecCol, numCentroids,
-      dim, version)
-    val cent = readStored(spark, centroidsPath(dir, name, version),
-      centroidsPath(dir, name, version))
+    writeVersion(ix, corpus, idCol, vecCol, numCentroids, dim, version)
+    val cent = ix.artifact(version, "centroids")
     val cSub = Similarity.pqResidualSubRows(
       corpus, idCol, vecCol, cent, 1, numSub, subDim, "cid")
     val seed = {
-      import spark.implicits._
+      import ix.spark.implicits._
       Similarity.pqCodebook(numSub, codebookSize, subDim, tag = "ivfpq")
         .toDF("m", "cw", "cvec")
     }
     Similarity.pqTrainCore(cSub.select("cid", "m", "sub"), seed, subDim)
       .coalesce(1).write.mode("errorifexists")
-      .parquet(codebooksPath(dir, name, version))
-    val cb = readStored(spark, codebooksPath(dir, name, version),
-      codebooksPath(dir, name, version))
+      .parquet(ix.path(version, "codebooks"))
+    val cb = ix.artifact(version, "codebooks")
     encodePacked(corpus, idCol, vecCol, cent, cb, numSub, subDim)
       .write.mode("errorifexists").partitionBy("cell")
-      .parquet(codesPath(dir, name, version))
+      .parquet(ix.path(version, "codes"))
   }
 
   /** Fold new vectors into a PQ index: assign + encode against the
@@ -420,37 +307,23 @@ object AnnIndex {
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
       idCol: String, vecCol: String,
       generation: Option[Long] = None): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"ann index '$name' at $dir does not exist — build() it first"))
-    require(hasCodebooks(spark, dir, name, v),
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    require(hasCodebooks(ix, v),
       s"ann index '$name' at $dir has no PQ codebooks — buildPq() it, " +
         "or use fold() for a plain IVF index")
-    val cent = readStored(spark, centroidsPath(dir, name, v),
-      centroidsPath(dir, name, v))
-    val cb = readStored(spark, codebooksPath(dir, name, v),
-      codebooksPath(dir, name, v))
+    val cent = ix.artifact(v, "centroids")
+    val cb = ix.artifact(v, "codebooks")
     val (numSub, subDim) = codebookShape(cb)
-    val committed = committedFolds(spark, dir, name, v)
-    val g = generation.getOrElse(committed.lastOption.getOrElse(0L) + 1L)
-    if (committed.contains(g)) return // committed replay: pure no-op
-    require(committed.forall(_ < g),
-      s"foldPq generation $g is below already-committed generations " +
-        s"${committed.filter(_ > g).mkString(", ")} — out-of-order " +
-        "batch identities would make the replay no-op ambiguous")
-    Similarity.assignCells(fresh, idCol, vecCol, cent, probes = 1)
-      .select(col(idCol), col(vecCol), col("__cell").as("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(deltaPath(dir, name, v, g))
-    encodePacked(fresh, idCol, vecCol, cent, cb, numSub, subDim)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(codesDeltaPath(dir, name, v, g))
-    val marker = new org.apache.hadoop.fs.Path(
-      s"${foldsDir(dir, name, v)}/g$g.ok")
-    val f = fs(spark, marker.toString)
-    val out = f.create(marker, false)
-    try out.write("ok".getBytes("UTF-8")) finally out.close()
-    ()
+    ix.fold(v, generation) { g =>
+      Similarity.assignCells(fresh, idCol, vecCol, cent, probes = 1)
+        .select(col(idCol), col(vecCol), col("__cell").as("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(ix.delta(v, g))
+      encodePacked(fresh, idCol, vecCol, cent, cb, numSub, subDim)
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(codesDelta(ix, v, g))
+    }
   }
 
   /** Re-train quantizer AND codebooks over the accumulated corpus into
@@ -462,19 +335,17 @@ object AnnIndex {
       vecCol: String, numCentroids: Int = 16, dim: Int = 64,
       numSub: Int = 8, codebookSize: Int = 16,
       retainVersions: Int = 2): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"ann index '$name' at $dir does not exist — build() it first"))
-    val corpus = readPostings(spark, dir, name, v)
-      .select(col(idCol), col(vecCol))
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
     // materialize before the destination version is written: the plan
     // reads version v, which retainVersions = 1 GCs after the promote
-    val staged = corpus.localCheckpoint()
-    buildPqAt(spark, staged, dir, name, idCol, vecCol, numCentroids, dim,
-      numSub, codebookSize, v + 1)
-    commitVersion(spark, dir, name, v + 1)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v + 1, retainVersions)
+    val staged = readPostings(ix, v)
+      .select(col(idCol), col(vecCol))
+      .localCheckpoint()
+    try ix.publish(v + 1, retainVersions) {
+      buildPqAt(ix, staged, idCol, vecCol, numCentroids, dim, numSub,
+        codebookSize, v + 1)
+    } finally graft.io.VersionedIndex.releaseCheckpoint(staged)
   }
 
   /** ADC top-k against the persisted PQ index: queries price per-probe
@@ -491,14 +362,13 @@ object AnnIndex {
       idCol: String, vecCol: String, k: Int, numProbes: Int = 2,
       candidates: Int = 50, atVersion: Option[Int] = None): DataFrame = {
     graft.functions.VectorExpressions.register(spark)
-    val v = resolveRead(spark, dir, name, atVersion)
-    require(hasCodebooks(spark, dir, name, v),
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
+    require(hasCodebooks(ix, v),
       s"ann index '$name' at $dir has no PQ codebooks — buildPq() it, " +
         "or use topK() for a plain IVF index")
-    val cent = readStored(spark, centroidsPath(dir, name, v),
-      centroidsPath(dir, name, v))
-    val cb = readStored(spark, codebooksPath(dir, name, v),
-      codebooksPath(dir, name, v))
+    val cent = ix.artifact(v, "centroids")
+    val cb = ix.artifact(v, "codebooks")
     val (numSub, subDim) = codebookShape(cb)
     val qt = Similarity
       .pqResidualSubRows(queries, idCol, vecCol, cent, numProbes, numSub,
@@ -509,7 +379,7 @@ object AnnIndex {
         col("cw").as("qcw"), col("qd2u"))
     val wCand = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("ad2u"), col("cid"))
-    val cand = readCodes(spark, dir, name, v, idCol)
+    val cand = readCodes(ix, v, idCol)
       .join(broadcast(qt),
         col("cell") === col("qcell") && col("m") === col("qm") &&
           col("cw") === col("qcw"))
@@ -519,7 +389,7 @@ object AnnIndex {
       .withColumn("crk", row_number().over(wCand))
       .filter(col("crk") <= candidates)
       .select(col("qid"), col("cid"))
-    val c = readPostings(spark, dir, name, v)
+    val c = readPostings(ix, v)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("v_c"),
         Similarity.selfNormFast(vecCol).as("n_c"))
     val q = queries.select(col(idCol).as("query_id"),
@@ -544,14 +414,14 @@ object AnnIndex {
       idCol: String, vecCol: String, k: Int,
       numProbes: Int = 2, atVersion: Option[Int] = None): DataFrame = {
     graft.functions.VectorExpressions.register(spark)
-    val v = resolveRead(spark, dir, name, atVersion)
-    val cent = readStored(spark, centroidsPath(dir, name, v),
-      centroidsPath(dir, name, v))
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
+    val cent = ix.artifact(v, "centroids")
     val q = Similarity.assignCells(queries, idCol, vecCol, cent, numProbes)
       .select(col(idCol).as("query_id"), col(vecCol).as("v_q"),
         Similarity.selfNormFast(vecCol).as("n_q"),
         col("__cell").as("cell"))
-    val c = readPostings(spark, dir, name, v)
+    val c = readPostings(ix, v)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("v_c"),
         Similarity.selfNormFast(vecCol).as("n_c"), col("cell"))
     val scored = c.join(broadcast(q), Seq("cell"))

@@ -57,90 +57,28 @@ import org.apache.spark.sql.functions._
   */
 object ApssIndex {
 
-  private def layoutDir(dir: String, name: String): String =
-    s"$dir/$name.apssindex"
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def index(spark: SparkSession, dir: String, name: String) =
+    graft.io.VersionedIndex(spark, s"$dir/$name.apssindex",
+      s"apss index '$name' at $dir",
+      Seq("tokens" -> Seq("doc_id", "h"), "sizes" -> Seq("doc_id", "n"),
+        "prefix" -> Seq("doc_id", "h")))
 
   def currentVersion(
       spark: SparkSession, dir: String, name: String): Option[Int] =
-    graft.io.VersionPointer.current(spark, layoutDir(dir, name))
+    index(spark, dir, name).current
 
   /** Committed versions still inside the retention window. */
   def versions(
-      spark: SparkSession, dir: String, name: String): Seq[Int] = {
-    val cur = currentVersion(spark, dir, name)
-    graft.io.VersionPointer.versionDirs(spark, layoutDir(dir, name))
-      .filter(v => cur.exists(v <= _))
+      spark: SparkSession, dir: String, name: String): Seq[Int] =
+    index(spark, dir, name).versions
+
+  /** The frozen (k, floorPermil) — memoized per version (r9: folds skip
+    * a head() job).
+    */
+  private def readParams(ix: graft.io.VersionedIndex, v: Int) = {
+    val row = ix.params(v)
+    (row.getAs[Int]("k"), row.getAs[Int]("floor_permil"))
   }
-
-  private def sub(dir: String, name: String, v: Int, s: String): String =
-    s"${layoutDir(dir, name)}/v$v/$s"
-  private def foldsDir(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/_folds"
-  private def deltaPath(dir: String, name: String, v: Int, g: Long): String =
-    s"${layoutDir(dir, name)}/v$v/deltas/g$g"
-
-  private val FoldMarkerRe = """g(\d+)\.ok""".r
-
-  private def committedFolds(
-      spark: SparkSession, dir: String, name: String, v: Int): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(foldsDir(dir, name, v))
-    val f = fs(spark, p.toString)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq.flatMap(_.getPath.getName match {
-      case FoldMarkerRe(g) => Some(g.toLong)
-      case _ => None
-    }).sorted
-  }
-
-  private def requireVersion(
-      spark: SparkSession, dir: String, name: String): Int =
-    currentVersion(spark, dir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"apss index '$name' at $dir does not exist — build() it first"))
-
-  /** The frozen (k, floorPermil). */
-  // r9: params are FROZEN for an index version's lifetime — memoize the
-  // one-row read so folds skip a head() job (the DedupIndex discipline).
-  // Keys are version-qualified paths, so compact() needs no invalidation
-  // (v+1 keeps the frozen params and populates its own entry); build()
-  // invalidates because a rebuild may change the scheme.
-  private val paramsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-
-  private[ext] def invalidateParams(dir: String, name: String): Unit = {
-    // trailing separator: don't cross-invalidate a sibling index whose
-    // layout dir this one string-prefixes
-    val prefix = layoutDir(dir, name) + "/"
-    paramsCache.keySet.removeIf(_.startsWith(prefix))
-    schemaCache.keySet.removeIf(_.startsWith(prefix))
-    ()
-  }
-
-  // r10: memoized per-version artifact schemas + multi-path reads — see
-  // the DedupIndex.readStored note (schema-inferring reads each pay a
-  // footer job; artifact schemas are frozen per version).
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def readStored(
-      spark: SparkSession, schemaKey: String,
-      paths: Seq[String]): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(
-      schemaKey, p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(paths: _*)
-  }
-
-  private def readParams(
-      spark: SparkSession, dir: String, name: String,
-      v: Int): (Int, Int) =
-    paramsCache.computeIfAbsent(sub(dir, name, v, "params"), { p =>
-      val row = spark.read.parquet(p).head()
-      (row.getAs[Int]("k"), row.getAs[Int]("floor_permil"))
-    })
 
   /** (tokens, sizes, prefix) of `docs` under the index's frozen scheme —
     * the SAME fused shingle-hash expr as [[Dedup.apssCosinePairs]], the
@@ -151,7 +89,6 @@ object ApssIndex {
       docs: DataFrame, idCol: String, textCol: String, k: Int,
       floorPermil: Int,
       dforder: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val tf2 = floorPermil.toLong * floorPermil
     // persisted (r9): the three outputs are materialized by SEPARATE
     // write actions (tokens / sizes / prefix) — without the cache each
     // write re-runs the fused shingle pass. The 4th element of the
@@ -160,76 +97,42 @@ object ApssIndex {
     val hs = Dedup.withShingleHashSets(docs, idCol, textCol, k).persist()
     val tokens = Dedup.shingleHashes(hs).persist()
     val sizes = hs.select(col("doc_id"), size(col("hsh")).cast("long").as("n"))
+    (tokens, sizes, prefixOf(tokens, sizes, dforder, floorPermil), hs)
+  }
+
+  /** Each doc's first `n − o + 1` hashes under `dforder` (df asc, h asc;
+    * hashes it lacks order at df 0), `o = ceil(floor² · n / 10⁶)`.
+    */
+  private def prefixOf(
+      tokens: DataFrame, sizes: DataFrame, dforder: DataFrame,
+      floorPermil: Int): DataFrame = {
+    val tf2 = floorPermil.toLong * floorPermil
     val pos = tokens
       .join(dforder.withColumnRenamed("df", "__df"), Seq("h"), "left")
       .withColumn("__df0", coalesce(col("__df"), lit(0L)))
       .withColumn("__pos", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("__df0"), col("h"))))
-    val prefix = pos.join(sizes, "doc_id")
+    pos.join(sizes, "doc_id")
       .withColumn("__o", expr(s"($tf2 * n + 999999) div 1000000"))
       .filter(col("__pos") <= col("n") - col("__o") + 1)
       .select("doc_id", "h")
-    (tokens, sizes, prefix, hs)
   }
 
-  /** The three sign artifacts as ONE `__what`-partitioned frame — r10:
-    * a batch's tokens/sizes/prefix commit in a SINGLE write action (one
-    * job + one commit instead of three); readers address the partition
-    * subdirs directly (`.../sign/__what=tokens`), so each artifact still
-    * scans only its own files.
+  /** Write the params, the frozen df order and the (tokens, sizes,
+    * prefix) sign table of (unpublished) version `version` — r10: the
+    * three sign artifacts in ONE write action (one job + one commit
+    * instead of three).
     */
-  private def signedUnion(
-      tokens: DataFrame, sizes: DataFrame, prefix: DataFrame): DataFrame =
-    tokens.select(lit("tokens").as("__what"), col("doc_id"),
-        col("h"), lit(null).cast("long").as("n"))
-      .unionByName(sizes.select(lit("sizes").as("__what"), col("doc_id"),
-        lit(null).cast("long").as("h"), col("n")))
-      .unionByName(prefix.select(lit("prefix").as("__what"), col("doc_id"),
-        col("h"), lit(null).cast("long").as("n")))
-
-  private val whatCols = Map(
-    "tokens" -> Seq("doc_id", "h"),
-    "sizes" -> Seq("doc_id", "n"),
-    "prefix" -> Seq("doc_id", "h"))
-
-  /** One artifact out of a unified sign dir (or several). */
-  private def readSigned(
-      spark: SparkSession, dir: String, name: String, v: Int,
-      signRoots: Seq[String], what: String): DataFrame = {
-    val cols = whatCols(what)
-    readStored(spark, s"${sub(dir, name, v, "sign")}/__what=$what",
-      signRoots.map(r => s"$r/__what=$what"))
-      .select(cols.head, cols.tail: _*)
-  }
-
-  /** All committed rows of one artifact of version `v` (base + committed
-    * fold deltas below `belowGen`) — orphans invisible, the marker is
-    * the commit; a fold REPLAY reads exactly the state below itself.
-    */
-  private def readCommitted(
-      spark: SparkSession, dir: String, name: String, v: Int,
-      what: String, belowGen: Long = Long.MaxValue): DataFrame =
-    readSigned(spark, dir, name, v,
-      sub(dir, name, v, "sign") +:
-        committedFolds(spark, dir, name, v).filter(_ < belowGen)
-          .map(g => s"${deltaPath(dir, name, v, g)}/sign"),
-      what)
-
   private def writeVersion(
-      spark: SparkSession, tokens: DataFrame, sizes: DataFrame,
-      prefix: DataFrame, dforder: DataFrame, dir: String, name: String,
-      k: Int, floorPermil: Int, version: Int): Unit = {
-    graft.io.VersionPointer.dropDir(
-      spark, s"${layoutDir(dir, name)}/v$version")
-    import spark.implicits._
+      ix: graft.io.VersionedIndex, tokens: DataFrame, sizes: DataFrame,
+      prefix: DataFrame, dforder: DataFrame, k: Int, floorPermil: Int,
+      version: Int): Unit = {
+    import ix.spark.implicits._
     Seq((k, floorPermil)).toDF("k", "floor_permil")
       .coalesce(1).write.mode("errorifexists")
-      .parquet(sub(dir, name, version, "params"))
-    dforder.write.mode("errorifexists")
-      .parquet(sub(dir, name, version, "dforder"))
-    signedUnion(tokens, sizes, prefix)
-      .write.partitionBy("__what").mode("errorifexists")
-      .parquet(sub(dir, name, version, "sign"))
+      .parquet(ix.path(version, "params"))
+    dforder.write.mode("errorifexists").parquet(ix.path(version, "dforder"))
+    ix.writeSigned(ix.dir(version), "errorifexists", tokens, sizes, prefix)
   }
 
   /** Sign + index `corpus` as version 1 (or N+1 — a manual rebuild),
@@ -242,24 +145,26 @@ object ApssIndex {
       retainVersions: Int = 2): Unit = {
     require(floorPermil >= 1 && floorPermil <= 1000,
       s"build: floorPermil must be in [1, 1000], got $floorPermil")
-    invalidateParams(dir, name)
-    val v = currentVersion(spark, dir, name).getOrElse(0) + 1
-    val hs = Dedup.withShingleHashSets(corpus, idCol, textCol, k)
-    val dforder = Dedup.shingleHashes(hs)
-      .groupBy("h").agg(count(lit(1)).as("df"))
-    // the order table feeds the prefix window AND persists: cut its
-    // lineage so the window's sort doesn't recompute the df aggregation
-    val frozen = dforder.localCheckpoint()
-    val (tokens, sizes, prefix, hsCache) =
-      signFrozen(corpus, idCol, textCol, k, floorPermil, frozen)
-    // writeVersion's writes are the cached sign pass's only consumers —
-    // release both caches afterwards (r10, advisor)
-    try writeVersion(spark, tokens, sizes, prefix, frozen, dir, name, k,
-      floorPermil, v)
-    finally { tokens.unpersist(); hsCache.unpersist(); () }
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.current.getOrElse(0) + 1
+    ix.publish(v, retainVersions) {
+      val hs = Dedup.withShingleHashSets(corpus, idCol, textCol, k)
+      val dforder = Dedup.shingleHashes(hs)
+        .groupBy("h").agg(count(lit(1)).as("df"))
+      // the order table feeds the prefix window AND persists: cut its
+      // lineage so the window's sort doesn't recompute the df aggregation
+      val frozen = dforder.localCheckpoint()
+      val (tokens, sizes, prefix, hsCache) =
+        signFrozen(corpus, idCol, textCol, k, floorPermil, frozen)
+      // writeVersion's writes are the cached sign pass's and the
+      // checkpoint's only consumers — release them afterwards (r10,
+      // advisor)
+      try writeVersion(ix, tokens, sizes, prefix, frozen, k, floorPermil, v)
+      finally {
+        tokens.unpersist(); hsCache.unpersist()
+        graft.io.VersionedIndex.releaseCheckpoint(frozen)
+      }
+    }
   }
 
   /** The incremental pair algebra shared by [[fold]] and
@@ -321,14 +226,12 @@ object ApssIndex {
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
       idCol: String, textCol: String, thresholdPermil: Int,
       atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(
-      spark, layoutDir(dir, name), atVersion, s"apss index '$name' at $dir")
-    val (k, floorPermil) = readParams(spark, dir, name, v)
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
+    val (k, floorPermil) = readParams(ix, v)
     requireThreshold(thresholdPermil, floorPermil)
-    val dfoBase = sub(dir, name, v, "dforder")
-    val dforder = readStored(spark, dfoBase, Seq(dfoBase))
-    val (t0, s0, p0, hsCache) =
-      signFrozen(fresh, idCol, textCol, k, floorPermil, dforder)
+    val (t0, s0, p0, hsCache) = signFrozen(fresh, idCol, textCol, k,
+      floorPermil, ix.artifact(v, "dforder"))
     // sign once, lineage-cut: the candidate and verify legs must not
     // re-shingle the fresh side
     val (ti, si, pi) =
@@ -336,10 +239,8 @@ object ApssIndex {
     // the checkpoints are materialized — the sign-pass caches have no
     // consumers left (the returned plan reads the checkpoints)
     t0.unpersist(); hsCache.unpersist()
-    pairsOf(ti, si, pi,
-      readCommitted(spark, dir, name, v, "tokens"),
-      readCommitted(spark, dir, name, v, "sizes"),
-      readCommitted(spark, dir, name, v, "prefix"),
+    pairsOf(ti, si, pi, ix.committedSigned(v, "tokens"),
+      ix.committedSigned(v, "sizes"), ix.committedSigned(v, "prefix"),
       thresholdPermil)
   }
 
@@ -356,47 +257,26 @@ object ApssIndex {
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
       idCol: String, textCol: String, thresholdPermil: Int,
       generation: Option[Long] = None): DataFrame = {
-    val v = requireVersion(spark, dir, name)
-    val (k, floorPermil) = readParams(spark, dir, name, v)
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    val (k, floorPermil) = readParams(ix, v)
     requireThreshold(thresholdPermil, floorPermil)
-    val committed = committedFolds(spark, dir, name, v)
-    val g = generation.getOrElse(committed.lastOption.getOrElse(0L) + 1L)
-    def delta(what: String): DataFrame =
-      readSigned(spark, dir, name, v,
-        Seq(s"${deltaPath(dir, name, v, g)}/sign"), what)
-    if (committed.contains(g)) {
-      return pairsOf(delta("tokens"), delta("sizes"), delta("prefix"),
-        readCommitted(spark, dir, name, v, "tokens", belowGen = g),
-        readCommitted(spark, dir, name, v, "sizes", belowGen = g),
-        readCommitted(spark, dir, name, v, "prefix", belowGen = g),
-        thresholdPermil)
+    val g = ix.fold(v, generation) { g =>
+      val (ti, si, pi, hsCache) = signFrozen(fresh, idCol, textCol, k,
+        floorPermil, ix.artifact(v, "dforder"))
+      // overwrite: a retry of a PRE-marker crash replaces the orphan.
+      // r10: the three artifacts commit in ONE `__what`-partitioned write
+      // (one job instead of three); it is the sign-pass caches' only
+      // consumer — release them afterwards (advisor).
+      try ix.writeSigned(ix.delta(v, g), "overwrite", ti, si, pi)
+      finally { ti.unpersist(); hsCache.unpersist(); () }
     }
-    require(committed.forall(_ < g),
-      s"fold generation $g is below already-committed generations " +
-        s"${committed.filter(_ > g).mkString(", ")} — out-of-order " +
-        "batch identities would make replay state ambiguous")
-    val priorTokens = readCommitted(spark, dir, name, v, "tokens")
-    val priorSizes = readCommitted(spark, dir, name, v, "sizes")
-    val priorPrefix = readCommitted(spark, dir, name, v, "prefix")
-    val dfoBase = sub(dir, name, v, "dforder")
-    val dforder = readStored(spark, dfoBase, Seq(dfoBase))
-    val (ti, si, pi, hsCache) =
-      signFrozen(fresh, idCol, textCol, k, floorPermil, dforder)
-    // overwrite: a retry of a PRE-marker crash replaces the orphan.
-    // r10: the three artifacts commit in ONE `__what`-partitioned write
-    // (one job instead of three); it is the sign-pass caches' only
-    // consumer — release them afterwards (advisor).
-    try signedUnion(ti, si, pi).write.partitionBy("__what")
-      .mode("overwrite").parquet(s"${deltaPath(dir, name, v, g)}/sign")
-    finally { ti.unpersist(); hsCache.unpersist(); () }
-    val marker = new org.apache.hadoop.fs.Path(
-      s"${foldsDir(dir, name, v)}/g$g.ok")
-    val f = fs(spark, marker.toString)
-    val out = f.create(marker, false)
-    try out.write("ok".getBytes("UTF-8")) finally out.close()
-    // pairs off the JUST-WRITTEN delta (read back, never re-signed)
-    pairsOf(delta("tokens"), delta("sizes"), delta("prefix"),
-      priorTokens, priorSizes, priorPrefix, thresholdPermil)
+    // pairs off the generation's stored delta (read back, never
+    // re-signed) against the committed state below it
+    def below(what: String) = ix.committedSigned(v, what, belowGen = g)
+    pairsOf(ix.deltaSigned(v, g, "tokens"), ix.deltaSigned(v, g, "sizes"),
+      ix.deltaSigned(v, g, "prefix"), below("tokens"), below("sizes"),
+      below("prefix"), thresholdPermil)
   }
 
   /** Re-derive the df order over the accumulated corpus and rewrite the
@@ -408,28 +288,17 @@ object ApssIndex {
   def compact(
       spark: SparkSession, dir: String, name: String,
       retainVersions: Int = 2): Unit = {
-    val v = requireVersion(spark, dir, name)
-    val (k, floorPermil) = readParams(spark, dir, name, v)
-    val tokens = readCommitted(spark, dir, name, v, "tokens")
-      .localCheckpoint()
-    val sizes = readCommitted(spark, dir, name, v, "sizes")
-      .localCheckpoint()
-    val tf2 = floorPermil.toLong * floorPermil
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    val (k, floorPermil) = readParams(ix, v)
+    val tokens = ix.committedSigned(v, "tokens").localCheckpoint()
+    val sizes = ix.committedSigned(v, "sizes").localCheckpoint()
     val dforder = tokens.groupBy("h").agg(count(lit(1)).as("df"))
       .localCheckpoint()
-    val pos = tokens
-      .join(dforder.withColumnRenamed("df", "__df"), Seq("h"), "left")
-      .withColumn("__df0", coalesce(col("__df"), lit(0L)))
-      .withColumn("__pos", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("__df0"), col("h"))))
-    val prefix = pos.join(sizes, "doc_id")
-      .withColumn("__o", expr(s"($tf2 * n + 999999) div 1000000"))
-      .filter(col("__pos") <= col("n") - col("__o") + 1)
-      .select("doc_id", "h")
-    writeVersion(spark, tokens, sizes, prefix, dforder, dir, name, k,
-      floorPermil, v + 1)
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v + 1)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v + 1, retainVersions)
+    val prefix = prefixOf(tokens, sizes, dforder, floorPermil)
+    // the write is the three checkpoints' only consumer
+    try ix.publish(v + 1, retainVersions) {
+      writeVersion(ix, tokens, sizes, prefix, dforder, k, floorPermil, v + 1)
+    } finally graft.io.VersionedIndex.releaseCheckpoint(tokens, sizes, dforder)
   }
 }

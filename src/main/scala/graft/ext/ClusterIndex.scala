@@ -42,81 +42,34 @@ import org.apache.spark.sql.functions._
   */
 object ClusterIndex {
 
-  private def layoutDir(dir: String, name: String): String =
-    s"$dir/$name.clusterindex"
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def index(spark: SparkSession, dir: String, name: String) =
+    graft.io.VersionedIndex(spark, s"$dir/$name.clusterindex",
+      s"cluster index '$name' at $dir")
 
   def currentVersion(
       spark: SparkSession, dir: String, name: String): Option[Int] =
-    graft.io.VersionPointer.current(spark, layoutDir(dir, name))
+    index(spark, dir, name).current
 
   /** Committed versions still inside the retention window. */
   def versions(
-      spark: SparkSession, dir: String, name: String): Seq[Int] = {
-    val cur = currentVersion(spark, dir, name)
-    graft.io.VersionPointer.versionDirs(spark, layoutDir(dir, name))
-      .filter(v => cur.exists(v <= _))
-  }
+      spark: SparkSession, dir: String, name: String): Seq[Int] =
+    index(spark, dir, name).versions
 
-  private def basePath(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/labels"
-  private def foldsDir(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/_folds"
-  private def deltaPath(dir: String, name: String, v: Int, g: Long): String =
-    s"${layoutDir(dir, name)}/v$v/deltas/g$g/labels"
-
-  private val FoldMarkerRe = """g(\d+)\.ok""".r
-
-  // r10: memoized per-version label schema — see DedupIndex.readStored
-  // (schema-inferring reads each pay a footer job; the label schema is
-  // frozen per version: base and every delta are (node, cluster_id)).
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def readStored(
-      spark: SparkSession, schemaKey: String,
-      paths: Seq[String]): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(
-      schemaKey, p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(paths: _*)
-  }
-
-  private def committedFolds(
-      spark: SparkSession, dir: String, name: String, v: Int): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(foldsDir(dir, name, v))
-    val f = fs(spark, p.toString)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq.flatMap(_.getPath.getName match {
-      case FoldMarkerRe(g) => Some(g.toLong)
-      case _ => None
-    }).sorted
-  }
-
-  private def requireVersion(
-      spark: SparkSession, dir: String, name: String): Int =
-    currentVersion(spark, dir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"cluster index '$name' at $dir does not exist — build() it first"))
+  /** Generation `g`'s labels: the base at 0, else fold g's delta — all
+    * read with the base's memoized (node, cluster_id) schema.
+    */
+  private def labelsAt(
+      ix: graft.io.VersionedIndex, v: Int, g: Long): DataFrame =
+    ix.read(ix.path(v, "labels"),
+      if (g == 0L) ix.path(v, "labels") else s"${ix.delta(v, g)}/labels")
 
   /** Committed labels of version `v` resolved keep-last by generation
-    * per node (base = generation 0; only fold generations < `belowGen`
-    * are visible — a fold replay reads exactly the state below itself).
+    * per node (base = generation 0).
     */
-  private def resolved(
-      spark: SparkSession, dir: String, name: String, v: Int,
-      belowGen: Long = Long.MaxValue): DataFrame = {
-    val gens = committedFolds(spark, dir, name, v).filter(_ < belowGen)
-    val base = basePath(dir, name, v)
-    val all = gens.foldLeft(
-      readStored(spark, base, Seq(base))
-        .withColumn("__g", lit(0L))) { (acc, g) =>
-      acc.unionByName(
-        readStored(spark, base, Seq(deltaPath(dir, name, v, g)))
-          .withColumn("__g", lit(g)))
-    }
+  private def resolved(ix: graft.io.VersionedIndex, v: Int): DataFrame = {
+    val all = (0L +: ix.committedFolds(v))
+      .map(g => labelsAt(ix, v, g).withColumn("__g", lit(g)))
+      .reduce(_.unionByName(_))
     val w = Window.partitionBy("node").orderBy(col("__g").desc)
     all.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
@@ -129,14 +82,13 @@ object ClusterIndex {
   def build(
       spark: SparkSession, pairs: DataFrame, dir: String, name: String,
       retainVersions: Int = 2): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(0) + 1
-    graft.io.VersionPointer.dropDir(spark, s"${layoutDir(dir, name)}/v$v")
-    Clusters.connectedComponents(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      .write.mode("errorifexists").parquet(basePath(dir, name, v))
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.current.getOrElse(0) + 1
+    ix.publish(v, retainVersions) {
+      Clusters.connectedComponents(
+          pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+        .write.mode("errorifexists").parquet(ix.path(v, "labels"))
+    }
   }
 
   /** The maintained labels: (node, cluster_id) for every node that has
@@ -146,9 +98,8 @@ object ClusterIndex {
   def labels(
       spark: SparkSession, dir: String, name: String,
       atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(spark,
-      layoutDir(dir, name), atVersion, s"cluster index '$name' at $dir")
-    resolved(spark, dir, name, v)
+    val ix = index(spark, dir, name)
+    resolved(ix, ix.resolve(atVersion))
   }
 
   /** The CHANGED labels a batch of fresh pairs implies against prior
@@ -196,15 +147,6 @@ object ClusterIndex {
     (relabeled.unionByName(freshFirst), Seq(cc))
   }
 
-  /** Drop a `localCheckpoint`'s blocks. `Dataset.unpersist` only
-    * uncaches `cache()`d plans, so the checkpointed RDD is unpersisted
-    * directly; the frame must have no readers left.
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   /** Fold a batch of fresh near-dup pairs (columns `id_a`, `id_b` — a
     * [[DedupIndex.fold]]/[[ApssIndex.fold]] result) into the maintained
     * labels: compute the changed labels against the prior state, commit
@@ -216,54 +158,43 @@ object ClusterIndex {
   def fold(
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
       generation: Option[Long] = None): DataFrame = {
-    val v = requireVersion(spark, dir, name)
-    val committed = committedFolds(spark, dir, name, v)
-    val g = generation.getOrElse(committed.lastOption.getOrElse(0L) + 1L)
-    if (committed.contains(g))
-      return readStored(spark, basePath(dir, name, v),
-        Seq(deltaPath(dir, name, v, g)))
-    require(committed.forall(_ < g),
-      s"fold generation $g is below already-committed generations " +
-        s"${committed.filter(_ > g).mkString(", ")} — out-of-order " +
-        "batch identities would make replay state ambiguous")
-    // r10 two-phase fold (guide §8's decide-with-small-rows discipline):
-    // the caller's fresh frame is typically an UNMATERIALIZED index-fold
-    // result (bands join + exact verify over a shingle-exploded working
-    // set) — materialize it FIRST, eagerly and UNSCOPED, so the heavy
-    // verify keeps its parallelism, counting the pairs on the same
-    // action via observe(). Everything after — prior resolve, endpoint
-    // mapping, CC over |batch| edges, the delta write — is label algebra
-    // over that measured pair count, so it runs under the size-gated
-    // fixed-cost scope (one job per action below the gate; a TB-scale
-    // fold exceeds the gate and keeps AQE).
-    val obs = org.apache.spark.sql.Observation()
-    val freshCk = fresh.select("id_a", "id_b")
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
-    val nPairs = obs.get("n").asInstanceOf[Long]
-    graft.conf.Tuning.withSmallInputScope(spark, nPairs * 32L) {
-      // persist (not eager checkpoint): prior is referenced four ways in
-      // changedLabels; the write action below materializes the cache once
-      val prior = resolved(spark, dir, name, v).persist()
-      val (changed, handles) = changedLabels(freshCk, prior)
-      // the write is this operator's single action over the cached
-      // frames and the checkpointed pairs — release them all afterwards
-      // (the returned frame reads the written delta) so a long-lived
-      // session calling fold() repeatedly doesn't accumulate blocks
-      try changed.write.mode("overwrite")
-        .parquet(deltaPath(dir, name, v, g))
-      finally {
-        (prior +: handles).foreach(_.unpersist())
-        releaseCheckpoint(freshCk)
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    val g = ix.fold(v, generation) { g =>
+      // r10 two-phase fold (guide §8's decide-with-small-rows
+      // discipline): the caller's fresh frame is typically an
+      // UNMATERIALIZED index-fold result (bands join + exact verify over a
+      // shingle-exploded working set) — materialize it FIRST, eagerly and
+      // UNSCOPED, so the heavy verify keeps its parallelism, counting the
+      // pairs on the same action via observe(). Everything after — prior
+      // resolve, endpoint mapping, CC over |batch| edges, the delta write
+      // — is label algebra over that measured pair count, so it runs
+      // under the size-gated fixed-cost scope (one job per action below
+      // the gate; a TB-scale fold exceeds the gate and keeps AQE).
+      val obs = org.apache.spark.sql.Observation()
+      val freshCk = fresh.select("id_a", "id_b")
+        .observe(obs, count(lit(1)).as("n"))
+        .localCheckpoint()
+      val nPairs = obs.get("n").asInstanceOf[Long]
+      graft.conf.Tuning.withSmallInputScope(spark, nPairs * 32L) {
+        // persist (not eager checkpoint): prior is referenced four ways
+        // in changedLabels; the write action below materializes the cache
+        // once
+        val prior = resolved(ix, v).persist()
+        val (changed, handles) = changedLabels(freshCk, prior)
+        // the write is this operator's single action over the cached
+        // frames and the checkpointed pairs — release them all afterwards
+        // (the returned frame reads the written delta) so a long-lived
+        // session calling fold() repeatedly doesn't accumulate blocks
+        try changed.write.mode("overwrite")
+          .parquet(s"${ix.delta(v, g)}/labels")
+        finally {
+          (prior +: handles).foreach(_.unpersist())
+          graft.io.VersionedIndex.releaseCheckpoint(freshCk)
+        }
       }
     }
-    val marker = new org.apache.hadoop.fs.Path(
-      s"${foldsDir(dir, name, v)}/g$g.ok")
-    val f = fs(spark, marker.toString)
-    val out = f.create(marker, false)
-    try out.write("ok".getBytes("UTF-8")) finally out.close()
-    readStored(spark, basePath(dir, name, v),
-      Seq(deltaPath(dir, name, v, g)))
+    labelsAt(ix, v, g)
   }
 
   /** Rewrite the resolved labels into one base at version N+1, pointer
@@ -273,13 +204,12 @@ object ClusterIndex {
   def compact(
       spark: SparkSession, dir: String, name: String,
       retainVersions: Int = 2): Unit = {
-    val v = requireVersion(spark, dir, name)
-    val flat = resolved(spark, dir, name, v).localCheckpoint()
-    graft.io.VersionPointer.dropDir(
-      spark, s"${layoutDir(dir, name)}/v${v + 1}")
-    flat.write.mode("errorifexists").parquet(basePath(dir, name, v + 1))
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v + 1)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v + 1, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    val flat = resolved(ix, v).localCheckpoint()
+    // the write is the checkpoint's only consumer
+    try ix.publish(v + 1, retainVersions) {
+      flat.write.mode("errorifexists").parquet(ix.path(v + 1, "labels"))
+    } finally graft.io.VersionedIndex.releaseCheckpoint(flat)
   }
 }

@@ -68,101 +68,31 @@ import org.apache.spark.sql.functions._
   */
 object DedupIndex {
 
-  private def layoutDir(dir: String, name: String): String =
-    s"$dir/$name.dedupindex"
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def index(spark: SparkSession, dir: String, name: String) =
+    graft.io.VersionedIndex(spark, s"$dir/$name.dedupindex",
+      s"dedup index '$name' at $dir",
+      Seq("sets" -> Seq("doc_id", "hsh"),
+        "bands" -> Seq("doc_id", "band", "bucket")))
 
   def currentVersion(
       spark: SparkSession, dir: String, name: String): Option[Int] =
-    graft.io.VersionPointer.current(spark, layoutDir(dir, name))
+    index(spark, dir, name).current
 
   /** Committed versions still inside the retention window — the
     * time-travel targets [[pairsAgainst]]'s `atVersion` accepts.
     */
   def versions(
-      spark: SparkSession, dir: String, name: String): Seq[Int] = {
-    val cur = currentVersion(spark, dir, name)
-    graft.io.VersionPointer.versionDirs(spark, layoutDir(dir, name))
-      .filter(v => cur.exists(v <= _))
-  }
+      spark: SparkSession, dir: String, name: String): Seq[Int] =
+    index(spark, dir, name).versions
 
-  private def paramsPath(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/params"
-  private def signPath(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/sign"
-  private def foldsDir(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/_folds"
-  private def deltaPath(dir: String, name: String, v: Int, g: Long): String =
-    s"${layoutDir(dir, name)}/v$v/deltas/g$g"
-
-  private val FoldMarkerRe = """g(\d+)\.ok""".r
-
-  private def committedFolds(
-      spark: SparkSession, dir: String, name: String, v: Int): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(foldsDir(dir, name, v))
-    val f = fs(spark, p.toString)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq.flatMap(_.getPath.getName match {
-      case FoldMarkerRe(g) => Some(g.toLong)
-      case _ => None
-    }).sorted
-  }
-
-  private def requireVersion(
-      spark: SparkSession, dir: String, name: String): Int =
-    currentVersion(spark, dir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"dedup index '$name' at $dir does not exist — build() it first"))
-
-  /** The frozen banding scheme: (k, numHashes, bandRows). */
-  // r9: the banding scheme is FROZEN for an index version's lifetime (the
-  // whole correctness argument) — memoize the one-row read so every fold /
-  // pairsAgainst call on a long-lived index skips a head() job. Cache keys
-  // are VERSION-QUALIFIED paths, so compact() needs no invalidation: it
-  // writes v+1 with the same frozen params and v+1's first read populates
-  // its own entry. build() invalidates because a REBUILD may change the
-  // scheme at the new version before any read happens.
-  private val paramsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int, Int)]()
-
-  private def invalidateParams(dir: String, name: String): Unit = {
-    // trailing separator: "<dir>/a.dedupindex" must not cross-invalidate a
-    // sibling "<dir>/a.dedupindex2" whose layout dir it string-prefixes
-    val prefix = layoutDir(dir, name) + "/"
-    paramsCache.keySet.removeIf(_.startsWith(prefix))
-    schemaCache.keySet.removeIf(_.startsWith(prefix))
-    ()
-  }
-
-  private def readParams(
-      spark: SparkSession, dir: String, name: String,
-      v: Int): (Int, Int, Int) =
-    paramsCache.computeIfAbsent(paramsPath(dir, name, v), { p =>
-      val row = spark.read.parquet(p).head()
-      (row.getAs[Int]("k"), row.getAs[Int]("num_hashes"),
-        row.getAs[Int]("band_rows"))
-    })
-
-  // r10 (guide §1.2 — fixed costs): every schema-inferring
-  // spark.read.parquet pays a footer-read job (~30 ms) plus its driver
-  // round-trip; a fold used to run ~10 of them. Artifact schemas are
-  // frozen per version (same sign exprs write base and every delta), so
-  // memoize the base artifact's schema per version-qualified path and
-  // hand it to every internal read — and read base + deltas as ONE
-  // multi-path scan instead of a union of per-path reads (smaller plan,
-  // single relation). Invalidated alongside the params memo.
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def readStored(
-      spark: SparkSession, schemaKey: String,
-      paths: Seq[String]): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(
-      schemaKey, p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(paths: _*)
+  /** The frozen banding scheme: (k, numHashes, bandRows) — memoized per
+    * version (r9: every fold / pairsAgainst on a long-lived index skips a
+    * head() job).
+    */
+  private def readParams(ix: graft.io.VersionedIndex, v: Int) = {
+    val row = ix.params(v)
+    (row.getAs[Int]("k"), row.getAs[Int]("num_hashes"),
+      row.getAs[Int]("band_rows"))
   }
 
   /** (sets, bands) of `docs` under the index's scheme — the SAME fused
@@ -191,60 +121,17 @@ object DedupIndex {
     (sets, bands)
   }
 
-  /** The two sign artifacts as ONE `__what`-partitioned frame — r10: a
-    * batch's sets + bands commit in a SINGLE write action.
-    */
-  private def signedUnion(sets: DataFrame, bands: DataFrame): DataFrame =
-    sets.select(lit("sets").as("__what"), col("doc_id"), col("hsh"),
-        lit(null).cast("int").as("band"),
-        lit(null).cast("string").as("bucket"))
-      .unionByName(bands.select(lit("bands").as("__what"), col("doc_id"),
-        lit(null).cast("array<bigint>").as("hsh"), col("band"),
-        col("bucket")))
-
-  private val whatCols = Map(
-    "sets" -> Seq("doc_id", "hsh"),
-    "bands" -> Seq("doc_id", "band", "bucket"))
-
-  /** One artifact out of unified sign dirs. */
-  private def readSigned(
-      spark: SparkSession, dir: String, name: String, v: Int,
-      signRoots: Seq[String], what: String): DataFrame = {
-    val cols = whatCols(what)
-    readStored(spark, s"${signPath(dir, name, v)}/__what=$what",
-      signRoots.map(r => s"$r/__what=$what"))
-      .select(cols.head, cols.tail: _*)
-  }
-
-  /** All committed sets / bands of version `v` (base + committed fold
-    * deltas) — orphan delta dirs are invisible, the marker is the commit.
-    * `belowGen` bounds the visible fold generations (exclusive): a fold
-    * REPLAY reads exactly the state that preceded its own commit.
-    */
-  private def readCommitted(
-      spark: SparkSession, dir: String, name: String, v: Int,
-      sub: String, belowGen: Long = Long.MaxValue): DataFrame =
-    readSigned(spark, dir, name, v,
-      signPath(dir, name, v) +:
-        committedFolds(spark, dir, name, v).filter(_ < belowGen)
-          .map(g => s"${deltaPath(dir, name, v, g)}/sign"),
-      sub)
-
-  /** Sign + band + write (uncommitted) version `version` from `docs`,
-    * dropping any orphan dir a failed predecessor left.
+  /** Write the params and the (sets, bands) sign table of (unpublished)
+    * version `version` — r10: both artifacts in ONE write action.
     */
   private def writeVersion(
-      spark: SparkSession, sets: DataFrame, bands: DataFrame, dir: String,
-      name: String, k: Int, numHashes: Int, bandRows: Int,
-      version: Int): Unit = {
-    graft.io.VersionPointer.dropDir(
-      spark, s"${layoutDir(dir, name)}/v$version")
-    import spark.implicits._
+      ix: graft.io.VersionedIndex, sets: DataFrame, bands: DataFrame,
+      k: Int, numHashes: Int, bandRows: Int, version: Int): Unit = {
+    import ix.spark.implicits._
     Seq((k, numHashes, bandRows)).toDF("k", "num_hashes", "band_rows")
       .coalesce(1).write.mode("errorifexists")
-      .parquet(paramsPath(dir, name, version))
-    signedUnion(sets, bands).write.partitionBy("__what")
-      .mode("errorifexists").parquet(signPath(dir, name, version))
+      .parquet(ix.path(version, "params"))
+    ix.writeSigned(ix.dir(version), "errorifexists", sets, bands)
   }
 
   /** Sign + index `corpus` as version 1 (or N+1 — a manual rebuild),
@@ -259,18 +146,17 @@ object DedupIndex {
     require(numHashes % bandRows == 0,
       s"numHashes ($numHashes) must be divisible by bandRows ($bandRows)")
     graft.functions.VectorExpressions.register(spark)
-    invalidateParams(dir, name)
-    val v = currentVersion(spark, dir, name).getOrElse(0) + 1
-    val (sets, bands) =
-      signAndBand(corpus, idCol, textCol, k, numHashes, bandRows)
-    // the two writes are this operator's only actions over the cached
-    // sign pass — release it afterwards (r10, advisor: operators that own
-    // their action own the cleanup)
-    try writeVersion(spark, sets, bands, dir, name, k, numHashes, bandRows, v)
-    finally sets.unpersist()
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.current.getOrElse(0) + 1
+    ix.publish(v, retainVersions) {
+      val (sets, bands) =
+        signAndBand(corpus, idCol, textCol, k, numHashes, bandRows)
+      // the write is this operator's only action over the cached sign
+      // pass — release it afterwards (r10, advisor: operators that own
+      // their action own the cleanup)
+      try writeVersion(ix, sets, bands, k, numHashes, bandRows, v)
+      finally sets.unpersist()
+    }
   }
 
   /** The incremental pair algebra shared by [[fold]] and
@@ -311,10 +197,10 @@ object DedupIndex {
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
       idCol: String, textCol: String, thresholdNum: Int = 7,
       thresholdDen: Int = 10, atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(
-      spark, layoutDir(dir, name), atVersion, s"dedup index '$name' at $dir")
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
     graft.functions.VectorExpressions.register(spark)
-    val (k, numHashes, bandRows) = readParams(spark, dir, name, v)
+    val (k, numHashes, bandRows) = readParams(ix, v)
     val (setsI0, bandsI0) =
       signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
     val setsI = setsI0.localCheckpoint()
@@ -322,10 +208,8 @@ object DedupIndex {
     // both checkpoints are materialized — the sign-pass cache has no
     // consumers left (the returned plan reads the checkpoints)
     setsI0.unpersist()
-    pairsOf(setsI, bandsI,
-      readCommitted(spark, dir, name, v, "sets"),
-      readCommitted(spark, dir, name, v, "bands"),
-      thresholdNum, thresholdDen)
+    pairsOf(setsI, bandsI, ix.committedSigned(v, "sets"),
+      ix.committedSigned(v, "bands"), thresholdNum, thresholdDen)
   }
 
   /** Every qualifying near-dup pair WITHIN the indexed corpus itself —
@@ -340,11 +224,11 @@ object DedupIndex {
       spark: SparkSession, dir: String, name: String,
       thresholdNum: Int = 7, thresholdDen: Int = 10,
       atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(
-      spark, layoutDir(dir, name), atVersion, s"dedup index '$name' at $dir")
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
     graft.functions.VectorExpressions.register(spark)
-    val sets = readCommitted(spark, dir, name, v, "sets")
-    val bands = readCommitted(spark, dir, name, v, "bands")
+    val sets = ix.committedSigned(v, "sets")
+    val bands = ix.committedSigned(v, "bands")
     val cands = bands.select(col("doc_id").as("id_n"),
         col("band"), col("bucket"))
       .join(bands.select(col("doc_id").as("id_o"), col("band"),
@@ -378,54 +262,29 @@ object DedupIndex {
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
       idCol: String, textCol: String, thresholdNum: Int = 7,
       thresholdDen: Int = 10, generation: Option[Long] = None): DataFrame = {
-    val v = requireVersion(spark, dir, name)
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
     graft.functions.VectorExpressions.register(spark)
-    val (k, numHashes, bandRows) = readParams(spark, dir, name, v)
-    val committed = committedFolds(spark, dir, name, v)
-    val g = generation.getOrElse(committed.lastOption.getOrElse(0L) + 1L)
-    if (committed.contains(g)) {
-      // replay of a committed generation: the delta is immutable (an
-      // at-least-once source redelivers the same batch), so recompute
-      // its pairs against exactly the state that preceded it
-      val setsW = readSigned(spark, dir, name, v,
-        Seq(s"${deltaPath(dir, name, v, g)}/sign"), "sets")
-      val bandsW = readSigned(spark, dir, name, v,
-        Seq(s"${deltaPath(dir, name, v, g)}/sign"), "bands")
-      return pairsOf(setsW, bandsW,
-        readCommitted(spark, dir, name, v, "sets", belowGen = g),
-        readCommitted(spark, dir, name, v, "bands", belowGen = g),
-        thresholdNum, thresholdDen)
+    val g = ix.fold(v, generation) { g =>
+      val (k, numHashes, bandRows) = readParams(ix, v)
+      val (setsI, bandsI) =
+        signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
+      // overwrite mode: a retry of a crashed fold recomputes the same
+      // generation and replaces the orphan before committing. r10: both
+      // artifacts commit in ONE __what-partitioned write (one job instead
+      // of two); it is the sign-pass cache's only consumer — release it
+      // afterwards (advisor).
+      try ix.writeSigned(ix.delta(v, g), "overwrite", setsI, bandsI)
+      finally setsI.unpersist()
     }
-    require(committed.forall(_ < g),
-      s"fold generation $g is below already-committed generations " +
-        s"${committed.filter(_ > g).mkString(", ")} — out-of-order " +
-        "batch identities would make replay state ambiguous")
-    // committed state BEFORE this fold — the join targets
-    val priorSets = readCommitted(spark, dir, name, v, "sets")
-    val priorBands = readCommitted(spark, dir, name, v, "bands")
-    val (setsI, bandsI) =
-      signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
-    // overwrite mode: a retry of a crashed fold recomputes the same
-    // generation and replaces the orphan before committing. r10: both
-    // artifacts commit in ONE __what-partitioned write (one job instead
-    // of two); it is the sign-pass cache's only consumer — release it
-    // afterwards (advisor).
-    try signedUnion(setsI, bandsI).write.partitionBy("__what")
-      .mode("overwrite").parquet(s"${deltaPath(dir, name, v, g)}/sign")
-    finally setsI.unpersist()
-    val marker = new org.apache.hadoop.fs.Path(
-      s"${foldsDir(dir, name, v)}/g$g.ok")
-    val f = fs(spark, marker.toString)
-    val out = f.create(marker, false)
-    try out.write("ok".getBytes("UTF-8")) finally out.close()
-    // pairs off the JUST-WRITTEN delta (read back — not the lineage of
-    // the input frame, so the verify never re-signs fresh docs) against
-    // prior committed state
-    val setsW = readSigned(spark, dir, name, v,
-      Seq(s"${deltaPath(dir, name, v, g)}/sign"), "sets")
-    val bandsW = readSigned(spark, dir, name, v,
-      Seq(s"${deltaPath(dir, name, v, g)}/sign"), "bands")
-    pairsOf(setsW, bandsW, priorSets, priorBands,
+    // pairs off the generation's stored delta (read back — not the
+    // lineage of the input frame, so the verify never re-signs fresh
+    // docs; on a replay the delta is immutable, an at-least-once source
+    // redelivers the same batch) against exactly the committed state
+    // that preceded it
+    pairsOf(ix.deltaSigned(v, g, "sets"), ix.deltaSigned(v, g, "bands"),
+      ix.committedSigned(v, "sets", belowGen = g),
+      ix.committedSigned(v, "bands", belowGen = g),
       thresholdNum, thresholdDen)
   }
 
@@ -440,13 +299,12 @@ object DedupIndex {
   def compact(
       spark: SparkSession, dir: String, name: String,
       retainVersions: Int = 2): Unit = {
-    val v = requireVersion(spark, dir, name)
-    val (k, numHashes, bandRows) = readParams(spark, dir, name, v)
-    val sets = readCommitted(spark, dir, name, v, "sets")
-    val bands = readCommitted(spark, dir, name, v, "bands")
-    writeVersion(spark, sets, bands, dir, name, k, numHashes, bandRows, v + 1)
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v + 1)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v + 1, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    val (k, numHashes, bandRows) = readParams(ix, v)
+    ix.publish(v + 1, retainVersions) {
+      writeVersion(ix, ix.committedSigned(v, "sets"),
+        ix.committedSigned(v, "bands"), k, numHashes, bandRows, v + 1)
+    }
   }
 }

@@ -41,64 +41,21 @@ import org.apache.spark.sql.functions._
   */
 object SearchIndex {
 
-  private def layoutDir(dir: String, name: String): String =
-    s"$dir/$name.searchindex"
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def index(spark: SparkSession, dir: String, name: String) =
+    graft.io.VersionedIndex(spark, s"$dir/$name.searchindex",
+      s"search index '$name' at $dir",
+      Seq("postings" -> Seq("term", "doc_id", "c", "dl"),
+        "termdf" -> Seq("term", "df"),
+        "totals" -> Seq("n_docs", "total_len")))
 
   def currentVersion(
       spark: SparkSession, dir: String, name: String): Option[Int] =
-    graft.io.VersionPointer.current(spark, layoutDir(dir, name))
+    index(spark, dir, name).current
 
   /** Committed versions still inside the retention window. */
   def versions(
-      spark: SparkSession, dir: String, name: String): Seq[Int] = {
-    val cur = currentVersion(spark, dir, name)
-    graft.io.VersionPointer.versionDirs(spark, layoutDir(dir, name))
-      .filter(v => cur.exists(v <= _))
-  }
-
-  private def sub(dir: String, name: String, v: Int, s: String): String =
-    s"${layoutDir(dir, name)}/v$v/$s"
-  private def foldsDir(dir: String, name: String, v: Int): String =
-    s"${layoutDir(dir, name)}/v$v/_folds"
-  private def deltaPath(dir: String, name: String, v: Int, g: Long): String =
-    s"${layoutDir(dir, name)}/v$v/deltas/g$g"
-
-  private val FoldMarkerRe = """g(\d+)\.ok""".r
-
-  // r10: memoized per-version artifact schemas + multi-path reads — see
-  // DedupIndex.readStored (schema-inferring reads each pay a footer job;
-  // artifact schemas are frozen per version).
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def readStored(
-      spark: SparkSession, schemaKey: String,
-      paths: Seq[String]): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(
-      schemaKey, p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(paths: _*)
-  }
-
-  private def committedFolds(
-      spark: SparkSession, dir: String, name: String, v: Int): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(foldsDir(dir, name, v))
-    val f = fs(spark, p.toString)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq.flatMap(_.getPath.getName match {
-      case FoldMarkerRe(g) => Some(g.toLong)
-      case _ => None
-    }).sorted
-  }
-
-  private def requireVersion(
-      spark: SparkSession, dir: String, name: String): Int =
-    currentVersion(spark, dir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"search index '$name' at $dir does not exist — build() it first"))
+      spark: SparkSession, dir: String, name: String): Seq[Int] =
+    index(spark, dir, name).versions
 
   /** One batch's three artifacts, normalized to internal column names —
     * the SAME tokenization as [[Retrieval.bm25TopK]] ([[Dedup.tokens]]),
@@ -131,50 +88,19 @@ object SearchIndex {
     (postings, termdf, totals, tk)
   }
 
-  /** The three artifacts as ONE `__what`-partitioned frame — r10: a
-    * batch commits in a single write action (one job + one commit
-    * instead of three).
-    */
-  private def signedUnion(
-      postings: DataFrame, termdf: DataFrame,
-      totals: DataFrame): DataFrame = {
-    val nl = lit(null).cast("long")
-    postings.select(lit("postings").as("__what"), col("term"),
-        col("doc_id"), col("c"), col("dl"), nl.as("df"),
-        nl.as("n_docs"), nl.as("total_len"))
-      .unionByName(termdf.select(lit("termdf").as("__what"), col("term"),
-        nl.as("doc_id"), nl.as("c"), nl.as("dl"), col("df"),
-        nl.as("n_docs"), nl.as("total_len")))
-      .unionByName(totals.coalesce(1).select(lit("totals").as("__what"),
-        lit(null).cast("string").as("term"), nl.as("doc_id"), nl.as("c"),
-        nl.as("dl"), nl.as("df"), col("n_docs"), col("total_len")))
-  }
-
-  private val whatCols = Map(
-    "postings" -> Seq("term", "doc_id", "c", "dl"),
-    "termdf" -> Seq("term", "df"),
-    "totals" -> Seq("n_docs", "total_len"))
-
-  private def writeBatch(
-      postings: DataFrame, termdf: DataFrame,
-      totals: DataFrame, root: String, mode: String): Unit =
-    signedUnion(postings, termdf, totals)
-      .write.partitionBy("__what").mode(mode).parquet(s"$root/sign")
-
   /** Sign + index `corpus` as version 1 (or N+1 — a rebuild), then apply
     * the retention window.
     */
   def build(
       spark: SparkSession, corpus: DataFrame, dir: String, name: String,
       idCol: String, textCol: String, retainVersions: Int = 2): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(0) + 1
-    graft.io.VersionPointer.dropDir(spark, s"${layoutDir(dir, name)}/v$v")
-    val (p, t, s, tkCache) = sign(corpus, idCol, textCol)
-    try writeBatch(p, t, s, s"${layoutDir(dir, name)}/v$v", "errorifexists")
-    finally tkCache.unpersist()
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.current.getOrElse(0) + 1
+    ix.publish(v, retainVersions) {
+      val (p, t, s, tkCache) = sign(corpus, idCol, textCol)
+      try ix.writeSigned(ix.dir(v), "errorifexists", p, t, s)
+      finally tkCache.unpersist()
+    }
   }
 
   /** Fold an ingest batch: sign ONLY `fresh` (ids must be new — the
@@ -187,36 +113,13 @@ object SearchIndex {
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
       idCol: String, textCol: String,
       generation: Option[Long] = None): Unit = {
-    val v = requireVersion(spark, dir, name)
-    val committed = committedFolds(spark, dir, name, v)
-    val g = generation.getOrElse(committed.lastOption.getOrElse(0L) + 1L)
-    if (committed.contains(g)) return // committed replay: pure no-op
-    require(committed.forall(_ < g),
-      s"fold generation $g is below already-committed generations " +
-        s"${committed.filter(_ > g).mkString(", ")} — out-of-order " +
-        "batch identities would make the replay no-op ambiguous")
-    val (p, t, s, tkCache) = sign(fresh, idCol, textCol)
-    try writeBatch(p, t, s, deltaPath(dir, name, v, g), "overwrite")
-    finally tkCache.unpersist()
-    val marker = new org.apache.hadoop.fs.Path(
-      s"${foldsDir(dir, name, v)}/g$g.ok")
-    val f = fs(spark, marker.toString)
-    val out = f.create(marker, false)
-    try out.write("ok".getBytes("UTF-8")) finally out.close()
-    ()
-  }
-
-  /** All committed rows of one artifact (base + committed deltas). */
-  private def readCommitted(
-      spark: SparkSession, dir: String, name: String, v: Int,
-      what: String): DataFrame = {
-    val cols = whatCols(what)
-    val roots = s"${layoutDir(dir, name)}/v$v/sign" +:
-      committedFolds(spark, dir, name, v)
-        .map(g => s"${deltaPath(dir, name, v, g)}/sign")
-    readStored(spark, s"${layoutDir(dir, name)}/v$v/sign/__what=$what",
-      roots.map(r => s"$r/__what=$what"))
-      .select(cols.head, cols.tail: _*)
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    ix.fold(v, generation) { g =>
+      val (p, t, s, tkCache) = sign(fresh, idCol, textCol)
+      try ix.writeSigned(ix.delta(v, g), "overwrite", p, t, s)
+      finally tkCache.unpersist()
+    }
   }
 
   /** BM25 top-`k` per query against the maintained index — the
@@ -230,20 +133,20 @@ object SearchIndex {
       spark: SparkSession, queryTerms: DataFrame, dir: String,
       name: String, idCol: String, k: Int, k1: Double = 1.2,
       b: Double = 0.75, atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(spark,
-      layoutDir(dir, name), atVersion, s"search index '$name' at $dir")
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
     val qt = broadcast(queryTerms.select(col("query_id"), col("term")))
     // postings carry dl: the shared core skips the lengths join
-    val tf = readCommitted(spark, dir, name, v, "postings")
+    val tf = ix.committedSigned(v, "postings")
       .join(qt, "term")
       .select(col("query_id"), col("term"), col("doc_id").as(idCol),
         col("c"), col("dl"))
     // per-batch dfs SUM to collection dfs (disjoint doc sets); restrict
     // to query terms before the aggregate
-    val dft = readCommitted(spark, dir, name, v, "termdf")
+    val dft = ix.committedSigned(v, "termdf")
       .join(broadcast(queryTerms.select("term").distinct), "term")
       .groupBy("term").agg(sum("df").as("df"))
-    val stats = readCommitted(spark, dir, name, v, "totals")
+    val stats = ix.committedSigned(v, "totals")
       .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total"))
     Retrieval.bm25RankCut(
       Retrieval.bm25ScoreFromPostings(tf, dft, tf, stats, idCol, k1, b),
@@ -257,20 +160,18 @@ object SearchIndex {
   def compact(
       spark: SparkSession, dir: String, name: String,
       retainVersions: Int = 2): Unit = {
-    val v = requireVersion(spark, dir, name)
-    val p = readCommitted(spark, dir, name, v, "postings").localCheckpoint()
-    val t = readCommitted(spark, dir, name, v, "termdf")
+    val ix = index(spark, dir, name)
+    val v = ix.requireCurrent
+    val p = ix.committedSigned(v, "postings").localCheckpoint()
+    val t = ix.committedSigned(v, "termdf")
       .groupBy("term").agg(sum("df").as("df")).localCheckpoint()
-    val s = readCommitted(spark, dir, name, v, "totals")
+    val s = ix.committedSigned(v, "totals")
       .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
         coalesce(sum("total_len"), lit(0L)).as("total_len"))
       .localCheckpoint()
-    graft.io.VersionPointer.dropDir(
-      spark, s"${layoutDir(dir, name)}/v${v + 1}")
-    writeBatch(p, t, s, s"${layoutDir(dir, name)}/v${v + 1}",
-      "errorifexists")
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v + 1)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v + 1, retainVersions)
+    // the write is the three checkpoints' only consumer
+    try ix.publish(v + 1, retainVersions) {
+      ix.writeSigned(ix.dir(v + 1), "errorifexists", p, t, s)
+    } finally graft.io.VersionedIndex.releaseCheckpoint(p, t, s)
   }
 }

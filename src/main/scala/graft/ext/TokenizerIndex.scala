@@ -22,23 +22,18 @@ import org.apache.spark.sql.functions._
   */
 object TokenizerIndex {
 
-  private def layoutDir(dir: String, name: String): String =
-    s"$dir/$name.tokindex"
+  private def index(spark: SparkSession, dir: String, name: String) =
+    graft.io.VersionedIndex(spark, s"$dir/$name.tokindex",
+      s"tokenizer '$name' at $dir")
 
   def currentVersion(
       spark: SparkSession, dir: String, name: String): Option[Int] =
-    graft.io.VersionPointer.current(spark, layoutDir(dir, name))
+    index(spark, dir, name).current
 
   /** Committed versions still inside the retention window. */
   def versions(
-      spark: SparkSession, dir: String, name: String): Seq[Int] = {
-    val cur = currentVersion(spark, dir, name)
-    graft.io.VersionPointer.versionDirs(spark, layoutDir(dir, name))
-      .filter(v => cur.exists(v <= _))
-  }
-
-  private def sub(dir: String, name: String, v: Int, s: String): String =
-    s"${layoutDir(dir, name)}/v$v/$s"
+      spark: SparkSession, dir: String, name: String): Seq[Int] =
+    index(spark, dir, name).versions
 
   /** Train the first `numMerges` BPE rules on `corpus` and commit them
     * as version 1 (or N+1 — a retrain), then apply the retention window.
@@ -47,17 +42,16 @@ object TokenizerIndex {
       spark: SparkSession, corpus: DataFrame, dir: String, name: String,
       textCol: String, numMerges: Int, retainVersions: Int = 2): Unit = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    val v = currentVersion(spark, dir, name).getOrElse(0) + 1
-    graft.io.VersionPointer.dropDir(spark, s"${layoutDir(dir, name)}/v$v")
-    val rules = Bpe.trainMerges(corpus, textCol, numMerges)
-    import spark.implicits._
-    Seq(numMerges).toDF("num_merges").coalesce(1)
-      .write.mode("errorifexists").parquet(sub(dir, name, v, "params"))
-    rules.coalesce(1).write.mode("errorifexists")
-      .parquet(sub(dir, name, v, "merges"))
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.current.getOrElse(0) + 1
+    ix.publish(v, retainVersions) {
+      val rules = Bpe.trainMerges(corpus, textCol, numMerges)
+      import spark.implicits._
+      Seq(numMerges).toDF("num_merges").coalesce(1)
+        .write.mode("errorifexists").parquet(ix.path(v, "params"))
+      rules.coalesce(1).write.mode("errorifexists")
+        .parquet(ix.path(v, "merges"))
+    }
   }
 
   /** The frozen merge rules of the current (or a retained historical)
@@ -66,9 +60,8 @@ object TokenizerIndex {
   def merges(
       spark: SparkSession, dir: String, name: String,
       atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(spark,
-      layoutDir(dir, name), atVersion, s"tokenizer '$name' at $dir")
-    spark.read.parquet(sub(dir, name, v, "merges"))
+    val ix = index(spark, dir, name)
+    ix.artifact(ix.resolve(atVersion), "merges")
   }
 
   /** Tokenize a DISTINCT word list (column `w`) under the artifact's
@@ -82,24 +75,16 @@ object TokenizerIndex {
   def tokenizeWords(
       spark: SparkSession, words: DataFrame, dir: String, name: String,
       atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(spark,
-      layoutDir(dir, name), atVersion, s"tokenizer '$name' at $dir")
-    require(!hasVocab(spark, dir, name, v),
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
+    require(!ix.exists(ix.path(v, "vocab")),
       s"tokenizer '$name' at $dir is a UNIGRAM artifact — " +
         "use segmentWords(), not the BPE apply")
-    val numMerges = spark.read.parquet(sub(dir, name, v, "params"))
-      .head().getAs[Int]("num_merges")
-    Bpe.applyMerges(
-      words, spark.read.parquet(sub(dir, name, v, "merges")), numMerges)
+    Bpe.applyMerges(words, ix.artifact(v, "merges"),
+      ix.params(v).getAs[Int]("num_merges"))
   }
 
   // ---- unigram family (the [[Unigram]] trainer behind the same seam) ----
-
-  private def hasVocab(
-      spark: SparkSession, dir: String, name: String, v: Int): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(sub(dir, name, v, "vocab"))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
 
   /** Train a unigram vocabulary ([[Unigram.train]] — seed → rounds of
     * cost/Viterbi/recount/prune) and commit it as a version: `vocab` is
@@ -111,20 +96,19 @@ object TokenizerIndex {
       spark: SparkSession, corpus: DataFrame, dir: String, name: String,
       textCol: String, rounds: Int, multiKeep: Int, maxPieceLen: Int = 4,
       maxWordLen: Int = 12, retainVersions: Int = 2): Unit = {
-    val v = currentVersion(spark, dir, name).getOrElse(0) + 1
-    graft.io.VersionPointer.dropDir(spark, s"${layoutDir(dir, name)}/v$v")
-    val vocab = Unigram.train(corpus, textCol, rounds, multiKeep,
-      maxPieceLen, maxWordLen)
-    import spark.implicits._
-    Seq((rounds, multiKeep, maxPieceLen, maxWordLen))
-      .toDF("rounds", "multi_keep", "max_piece_len", "max_word_len")
-      .coalesce(1).write.mode("errorifexists")
-      .parquet(sub(dir, name, v, "uparams"))
-    vocab.coalesce(1).write.mode("errorifexists")
-      .parquet(sub(dir, name, v, "vocab"))
-    graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v)
-    graft.io.VersionPointer.retain(
-      spark, layoutDir(dir, name), v, retainVersions)
+    val ix = index(spark, dir, name)
+    val v = ix.current.getOrElse(0) + 1
+    ix.publish(v, retainVersions) {
+      val vocab = Unigram.train(corpus, textCol, rounds, multiKeep,
+        maxPieceLen, maxWordLen)
+      import spark.implicits._
+      Seq((rounds, multiKeep, maxPieceLen, maxWordLen))
+        .toDF("rounds", "multi_keep", "max_piece_len", "max_word_len")
+        .coalesce(1).write.mode("errorifexists")
+        .parquet(ix.path(v, "uparams"))
+      vocab.coalesce(1).write.mode("errorifexists")
+        .parquet(ix.path(v, "vocab"))
+    }
   }
 
   /** The frozen unigram vocabulary of the current (or a retained
@@ -133,12 +117,12 @@ object TokenizerIndex {
   def vocab(
       spark: SparkSession, dir: String, name: String,
       atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(spark,
-      layoutDir(dir, name), atVersion, s"tokenizer '$name' at $dir")
-    require(hasVocab(spark, dir, name, v),
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
+    require(ix.exists(ix.path(v, "vocab")),
       s"tokenizer '$name' at $dir is a BPE artifact — it has no " +
         "unigram vocab")
-    spark.read.parquet(sub(dir, name, v, "vocab"))
+    ix.artifact(v, "vocab")
   }
 
   /** Viterbi-segment a DISTINCT word list (column `w`) under the
@@ -150,14 +134,12 @@ object TokenizerIndex {
   def segmentWords(
       spark: SparkSession, words: DataFrame, dir: String, name: String,
       atVersion: Option[Int] = None): DataFrame = {
-    val v = graft.io.VersionPointer.resolveRead(spark,
-      layoutDir(dir, name), atVersion, s"tokenizer '$name' at $dir")
-    require(hasVocab(spark, dir, name, v),
+    val ix = index(spark, dir, name)
+    val v = ix.resolve(atVersion)
+    require(ix.exists(ix.path(v, "vocab")),
       s"tokenizer '$name' at $dir is a BPE artifact — " +
         "use tokenizeWords(), not the unigram segmenter")
-    val maxPieceLen = spark.read.parquet(sub(dir, name, v, "uparams"))
-      .head().getAs[Int]("max_piece_len")
-    Unigram.segment(words,
-      spark.read.parquet(sub(dir, name, v, "vocab")), maxPieceLen)
+    Unigram.segment(words, ix.artifact(v, "vocab"),
+      ix.params(v, "uparams").getAs[Int]("max_piece_len"))
   }
 }
