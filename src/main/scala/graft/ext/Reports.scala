@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.io.VersionPointer
+import graft.io.{VersionPointer, VersionedIndex}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * report" pattern (Gopher rule cards, dataset cards, corpus profiles).
   *
   * State lives under `stateDir` as versioned parquet (`v<N>/`) behind
-  * the shared [[graft.io.VersionPointer]] manifest: each fold writes the
-  * NEXT version's dir, then commits it with one create-only manifest PUT
+  * the shared [[graft.io.VersionPointer]] manifest: each fold publishes
+  * the NEXT version through [[graft.io.VersionedIndex.publish]] — write
+  * its dir, then commit it with one create-only manifest PUT
   * — no `java.io.File`, no renames, nothing a rename-less object store
   * can tear. A crash mid-fold leaves an uncommitted orphan dir that
   * readers never see and the retry overwrites; newest-2 version
@@ -57,13 +58,10 @@ object Reports {
       case None => batchReport
     }
     val nv = prev.getOrElse(0) + 1
-    // drop any orphan a crashed predecessor left, then create-only write
-    VersionPointer.dropDir(spark, versionDir(stateDir, nv))
-    next.coalesce(1).write.mode("errorifexists")
-      .parquet(versionDir(stateDir, nv))
-    VersionPointer.commit(spark, stateDir, nv)
     // newest-2 retention: v(N-1) stays for in-flight readers
-    if (nv > 2) VersionPointer.dropDir(spark, versionDir(stateDir, nv - 2))
+    VersionedIndex(spark, stateDir, "report").publish(nv, retainVersions = 2)(
+      next.coalesce(1).write.mode("errorifexists")
+        .parquet(versionDir(stateDir, nv)))
     spark.read.parquet(versionDir(stateDir, nv))
   }
 

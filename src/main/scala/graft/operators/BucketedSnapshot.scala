@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.io.{SingleFile, VersionPointer}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,13 +35,12 @@ import org.apache.spark.sql.functions._
   *      write either.
   *
   * Each fold writes a NEW versioned directory (`v1`, `v2`, …) under
-  * `{dir}/{stream}.snapshot.bucketed/` and promotes it by CREATING the
-  * next immutable `_current.<seq>` manifest file (readers take the
-  * highest seq that parses) — the same never-read-what-you're-
-  * overwriting discipline as the single-file snapshot, with no rename
-  * anywhere on the commit path, so the promote is safe on object stores
-  * where rename is a non-atomic copy+delete (see [[readPointer]]). The
-  * superseded version's table and files are dropped after promotion.
+  * `{dir}/{stream}.snapshot.bucketed/` and promotes it with a
+  * [[graft.io.VersionPointer]] commit (one create-only manifest PUT —
+  * no rename anywhere on the commit path, so the promote is safe on
+  * object stores where rename is a non-atomic copy+delete). Versions
+  * that fall out of the retention window lose their files and tables
+  * after promotion.
   *
   * Catalog note: bucket metadata lives in the session catalog; a fresh
   * session re-registers the external table from the pointer + parquet
@@ -73,18 +74,15 @@ object BucketedSnapshot {
     s"graft_snap_${safe}_${h}_v$version"
   }
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Current version from the pointer manifests, if the layout exists. */
+  /** Current version from the pointer, if the layout exists. */
   private[graft] def currentVersion(
       spark: SparkSession, snapshotDir: String, stream: String): Option[Int] =
-    readPointer(spark, snapshotDir, stream).map(_.version)
+    VersionPointer.current(spark, layoutDir(snapshotDir, stream))
 
   /** One committed pointer state: version, buckets-recorded-at-write,
-    * and (MOR layouts only) the highest RESERVED generation. The bucket
-    * count rides along so a later session cannot silently re-register the
+    * and (MOR layouts only) the highest RESERVED generation — the
+    * manifest record `<version> <buckets> [<gen>] ok`. The bucket count
+    * rides along so a later session cannot silently re-register the
     * table with a DIFFERENT count (the catalog would then claim an
     * alignment the files don't have — misread, not error); the
     * generation rides along so a MOR fold never has to scan the stored
@@ -93,163 +91,22 @@ object BucketedSnapshot {
   private case class Pointer(
       version: Int, buckets: Option[Int], gen: Option[Long])
 
-  private val ManifestRe = """_current\.(\d{9})""".r
-
-  /** Manifest records end with a literal `ok` terminator: a torn write
-    * observed mid-flight ("12 4 9" seen as "1") would otherwise parse as
-    * a VALID pointer to the wrong version — a digit prefix is still
-    * digits. Requiring the terminator makes any truncation unparseable,
-    * so readers fall through to the previous committed manifest. The
-    * legacy single `_current` file (pre-manifest format) carries no
-    * terminator and is parsed leniently — it was always
-    * rename-committed, never observed mid-write.
-    */
-  private def parsePointer(
-      text: String, requireTerminator: Boolean): Option[Pointer] = {
-    val parts = text.trim.split("\\s+")
-    val payload =
-      if (!requireTerminator) Some(parts)
-      else if (parts.length >= 2 && parts.last == "ok")
-        Some(parts.dropRight(1))
-      else if (parts.length >= 2 && parts.forall(_.forall(_.isDigit)))
-        // pre-terminator manifest format ("v b") — still readable, but
-        // NEVER trust a gen token here: a torn new-format record
-        // ("1 2 77 ok" observed as "1 2 7") is all-digits with ≥2 tokens
-        // and would parse as a VALID pointer carrying a STALE generation
-        // — two folds would then share a generation and MOR keep-last
-        // resolution becomes arbitrary. Taking only version+buckets is
-        // safe: ≥2 tokens means a space follows token 1 so the VERSION
-        // is complete, a torn-off buckets digit fails the checkBuckets
-        // require loudly, and gen=None falls back to the max(GenCol)
-        // scan, which is slow but always correct.
-        Some(parts.take(2))
-      else None
-    payload.flatMap { p =>
-      scala.util.Try(Pointer(
-        p(0).toInt,
-        if (p.length > 1) Some(p(1).toInt) else None,
-        if (p.length > 2) Some(p(2).toLong) else None)).toOption
-    }
-  }
-
-  /** Read the newest COMMITTED pointer. The pointer is a sequence of
-    * immutable manifest files `_current.<seq>` — a reader lists them and
-    * takes the highest seq that parses; a writer only ever CREATES a new
-    * manifest (one PUT), never renames or overwrites. This is the
-    * object-store-safe commit: S3-family stores have no atomic rename
-    * (rename = copy + delete, either half can land alone), but a single
-    * new-key PUT is atomic, and a crash between "write new" and "GC old"
-    * just leaves an extra older manifest that max-seq ignores. The
-    * legacy single `_current` file (pre-manifest layouts) is read as a
-    * fallback when no manifest exists.
-    */
-  private def readPointer(
+  private def pointer(
       spark: SparkSession, snapshotDir: String,
-      stream: String): Option[Pointer] = {
-    val dir = layoutDir(snapshotDir, stream)
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    def slurp(p: org.apache.hadoop.fs.Path,
-        requireTerminator: Boolean): Option[Pointer] =
-      scala.util.Try {
-        val in = f.open(p)
-        try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      }.toOption.flatMap(parsePointer(_, requireTerminator))
-    // List-then-open race: between our listing and our open, the single
-    // writer can commit (twice) and GC every manifest we listed — all
-    // opens then miss, which must NOT read as "no snapshot" (a fold
-    // would silently rebuild from its delta alone, the data-loss mode
-    // the commit protocol exists to prevent). Manifests present in a
-    // listing but all unreadable ⇒ re-list; only a listing with NO
-    // manifests (and no legacy file) means no snapshot. Bounded retries,
-    // then fail loudly rather than lie.
-    var attempt = 0
-    while (attempt < 5) {
-      if (!f.exists(dirPath)) return None
-      val manifests = f.listStatus(dirPath).toSeq
-        .flatMap(st => st.getPath.getName match {
-          case ManifestRe(seq) => Some(seq.toLong -> st.getPath)
-          case _ => None
-        })
-        .sortBy(-_._1)
-      val resolved = manifests.view
-        .flatMap { case (_, p) => slurp(p, requireTerminator = true) }
-        .headOption
-      if (resolved.isDefined) return resolved
-      if (manifests.isEmpty) {
-        val legacy = new org.apache.hadoop.fs.Path(s"$dir/_current")
-        if (!f.exists(legacy)) return None
-        // Legacy `_current` was rename-committed (never observed
-        // mid-write), so present-but-unreadable/unparseable is an
-        // infrastructure fault, NOT "no snapshot" — returning None here
-        // would let the next fold silently rebuild from its delta alone
-        // (the data-loss mode the manifest path refuses loudly above).
-        return Some(slurp(legacy, requireTerminator = false).getOrElse(
-          throw new IllegalStateException(
-            s"bucketed snapshot '$stream' at $snapshotDir: legacy " +
-              "_current pointer exists but is unreadable or unparseable " +
-              "— refusing to treat a present pointer as an absent " +
-              "snapshot")))
-      }
-      // manifests listed but none readable/parseable — racing commit+GC
-      // or all-torn; re-list (new manifests will have appeared in the
-      // racing case)
-      attempt += 1
-      if (attempt < 5) Thread.sleep(50L * attempt)
-    }
-    throw new IllegalStateException(
-      s"bucketed snapshot '$stream' at $snapshotDir: pointer manifests " +
-        "exist but none parsed after retries — refusing to treat a " +
-        "present-but-unreadable pointer as an absent snapshot")
-  }
+      stream: String): Option[Pointer] =
+    VersionPointer.record(spark, layoutDir(snapshotDir, stream)).map(r =>
+      Pointer(r.version, r.fields.headOption.map(_.toInt), r.fields.lift(1)))
 
-  private def maxManifestSeq(
-      f: org.apache.hadoop.fs.FileSystem,
-      dirPath: org.apache.hadoop.fs.Path): Long =
-    if (!f.exists(dirPath)) 0L
-    else f.listStatus(dirPath).toSeq.flatMap(_.getPath.getName match {
-      case ManifestRe(seq) => Some(seq.toLong)
-      case _ => None
-    }).foldLeft(0L)(math.max)
-
-  /** Commit a pointer state: CREATE `_current.<maxSeq+1>` (single PUT —
-    * no rename anywhere on the commit path), then best-effort GC of
-    * manifests older than the previous one (the newest two stay, so a
-    * reader that listed just before the commit can still open its pick).
-    * Single-writer discipline (the snapshot contract throughout).
-    */
-  private def writePointer(
+  private def commit(
       spark: SparkSession, snapshotDir: String, stream: String,
-      version: Int, buckets: Int, gen: Option[Long] = None): Unit = {
-    val dir = layoutDir(snapshotDir, stream)
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
-    val seq = maxManifestSeq(f, dirPath) + 1L
-    val ptr = new org.apache.hadoop.fs.Path(dir + f"/_current.$seq%09d")
-    // trailing `ok` = torn-write detector (see parsePointer)
-    val body =
-      s"$version $buckets" + gen.map(g => s" $g").getOrElse("") + " ok"
-    val out = f.create(ptr, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    // GC: keep seq and seq-1, drop the rest (+ the legacy file, now
-    // superseded by any manifest)
-    f.listStatus(dirPath).foreach { st =>
-      st.getPath.getName match {
-        case ManifestRe(s) if s.toLong < seq - 1L =>
-          f.delete(st.getPath, false); ()
-        case "_current" => f.delete(st.getPath, false); ()
-        case _ => ()
-      }
-    }
-    ()
-  }
+      version: Int, buckets: Int, gen: Option[Long] = None): Unit =
+    VersionPointer.commit(spark, layoutDir(snapshotDir, stream), version,
+      buckets.toLong +: gen.toSeq)
 
   private def checkBuckets(
       spark: SparkSession, snapshotDir: String, stream: String,
       buckets: Int): Unit =
-    readPointer(spark, snapshotDir, stream).flatMap(_.buckets).foreach { b =>
+    pointer(spark, snapshotDir, stream).flatMap(_.buckets).foreach { b =>
       require(b == buckets,
         s"bucketed snapshot '$stream' at $snapshotDir was written with " +
           s"$b buckets; reading/folding with $buckets would misalign the " +
@@ -336,9 +193,7 @@ object BucketedSnapshot {
     // a crash between a previous attempt's write and its pointer promote
     // leaves a partial v$version dir; writing into it would mix two
     // attempts' files — clear it first (the pointer still guards reads)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
-    if (f.exists(p)) f.delete(p, true)
+    VersionPointer.dropDir(spark, path)
     df.write
       .format("parquet")
       .bucketBy(buckets, pk.head, pk.tail: _*)
@@ -348,23 +203,23 @@ object BucketedSnapshot {
     tbl
   }
 
-  private def dropVersion(
+  /** Apply the retention window after committing `current`: the
+    * [[graft.io.VersionPointer]] window GCs every older version dir, and
+    * their catalog tables go with them.
+    */
+  private def retain(
       spark: SparkSession, snapshotDir: String, stream: String,
-      version: Int): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS " +
-      s"`${tableName(snapshotDir, stream, version)}`")
-    val p = new org.apache.hadoop.fs.Path(
-      s"${layoutDir(snapshotDir, stream)}/v$version")
-    val f = fs(spark, p.toString)
-    if (f.exists(p)) f.delete(p, true)
-    ()
-  }
+      current: Int, keep: Int): Unit =
+    VersionPointer.retain(spark, layoutDir(snapshotDir, stream), current, keep)
+      .foreach(v => spark.sql(
+        s"DROP TABLE IF EXISTS `${tableName(snapshotDir, stream, v)}`"))
 
   /** One snapshot fold: merge `fresh` over the stored snapshot with
     * keep-last-by-PK semantics (≡ [[Upsert.keepLast]] given the layout's
     * unique-PK invariant — BucketedSnapshotSpec proves the equivalence),
-    * persist as the next bucketed version, promote, GC the old version.
-    * Returns the promoted snapshot as a bucketed scan.
+    * persist as the next bucketed version, promote, GC the versions past
+    * the `retainVersions` window. Returns the promoted snapshot as a
+    * bucketed scan.
     */
   def fold(
       spark: SparkSession, fresh: DataFrame, stream: String,
@@ -395,12 +250,11 @@ object BucketedSnapshot {
           (kept.unionByName(delta, allowMissingColumns = true), v + 1)
       }
       writeVersion(merged, spark, snapshotDir, stream, pk, buckets, nextV)
-      writePointer(spark, snapshotDir, stream, nextV, buckets)
+      commit(spark, snapshotDir, stream, nextV, buckets)
       // retention window: keep the last `retainVersions` version dirs
       // for time-travel reads ([[readVersion]]); default 1 = GC the
-      // superseded version immediately (the original behavior)
-      if (nextV > retainVersions)
-        dropVersion(spark, snapshotDir, stream, nextV - retainVersions)
+      // superseded versions immediately
+      retain(spark, snapshotDir, stream, nextV, retainVersions)
       spark.table(tableName(snapshotDir, stream, nextV))
     } finally { delta.unpersist(); () }
   }
@@ -422,9 +276,8 @@ object BucketedSnapshot {
         s"no snapshot '$stream' at $snapshotDir"))
     require(version >= 1 && version <= cur,
       s"version $version out of range [1, $cur] for '$stream'")
-    val p = new org.apache.hadoop.fs.Path(
-      s"${layoutDir(snapshotDir, stream)}/v$version")
-    if (!fs(spark, p.toString).exists(p))
+    if (!VersionPointer.versionDirs(spark, layoutDir(snapshotDir, stream))
+        .contains(version))
       throw new IllegalStateException(
         s"version $version of '$stream' has been GC'd past the " +
           "retention window (fold with retainVersions > 1 to keep it)")
@@ -539,14 +392,14 @@ object BucketedSnapshot {
       tieBreak: Seq[String]): Unit = {
     require(pk.nonEmpty, "bucketed snapshot requires a primary key")
     checkBuckets(spark, snapshotDir, stream, buckets)
-    readPointer(spark, snapshotDir, stream) match {
+    pointer(spark, snapshotDir, stream) match {
       case None =>
         val base = dedupBatch(fresh, pk, buckets, tieBreak)
           .withColumn(GenCol, lit(1L))
         writeVersion(base, spark, snapshotDir, stream, pk, buckets, 1)
         recordGen(spark, snapshotDir, stream, 1, 1L,
           listDataFiles(spark, snapshotDir, stream, 1))
-        writePointer(spark, snapshotDir, stream, 1, buckets, Some(1L))
+        commit(spark, snapshotDir, stream, 1, buckets, Some(1L))
       case Some(ptr) =>
         val v = ptr.version
         val tbl = ensureTable(spark, snapshotDir, stream, pk, buckets, v)
@@ -569,7 +422,7 @@ object BucketedSnapshot {
         // could crash into a state where a later fold REUSES the
         // appended generation — two folds sharing a gen would make the
         // read-time keep-last pick arbitrarily between them
-        writePointer(spark, snapshotDir, stream, v, buckets, Some(nextGen))
+        commit(spark, snapshotDir, stream, v, buckets, Some(nextGen))
         val delta = dedupBatch(fresh, pk, buckets, tieBreak)
           .withColumn(GenCol, lit(nextGen))
         // the generation→file sidecar record is the listing DIFF around
@@ -602,7 +455,7 @@ object BucketedSnapshot {
       version: Int): Set[String] = {
     val dir = s"${layoutDir(snapshotDir, stream)}/v$version"
     val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
+    val f = SingleFile.fs(spark, dir)
     if (!f.exists(p)) Set.empty
     else f.listStatus(p).toSeq
       .filter(st => st.isFile && {
@@ -634,7 +487,7 @@ object BucketedSnapshot {
       version: Int): Set[Long] = {
     val dir = gensDir(snapshotDir, stream, version)
     val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, dir)
+    val f = SingleFile.fs(spark, dir)
     if (!f.exists(p)) Set.empty
     else f.listStatus(p).toSeq
       .filter(_.isDirectory)
@@ -665,7 +518,7 @@ object BucketedSnapshot {
       pk: Seq[String], buckets: Int, sinceGen: Long): Option[DataFrame] = {
     require(sinceGen >= 0, s"sinceGen must be >= 0, got $sinceGen")
     checkBuckets(spark, snapshotDir, stream, buckets)
-    readPointer(spark, snapshotDir, stream).map { ptr =>
+    pointer(spark, snapshotDir, stream).map { ptr =>
       val v = ptr.version
       val tbl = ensureTable(spark, snapshotDir, stream, pk, buckets, v)
       val t = spark.table(tbl)
@@ -722,14 +575,14 @@ object BucketedSnapshot {
     }
 
   /** Fold all accumulated generations back into one: full rewrite to the
-    * next version (generation reset to 1), pointer promote, old version
-    * dropped. The amortized cost that keeps [[readMor]]'s per-read merge
-    * bounded. On a CDC layout the rewrite PURGES tombstones: the
-    * resolved state excludes deleted keys, so neither the tombstone row
-    * nor any superseded generation of its key reaches the new files —
-    * with the old version's GC, the deleted key's bytes are gone from
-    * the layout (the erasure guarantee; MorSnapshotSpec greps the
-    * rewritten files raw).
+    * next version (generation reset to 1), pointer promote, every older
+    * version dropped. The amortized cost that keeps [[readMor]]'s
+    * per-read merge bounded. On a CDC layout the rewrite PURGES
+    * tombstones: the resolved state excludes deleted keys, so neither the
+    * tombstone row nor any superseded generation of its key reaches the
+    * new files — with the older versions' GC, the deleted key's bytes are
+    * gone from the layout (the erasure guarantee; MorSnapshotSpec greps
+    * the rewritten files raw).
     */
   def compactMor(
       spark: SparkSession, stream: String, snapshotDir: String,
@@ -748,8 +601,8 @@ object BucketedSnapshot {
     writeVersion(resolved, spark, snapshotDir, stream, pk, buckets, v + 1)
     recordGen(spark, snapshotDir, stream, v + 1, 1L,
       listDataFiles(spark, snapshotDir, stream, v + 1))
-    writePointer(spark, snapshotDir, stream, v + 1, buckets, Some(1L))
-    dropVersion(spark, snapshotDir, stream, v)
+    commit(spark, snapshotDir, stream, v + 1, buckets, Some(1L))
+    retain(spark, snapshotDir, stream, v + 1, keep = 1)
     readMor(spark, stream, snapshotDir, pk, buckets).get
   }
 
@@ -762,22 +615,10 @@ object BucketedSnapshot {
     // pointer is unreadable (that unreadable state is often WHY the
     // caller is resetting) — sweep every version's table name instead
     // of reading the pointer for the current one
-    val f = fs(spark, layoutDir(snapshotDir, stream))
-    val p = new org.apache.hadoop.fs.Path(layoutDir(snapshotDir, stream))
-    if (f.exists(p)) {
-      f.listStatus(p).foreach { st =>
-        st.getPath.getName match {
-          case n if n.startsWith("v") =>
-            scala.util.Try(n.drop(1).toInt).foreach { v =>
-              spark.sql(s"DROP TABLE IF EXISTS " +
-                s"`${tableName(snapshotDir, stream, v)}`")
-            }
-          case _ => ()
-        }
-      }
-      f.delete(p, true)
-    }
-    ()
+    val layout = layoutDir(snapshotDir, stream)
+    VersionPointer.versionDirs(spark, layout).foreach(v => spark.sql(
+      s"DROP TABLE IF EXISTS `${tableName(snapshotDir, stream, v)}`"))
+    VersionPointer.dropDir(spark, layout)
   }
 
   /** The merge PLAN for spec assertion — identical shape to [[fold]]'s

@@ -18,15 +18,11 @@ final case class SnapshotOptions(
     localizeDatetimeTypes: Boolean = false,
     overwrite: Boolean = false,
     csvOptions: Map[String, String] = Map.empty,
-    /** Scale path: keep the snapshot as a parquet *directory*,
-      * repartitioned by PK so successive merges shuffle consistently;
-      * single-file mode is reference parity for small state.
-      */
-    directoryLayout: Boolean = false,
-    /** Further scale path: persist the snapshot as a BUCKETED external
-      * table on the PK ([[BucketedSnapshot]]) so repeated merges never
-      * re-shuffle the snapshot side — only the incoming delta crosses
-      * the wire. Overrides `directoryLayout`/`useCsv`.
+    /** Scale path: persist the snapshot as a BUCKETED external table on
+      * the PK ([[BucketedSnapshot]]) so repeated merges never re-shuffle
+      * the snapshot side — only the incoming delta crosses the wire.
+      * Single-file mode is reference parity for small state. Parquet
+      * only (`useCsv` is refused).
       */
     bucketBy: Option[Int] = None)
 
@@ -42,9 +38,9 @@ final case class SnapshotOptions(
   *    write goes to a temp path and is promoted by rename *after* the merge
   *    fully materializes — and the returned DataFrame re-reads the new file
   *    so later actions never touch the replaced one;
-  *  - at scale the snapshot should live as a parquet *directory* partitioned
-  *    by PK bucket (`useDirectoryLayout`), keeping the merge shuffle aligned
-  *    run over run; single-file mode is reference parity for small state;
+  *  - at scale the snapshot lives as a PK-bucketed table (`bucketBy`,
+  *    [[BucketedSnapshot]]), so a merge shuffles only the delta;
+  *    single-file mode is reference parity for small state;
   *  - job budget of a single-file parquet merge below the
   *    [[graft.conf.Tuning.withSmallInputScope]] gate: ONE Spark job (the
   *    shuffle and the write). Both reads resolve their schema from the
@@ -53,8 +49,8 @@ final case class SnapshotOptions(
 object Snapshot {
 
   /** S6 (ref: src/etl-utils.ts:221-241): `{dir}/{stream}.snapshot.parquet`,
-    * else `.snapshot.csv`, else None. A parquet *directory* produced by
-    * `useDirectoryLayout` is also honored.
+    * else `.snapshot.csv`, else the current version of a bucketed layout,
+    * else None.
     */
   def readSnapshots(
       spark: SparkSession,
@@ -143,20 +139,7 @@ object Snapshot {
     if (opts.useCsv)
       SingleFile.write(spark, Export.stringifyComplex(df), path, "csv",
         Export.csvWriteOptions)
-    else if (opts.directoryLayout) {
-      // Directory snapshot with the same safe read-overwrite cycle: fully
-      // materialize into a temp dir, then swap. Repartition on the PK so
-      // every merge shuffles the same way run over run.
-      val fs = SingleFile.fs(spark, path)
-      val target = new org.apache.hadoop.fs.Path(path)
-      val tmp = new org.apache.hadoop.fs.Path(target.getParent,
-        s".${target.getName}.__swap__${System.nanoTime()}")
-      df.repartition(opts.pk.map(col): _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(target)) fs.delete(target, true)
-      if (!fs.rename(tmp, target))
-        throw new IllegalStateException(s"rename $tmp -> $path failed")
-    } else SingleFile.write(spark, df, path, "parquet")
+    else SingleFile.write(spark, df, path, "parquet")
 
   /** M3 orchestration (ref: src/etl-utils.ts:258-355). Returns, per the
     * reference's flag matrix:
@@ -193,11 +176,9 @@ object Snapshot {
           else (localized, data)
         val merged = Upsert.keepLast(oldC, dataC, opts.pk)
         // a single-file merge below the size gate runs its shuffle and
-        // write as one job; the directory layout keeps its PK partitioning
-        val scopeBytes =
-          if (opts.directoryLayout && !opts.useCsv) Long.MaxValue
-          else addBytes(
-            Tuning.estimatedBytes(old), Tuning.estimatedBytes(data))
+        // write as one job
+        val scopeBytes = addBytes(
+          Tuning.estimatedBytes(old), Tuning.estimatedBytes(data))
         try Tuning.withSmallInputScope(spark, scopeBytes)(
           writeSnapshot(spark, merged, path, opts))
         catch {

@@ -120,41 +120,6 @@ class BucketedSnapshotSpec extends AnyFunSuite with SparkSpec {
     torn.delete()
   }
 
-  test("a legacy single-file _current pointer still reads") {
-    val dir = tmpDir("bsnap_legacy")
-    BucketedSnapshot.fold(spark, Seq((1L, "a")).toDF("k", "name"),
-      "s", dir, Seq("k"), 2)
-    val layout = new java.io.File(s"$dir/s.snapshot.bucketed")
-    // rewrite the layout to the pre-manifest format: one `_current` file
-    layout.listFiles().filter(_.getName.startsWith("_current."))
-      .foreach(_.delete())
-    val w = new java.io.FileWriter(new java.io.File(layout, "_current"))
-    w.write("1 2"); w.close()
-    assert(BucketedSnapshot.currentVersion(spark, dir, "s").contains(1))
-    assert(BucketedSnapshot.read(spark, "s", dir, Seq("k"), 2).get
-      .as[(Long, String)].collect.toSeq == Seq((1L, "a")))
-  }
-
-  test("a present-but-unparseable legacy pointer fails loudly") {
-    // the legacy `_current` file was rename-committed, so a present file
-    // that can't be read or parsed is an infrastructure fault — treating
-    // it as "no snapshot" would let the next fold silently rebuild from
-    // its delta alone (data loss). Must throw, mirroring the manifest
-    // path's retry-then-fail.
-    val dir = tmpDir("bsnap_legacy_bad")
-    BucketedSnapshot.fold(spark, Seq((1L, "a")).toDF("k", "name"),
-      "s", dir, Seq("k"), 2)
-    val layout = new java.io.File(s"$dir/s.snapshot.bucketed")
-    layout.listFiles().filter(_.getName.startsWith("_current."))
-      .foreach(_.delete())
-    val w = new java.io.FileWriter(new java.io.File(layout, "_current"))
-    w.write("not a pointer"); w.close()
-    val e = intercept[IllegalStateException] {
-      BucketedSnapshot.currentVersion(spark, dir, "s")
-    }
-    assert(e.getMessage.contains("legacy"), e.getMessage)
-  }
-
   test("snapshotRecords flag matrix routes through the bucketed layout") {
     val dir = tmpDir("bsnap_flags")
     val opts = SnapshotOptions(pk = Seq("k"), bucketBy = Some(4))
@@ -281,5 +246,22 @@ class BucketedSnapshotSpec extends AnyFunSuite with SparkSpec {
     val vs = d.listFiles().filter(_.getName.startsWith("v"))
       .map(_.getName).toSet
     assert(vs == Set("v2"))
+  }
+
+  test("lowering retainVersions GCs the whole window, tables included") {
+    val dir = tmpDir("bs_retain_lower")
+    def fold(k: Long, keep: Int) = BucketedSnapshot.fold(spark,
+      Seq((k, s"n$k")).toDF("k", "name"), "s", dir, Seq("k"), 2,
+      retainVersions = keep)
+    (1L to 3L).foreach(fold(_, 3))
+    fold(4L, 1)
+    val vs = new java.io.File(s"$dir/s.snapshot.bucketed").listFiles()
+      .filter(_.getName.startsWith("v")).map(_.getName).toSet
+    assert(vs == Set("v4"), vs.toString)
+    val h = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(4).map(b => f"$b%02x").mkString
+    val tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith(s"graft_snap_s_${h}_")).toSet
+    assert(tables == Set(s"graft_snap_s_${h}_v4"), tables.toString)
   }
 }

@@ -199,14 +199,12 @@ class MorSnapshotSpec extends AnyFunSuite with SparkSpec {
 
   test("a torn no-terminator manifest never carries a stale generation") {
     // the silent-corruption mode the `ok` terminator exists to prevent:
-    // a new-format record "1 2 3 ok" observed mid-write as "1 2 1" is
-    // all-digits with >=2 tokens, so the lenient pre-terminator branch
-    // accepts it — but its GEN token is a torn prefix (stale). If the
-    // reader trusted it, the next fold would reserve an already-used
-    // generation and keep-last resolution between the two folds sharing
-    // it would be arbitrary. The fix drops the gen on the lenient path
-    // (version+buckets only); the fold then pays the max(GenCol) scan
-    // and reserves a FRESH generation.
+    // a record "1 2 3 ok" observed mid-write as "1 2 1" carries a torn
+    // (stale) GEN token. Trusting it, the next fold would reserve an
+    // already-used generation and keep-last resolution between the two
+    // folds sharing it would be arbitrary. An unterminated record never
+    // parses, so with no other manifest the fold fails loudly and
+    // appends nothing.
     val dir = tmpDir("mor_torn_gen")
     BucketedSnapshot.foldMor(spark,
       Seq((1L, "g1")).toDF("k", "name"), "s", dir, Seq("k"), 2)
@@ -222,15 +220,13 @@ class MorSnapshotSpec extends AnyFunSuite with SparkSpec {
     val w = new java.io.FileWriter(
       new java.io.File(layout, "_current.000000050"))
     w.write("1 2 1"); w.close()
-    val got = BucketedSnapshot.foldMor(spark,
-      Seq((1L, "g4")).toDF("k", "name"), "s", dir, Seq("k"), 2)
-      .as[(Long, String)].collect.toSeq
-    // if the stale gen=1 were trusted, the new row would land at gen 2
-    // and lose keep-last to the stored gen-3 row ("g3")
-    assert(got == Seq((1L, "g4")), got.toString)
-    val gens = BucketedSnapshot.read(spark, "s", dir, Seq("k"), 2).get
-      .select(BucketedSnapshot.GenCol).as[Long].collect.toSet
-    assert(gens.max == 4L, gens.toString)
+    intercept[IllegalStateException] {
+      BucketedSnapshot.foldMor(spark,
+        Seq((1L, "g4")).toDF("k", "name"), "s", dir, Seq("k"), 2)
+    }
+    val stored = spark.read.parquet(s"$dir/s.snapshot.bucketed/v1")
+      .agg(max(BucketedSnapshot.GenCol)).as[Long].head()
+    assert(stored == 3L, stored.toString)
   }
 
   test("foldMor refuses a layout created by the rewrite fold") {

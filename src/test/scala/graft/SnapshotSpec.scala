@@ -91,18 +91,6 @@ class SnapshotSpec extends AnyFunSuite with SparkSpec {
     assert(asMap(out.get) == Map(1L -> "a2", 2L -> "b"))
   }
 
-  test("directoryLayout keeps the snapshot as a PK-partitioned parquet dir") {
-    val dir = tmpDir("snap8")
-    val opts = SnapshotOptions(pk = Seq("id"), directoryLayout = true)
-    Snapshot.snapshotRecords(spark,
-      Some(Seq((1L, "a"), (2L, "b")).toDF("id", "v")), "s", dir, opts)
-    assert(new java.io.File(s"$dir/s.snapshot.parquet").isDirectory)
-    val out = Snapshot.snapshotRecords(spark,
-      Some(Seq((2L, "b2"), (3L, "c")).toDF("id", "v")), "s", dir, opts)
-    assert(asMap(out.get) == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
-    assert(new java.io.File(s"$dir/s.snapshot.parquet").isDirectory)
-  }
-
   test("localizeDatetimeTypes reinterprets NTZ snapshot columns as UTC instants") {
     // ref: src/etl-utils.ts:278-286 — Datetime("ms") → Datetime("ms","UTC")
     val dir = tmpDir("snap9")
