@@ -50,12 +50,14 @@ object Tuning {
     catch { case _: java.io.FileNotFoundException => 0L }
   }
 
-  /** Size estimate of a DataFrame from Catalyst statistics (exact file
+  /** Summed size estimate of `dfs` from Catalyst statistics (exact file
     * bytes for file-backed frames; estimates propagate through
-    * projections). Cheap — a driver-side plan read, no job.
+    * projections), saturating at `Long.MaxValue` — the value a frame
+    * without file statistics reports. Cheap — a driver-side plan read, no
+    * job.
     */
-  def estimatedBytes(df: DataFrame): Long = {
-    val s = df.queryExecution.optimizedPlan.stats.sizeInBytes
+  def estimatedBytes(dfs: DataFrame*): Long = {
+    val s = dfs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
     if (s.isValidLong) s.toLong else Long.MaxValue
   }
 

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.conf.Tuning
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,7 +43,7 @@ import org.apache.spark.sql.functions._
   */
 object SearchIndex {
 
-  private def index(spark: SparkSession, dir: String, name: String) =
+  private[graft] def index(spark: SparkSession, dir: String, name: String) =
     graft.io.VersionedIndex(spark, s"$dir/$name.searchindex",
       s"search index '$name' at $dir",
       Seq("postings" -> Seq("term", "doc_id", "c", "dl"),
@@ -88,6 +90,21 @@ object SearchIndex {
     (postings, termdf, totals, tk)
   }
 
+  /** Sign `docs` and write the batch to `root`, under the size gate
+    * sized by `docs`' estimated bytes: below it the tokenizer cache and
+    * the sign write run as one job (a frame without file statistics
+    * stays ungated).
+    */
+  private def write(
+      ix: graft.io.VersionedIndex, docs: DataFrame, idCol: String,
+      textCol: String, root: String, mode: String): Unit =
+    Tuning.withSmallInputScope(docs.sparkSession,
+        Tuning.estimatedBytes(docs)) {
+      val (p, t, s, tkCache) = sign(docs, idCol, textCol)
+      try ix.writeSigned(root, mode, p, t, s)
+      finally tkCache.unpersist()
+    }
+
   /** Sign + index `corpus` as version 1 (or N+1 — a rebuild), then apply
     * the retention window.
     */
@@ -96,11 +113,8 @@ object SearchIndex {
       idCol: String, textCol: String, retainVersions: Int = 2): Unit = {
     val ix = index(spark, dir, name)
     val v = ix.current.getOrElse(0) + 1
-    ix.publish(v, retainVersions) {
-      val (p, t, s, tkCache) = sign(corpus, idCol, textCol)
-      try ix.writeSigned(ix.dir(v), "errorifexists", p, t, s)
-      finally tkCache.unpersist()
-    }
+    ix.publish(v, retainVersions)(write(ix, corpus, idCol, textCol,
+      ix.dir(v), "errorifexists"))
   }
 
   /** Fold an ingest batch: sign ONLY `fresh` (ids must be new — the
@@ -115,11 +129,8 @@ object SearchIndex {
       generation: Option[Long] = None): Unit = {
     val ix = index(spark, dir, name)
     val v = ix.requireCurrent
-    ix.fold(v, generation) { g =>
-      val (p, t, s, tkCache) = sign(fresh, idCol, textCol)
-      try ix.writeSigned(ix.delta(v, g), "overwrite", p, t, s)
-      finally tkCache.unpersist()
-    }
+    ix.fold(v, generation)(g =>
+      write(ix, fresh, idCol, textCol, ix.delta(v, g), "overwrite"))
   }
 
   /** BM25 top-`k` per query against the maintained index — the
@@ -128,6 +139,14 @@ object SearchIndex {
     * per-batch statistics through the SHARED scoring core, so the answer
     * is bit-identical to the one-shot operator over the accumulated
     * corpus. `atVersion` time-travels to a retained historical version.
+    *
+    * The three artifacts come from one fold listing, so a fold that
+    * commits meanwhile is invisible to all of them. The plan is made
+    * under the size gate, sized by the committed bytes it reads: below
+    * it an action on the returned frame runs AQE-free (about 5 jobs).
+    * The gate holds when the returned frame is acted on directly; a
+    * frame derived from it (`.orderBy`, a join) is planned by its own
+    * action, with the session's settings.
     */
   def topK(
       spark: SparkSession, queryTerms: DataFrame, dir: String,
@@ -135,22 +154,30 @@ object SearchIndex {
       b: Double = 0.75, atVersion: Option[Int] = None): DataFrame = {
     val ix = index(spark, dir, name)
     val v = ix.resolve(atVersion)
-    val qt = broadcast(queryTerms.select(col("query_id"), col("term")))
-    // postings carry dl: the shared core skips the lengths join
-    val tf = ix.committedSigned(v, "postings")
-      .join(qt, "term")
-      .select(col("query_id"), col("term"), col("doc_id").as(idCol),
-        col("c"), col("dl"))
-    // per-batch dfs SUM to collection dfs (disjoint doc sets); restrict
-    // to query terms before the aggregate
-    val dft = ix.committedSigned(v, "termdf")
-      .join(broadcast(queryTerms.select("term").distinct), "term")
-      .groupBy("term").agg(sum("df").as("df"))
-    val stats = ix.committedSigned(v, "totals")
-      .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total"))
-    Retrieval.bm25RankCut(
-      Retrieval.bm25ScoreFromPostings(tf, dft, tf, stats, idCol, k1, b),
-      idCol, k)
+    val gens = ix.committedFolds(v)
+    val Seq(postings, termdf, totals) =
+      Seq("postings", "termdf", "totals").map(ix.signedAt(v, gens, _))
+    Tuning.withSmallInputScope(spark,
+        Tuning.estimatedBytes(postings, termdf, totals)) {
+      val qt = broadcast(queryTerms.select(col("query_id"), col("term")))
+      // postings carry dl: the shared core skips the lengths join
+      val tf = postings.join(qt, "term")
+        .select(col("query_id"), col("term"), col("doc_id").as(idCol),
+          col("c"), col("dl"))
+      // per-batch dfs SUM to collection dfs (disjoint doc sets); restrict
+      // to query terms before the aggregate
+      val dft = termdf.join(qt, Seq("term"), "left_semi")
+        .groupBy("term").agg(sum("df").as("df"))
+      val stats = totals
+        .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total"))
+      val out = Retrieval.bm25RankCut(
+        Retrieval.bm25ScoreFromPostings(tf, dft, tf, stats, idCol, k1, b),
+        idCol, k)
+      // AQE and shuffle partitions are read when the plan is made, not
+      // when the frame is built: plan here, inside the gate
+      out.queryExecution.executedPlan
+      out
+    }
   }
 
   /** Rewrite the accumulated artifacts into one base at version N+1
@@ -162,10 +189,11 @@ object SearchIndex {
       retainVersions: Int = 2): Unit = {
     val ix = index(spark, dir, name)
     val v = ix.requireCurrent
-    val p = ix.committedSigned(v, "postings").localCheckpoint()
-    val t = ix.committedSigned(v, "termdf")
+    val gens = ix.committedFolds(v)
+    val p = ix.signedAt(v, gens, "postings").localCheckpoint()
+    val t = ix.signedAt(v, gens, "termdf")
       .groupBy("term").agg(sum("df").as("df")).localCheckpoint()
-    val s = ix.committedSigned(v, "totals")
+    val s = ix.signedAt(v, gens, "totals")
       .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
         coalesce(sum("total_len"), lit(0L)).as("total_len"))
       .localCheckpoint()

@@ -164,14 +164,21 @@ private[graft] final case class VersionedIndex(
       .select(cols.map(col): _*)
   }
 
+  /** Artifact `what` of version `v`: the base plus the fold deltas of
+    * `gens`, a [[committedFolds]] listing. Reads that must see one
+    * corpus state share one listing, so a fold committing between them
+    * is invisible to all of them.
+    */
+  def signedAt(v: Int, gens: Seq[Long], what: String): DataFrame =
+    readSigned(v, dir(v) +: gens.map(delta(v, _)), what)
+
   /** Artifact `what` of version `v`: the base plus every committed fold
     * delta below `belowGen` (a replay reads exactly the state below
     * itself). Orphan deltas are invisible — the marker is the commit.
     */
   def committedSigned(
       v: Int, what: String, belowGen: Long = Long.MaxValue): DataFrame =
-    readSigned(v, dir(v) +:
-      committedFolds(v).filter(_ < belowGen).map(delta(v, _)), what)
+    signedAt(v, committedFolds(v).filter(_ < belowGen), what)
 
   /** Artifact `what` of fold generation `g`'s delta alone. */
   def deltaSigned(v: Int, g: Long, what: String): DataFrame =

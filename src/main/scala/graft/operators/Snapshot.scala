@@ -123,10 +123,6 @@ object Snapshot {
       }
     }
 
-  /** `a + b` for non-negative sizes, saturating at `Long.MaxValue`. */
-  private def addBytes(a: Long, b: Long): Long =
-    if (a > Long.MaxValue - b) Long.MaxValue else a + b
-
   private def snapshotPath(
       snapshotDir: String, stream: String, useCsv: Boolean): String =
     s"$snapshotDir/$stream.snapshot.${if (useCsv) "csv" else "parquet"}"
@@ -177,8 +173,7 @@ object Snapshot {
         val merged = Upsert.keepLast(oldC, dataC, opts.pk)
         // a single-file merge below the size gate runs its shuffle and
         // write as one job
-        val scopeBytes = addBytes(
-          Tuning.estimatedBytes(old), Tuning.estimatedBytes(data))
+        val scopeBytes = Tuning.estimatedBytes(old, data)
         try Tuning.withSmallInputScope(spark, scopeBytes)(
           writeSnapshot(spark, merged, path, opts))
         catch {

@@ -647,15 +647,8 @@ object RetrievalQueries {
       new java.io.File(d).mkdirs()
     }
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    // r10: size-gated fixed-cost scope over the build and per-batch folds
-    // (AQE off + bytes-derived partitions below the gate; unchanged at
-    // scale) — each sign/write action runs as one job
-    val corpusBytes =
-      graft.conf.Tuning.dirBytes(spark, s"$dir/documents.parquet")
-    graft.conf.Tuning.withSmallInputScope(spark, corpusBytes) {
-      SearchIndex.build(spark, docs.filter(col("doc_id") % 2 === 0),
-        idxDir, "docs", "doc_id", "text")
-    }
+    SearchIndex.build(spark, docs.filter(col("doc_id") % 2 === 0),
+      idxDir, "docs", "doc_id", "text")
     val schema = spark.read.parquet(s"$staged/a.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -666,11 +659,8 @@ object RetrievalQueries {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        graft.conf.Tuning.withSmallInputScope(
-          batch.sparkSession, corpusBytes) {
-          SearchIndex.fold(batch.sparkSession, batch, idxDir, "docs",
-            "doc_id", "text", generation = Some(batchId + 1))
-        }
+        SearchIndex.fold(batch.sparkSession, batch, idxDir, "docs",
+          "doc_id", "text", generation = Some(batchId + 1))
       }
       .start()
     q.awaitTermination()

@@ -3,13 +3,15 @@ package graft
 import graft.ext.{Retrieval, SearchIndex}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.ext.SearchIndex]]: persisted BM25 index — maintained topK ≡
   * the one-shot operator over the accumulated corpus bit-for-bit (the
   * per-batch statistics are additive and the scoring core is shared),
   * fold slicing invariant, idempotent generations, compaction
-  * invariance, retention + time-travel. Oracle twin: q331.
+  * invariance, retention + time-travel, and the job budget below the
+  * size gate (a query at most 5 jobs, a fold 1). Oracle twin: q331.
   */
 class SearchIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -99,5 +101,69 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
       SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5,
         atVersion = Some(1))
     }
+  }
+
+  private val gate = "spark.graft.smallInput.maxBytes"
+
+  /** Rows of a topK frame acted on directly, so its own plan runs. */
+  private def rows(df: DataFrame): Seq[(Int, Int, Long, Long)] =
+    df.collect().toSeq.map(r =>
+      (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3))).sorted
+
+  /** An index over docs 0–34: a build and two folds. */
+  private def budgetIndex(prefix: String): String = {
+    val dir = tmpDir(prefix)
+    SearchIndex.build(spark, docs(0L until 20L), dir, "s", "doc_id", "text")
+    SearchIndex.fold(spark, docs(20L until 30L), dir, "s", "doc_id", "text")
+    SearchIndex.fold(spark, docs(30L until 35L), dir, "s", "doc_id", "text")
+    dir
+  }
+
+  test("below the size gate a fold runs one job and a warm query at " +
+    "most 5") {
+    val dir = tmpDir("sidx_budget")
+    SearchIndex.build(spark, docs(0L until 20L), dir, "s", "doc_id", "text")
+    assert(jobsRunBy(SearchIndex.fold(spark, docs(20L until 30L), dir, "s",
+      "doc_id", "text")) == 1)
+    assert(jobsRunBy(SearchIndex.fold(spark, docs(30L until 35L), dir, "s",
+      "doc_id", "text")) == 1)
+    val qt = queries.toDF("query_id", "term")
+    // the first read memoizes the artifact schemas (one footer job each)
+    SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
+    var got: Seq[(Int, Int, Long, Long)] = Nil
+    val jobs = jobsRunBy {
+      got = rows(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
+    }
+    assert(jobs <= 5, s"$jobs jobs")
+    assert(got.nonEmpty && got == top(Retrieval.bm25TopK(
+      docs(0L until 35L), qt, "doc_id", "text", k = 5)))
+  }
+
+  test("at the size gate topK keeps AQE and gives the gated rows") {
+    val dir = budgetIndex("sidx_aqe")
+    val qt = queries.toDF("query_id", "term")
+    def adaptive(df: DataFrame) =
+      df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+    val small = SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
+    spark.conf.set(gate, "0")
+    val aqe =
+      try SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
+      finally spark.conf.unset(gate)
+    assert(!adaptive(small) && adaptive(aqe))
+    val gated = rows(small)
+    assert(gated.nonEmpty && rows(aqe) == gated)
+    assert(gated == top(Retrieval.bm25TopK(
+      docs(0L until 35L), qt, "doc_id", "text", k = 5)))
+  }
+
+  test("a frame derived from topK is planned by its own action and " +
+    "answers the same") {
+    val dir = budgetIndex("sidx_derived")
+    val qt = queries.toDF("query_id", "term")
+    val out = SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
+    val ordered = out.orderBy("query_id", "rank")
+    assert(rows(ordered) == rows(out))
+    assert(ordered.collect().toSeq.map(r => (r.getInt(0), r.getInt(1))) ==
+      rows(out).map(r => (r._1, r._2)))
   }
 }

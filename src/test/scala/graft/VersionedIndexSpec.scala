@@ -199,6 +199,22 @@ class VersionedIndexSpec extends AnyFunSuite with SparkSpec {
       searchTop(sdir) == searchOneShot(named(a)))
   }
 
+  test("reads that share one fold listing never see a later fold") {
+    val dir = tmpDir("vidx_listing")
+    SearchIndex.build(spark, docs(0L until 20L), dir, "s", "doc_id", "text")
+    SearchIndex.fold(spark, docs(20L until 30L), dir, "s", "doc_id", "text")
+    val ix = SearchIndex.index(spark, dir, "s")
+    val gens = ix.committedFolds(1)
+    def counts = Seq("postings", "termdf", "totals")
+      .map(ix.signedAt(1, gens, _).count())
+    val before = counts
+    SearchIndex.fold(spark, docs(30L until 40L), dir, "s", "doc_id", "text")
+    assert(ix.committedFolds(1).size == gens.size + 1)
+    assert(counts == before)
+    assert(ix.signedAt(1, gens, "totals").agg(sum("n_docs")).head.getLong(0)
+      == 30L)
+  }
+
   /** Asserts `body` leaves no persisted RDD behind — checked right after
     * it returns, before a GC lets the context cleaner mask a leak.
     */
