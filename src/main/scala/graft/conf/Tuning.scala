@@ -89,10 +89,8 @@ object Tuning {
     * core count, so the decision scales with data, not with the box.
     */
   def withSmallInputScope[A](
-      spark: SparkSession, bytes: Long)(body: => A): A = {
-    val gate = confLong(
-      spark, "spark.graft.smallInput.maxBytes", 64L * 1024 * 1024)
-    if (bytes >= gate) body
+      spark: SparkSession, bytes: Long)(body: => A): A =
+    if (!isSmallInput(spark, bytes)) body
     else {
       val pKey = "spark.sql.shuffle.partitions"
       val aKey = "spark.sql.adaptive.enabled"
@@ -103,5 +101,14 @@ object Tuning {
       try body
       finally { spark.conf.set(pKey, prevP); spark.conf.set(aKey, prevA) }
     }
-  }
+
+  /** The size gate itself: `bytes` of measured input is below
+    * `spark.graft.smallInput.maxBytes` (default 64 MiB). The one place
+    * that key is read — [[withSmallInputScope]] and the operators that
+    * switch to a driver-local algorithm below the gate
+    * (`Clusters.connectedComponents`, `ClusterIndex.fold`) decide alike.
+    */
+  def isSmallInput(spark: SparkSession, bytes: Long): Boolean =
+    bytes < confLong(
+      spark, "spark.graft.smallInput.maxBytes", 64L * 1024 * 1024)
 }

@@ -239,9 +239,9 @@ object ApssIndex {
     // the checkpoints are materialized — the sign-pass caches have no
     // consumers left (the returned plan reads the checkpoints)
     t0.unpersist(); hsCache.unpersist()
-    pairsOf(ti, si, pi, ix.committedSigned(v, "tokens"),
-      ix.committedSigned(v, "sizes"), ix.committedSigned(v, "prefix"),
-      thresholdPermil)
+    val Seq(tokens, sizes, prefix) =
+      ix.committedSigned(v, Seq("tokens", "sizes", "prefix"))
+    pairsOf(ti, si, pi, tokens, sizes, prefix, thresholdPermil)
   }
 
   /** Fold an ingest batch: sign ONLY `fresh` under the frozen scheme,
@@ -273,10 +273,10 @@ object ApssIndex {
     }
     // pairs off the generation's stored delta (read back, never
     // re-signed) against the committed state below it
-    def below(what: String) = ix.committedSigned(v, what, belowGen = g)
+    val Seq(tokens, sizes, prefix) =
+      ix.committedSigned(v, Seq("tokens", "sizes", "prefix"), belowGen = g)
     pairsOf(ix.deltaSigned(v, g, "tokens"), ix.deltaSigned(v, g, "sizes"),
-      ix.deltaSigned(v, g, "prefix"), below("tokens"), below("sizes"),
-      below("prefix"), thresholdPermil)
+      ix.deltaSigned(v, g, "prefix"), tokens, sizes, prefix, thresholdPermil)
   }
 
   /** Re-derive the df order over the accumulated corpus and rewrite the
@@ -291,8 +291,9 @@ object ApssIndex {
     val ix = index(spark, dir, name)
     val v = ix.requireCurrent
     val (k, floorPermil) = readParams(ix, v)
-    val tokens = ix.committedSigned(v, "tokens").localCheckpoint()
-    val sizes = ix.committedSigned(v, "sizes").localCheckpoint()
+    val Seq(tokens0, sizes0) = ix.committedSigned(v, Seq("tokens", "sizes"))
+    val tokens = tokens0.localCheckpoint()
+    val sizes = sizes0.localCheckpoint()
     val dforder = tokens.groupBy("h").agg(count(lit(1)).as("df"))
       .localCheckpoint()
     val prefix = prefixOf(tokens, sizes, dforder, floorPermil)

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.conf.Tuning
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,9 +87,12 @@ object ClusterIndex {
     val ix = index(spark, dir, name)
     val v = ix.current.getOrElse(0) + 1
     ix.publish(v, retainVersions) {
-      Clusters.connectedComponents(
-          pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-        .write.mode("errorifexists").parquet(ix.path(v, "labels"))
+      val labels = Clusters.connectedComponents(
+        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+      // the write is the labels' only reader: release the rounds' final
+      // checkpoint behind them (a no-op for driver-solved labels)
+      try labels.write.mode("errorifexists").parquet(ix.path(v, "labels"))
+      finally graft.io.VersionedIndex.releaseCheckpoint(labels)
     }
   }
 
@@ -103,15 +108,17 @@ object ClusterIndex {
   }
 
   /** The CHANGED labels a batch of fresh pairs implies against prior
-    * labels — the shared core of [[fold]] (which commits them) and the
-    * replay path. Output: (node, cluster_id) rows for exactly the nodes
-    * whose label changes (including fresh nodes' first labels), plus the
-    * cache handle of the mapped-edge CC output so the caller can
-    * unpersist it once its single action has run — the operator owns
-    * the action in [[fold]], so it owns the cleanup too (r10, advisor).
-    * `fresh` must already be MATERIALIZED (checkpointed) pairs — the
-    * three references below (mapped edges + both endpoint legs) read it
-    * without recomputation.
+    * labels, computed with the distributed [[Clusters.connectedComponents]]
+    * rounds — [[fold]]'s path at or above the size gate
+    * ([[changedLabelsLocal]] is the driver-local twin below it). Output:
+    * (node, cluster_id) rows for exactly the nodes whose label changes
+    * (including fresh nodes' first labels), plus the cache handle of the
+    * mapped-edge CC output so the caller can unpersist it, and release
+    * the round checkpoint behind it, once its single action has run —
+    * the operator owns the action in [[fold]], so it owns the cleanup too
+    * (r10, advisor). `fresh` must already be MATERIALIZED (checkpointed)
+    * pairs — the three references below (mapped edges + both endpoint
+    * legs) read it without recomputation.
     */
   private def changedLabels(
       fresh: DataFrame, prior: DataFrame): (DataFrame, Seq[DataFrame]) = {
@@ -147,6 +154,47 @@ object ClusterIndex {
     (relabeled.unionByName(freshFirst), Seq(cc))
   }
 
+  /** [[changedLabels]] solved on the driver, for a batch below the size
+    * gate. One collect reads the fresh pairs with their endpoints' prior
+    * labels (`prior` joined once; a null label marks an unseen node); a
+    * union-find ([[Clusters.minRoots]]) solves the `coalesce(rep, id)`
+    * edges; the result reads `prior` only for the members of components
+    * whose root moved, joined to that small `rep → new_root` map, plus
+    * the fresh nodes' first labels — both maps are `LocalRelation`s, so
+    * the caller's write of the result is one job. The shuffled-hash hints
+    * keep either small side from being broadcast, which would cost a job.
+    */
+  private def changedLabelsLocal(
+      fresh: DataFrame, prior: DataFrame): DataFrame = {
+    val spark = prior.sparkSession
+    val dt = prior.schema("cluster_id").dataType
+    val ends = fresh
+      .select(col("id_a").cast(dt).as("id_a"),
+        col("id_b").cast(dt).as("id_b"))
+      .withColumn("node", explode(array(col("id_a"), col("id_b"))))
+      .join(prior.hint("shuffle_hash"), Seq("node"), "left")
+      .select("id_a", "id_b", "node", "cluster_id")
+      .collect()
+    val label = ends.iterator.filterNot(_.isNullAt(3))
+      .map(r => r.get(2) -> r.get(3)).toMap
+    def rep(x: Any): Any = label.getOrElse(x, x)
+    val roots = Clusters.minRoots(
+      ends.iterator.map(r => (rep(r.get(0)), rep(r.get(1)))), dt)
+    val moved = label.values.toSet[Any]
+      .flatMap(r => roots.get(r).filter(_ != r).map(r -> _))
+    val firsts = ends.iterator.map(_.get(2))
+      .filter(n => n != null && !label.contains(n))
+      .flatMap(n => roots.get(n).map(n -> _)).toMap
+    val freshFirst =
+      Clusters.localFrame(spark, dt, firsts, "node", "cluster_id")
+    if (moved.isEmpty) freshFirst
+    else prior
+      .join(Clusters.localFrame(spark, dt, moved, "rep", "new_root")
+        .hint("shuffle_hash"), col("cluster_id") === col("rep"))
+      .select(col("node"), col("new_root").as("cluster_id"))
+      .unionByName(freshFirst)
+  }
+
   /** Fold a batch of fresh near-dup pairs (columns `id_a`, `id_b` — a
     * [[DedupIndex.fold]]/[[ApssIndex.fold]] result) into the maintained
     * labels: compute the changed labels against the prior state, commit
@@ -154,6 +202,11 @@ object ClusterIndex {
     * (delta-sized — the downstream consumer's incremental feed).
     * `generation` is the caller's batch identity: a committed
     * generation replays its stored delta without writing.
+    *
+    * Below the size gate (the measured pair count at
+    * [[Clusters.EdgeBytes]] each) a fold runs three jobs: the pairs'
+    * checkpoint, one collect ([[changedLabelsLocal]]) and the delta
+    * write. At or above it the distributed [[changedLabels]] runs.
     */
   def fold(
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
@@ -166,33 +219,47 @@ object ClusterIndex {
       // UNMATERIALIZED index-fold result (bands join + exact verify over a
       // shingle-exploded working set) — materialize it FIRST, eagerly and
       // UNSCOPED, so the heavy verify keeps its parallelism, counting the
-      // pairs on the same action via observe(). Everything after — prior
-      // resolve, endpoint mapping, CC over |batch| edges, the delta write
-      // — is label algebra over that measured pair count, so it runs
-      // under the size-gated fixed-cost scope (one job per action below
-      // the gate; a TB-scale fold exceeds the gate and keeps AQE).
+      // pairs on the same action via observe(). Everything after is label
+      // algebra over that measured pair count: below the gate it is solved
+      // on the driver between one collect and the delta write; above it
+      // the prior resolve, endpoint mapping, CC rounds over |batch| edges
+      // and the delta write run under the size-gated fixed-cost scope
+      // (a TB-scale fold exceeds the gate and keeps AQE).
       val obs = org.apache.spark.sql.Observation()
       val freshCk = fresh.select("id_a", "id_b")
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint()
       val nPairs = obs.get("n").asInstanceOf[Long]
-      graft.conf.Tuning.withSmallInputScope(spark, nPairs * 32L) {
-        // persist (not eager checkpoint): prior is referenced four ways
-        // in changedLabels; the write action below materializes the cache
-        // once
-        val prior = resolved(ix, v).persist()
-        val (changed, handles) = changedLabels(freshCk, prior)
-        // the write is this operator's single action over the cached
-        // frames and the checkpointed pairs — release them all afterwards
-        // (the returned frame reads the written delta) so a long-lived
-        // session calling fold() repeatedly doesn't accumulate blocks
-        try changed.write.mode("overwrite")
-          .parquet(s"${ix.delta(v, g)}/labels")
-        finally {
-          (prior +: handles).foreach(_.unpersist())
-          graft.io.VersionedIndex.releaseCheckpoint(freshCk)
+      val out = s"${ix.delta(v, g)}/labels"
+      val prior = resolved(ix, v)
+      val bytes = nPairs * Clusters.EdgeBytes
+      val local = Tuning.isSmallInput(spark, bytes) &&
+        Clusters.driverSolvable(prior.schema("cluster_id").dataType)
+      // the write is the last action over the checkpointed pairs (and,
+      // above the gate, the cached frames) — release them all afterwards
+      // (the returned frame reads the written delta) so a long-lived
+      // session calling fold() repeatedly doesn't accumulate blocks
+      try {
+        if (local) Tuning.withSmallInputScope(spark, bytes) {
+          // one file: the delta is below the gate, and every later
+          // resolve opens each of its files
+          changedLabelsLocal(freshCk, prior).coalesce(1)
+            .write.mode("overwrite").parquet(out)
         }
-      }
+        else Tuning.withSmallInputScope(spark, nPairs * 32L) {
+          // persist (not eager checkpoint): prior is referenced four ways
+          // in changedLabels; the write action below materializes the
+          // cache once
+          prior.persist()
+          val (changed, handles) = changedLabels(freshCk, prior)
+          try changed.write.mode("overwrite").parquet(out)
+          finally {
+            (prior +: handles).foreach(_.unpersist())
+            // the CC rounds' final checkpoint backs the cached output
+            graft.io.VersionedIndex.releaseCheckpoint(handles: _*)
+          }
+        }
+      } finally graft.io.VersionedIndex.releaseCheckpoint(freshCk)
     }
     labelsAt(ix, v, g)
   }

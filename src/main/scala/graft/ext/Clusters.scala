@@ -1,7 +1,15 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import graft.conf.Tuning
+import graft.io.VersionedIndex
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Duplicate-cluster resolution: connected components over a near-duplicate
   * pair list, so a dedup pass can pick ONE canonical survivor per cluster
@@ -29,8 +37,72 @@ import org.apache.spark.sql.functions._
   * with iteration count (on a cluster: checkpoint to the shuffle service /
   * reliable storage instead). Convergence is detected with a one-row
   * aggregate (count + order-invariant xxhash64 sum), one job per round.
+  *
+  * Delta-sized graphs skip the rounds: below the size gate
+  * ([[graft.conf.Tuning.isSmallInput]], [[EdgeBytes]] per edge) the edges
+  * are collected and solved by a union-find on the driver ([[minRoots]]),
+  * which [[ClusterIndex.fold]] shares.
   */
 object Clusters {
+
+  /** Bytes one edge is charged against the size gate: a (src, dst) pair
+    * with shuffle overhead.
+    */
+  private[ext] val EdgeBytes = 64L
+
+  /** Id types the driver-local solve takes: their external values hash
+    * and compare equal exactly when Spark's `=` says so. Floating,
+    * binary, collated-string and nested ids always take the rounds.
+    */
+  private[ext] def driverSolvable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+        TimestampType | TimestampNTZType | _: DecimalType => true
+    case st: StringType => st == StringType
+    case _ => false
+  }
+
+  /** Union-find with min-id roots over `edges` (external values of a
+    * `dt` column): every node of a kept edge mapped to its component's
+    * minimum under Spark's ordering for `dt` — for strings the UTF-8 byte
+    * order of `UTF8String`, not `String.compareTo`, so the roots equal
+    * the rounds' `min`/`least`. Edges with a null endpoint and self-loops
+    * are dropped, as `where(src =!= dst)` drops them.
+    */
+  private[ext] def minRoots(
+      edges: Iterator[(Any, Any)], dt: DataType): Map[Any, Any] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val ord = PhysicalDataType.ordering(dt)
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    val key = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val p = parent(y); parent(y) = r; y = p }
+      r
+    }
+    def k(x: Any): Any = key.getOrElseUpdate(x, toCatalyst(x))
+    edges.foreach { case (a, b) =>
+      if (a != null && b != null && a != b) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) {
+          if (ord.lt(k(ra), k(rb))) parent(rb) = ra else parent(ra) = rb
+        }
+      }
+    }
+    parent.keysIterator.map(n => n -> find(n)).toMap
+  }
+
+  /** `pairs` as a two-column `dt` frame over a `LocalRelation`: later
+    * plans read a `LocalTableScan`, no job.
+    */
+  private[ext] def localFrame(
+      spark: SparkSession, dt: DataType, pairs: Iterable[(Any, Any)],
+      a: String, b: String): DataFrame =
+    spark.createDataFrame(
+      pairs.iterator.map { case (x, y) => Row(x, y) }.toSeq.asJava,
+      StructType(Seq(StructField(a, dt, nullable = false),
+        StructField(b, dt, nullable = false))))
 
   /** One large-star round: every node u connects its strictly-larger
     * neighbors to `m(u) = min(N(u) ∪ u)`. Input must be the symmetric
@@ -92,6 +164,16 @@ object Clusters {
     * (columns `src`, `dst`, same orderable numeric/string type). Returns
     * one row per node that appears in `edges`: (`node`, `cluster_id`)
     * where `cluster_id` is the component's minimum node id. Deterministic.
+    *
+    * Below the size gate (the edge count the first checkpoint measures,
+    * at [[EdgeBytes]] each) the edges are collected, the checkpoint is
+    * released and [[minRoots]] solves them on the driver: two jobs, and
+    * the labels come back as a `LocalRelation`. At or above the gate the
+    * star-contraction rounds run; each superseded round's checkpoint is
+    * released, and the final round's checkpoint backs the returned lazy
+    * frame: a caller that owns the last action over it releases it with
+    * `VersionedIndex.releaseCheckpoint` (ClusterIndex does); otherwise
+    * it stays persisted until a GC lets the context cleaner drop it.
     */
   def connectedComponents(edges: DataFrame, maxIters: Int = 25): DataFrame = {
     val spark = edges.sparkSession
@@ -102,32 +184,39 @@ object Clusters {
     // LOGICAL plan the tree grows 16^rounds and Catalyst's
     // canonicalization/constraint propagation explodes long before
     // execution (measured: q330 OOM at round ~2 when tried).
+    // No distinct here: under AQE its exchange would cost this unscoped
+    // action a second job. Duplicates only inflate the gate's count; the
+    // driver solve ignores them and every round's output is distinct.
     var (e, prev) = checkpointFingerprinted(
-      edges.select(col("src"), col("dst"))
-        .where(col("src") =!= col("dst"))
-        .distinct())
+      edges.select(col("src"), col("dst")).where(col("src") =!= col("dst")))
+    val dt = e.schema("src").dataType
+    if (dt == e.schema("dst").dataType && driverSolvable(dt) &&
+        Tuning.isSmallInput(spark, prev._1 * EdgeBytes)) {
+      val rows = try e.collect() finally VersionedIndex.releaseCheckpoint(e)
+      return localFrame(spark, dt,
+        minRoots(rows.iterator.map(r => (r.get(0), r.get(1))), dt),
+        "node", "cluster_id")
+    }
     var converged = prev._1 == 0L
     var it = 0
     while (!converged && it < maxIters) {
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       // r10: rounds run over the checkpointed (src, dst) long-pair table
       // whose row count the fingerprint just MEASURED — size-gate the
-      // fixed-cost scope on those bytes (~64 B/edge incl. shuffle
-      // overhead), so small contractions run one job per round while a
-      // billion-edge round keeps AQE + default partitions. The INITIAL
-      // checkpoint above is deliberately unscoped: its input subtree is
-      // the caller's (possibly heavy, e.g. an exact-verify join) plan
-      // and must keep its parallelism.
-      val (next, cur) = graft.conf.Tuning.withSmallInputScope(
-        spark, prev._1 * 64L) {
+      // fixed-cost scope on those bytes, so small contractions run one job
+      // per round while a billion-edge round keeps AQE + default
+      // partitions. The INITIAL checkpoint above is deliberately
+      // unscoped: its input subtree is the caller's (possibly heavy, e.g.
+      // an exact-verify join) plan and must keep its parallelism.
+      val (next, cur) = Tuning.withSmallInputScope(
+        spark, prev._1 * EdgeBytes) {
         checkpointFingerprinted(smallStar(largeStar(sym)))
       }
       converged = cur == prev
       prev = cur
+      VersionedIndex.releaseCheckpoint(e)
       e = next
       it += 1
-      System.err.println(
-        s"[clusters] round $it: ${cur._1} edges, converged=$converged")
     }
     // At the fixpoint the edge set is a star forest: (member, root) with
     // root = component min. Roots label themselves; isolated input

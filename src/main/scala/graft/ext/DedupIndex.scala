@@ -208,8 +208,8 @@ object DedupIndex {
     // both checkpoints are materialized — the sign-pass cache has no
     // consumers left (the returned plan reads the checkpoints)
     setsI0.unpersist()
-    pairsOf(setsI, bandsI, ix.committedSigned(v, "sets"),
-      ix.committedSigned(v, "bands"), thresholdNum, thresholdDen)
+    val Seq(sets, bands) = ix.committedSigned(v, Seq("sets", "bands"))
+    pairsOf(setsI, bandsI, sets, bands, thresholdNum, thresholdDen)
   }
 
   /** Every qualifying near-dup pair WITHIN the indexed corpus itself —
@@ -227,8 +227,7 @@ object DedupIndex {
     val ix = index(spark, dir, name)
     val v = ix.resolve(atVersion)
     graft.functions.VectorExpressions.register(spark)
-    val sets = ix.committedSigned(v, "sets")
-    val bands = ix.committedSigned(v, "bands")
+    val Seq(sets, bands) = ix.committedSigned(v, Seq("sets", "bands"))
     val cands = bands.select(col("doc_id").as("id_n"),
         col("band"), col("bucket"))
       .join(bands.select(col("doc_id").as("id_o"), col("band"),
@@ -282,10 +281,10 @@ object DedupIndex {
     // docs; on a replay the delta is immutable, an at-least-once source
     // redelivers the same batch) against exactly the committed state
     // that preceded it
+    val Seq(sets, bands) =
+      ix.committedSigned(v, Seq("sets", "bands"), belowGen = g)
     pairsOf(ix.deltaSigned(v, g, "sets"), ix.deltaSigned(v, g, "bands"),
-      ix.committedSigned(v, "sets", belowGen = g),
-      ix.committedSigned(v, "bands", belowGen = g),
-      thresholdNum, thresholdDen)
+      sets, bands, thresholdNum, thresholdDen)
   }
 
   /** Compact the delta dirs back into one base at version N+1 — a pure
@@ -302,9 +301,9 @@ object DedupIndex {
     val ix = index(spark, dir, name)
     val v = ix.requireCurrent
     val (k, numHashes, bandRows) = readParams(ix, v)
+    val Seq(sets, bands) = ix.committedSigned(v, Seq("sets", "bands"))
     ix.publish(v + 1, retainVersions) {
-      writeVersion(ix, ix.committedSigned(v, "sets"),
-        ix.committedSigned(v, "bands"), k, numHashes, bandRows, v + 1)
+      writeVersion(ix, sets, bands, k, numHashes, bandRows, v + 1)
     }
   }
 }

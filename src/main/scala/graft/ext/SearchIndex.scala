@@ -154,9 +154,8 @@ object SearchIndex {
       b: Double = 0.75, atVersion: Option[Int] = None): DataFrame = {
     val ix = index(spark, dir, name)
     val v = ix.resolve(atVersion)
-    val gens = ix.committedFolds(v)
     val Seq(postings, termdf, totals) =
-      Seq("postings", "termdf", "totals").map(ix.signedAt(v, gens, _))
+      ix.committedSigned(v, Seq("postings", "termdf", "totals"))
     Tuning.withSmallInputScope(spark,
         Tuning.estimatedBytes(postings, termdf, totals)) {
       val qt = broadcast(queryTerms.select(col("query_id"), col("term")))
@@ -189,11 +188,11 @@ object SearchIndex {
       retainVersions: Int = 2): Unit = {
     val ix = index(spark, dir, name)
     val v = ix.requireCurrent
-    val gens = ix.committedFolds(v)
-    val p = ix.signedAt(v, gens, "postings").localCheckpoint()
-    val t = ix.signedAt(v, gens, "termdf")
-      .groupBy("term").agg(sum("df").as("df")).localCheckpoint()
-    val s = ix.signedAt(v, gens, "totals")
+    val Seq(postings, termdf, totals) =
+      ix.committedSigned(v, Seq("postings", "termdf", "totals"))
+    val p = postings.localCheckpoint()
+    val t = termdf.groupBy("term").agg(sum("df").as("df")).localCheckpoint()
+    val s = totals
       .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
         coalesce(sum("total_len"), lit(0L)).as("total_len"))
       .localCheckpoint()

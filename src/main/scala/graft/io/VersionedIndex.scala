@@ -172,13 +172,17 @@ private[graft] final case class VersionedIndex(
   def signedAt(v: Int, gens: Seq[Long], what: String): DataFrame =
     readSigned(v, dir(v) +: gens.map(delta(v, _)), what)
 
-  /** Artifact `what` of version `v`: the base plus every committed fold
-    * delta below `belowGen` (a replay reads exactly the state below
-    * itself). Orphan deltas are invisible — the marker is the commit.
+  /** Artifacts `whats` of version `v`, in order: the base plus every
+    * committed fold delta below `belowGen` (a replay reads exactly the
+    * state below itself), all over ONE [[committedFolds]] listing, so a
+    * fold committing meanwhile is in all of them or in none. Orphan
+    * deltas are invisible — the marker is the commit.
     */
-  def committedSigned(
-      v: Int, what: String, belowGen: Long = Long.MaxValue): DataFrame =
-    signedAt(v, committedFolds(v).filter(_ < belowGen), what)
+  def committedSigned(v: Int, whats: Seq[String],
+      belowGen: Long = Long.MaxValue): Seq[DataFrame] = {
+    val gens = committedFolds(v).filter(_ < belowGen)
+    whats.map(signedAt(v, gens, _))
+  }
 
   /** Artifact `what` of fold generation `g`'s delta alone. */
   def deltaSigned(v: Int, g: Long, what: String): DataFrame =

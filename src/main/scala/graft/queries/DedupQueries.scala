@@ -1417,8 +1417,9 @@ object DedupQueries {
     // on the MEASURED corpus bytes. The CLUSTER seeding stays UNSCOPED:
     // its input is the pairsWithin exact-verify join (a shingle-exploded
     // working set far larger than the input bytes — serializing it was
-    // measured at +6 s), and connectedComponents size-gates its own
-    // contraction rounds internally on the measured edge count.
+    // measured at +6 s), and connectedComponents decides on the edge count
+    // its first checkpoint measures: below the size gate it solves on the
+    // driver, above it the contraction rounds run size-gated.
     val corpusBytes =
       graft.conf.Tuning.dirBytes(spark, s"$dir/documents.parquet")
     graft.conf.Tuning.withSmallInputScope(spark, corpusBytes) {
@@ -1446,7 +1447,8 @@ object DedupQueries {
         // exchange-free and batch-sized — scoped; the CLUSTER fold is
         // NOT scoped: its action materializes the fresh-pairs verify
         // join (shingle-exploded working set — needs the parallelism),
-        // and the CC inside gates its own rounds
+        // and the fold gates the rest on the pair count it measures
+        // (driver-solved below the size gate)
         val prs = graft.conf.Tuning.withSmallInputScope(
           batch.sparkSession, corpusBytes) {
           DedupIndex.fold(batch.sparkSession, batch, idxDir,

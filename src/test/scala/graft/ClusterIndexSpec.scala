@@ -115,4 +115,82 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
       ClusterIndex.labels(spark, dir, "d", atVersion = Some(1))
     }
   }
+
+  /** 2,000 pairs over nodes 0–2,999 (an LCG, so the suite keeps no RNG
+    * state): a mix of chains and small components.
+    */
+  private val seedPairs: DataFrame = {
+    var x = 97L
+    def next(): Long = { x = (x * 1103515245L + 12345L) % 2147483647L; x }
+    (1 to 2000).map(_ => (next() % 3000, next() % 3000)).toDF("id_a", "id_b")
+  }
+
+  /** 12 pairs joining stored components to each other and to fresh
+    * nodes 5,000+ (one fresh node below no stored min, one a new pair of
+    * fresh nodes, one a self-loop).
+    */
+  private val twelve = pairs((5L, 17L), (17L, 2900L), (44L, 5000L),
+    (5000L, 5001L), (5002L, 5003L), (120L, 121L), (2999L, 3L), (8L, 8L),
+    (5004L, 300L), (300L, 301L), (1500L, 1501L), (5001L, 1500L))
+
+  /** An index over `seedPairs` after one warm-up fold (schema memo
+    * filled), then `twelve` folded: the fold's jobs and changed labels,
+    * and the resolved labels after it.
+    */
+  private def budgetFold(prefix: String)
+      : (Int, Map[Long, Long], Map[Long, Long]) = {
+    val dir = tmpDir(prefix)
+    ClusterIndex.build(spark, seedPairs, dir, "d")
+    ClusterIndex.fold(spark, pairs((1L, 2L), (6000L, 6001L)), dir, "d")
+    var changed: DataFrame = null
+    val jobs = jobsRunBy {
+      changed = ClusterIndex.fold(spark, twelve, dir, "d")
+    }
+    (jobs, lab(changed), lab(ClusterIndex.labels(spark, dir, "d")))
+  }
+
+  test("below the size gate a 12-pair fold into a 2,000-pair index runs " +
+    "at most 3 jobs; the rounds give the same labels") {
+    val (jobs, changed, labels) = budgetFold("clidx_budget")
+    assert(jobs <= 3, s"$jobs jobs")
+    val (roundJobs, roundChanged, roundLabels) =
+      withGate(0L)(budgetFold("clidx_budget_rounds"))
+    assert(roundJobs > 3, s"$roundJobs jobs")
+    assert(changed.nonEmpty && changed == roundChanged)
+    assert(labels == roundLabels)
+    val all = seedPairs.unionByName(pairs((1L, 2L), (6000L, 6001L)))
+      .unionByName(twelve)
+    assert(labels == oneShot(all))
+  }
+
+  test("a fold on either side of the size gate leaves no persisted RDDs") {
+    Seq(Long.MaxValue, 0L).foreach { gate =>
+      withGate(gate) {
+        val dir = tmpDir("clidx_fold_rdds")
+        ClusterIndex.build(spark, pairs((1L, 2L), (3L, 4L)), dir, "d")
+        leavesNoRdds(ClusterIndex.fold(spark, pairs((2L, 3L), (9L, 10L)),
+          dir, "d").count())
+        assert(lab(ClusterIndex.labels(spark, dir, "d")) ==
+          Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L, 10L -> 9L))
+      }
+    }
+  }
+
+  test("string ids: the driver-local fold orders roots by UTF-8 bytes") {
+    // "\uE000" < "\uD83D\uDE00" in UTF-8 byte order, the reverse of
+    // String.compareTo; the rounds (gate 0) agree with the local fold
+    def sp(ps: (String, String)*) = ps.toSeq.toDF("id_a", "id_b")
+    val run = (gate: Long) => withGate(gate) {
+      val dir = tmpDir("clidx_utf8")
+      ClusterIndex.build(spark, sp(("\uD83D\uDE00", "\uF8FF")), dir, "d")
+      ClusterIndex.fold(spark, sp(("\uF8FF", "\uE000"), ("y", "y")), dir,
+        "d")
+        .count()
+      ClusterIndex.labels(spark, dir, "d").select("node", "cluster_id")
+        .as[(String, String)].collect.toMap
+    }
+    val local = run(Long.MaxValue)
+    assert(local.values.toSet == Set("\uE000") && local.size == 3)
+    assert(run(0L) == local)
+  }
 }

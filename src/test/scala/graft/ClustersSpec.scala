@@ -1,8 +1,11 @@
 package graft
 
 import graft.ext.Clusters
+import graft.io.VersionedIndex
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 class ClustersSpec extends AnyFunSuite with SparkSpec {
@@ -101,5 +104,129 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
       .distinct
     assert(lpa(edges, parts = 1) == lpa(edges, parts = 13))
     assert(lpa(edges, iters = 1, parts = 2) == lpa(edges, iters = 1, parts = 7))
+  }
+
+  /** Reference union-find with min roots under `lt`, dropping null
+    * endpoints and self-loops: node → component minimum.
+    */
+  private def refRoots[T](edges: Seq[(T, T)], lt: (T, T) => Boolean)
+      : Map[Any, Any] = {
+    val parent = scala.collection.mutable.Map[T, T]()
+    def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      if (a != null && b != null && a != b) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+      }
+    }
+    parent.keys.map(k => (k: Any) -> (find(k): Any)).toMap
+  }
+
+  /** Spark's string order: unsigned UTF-8 bytes (U+E000–U+FFFF sort
+    * before supplementary characters, unlike `String.compareTo`).
+    */
+  private def utf8Lt(a: String, b: String): Boolean =
+    java.util.Arrays.compareUnsigned(
+      a.getBytes("UTF-8"), b.getBytes("UTF-8")) < 0
+
+  private def labelsOf(df: DataFrame): Map[Any, Any] =
+    df.collect().map(r => r.get(0) -> r.get(1)).toMap
+
+  /** Labels from the driver-local path and from the rounds (gate 0),
+    * each checked to have taken its path.
+    */
+  private def bothPaths(edges: DataFrame): (Map[Any, Any], Map[Any, Any]) = {
+    val local = Clusters.connectedComponents(edges)
+    assert(local.isLocal, "below the gate the labels are a LocalRelation")
+    val rounds = withGate(0L) {
+      val out = Clusters.connectedComponents(edges)
+      assert(!out.isLocal)
+      try labelsOf(out) finally VersionedIndex.releaseCheckpoint(out)
+    }
+    (labelsOf(local), rounds)
+  }
+
+  /** Ids 0–11 (or null): small enough that self-loops, duplicate and
+    * reversed edges are common.
+    */
+  private val longEdges: Gen[List[(Option[Long], Option[Long])]] = {
+    val id = Gen.frequency(12 -> Gen.choose(0L, 11L).map(Option(_)),
+      1 -> Gen.const(Option.empty[Long]))
+    Gen.choose(0, 30).flatMap(Gen.listOfN(_, Gen.zip(id, id)))
+  }
+
+  /** One- and two-atom strings mixing ASCII, U+E000–U+FFFF and
+    * supplementary characters, or null.
+    */
+  private val stringEdges: Gen[List[(String, String)]] = {
+    val atoms = Seq("a", "b", "\uE000", "\uFFFD", "\uF8FF",
+      "\uD83D\uDE00", "\uD800\uDC00")
+    val atom = Gen.oneOf(atoms)
+    val id = Gen.frequency(
+      4 -> atom, 4 -> Gen.zip(atom, atom).map { case (x, y) => x + y },
+      1 -> Gen.const(null: String))
+    Gen.choose(0, 30).flatMap(Gen.listOfN(_, Gen.zip(id, id)))
+  }
+
+  private def samples[T](gen: Gen[T], n: Int, seed: Long): Seq[T] =
+    Iterator.iterate(org.scalacheck.rng.Seed(seed))(_.next).take(n)
+      .zipWithIndex.map { case (s, i) =>
+        gen.apply(Gen.Parameters.default, s)
+          .getOrElse(fail(s"generator returned no sample at iteration $i"))
+      }.toSeq
+
+  test("driver-local labels equal the rounds and a reference union-find " +
+    "on random long-id graphs") {
+    (Nil +: samples(longEdges, 8, 20261L)).zipWithIndex.foreach {
+      case (es, i) =>
+        val (local, rounds) = bothPaths(es.toDF("src", "dst"))
+        val want = refRoots[Any](
+          es.map { case (a, b) => (a.orNull, b.orNull) },
+          (x, y) => x.asInstanceOf[Long] < y.asInstanceOf[Long])
+        assert(local == want && rounds == want, s"iteration $i: $es")
+    }
+  }
+
+  test("driver-local labels equal the rounds and a reference union-find " +
+    "on random string-id graphs in UTF-8 byte order") {
+    val all = samples(stringEdges, 8, 7331L)
+    // the sample must exercise the order where UTF-16 and UTF-8 disagree
+    assert(all.exists(es => refRoots[String](es, utf8Lt) !=
+      refRoots[String](es, _ < _)))
+    (Nil +: all).zipWithIndex.foreach { case (es, i) =>
+      val (local, rounds) = bothPaths(es.toDF("src", "dst"))
+      assert(local == refRoots[String](es, utf8Lt) && rounds == local,
+        s"iteration $i: $es")
+    }
+  }
+
+  test("below the size gate connectedComponents runs at most 2 jobs and " +
+    "releases its checkpoint") {
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L), (3L, 3L)).toDF("src", "dst")
+    var out: DataFrame = null
+    val jobs = jobsRunBy {
+      leavesNoRdds { out = Clusters.connectedComponents(edges) }
+    }
+    assert(jobs <= 2, s"$jobs jobs")
+    assert(jobsRunBy(labelsOf(out)) == 0)
+    assert(labelsOf(out) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L,
+      8L -> 7L))
+  }
+
+  test("the rounds keep only the checkpoint behind the returned frame") {
+    val edges = (1L until 12L).map(i => (i + 1, i)).toDF("src", "dst")
+    var out: DataFrame = null
+    val left = withGate(0L) {
+      rddsLeftBy { out = Clusters.connectedComponents(edges) }
+    }
+    val backing = out.queryExecution.logical.collect {
+      case r: LogicalRDD => r.rdd.id
+    }.toSet
+    assert(backing.size == 1 && left.keySet == backing, left.values)
+    assert(labelsOf(out) == (1L to 12L).map(_ -> 1L).toMap)
+    VersionedIndex.releaseCheckpoint(out)
   }
 }

@@ -28,6 +28,33 @@ trait SparkSpec {
     d.toString
   }
 
+  /** RDDs that `body` persisted and left persisted — read right after it
+    * returns, before a GC lets the context cleaner mask a leak.
+    */
+  def rddsLeftBy(body: => Any): Map[Int, org.apache.spark.rdd.RDD[_]] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body
+    sc.getPersistentRDDs.filter(r => !before(r._1)).toMap
+  }
+
+  /** Asserts `body` leaves no persisted RDD behind. */
+  def leavesNoRdds(body: => Any): Unit = {
+    val left = rddsLeftBy(body)
+    assert(left.isEmpty, left.values.mkString("\n"))
+  }
+
+  /** Runs `body` with the size gate `spark.graft.smallInput.maxBytes` at
+    * `maxBytes`, restoring the previous setting afterwards.
+    */
+  def withGate[A](maxBytes: Long)(body: => A): A = {
+    val key = "spark.graft.smallInput.maxBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, maxBytes.toString)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Spark jobs `body` submits from this thread (jobs of other threads
     * sharing the session are not counted).
     */

@@ -215,15 +215,31 @@ class VersionedIndexSpec extends AnyFunSuite with SparkSpec {
       == 30L)
   }
 
-  /** Asserts `body` leaves no persisted RDD behind — checked right after
-    * it returns, before a GC lets the context cleaner mask a leak.
-    */
-  private def leavesNoRdds(body: => Unit): Unit = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    body
-    val left = sc.getPersistentRDDs.filter(r => !before(r._1))
-    assert(left.isEmpty, left.values.mkString("\n"))
+  test("DedupIndex and ApssIndex pair reads list the folds once and " +
+    "never see a later fold") {
+    val a = docs(0L until 20L)
+    val b = docs(20L until 35L)
+    val probe = docs(35L until 40L)
+    val ddir = tmpDir("vidx_dedup_listing")
+    val adir = tmpDir("vidx_apss_listing")
+    DedupIndex.build(spark, a, ddir, "d", "doc_id", "text")
+    ApssIndex.build(spark, a, adir, "d", "doc_id", "text")
+    val within = DedupIndex.pairsWithin(spark, ddir, "d")
+    val against = DedupIndex.pairsAgainst(spark, probe, ddir, "d", "doc_id",
+      "text")
+    val apss = ApssIndex.pairsAgainst(spark, probe, adir, "d", "doc_id",
+      "text", thresholdPermil = 700)
+    DedupIndex.fold(spark, b, ddir, "d", "doc_id", "text").count()
+    ApssIndex.fold(spark, b, adir, "d", "doc_id", "text",
+      thresholdPermil = 700).count()
+    val withinA = dedupPairs(Dedup.minhashNearDupPairs(a, "doc_id", "text"))
+    assert(withinA.nonEmpty && dedupPairs(within) == withinA)
+    assert(dedupPairs(against) == dedupPairs(
+      Dedup.minhashNearDupPairsIncremental(a, probe, "doc_id", "text")))
+    assert(apssPairs(apss) == apssOneShot(a, probe))
+    assert(dedupPairs(DedupIndex.pairsWithin(spark, ddir, "d")) ==
+      dedupPairs(Dedup.minhashNearDupPairs(a.unionByName(b), "doc_id",
+        "text")))
   }
 
   test("ApssIndex build and repeated compacts leave no persisted RDDs") {
