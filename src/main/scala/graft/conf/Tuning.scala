@@ -103,12 +103,22 @@ object Tuning {
     }
 
   /** The size gate itself: `bytes` of measured input is below
-    * `spark.graft.smallInput.maxBytes` (default 64 MiB). The one place
-    * that key is read — [[withSmallInputScope]] and the operators that
+    * `spark.graft.smallInput.maxBytes` (default 64 MiB). With
+    * [[smallInputRows]], the one place that key is read —
+    * [[withSmallInputScope]] and the operators that
     * switch to a driver-local algorithm below the gate
-    * (`Clusters.connectedComponents`, `ClusterIndex.fold`) decide alike.
+    * (`Clusters.connectedComponents`, `ClusterIndex.fold`,
+    * `DedupIndex.fold`/`pairsAgainst`) decide alike.
     */
   def isSmallInput(spark: SparkSession, bytes: Long): Boolean =
-    bytes < confLong(
-      spark, "spark.graft.smallInput.maxBytes", 64L * 1024 * 1024)
+    bytes < smallInputMaxBytes(spark)
+
+  /** The most rows of `rowBytes` each that stay below the size gate: the
+    * bound for an action that collects rows it has not counted.
+    */
+  def smallInputRows(spark: SparkSession, rowBytes: Long): Long =
+    math.max(0L, smallInputMaxBytes(spark) - 1) / rowBytes
+
+  private def smallInputMaxBytes(spark: SparkSession): Long =
+    confLong(spark, "spark.graft.smallInput.maxBytes", 64L * 1024 * 1024)
 }

@@ -89,9 +89,12 @@ object ClusterIndex {
     ix.publish(v, retainVersions) {
       val labels = Clusters.connectedComponents(
         pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+      // driver-solved labels are below the gate: one file, as a fold's
+      // delta is, since every later resolve opens each of its files
+      val out = if (labels.isLocal) labels.coalesce(1) else labels
       // the write is the labels' only reader: release the rounds' final
       // checkpoint behind them (a no-op for driver-solved labels)
-      try labels.write.mode("errorifexists").parquet(ix.path(v, "labels"))
+      try out.write.mode("errorifexists").parquet(ix.path(v, "labels"))
       finally graft.io.VersionedIndex.releaseCheckpoint(labels)
     }
   }

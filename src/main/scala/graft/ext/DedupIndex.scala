@@ -1,7 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import graft.conf.Tuning
+import graft.io.VersionedIndex.releaseCheckpoint
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted, incrementally-maintained MinHash-LSH dedup index — the
   * artifact form of [[Dedup.minhashNearDupPairsIncremental]]. That
@@ -34,9 +40,10 @@ import org.apache.spark.sql.functions._
   * write IO is delta-sized), join fresh bands against stored ∪ fresh
   * bands (ids-only equi-join; the asymmetric join's skew exposure is
   * bounded by the batch side's bucket width), verify candidates with the
-  * exact integer Jaccard against stored ∪ fresh sets, RETURN the
-  * qualifying pairs (every pair involves ≥ 1 fresh doc), and commit the
-  * fresh delta so the next batch sees it. Maintained pair sets are
+  * exact integer Jaccard against their own stored or fresh sets (below
+  * the size gate; above it the lazy plan joins every stored set), RETURN
+  * the qualifying pairs (every pair involves ≥ 1 fresh doc), and commit
+  * the fresh delta so the next batch sees it. Maintained pair sets are
   * identical to a one-shot [[Dedup.minhashNearDupPairs]] over the
   * accumulated corpus restricted to fresh involvement — same fused
   * signature expr, same banding, same verify arithmetic (q313
@@ -137,7 +144,8 @@ object DedupIndex {
   /** Sign + index `corpus` as version 1 (or N+1 — a manual rebuild),
     * then apply the retention window (newest `retainVersions` version
     * dirs kept; an in-flight reader of the previous version keeps its
-    * files at the default 2).
+    * files at the default 2). The sign write runs under the size gate,
+    * sized by `corpus`' estimated bytes.
     */
   def build(
       spark: SparkSession, corpus: DataFrame, dir: String, name: String,
@@ -149,38 +157,104 @@ object DedupIndex {
     val ix = index(spark, dir, name)
     val v = ix.current.getOrElse(0) + 1
     ix.publish(v, retainVersions) {
-      val (sets, bands) =
-        signAndBand(corpus, idCol, textCol, k, numHashes, bandRows)
-      // the write is this operator's only action over the cached sign
-      // pass — release it afterwards (r10, advisor: operators that own
-      // their action own the cleanup)
-      try writeVersion(ix, sets, bands, k, numHashes, bandRows, v)
-      finally sets.unpersist()
+      Tuning.withSmallInputScope(spark, Tuning.estimatedBytes(corpus)) {
+        val (sets, bands) =
+          signAndBand(corpus, idCol, textCol, k, numHashes, bandRows)
+        // the write is this operator's only action over the cached sign
+        // pass — release it afterwards (r10, advisor: operators that own
+        // their action own the cleanup)
+        try writeVersion(ix, sets, bands, k, numHashes, bandRows, v)
+        finally sets.unpersist()
+      }
     }
   }
 
-  /** The incremental pair algebra shared by [[fold]] and
-    * [[pairsAgainst]]: candidates = fresh bands ⋈ (prior ∪ fresh) bands
-    * (ids only, canonical unordered form — fresh×fresh pairs meet twice
-    * and collapse), verified with the exact integer Jaccard via the
-    * family's exploded-hash overlap join.
+  /** Band matches = fresh bands ⋈ (prior ∪ fresh) bands (ids only), in
+    * canonical unordered form (id_a, id_b) — one row per shared band, so
+    * fresh×fresh pairs meet twice.
     */
-  private def pairsOf(
-      setsI: DataFrame, bandsI: DataFrame, priorSets: DataFrame,
-      priorBands: DataFrame, thresholdNum: Int,
-      thresholdDen: Int): DataFrame = {
-    val cands = bandsI.select(col("doc_id").as("id_n"),
-        col("band"), col("bucket"))
+  private def bandMatches(
+      bandsI: DataFrame, priorBands: DataFrame): DataFrame =
+    bandsI.select(col("doc_id").as("id_n"), col("band"), col("bucket"))
       .join(priorBands.unionByName(bandsI)
         .select(col("doc_id").as("id_o"), col("band"), col("bucket")),
         Seq("band", "bucket"))
       .filter(col("id_n") =!= col("id_o"))
       .select(least(col("id_n"), col("id_o")).as("id_a"),
         greatest(col("id_n"), col("id_o")).as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    Dedup.withOverlapExploded(cands, priorSets.unionByName(setsI))
+
+  /** The incremental pair algebra shared by [[fold]] and
+    * [[pairsAgainst]], as one lazy plan: the candidates verified with the
+    * exact integer Jaccard via the family's exploded-hash overlap join
+    * over every prior ∪ fresh set.
+    */
+  private def pairsOf(
+      setsI: DataFrame, bandsI: DataFrame, priorSets: DataFrame,
+      priorBands: DataFrame, thresholdNum: Int,
+      thresholdDen: Int): DataFrame =
+    Dedup.withOverlapExploded(
+        bandMatches(bandsI, priorBands).dropDuplicates("id_a", "id_b"),
+        priorSets.unionByName(setsI))
       .filter(col("inter_size") * thresholdDen >=
         col("union_size") * thresholdNum)
+
+  /** [[pairsOf]]'s output schema per input schemas, since building the
+    * lazy plan to read it costs about 0.2 s.
+    */
+  private val pairsSchemas =
+    new java.util.concurrent.ConcurrentHashMap[Seq[StructType], StructType]()
+
+  /** [[pairsOf]] under the size gate, decided in two steps. When the
+    * sets and bands it reads are below the gate, one job collects the
+    * band matches, at most as many as stay below the gate at
+    * [[Clusters.EdgeBytes]] each. When they fit, a second job collects
+    * the candidates' own sets (an `InSet` filter on their ids: a subset
+    * of the sets just measured), the exact Jaccard runs on the driver
+    * (`hsh` is a distinct set, so `|A ∩ B|` is the overlap join's count),
+    * and the qualifying pairs come back as a `LocalRelation` with
+    * [[pairsOf]]'s schema: two jobs, nothing persisted. Above either
+    * gate, or for ids whose external values do not compare like Spark's
+    * `=` ([[Clusters.driverSolvable]]), the lazy [[pairsOf]] plan is
+    * returned. The shuffled-hash hint keeps the fresh bands from being
+    * broadcast, which costs a job with AQE off.
+    */
+  private def gatedPairs(
+      setsI: DataFrame, bandsI: DataFrame, priorSets: DataFrame,
+      priorBands: DataFrame, thresholdNum: Int,
+      thresholdDen: Int): DataFrame = {
+    val spark = setsI.sparkSession
+    lazy val lazyPairs = pairsOf(setsI, bandsI, priorSets, priorBands,
+      thresholdNum, thresholdDen)
+    val readBytes = Tuning.estimatedBytes(setsI, bandsI, priorSets, priorBands)
+    if (!Tuning.isSmallInput(spark, readBytes) ||
+        !Clusters.driverSolvable(bandsI.schema("doc_id").dataType)) {
+      return lazyPairs
+    }
+    val maxRows = Tuning.smallInputRows(spark, Clusters.EdgeBytes)
+    val matches = Tuning.withSmallInputScope(spark, readBytes) {
+      bandMatches(bandsI.hint("shuffle_hash"), priorBands)
+        .limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1).collect()
+    }
+    if (matches.length > maxRows) return lazyPairs
+    val cands = matches.iterator.map(r => (r.get(0), r.get(1))).toSet
+    val sets = priorSets.unionByName(setsI)
+      .filter(col("doc_id").isInCollection(
+        cands.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet))
+      .collect().iterator.map(r => r.get(0) -> r.getSeq[Long](1).toSet)
+      .toMap
+    val schema = pairsSchemas.computeIfAbsent(
+      Seq(setsI, bandsI, priorSets, priorBands).map(_.schema),
+      _ => lazyPairs.schema)
+    val out = for {
+      (ida, idb) <- cands.toSeq
+      a <- sets.get(ida)
+      b <- sets.get(idb)
+      inter = a.count(b).toLong
+      union = a.size + b.size - inter
+      if inter * thresholdDen >= union * thresholdNum
+    } yield Row.fromSeq(schema.fieldNames.toSeq.map(Map("id_a" -> ida,
+      "id_b" -> idb, "inter_size" -> inter, "union_size" -> union)))
+    spark.createDataFrame(out.asJava, schema)
   }
 
   /** READ-ONLY preview of an ingest batch against the index: every
@@ -192,6 +266,11 @@ object DedupIndex {
     * `atVersion` time-travels to a retained historical version (its
     * committed folds included) — auditing what an admission decision
     * WOULD have been against last week's corpus.
+    *
+    * Below the size gate the pairs are collected and returned as a local
+    * frame, and the fresh side's two checkpoints are released. Above it
+    * the returned lazy frame reads them, so they stay persisted until a
+    * GC lets the context cleaner drop them.
     */
   def pairsAgainst(
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
@@ -206,10 +285,13 @@ object DedupIndex {
     val setsI = setsI0.localCheckpoint()
     val bandsI = bandsI0.localCheckpoint()
     // both checkpoints are materialized — the sign-pass cache has no
-    // consumers left (the returned plan reads the checkpoints)
+    // consumers left (the pair path reads the checkpoints)
     setsI0.unpersist()
     val Seq(sets, bands) = ix.committedSigned(v, Seq("sets", "bands"))
-    pairsOf(setsI, bandsI, sets, bands, thresholdNum, thresholdDen)
+    val out = gatedPairs(setsI, bandsI, sets, bands, thresholdNum,
+      thresholdDen)
+    if (out.isLocal) releaseCheckpoint(setsI, bandsI)
+    out
   }
 
   /** Every qualifying near-dup pair WITHIN the indexed corpus itself —
@@ -256,6 +338,12 @@ object DedupIndex {
     * caller retrying after a post-commit failure never double-inserts.
     * Omitted, the generation auto-increments (safe against pre-marker
     * crashes only; at-least-once callers must pass their identity).
+    *
+    * Below the size gate a fold runs three jobs: the delta's sign write
+    * (gated on `fresh`'s estimated bytes), one collect of the candidates
+    * and one of their sets; the exact verify runs on the driver and the
+    * returned frame is a local one that holds no cached blocks. Above
+    * the gate it is a lazy plan over every stored set and band.
     */
   def fold(
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
@@ -266,15 +354,17 @@ object DedupIndex {
     graft.functions.VectorExpressions.register(spark)
     val g = ix.fold(v, generation) { g =>
       val (k, numHashes, bandRows) = readParams(ix, v)
-      val (setsI, bandsI) =
-        signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
-      // overwrite mode: a retry of a crashed fold recomputes the same
-      // generation and replaces the orphan before committing. r10: both
-      // artifacts commit in ONE __what-partitioned write (one job instead
-      // of two); it is the sign-pass cache's only consumer — release it
-      // afterwards (advisor).
-      try ix.writeSigned(ix.delta(v, g), "overwrite", setsI, bandsI)
-      finally setsI.unpersist()
+      Tuning.withSmallInputScope(spark, Tuning.estimatedBytes(fresh)) {
+        val (setsI, bandsI) =
+          signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
+        // overwrite mode: a retry of a crashed fold recomputes the same
+        // generation and replaces the orphan before committing. r10: both
+        // artifacts commit in ONE __what-partitioned write (one job
+        // instead of two); it is the sign-pass cache's only consumer —
+        // release it afterwards (advisor).
+        try ix.writeSigned(ix.delta(v, g), "overwrite", setsI, bandsI)
+        finally setsI.unpersist()
+      }
     }
     // pairs off the generation's stored delta (read back — not the
     // lineage of the input frame, so the verify never re-signs fresh
@@ -283,7 +373,7 @@ object DedupIndex {
     // that preceded it
     val Seq(sets, bands) =
       ix.committedSigned(v, Seq("sets", "bands"), belowGen = g)
-    pairsOf(ix.deltaSigned(v, g, "sets"), ix.deltaSigned(v, g, "bands"),
+    gatedPairs(ix.deltaSigned(v, g, "sets"), ix.deltaSigned(v, g, "bands"),
       sets, bands, thresholdNum, thresholdDen)
   }
 

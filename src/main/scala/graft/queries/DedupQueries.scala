@@ -991,16 +991,10 @@ object DedupQueries {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     new java.io.File(idxDir).mkdirs()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    // r10: size-gated fixed-cost scope over build and per-batch folds
-    // (AQE off + bytes-derived partitions below the gate; unchanged at
-    // scale)
-    val corpusBytes =
-      graft.conf.Tuning.dirBytes(spark, s"$dir/documents.parquet")
-    graft.conf.Tuning.withSmallInputScope(spark, corpusBytes) {
-      DedupIndex.build(spark, docs.filter(col("doc_id") % 3 === 1),
-        idxDir, "docs", "doc_id", "text",
-        k = 3, numHashes = 128, bandRows = 2)
-    }
+    // build and folds take the size gate themselves
+    DedupIndex.build(spark, docs.filter(col("doc_id") % 3 === 1),
+      idxDir, "docs", "doc_id", "text",
+      k = 3, numHashes = 128, bandRows = 2)
     val schema = spark.read.parquet(s"$staged/a.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -1014,11 +1008,8 @@ object DedupQueries {
         // the batchId IS the fold generation: foreachBatch is
         // at-least-once, and a retried batch replaying its own committed
         // generation is a no-op instead of a double-insert
-        graft.conf.Tuning.withSmallInputScope(
-          batch.sparkSession, corpusBytes) {
-          DedupIndex.fold(batch.sparkSession, batch, idxDir, "docs",
-            "doc_id", "text", generation = Some(batchId + 1))
-        }
+        DedupIndex.fold(batch.sparkSession, batch, idxDir, "docs",
+          "doc_id", "text", generation = Some(batchId + 1))
         ()
       }
       .start()
@@ -1411,21 +1402,15 @@ object DedupQueries {
     }
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val seed = docs.filter(col("doc_id") % 2 === 0)
-    // r10 (guide §1.2/§2.2): the index build's sign/write actions are
-    // corpus-sized and exchange-free — size-gate the fixed-cost scope
-    // (AQE off + bytes-derived partitions below 64 MiB, unchanged above)
-    // on the MEASURED corpus bytes. The CLUSTER seeding stays UNSCOPED:
-    // its input is the pairsWithin exact-verify join (a shingle-exploded
-    // working set far larger than the input bytes — serializing it was
-    // measured at +6 s), and connectedComponents decides on the edge count
-    // its first checkpoint measures: below the size gate it solves on the
-    // driver, above it the contraction rounds run size-gated.
-    val corpusBytes =
-      graft.conf.Tuning.dirBytes(spark, s"$dir/documents.parquet")
-    graft.conf.Tuning.withSmallInputScope(spark, corpusBytes) {
-      DedupIndex.build(spark, seed, idxDir, "docs", "doc_id", "text",
-        k = 3, numHashes = 128, bandRows = 2)
-    }
+    // the index build takes the size gate on the corpus' bytes. The
+    // CLUSTER seeding stays UNSCOPED: its input is the pairsWithin
+    // exact-verify join (a shingle-exploded working set far larger than
+    // the input bytes — serializing it was measured at +6 s), and
+    // connectedComponents decides on the edge count its first checkpoint
+    // measures: below the size gate it solves on the driver, above it the
+    // contraction rounds run size-gated.
+    DedupIndex.build(spark, seed, idxDir, "docs", "doc_id", "text",
+      k = 3, numHashes = 128, bandRows = 2)
     // seed labels from the index's OWN stored artifacts — the corpus is
     // signed exactly once (at build); nothing re-shingles here
     ClusterIndex.build(spark,
@@ -1443,17 +1428,12 @@ object DedupQueries {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // the index fold's own actions (sign + delta writes) are
-        // exchange-free and batch-sized — scoped; the CLUSTER fold is
-        // NOT scoped: its action materializes the fresh-pairs verify
-        // join (shingle-exploded working set — needs the parallelism),
-        // and the fold gates the rest on the pair count it measures
-        // (driver-solved below the size gate)
-        val prs = graft.conf.Tuning.withSmallInputScope(
-          batch.sparkSession, corpusBytes) {
-          DedupIndex.fold(batch.sparkSession, batch, idxDir,
-            "docs", "doc_id", "text", generation = Some(batchId + 1))
-        }.select("id_a", "id_b")
+        // both folds take the size gate themselves: below it the index
+        // fold verifies its candidates' sets and returns its pairs as
+        // local rows, and the cluster fold solves them on the driver
+        val prs = DedupIndex.fold(batch.sparkSession, batch, idxDir,
+          "docs", "doc_id", "text", generation = Some(batchId + 1))
+          .select("id_a", "id_b")
         // fold() commits its delta eagerly — the old .count() on the
         // returned (already-written) delta read was a pure extra job
         ClusterIndex.fold(batch.sparkSession, prs, clDir, "dups",

@@ -193,4 +193,18 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     assert(local.values.toSet == Set("\uE000") && local.size == 3)
     assert(run(0L) == local)
   }
+
+  test("below the size gate build writes its labels as one file") {
+    val seed = pairs((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L), (9L, 10L))
+    val built = (gate: Long) => withGate(gate) {
+      val dir = tmpDir("clidx_build_files")
+      ClusterIndex.build(spark, seed, dir, "d")
+      val parts = new java.io.File(s"$dir/d.clusterindex/v1/labels")
+        .list().count(_.endsWith(".parquet"))
+      (parts, lab(ClusterIndex.labels(spark, dir, "d")))
+    }
+    val (parts, labels) = built(Long.MaxValue)
+    assert(parts == 1, s"$parts part files")
+    assert(labels == oneShot(seed) && labels == built(0L)._2)
+  }
 }

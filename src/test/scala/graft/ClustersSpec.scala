@@ -171,13 +171,6 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
     Gen.choose(0, 30).flatMap(Gen.listOfN(_, Gen.zip(id, id)))
   }
 
-  private def samples[T](gen: Gen[T], n: Int, seed: Long): Seq[T] =
-    Iterator.iterate(org.scalacheck.rng.Seed(seed))(_.next).take(n)
-      .zipWithIndex.map { case (s, i) =>
-        gen.apply(Gen.Parameters.default, s)
-          .getOrElse(fail(s"generator returned no sample at iteration $i"))
-      }.toSeq
-
   test("driver-local labels equal the rounds and a reference union-find " +
     "on random long-id graphs") {
     (Nil +: samples(longEdges, 8, 20261L)).zipWithIndex.foreach {

@@ -3,13 +3,16 @@ package graft
 import graft.ext.{Dedup, DedupIndex}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.ext.DedupIndex]]: versioned persisted MinHash-LSH dedup index —
-  * fold/pairsAgainst ≡ the in-memory incremental operator, marker-gated
-  * delta commits, params frozen in the artifact, compaction is a pure
-  * rewrite. Oracle twin: q313.
+  * fold/pairsAgainst ≡ the in-memory incremental operator on either side
+  * of the size gate, marker-gated delta commits, params frozen in the
+  * artifact, compaction is a pure rewrite. Below the gate a warm fold runs
+  * at most 3 jobs and returns local rows. Oracle twin: q313.
   */
 class DedupIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -24,6 +27,16 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
       val body = (0 until 30)
         .map(j => s"w${fam}x${(j * 7 + fam) % 11}").mkString(" ")
       (i, s"$body tail${i % 3} t${i % 3}")
+    }.toDF("doc_id", "text")
+
+  /** Docs `ids` all near-dups of family `fam`: its shared body plus a
+    * per-doc tail.
+    */
+  private def family(ids: Seq[Long], fam: Long): DataFrame =
+    ids.map { i =>
+      val body = (0 until 30)
+        .map(j => s"w${fam}x${(j * 7 + fam) % 11}").mkString(" ")
+      (i, s"$body tail$i t$i")
     }.toDF("doc_id", "text")
 
   private def pairs(df: DataFrame): Set[(Long, Long, Long, Long)] =
@@ -234,6 +247,158 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException] {
       DedupIndex.fold(spark, docs(0L until 3L), dir, "nope", "doc_id",
         "text")
+    }
+  }
+
+  /** A 2,000-doc index with one warm-up fold (the first read of a
+    * version's artifacts pays one footer job each), then `body` on it.
+    */
+  private def warmIndex[A](prefix: String)(body: String => A): A = {
+    val dir = tmpDir(prefix)
+    DedupIndex.build(spark, docs(0L until 2000L), dir, "d", "doc_id", "text")
+    DedupIndex.fold(spark, docs(2000L until 2010L), dir, "d", "doc_id",
+      "text").collect()
+    body(dir)
+  }
+
+  test("below the size gate a 200-doc fold into a 2,000-doc index runs " +
+    "at most 3 jobs and returns local rows") {
+    warmIndex("didx_budget") { dir =>
+      var out: DataFrame = null
+      val jobs = jobsRunBy {
+        out = DedupIndex.fold(spark, docs(2010L until 2210L), dir, "d",
+          "doc_id", "text")
+        out.collect()
+      }
+      assert(jobs <= 3, s"$jobs jobs")
+      assert(out.isLocal)
+      assert(jobsRunBy(out.collect()) == 0)
+      assert(pairs(out) == pairs(Dedup.minhashNearDupPairsIncremental(
+        docs(0L until 2010L), docs(2010L until 2210L), "doc_id", "text")))
+      assert(pairs(out).size > 100)
+    }
+  }
+
+  /** A 30-doc base, then a fresh batch of 60 near-dups of one stored
+    * 3-doc family: 1,950 pairs whose sets far outweigh the index files.
+    */
+  private val hotBase = docs(0L until 30L)
+  private val hotBatch = family(1000L until 1060L, 4L)
+
+  /** Fold `hotBatch` into a fresh index over `hotBase`, with the gate at
+    * `gate` (None: the default) — the pairs and the index dir's bytes.
+    */
+  private def hotFold(gate: Option[Long]): (DataFrame, Long) = {
+    val dir = tmpDir("didx_hot")
+    DedupIndex.build(spark, hotBase, dir, "d", "doc_id", "text")
+    def run = DedupIndex.fold(spark, hotBatch, dir, "d", "doc_id", "text")
+    val out = gate.fold(run)(withGate(_)(run))
+    (out, graft.conf.Tuning.dirBytes(spark, s"$dir/d.dedupindex"))
+  }
+
+  /** A gate above the index files' bytes and below the hot batch's band
+    * matches (most of 1,950 pairs share most of 64 bands) at 64 B each.
+    */
+  private val matchGate = 1L << 20
+
+  test("folds with the gate on, off (0) and tripped by the band matches " +
+    "return the same rows and schema as the in-memory incremental operator") {
+    val (gated, _) = hotFold(None)
+    val (ungated, _) = hotFold(Some(0L))
+    val (matchesAbove, indexBytes) = hotFold(Some(matchGate))
+    // the band matches ran below the gate; only their count was above it
+    assert(indexBytes < matchGate, s"$indexBytes index bytes")
+    assert(gated.isLocal && !ungated.isLocal && !matchesAbove.isLocal)
+    val oneShot = Dedup.minhashNearDupPairsIncremental(
+      hotBase, hotBatch, "doc_id", "text")
+    assert(pairs(oneShot).size == 1950)
+    Seq(ungated, matchesAbove, oneShot).foreach { df =>
+      assert(pairs(df) == pairs(gated))
+    }
+    Seq(ungated, matchesAbove).foreach(df => assert(df.schema == gated.schema))
+  }
+
+  test("a fold on either side of the size gate leaves no persisted RDDs") {
+    Seq(None, Some(0L), Some(matchGate)).foreach { gate =>
+      leavesNoRdds(pairs(hotFold(gate)._1))
+    }
+  }
+
+  test("pairsAgainst below the size gate returns local rows and releases " +
+    "its checkpoints; above it only the two behind the frame stay") {
+    val dir = tmpDir("didx_against_rdds")
+    val a = docs(0L until 30L)
+    DedupIndex.build(spark, a, dir, "d", "doc_id", "text")
+    val probe = docs(30L until 45L)
+    val want = pairs(Dedup.minhashNearDupPairsIncremental(
+      a, probe, "doc_id", "text"))
+    var out: DataFrame = null
+    val left = rddsLeftBy {
+      out = DedupIndex.pairsAgainst(spark, probe, dir, "d", "doc_id", "text")
+    }
+    assert(left.isEmpty, left.values.mkString("\n"))
+    assert(out.isLocal && pairs(out) == want && want.nonEmpty)
+    val above = withGate(0L) {
+      rddsLeftBy {
+        out = DedupIndex.pairsAgainst(spark, probe, dir, "d", "doc_id",
+          "text")
+      }
+    }
+    val backing = out.queryExecution.logical.collect {
+      case r: LogicalRDD => r.rdd.id
+    }.toSet
+    assert(backing.size == 2 && above.keySet == backing, above.values)
+    assert(pairs(out) == want)
+    above.values.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Build + fold batches: each doc is one of 4 families (near-dups
+    * within a family), a zero-token text (fewer than k = 3 tokens) or an
+    * empty text; batches hold 0–5 docs.
+    */
+  private val splits: Gen[List[List[Int]]] =
+    Gen.choose(2, 4).flatMap(Gen.listOfN(_, Gen.frequency(
+        1 -> Gen.const(0), 2 -> Gen.const(1), 3 -> Gen.choose(2, 5))
+      .flatMap(Gen.listOfN(_, Gen.choose(0, 5)))))
+
+  private def batchDocs(kinds: Seq[Int], from: Long): DataFrame =
+    kinds.zipWithIndex.map { case (kind, j) =>
+      val i = from + j
+      val text =
+        if (kind < 4) (0 until 30)
+          .map(w => s"w${kind}x${(w * 7 + kind) % 11}")
+          .mkString(" ") + s" tail$i t$i"
+        else if (kind == 4) s"w$i z$i"
+        else ""
+      (i, text)
+    }.toDF("doc_id", "text")
+
+  test("fold ≡ the in-memory incremental operator over random batch " +
+    "splits, below the size gate and at maxBytes=0") {
+    // two fixed splits hold every edge: an empty base, empty,
+    // single-row and zero-token-only folds
+    val all = List(List(0, 1, 4), Nil, List(4, 5), List(1), List(0, 2)) +:
+      List(Nil, List(0, 0), List(1)) +: samples(splits, 3, 41L)
+    all.zipWithIndex.foreach { case (split, i) =>
+      val starts = split.scanLeft(0L)(_ + _.size)
+      val batches = split.zip(starts).map { case (b, s) => batchDocs(b, s) }
+      val want = batches.indices.tail.map { n =>
+        pairs(Dedup.minhashNearDupPairsIncremental(
+          batches.take(n).reduce(_.unionByName(_)), batches(n),
+          "doc_id", "text"))
+      }
+      Seq(None, Some(0L)).foreach { gate =>
+        def run = {
+          val dir = tmpDir("didx_prop")
+          DedupIndex.build(spark, batches.head, dir, "d", "doc_id", "text")
+          batches.tail.map(b => DedupIndex.fold(
+            spark, b, dir, "d", "doc_id", "text"))
+            .map(df => (df.isLocal, pairs(df)))
+        }
+        val got = gate.fold(run)(withGate(_)(run))
+        assert(got.forall(_._1 == gate.isEmpty), s"sample $i gate $gate")
+        assert(got.map(_._2) == want, s"sample $i gate $gate: $split")
+      }
     }
   }
 }

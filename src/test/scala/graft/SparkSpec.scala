@@ -55,6 +55,15 @@ trait SparkSpec {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** `n` samples of `gen` from fixed seeds derived from `seed`. */
+  def samples[T](gen: org.scalacheck.Gen[T], n: Int, seed: Long): Seq[T] =
+    Iterator.iterate(org.scalacheck.rng.Seed(seed))(_.next).take(n)
+      .zipWithIndex.map { case (s, i) =>
+        gen.apply(org.scalacheck.Gen.Parameters.default, s).getOrElse(
+          throw new AssertionError(
+            s"generator returned no sample at iteration $i"))
+      }.toSeq
+
   /** Spark jobs `body` submits from this thread (jobs of other threads
     * sharing the session are not counted).
     */
