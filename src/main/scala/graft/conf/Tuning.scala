@@ -108,7 +108,7 @@ object Tuning {
     * [[withSmallInputScope]] and the operators that
     * switch to a driver-local algorithm below the gate
     * (`Clusters.connectedComponents`, `ClusterIndex.fold`,
-    * `DedupIndex.fold`/`pairsAgainst`) decide alike.
+    * `DedupIndex.fold`/`pairsAgainst`, `SearchIndex.topK`) decide alike.
     */
   def isSmallInput(spark: SparkSession, bytes: Long): Boolean =
     bytes < smallInputMaxBytes(spark)

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -106,19 +106,25 @@ object Retrieval {
       else tf.join(broadcast(dft), "term").join(dl, idCol)
     val scored = withDl
       .crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("total").cast("double") / col("n_docs"))
-      .withColumn("idf",
-        log(lit(1.0) +
-          ((col("n_docs") - col("df")) + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("contrib",
-        col("idf") * ((col("c") * lit(k1 + 1)) /
-          (col("c") + lit(k1) * (lit(1 - b) +
-            lit(b) * (col("dl").cast("double") / col("avgdl"))))))
-      // integer micro-units: the per-doc SUM is exact and order-free
-      .withColumn("cmicro",
-        floor(col("contrib") * lit(1000000.0) + lit(0.5)).cast("long"))
+      .withColumn("cmicro", bm25ContribMicro(k1, b))
     scored.groupBy("query_id", idCol)
       .agg(sum("cmicro").as("score_micro"))
+  }
+
+  /** One posting's BM25 contribution in integer micro-units, over the
+    * columns `c` (term frequency), `dl` (unit length), `df`, `n_docs`
+    * and `total` — the one formula [[bm25ScoreFromPostings]] and
+    * [[SearchIndex.topK]]'s driver path both evaluate.
+    */
+  private[ext] def bm25ContribMicro(k1: Double, b: Double): Column = {
+    val avgdl = col("total").cast("double") / col("n_docs")
+    val idf = log(lit(1.0) +
+      ((col("n_docs") - col("df")) + lit(0.5)) / (col("df") + lit(0.5)))
+    val contrib = idf * ((col("c") * lit(k1 + 1)) /
+      (col("c") + lit(k1) * (lit(1 - b) +
+        lit(b) * (col("dl").cast("double") / avgdl))))
+    // integer micro-units: the per-doc SUM is exact and order-free
+    floor(contrib * lit(1000000.0) + lit(0.5)).cast("long")
   }
 
   /** The rank cut shared by [[bm25TopK]] and [[SearchIndex.topK]]. */

@@ -1,9 +1,14 @@
 package graft.ext
 
+import scala.jdk.CollectionConverters._
+
 import graft.conf.Tuning
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted, incrementally-maintained BM25 search index — the artifact
   * form of [[Retrieval.bm25TopK]]: a query-time scorer should join
@@ -30,15 +35,16 @@ import org.apache.spark.sql.functions._
   *    per batch (n_docs, total_len) — readers sum both.
   * [[topK]] therefore answers IDENTICALLY to a one-shot
   * [[Retrieval.bm25TopK]] over the accumulated corpus — not just
-  * approximately: the scoring runs through the shared
-  * [[Retrieval.bm25ScoreFromPostings]] core, so the double expression
+  * approximately: both score through the shared
+  * [[Retrieval.bm25ContribMicro]] formula, so the double expression
   * sequence (idf, length normalization, micro-unit rounding) is the same
   * code (q331 adjudicates against the from-scratch SQL replay).
   *
-  * Scale shape: a query joins its (few) terms against the postings —
-  * per-term fanout is that term's df, the inverted-index property; df
-  * summing is restricted to query terms before aggregation; totals are
-  * one row per fold. Fold IO is delta-sized (sign only the fresh batch;
+  * Scale shape: a query keeps only its (few) terms' postings — per-term
+  * fanout is that term's df, the inverted-index property; df summing is
+  * restricted to query terms before aggregation; totals are one row per
+  * fold. Below the size gate those rows are collected and ranked on the
+  * driver in one job. Fold IO is delta-sized (sign only the fresh batch;
   * nothing stored is read or rewritten).
   */
 object SearchIndex {
@@ -133,20 +139,66 @@ object SearchIndex {
       write(ix, fresh, idCol, textCol, ix.delta(v, g), "overwrite"))
   }
 
+  /** The lazy BM25 top-`k` plan over the committed artifacts: query
+    * terms broadcast against the postings, dfs summed per query term,
+    * totals summed, scored by the shared core.
+    */
+  private def lazyTopK(
+      qt: DataFrame, postings: DataFrame, termdf: DataFrame,
+      totals: DataFrame, idCol: String, k: Int, k1: Double,
+      b: Double): DataFrame = {
+    val bqt = broadcast(qt)
+    // postings carry dl: the shared core skips the lengths join
+    val tf = postings.join(bqt, "term")
+      .select(col("query_id"), col("term"), col("doc_id").as(idCol),
+        col("c"), col("dl"))
+    // per-batch dfs SUM to collection dfs (disjoint doc sets); restrict
+    // to query terms before the aggregate
+    val dft = termdf.join(bqt, Seq("term"), "left_semi")
+      .groupBy("term").agg(sum("df").as("df"))
+    val stats = totals
+      .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total"))
+    Retrieval.bm25RankCut(
+      Retrieval.bm25ScoreFromPostings(tf, dft, tf, stats, idCol, k1, b),
+      idCol, k)
+  }
+
+  /** Bytes one collected artifact row is charged against the size gate:
+    * a (term, doc_id, c, dl) posting with row overhead.
+    */
+  private val PostingBytes = 64L
+
+  /** [[lazyTopK]]'s output schema per input schemas and id column, since
+    * building the lazy plan to read it costs planning time per query.
+    */
+  private val topKSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (Seq[StructType], String), StructType]()
+
   /** BM25 top-`k` per query against the maintained index — the
     * [[Retrieval.bm25TopK]] output contract
     * (query_id, rank, <idCol>, score_micro), computed from summed
-    * per-batch statistics through the SHARED scoring core, so the answer
-    * is bit-identical to the one-shot operator over the accumulated
-    * corpus. `atVersion` time-travels to a retained historical version.
+    * per-batch statistics through the SHARED contribution formula
+    * ([[Retrieval.bm25ContribMicro]]), so the answer is bit-identical to
+    * the one-shot operator over the accumulated corpus. `atVersion`
+    * time-travels to a retained historical version. The three artifacts
+    * come from one fold listing, so a fold that commits meanwhile is
+    * invisible to all of them.
     *
-    * The three artifacts come from one fold listing, so a fold that
-    * commits meanwhile is invisible to all of them. The plan is made
-    * under the size gate, sized by the committed bytes it reads: below
-    * it an action on the returned frame runs AQE-free (about 5 jobs).
-    * The gate holds when the returned frame is acted on directly; a
-    * frame derived from it (`.orderBy`, a join) is planned by its own
-    * action, with the session's settings.
+    * Below the size gate (the committed reads and the query terms each
+    * below it, ids that [[Clusters.driverSolvable]] accepts) the query
+    * runs ONE job, described `graft:SearchIndex.topK <name> v<N>`: a
+    * collect of the query terms' postings and termdf rows and the
+    * totals, bounded at [[PostingBytes]] a row. The contributions are
+    * the shared formula evaluated over the collected rows as a local
+    * projection (no job); sums and the rank cut (score descending, then
+    * id in Spark's ordering) run on the driver, and the result is a
+    * `LocalRelation` with the lazy plan's schema, so a frame derived
+    * from it reads local rows. When the rows pass the bound, or above
+    * either gate, the lazy plan is returned, planned under the size
+    * gate sized by the committed bytes (below it AQE-free). That gate
+    * holds when the returned frame is acted on directly; a frame derived
+    * from it (`.orderBy`, a join) is planned by its own action, with the
+    * session's settings.
     */
   def topK(
       spark: SparkSession, queryTerms: DataFrame, dir: String,
@@ -156,26 +208,117 @@ object SearchIndex {
     val v = ix.resolve(atVersion)
     val Seq(postings, termdf, totals) =
       ix.committedSigned(v, Seq("postings", "termdf", "totals"))
-    Tuning.withSmallInputScope(spark,
-        Tuning.estimatedBytes(postings, termdf, totals)) {
-      val qt = broadcast(queryTerms.select(col("query_id"), col("term")))
-      // postings carry dl: the shared core skips the lengths join
-      val tf = postings.join(qt, "term")
-        .select(col("query_id"), col("term"), col("doc_id").as(idCol),
-          col("c"), col("dl"))
-      // per-batch dfs SUM to collection dfs (disjoint doc sets); restrict
-      // to query terms before the aggregate
-      val dft = termdf.join(qt, Seq("term"), "left_semi")
-        .groupBy("term").agg(sum("df").as("df"))
-      val stats = totals
-        .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total"))
-      val out = Retrieval.bm25RankCut(
-        Retrieval.bm25ScoreFromPostings(tf, dft, tf, stats, idCol, k1, b),
-        idCol, k)
+    val qt = queryTerms.select(col("query_id"), col("term"))
+    val readBytes = Tuning.estimatedBytes(postings, termdf, totals)
+    def lazyOut = Tuning.withSmallInputScope(spark, readBytes) {
+      val out = lazyTopK(qt, postings, termdf, totals, idCol, k, k1, b)
       // AQE and shuffle partitions are read when the plan is made, not
       // when the frame is built: plan here, inside the gate
       out.queryExecution.executedPlan
       out
+    }
+    val idType = postings.schema("doc_id").dataType
+    if (!Tuning.isSmallInput(spark, readBytes) ||
+        !Tuning.isSmallInput(spark, Tuning.estimatedBytes(qt)) ||
+        !Clusters.driverSolvable(idType) ||
+        !Clusters.driverSolvable(qt.schema("query_id").dataType) ||
+        qt.schema("term").dataType != StringType) {
+      return lazyOut
+    }
+    // a local frame collects with no job; null terms match nothing
+    val qterms = qt.collect().toSeq.map(r => (r.get(0), r.getString(1)))
+      .filter(_._2 != null)
+    val maxRows = Tuning.smallInputRows(spark, PostingBytes)
+    val rows = Tuning.withSmallInputScope(spark, readBytes) {
+      val sc = spark.sparkContext
+      val descKey = "spark.job.description"
+      val prevDesc = sc.getLocalProperty(descKey)
+      sc.setJobDescription(s"graft:SearchIndex.topK $name v$v")
+      // one partition: the bounded collect is one job, not a take() loop
+      try matchedRows(postings, termdf, totals, qterms.map(_._2).distinct)
+        .coalesce(1).limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1)
+        .collect()
+      finally sc.setLocalProperty(descKey, prevDesc)
+    }
+    if (rows.length > maxRows) return lazyOut
+    val schema = topKSchemas.computeIfAbsent(
+      (Seq(qt, postings, termdf, totals).map(_.schema), idCol),
+      _ => lazyTopK(qt, postings, termdf, totals, idCol, k, k1, b).schema)
+    val top = rankOnDriver(spark, rows, qterms, idType, k, k1, b)
+    spark.createDataFrame(top.asJava, schema)
+  }
+
+  /** The rows one query reads, as (what, term, doc_id, x, y) tagged by
+    * artifact: 0 for the query terms' postings (x = c, y = dl), 1 for
+    * their termdf rows (x = df) and 2 for the totals (x = n_docs,
+    * y = total_len).
+    */
+  private def matchedRows(
+      postings: DataFrame, termdf: DataFrame, totals: DataFrame,
+      terms: Seq[String]): DataFrame = {
+    val idType = postings.schema("doc_id").dataType
+    val inTerms = col("term").isInCollection(terms)
+    def tagged(df: DataFrame, what: Int, term: Column, id: Column,
+        x: String, y: Column) =
+      df.select(lit(what).as("what"), term.as("term"), id.as("doc_id"),
+        col(x).cast("long").as("x"), y.cast("long").as("y"))
+    tagged(postings.filter(inTerms), 0, col("term"), col("doc_id"), "c",
+      col("dl"))
+      .union(tagged(termdf.filter(inTerms), 1, col("term"),
+        lit(null).cast(idType), "df", lit(null)))
+      .union(tagged(totals, 2, lit(null).cast(StringType),
+        lit(null).cast(idType), "n_docs", col("total_len")))
+  }
+
+  /** Score and rank [[matchedRows]] on the driver, as the lazy plan
+    * does: the collection df of a term is the sum of its per-batch dfs,
+    * a query term's duplicate rows each count (the join repeats them),
+    * a term with no postings adds nothing, and each query keeps its `k`
+    * best ids by score descending, then id ascending in Spark's ordering
+    * for the id type (nulls first). Rows are (query_id, rank, id,
+    * score_micro).
+    */
+  private def rankOnDriver(
+      spark: SparkSession, rows: Array[Row], qterms: Seq[(Any, String)],
+      idType: DataType, k: Int, k1: Double, b: Double): Seq[Row] = {
+    val (postingRows, statRows) = rows.partition(_.getInt(0) == 0)
+    val df = statRows.filter(_.getInt(0) == 1)
+      .groupMapReduce(_.getString(1))(_.getLong(3))(_ + _)
+    val totals = statRows.filter(_.getInt(0) == 2)
+    val (nDocs, total) =
+      (totals.map(_.getLong(3)).sum, totals.map(_.getLong(4)).sum)
+    // a posting whose term has no df row is dropped, as the join drops it
+    val hits = postingRows.filter(r => df.contains(r.getString(1)))
+    def key(r: Row) = (r.getString(1), r.getLong(3), r.getLong(4))
+    // the shared formula once per distinct (term, c, dl): a projection of
+    // a LocalRelation, which Catalyst folds on the driver (no job)
+    val inSchema = StructType(Seq("term" -> StringType, "c" -> LongType,
+      "dl" -> LongType, "df" -> LongType, "n_docs" -> LongType,
+      "total" -> LongType).map { case (n, t) => StructField(n, t) })
+    val micro = spark.createDataFrame(hits.map(key).distinct.toSeq.map {
+        case (t, c, dl) => Row(t, c, dl, df(t), nDocs, total)
+      }.asJava, inSchema)
+      .select(col("term"), col("c"), col("dl"),
+        Retrieval.bm25ContribMicro(k1, b))
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
+      .toMap
+    val byTerm = hits.groupMap(_.getString(1))(r => (r.get(2), micro(key(r))))
+    val scores = scala.collection.mutable.HashMap.empty[(Any, Any), Long]
+    for ((q, t) <- qterms; (id, c) <- byTerm.getOrElse(t, Array.empty))
+      scores((q, id)) = scores.getOrElse((q, id), 0L) + c
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ord = PhysicalDataType.ordering(idType)
+    val byScore = Ordering.fromLessThan[(Long, Any)] {
+      case ((s1, i1), (s2, i2)) =>
+        if (s1 != s2) s1 > s2
+        else if (i1 == null || i2 == null) i1 == null && i2 != null
+        else ord.lt(i1, i2)
+    }
+    scores.toSeq.groupBy(_._1._1).toSeq.flatMap { case (q, qs) =>
+      qs.map { case ((_, id), s) => (s, toCatalyst(id), id) }
+        .sortBy(h => (h._1, h._2))(byScore).take(math.max(k, 0))
+        .zipWithIndex.map { case ((s, _, id), i) => Row(q, i + 1, id, s) }
     }
   }
 

@@ -1,9 +1,11 @@
 package graft
 
+import graft.conf.Tuning
 import graft.ext.{Retrieval, SearchIndex}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.ext.SearchIndex]]: persisted BM25 index — maintained topK ≡
@@ -11,7 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-batch statistics are additive and the scoring core is shared),
   * fold slicing invariant, idempotent generations, compaction
   * invariance, retention + time-travel, and the job budget below the
-  * size gate (a query at most 5 jobs, a fold 1). Oracle twin: q331.
+  * size gate: a fold runs 1 job, and a warm query 1 job (5 before the
+  * driver path; the older "at most 5" test stays as it was), described
+  * `graft:SearchIndex.topK <name> v<N>`, with local rows back. The
+  * driver path, the lazy plan at `maxBytes=0` and a tripped row bound
+  * answer alike, and a property checks fold ≡ one-shot over random
+  * batch splits on both sides of the gate. Oracle twin: q331.
   */
 class SearchIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -165,5 +172,188 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
     assert(rows(ordered) == rows(out))
     assert(ordered.collect().toSeq.map(r => (r.getInt(0), r.getInt(1))) ==
       rows(out).map(r => (r._1, r._2)))
+  }
+
+  /** A 300-doc index over three folds and queries over all its terms. */
+  private def wideIndex(prefix: String): String = {
+    val dir = tmpDir(prefix)
+    SearchIndex.build(spark, docs(0L until 200L), dir, "s", "doc_id", "text")
+    SearchIndex.fold(spark, docs(200L until 260L), dir, "s", "doc_id", "text")
+    SearchIndex.fold(spark, docs(260L until 300L), dir, "s", "doc_id", "text")
+    dir
+  }
+
+  private val wideQueries = (queries ++ Seq((3, "alpha"), (4, "body0"),
+    (4, "body2"), (4, "beta1"), (5, "beta2"), (5, "w0"), (5, "w1"),
+    (5, "w3"))).toDF("query_id", "term")
+
+  test("below the size gate a warm query runs at most 1 job and returns " +
+    "local rows") {
+    val dir = wideIndex("sidx_driver")
+    // the first read memoizes the artifact and output schemas
+    SearchIndex.topK(spark, wideQueries, dir, "s", "doc_id", k = 7)
+    var out: DataFrame = null
+    var got: Seq[(Int, Int, Long, Long)] = Nil
+    val jobs = jobsRunBy {
+      out = SearchIndex.topK(spark, wideQueries, dir, "s", "doc_id", k = 7)
+      got = rows(out)
+    }
+    assert(jobs <= 1, s"$jobs jobs")
+    assert(out.isLocal)
+    assert(got.nonEmpty && got == top(Retrieval.bm25TopK(
+      docs(0L until 300L), wideQueries, "doc_id", "text", k = 7)))
+  }
+
+  /** A gate just above `dir`'s committed reads: they take the driver
+    * path, but the rows `wideQueries` match (about 1,400 at 64 B) do not
+    * fit below it.
+    */
+  private def tripGate(dir: String): Long =
+    Tuning.estimatedBytes(SearchIndex.index(spark, dir, "s")
+      .committedSigned(1, Seq("postings", "termdf", "totals")): _*) + 1
+
+  /** Names and types: a parquet read's columns are nullable, a local
+    * frame's need not be.
+    */
+  private def shape(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+
+  test("the driver path, the lazy plan at maxBytes=0 and a tripped row " +
+    "bound return the same rows and schema as bm25TopK") {
+    val dir = wideIndex("sidx_paths")
+    def run = SearchIndex.topK(spark, wideQueries, dir, "s", "doc_id", k = 7)
+    val driver = run
+    val ungated = withGate(0L)(run)
+    val tripped = withGate(tripGate(dir))(run)
+    assert(driver.isLocal && !ungated.isLocal && !tripped.isLocal)
+    val oneShot = Retrieval.bm25TopK(
+      docs(0L until 300L), wideQueries, "doc_id", "text", k = 7)
+    assert(rows(oneShot).size == 5 * 7)
+    Seq(driver, ungated, tripped).foreach { df =>
+      assert(df.schema == ungated.schema && shape(df) == shape(oneShot))
+      assert(rows(df) == rows(oneShot))
+    }
+  }
+
+  test("topK on either side of the size gate leaves no persisted RDDs") {
+    val dir = wideIndex("sidx_rdds")
+    Seq(None, Some(0L), Some(tripGate(dir))).foreach { gate =>
+      def run = rows(
+        SearchIndex.topK(spark, wideQueries, dir, "s", "doc_id", k = 7))
+      leavesNoRdds(gate.fold(run)(withGate(_)(run)))
+    }
+  }
+
+  test("below the size gate the query's one job is described " +
+    "graft:SearchIndex.topK <name> v<N> and the caller's description " +
+    "comes back") {
+    val dir = budgetIndex("sidx_desc")
+    val qt = queries.toDF("query_id", "term")
+    SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val tag = java.util.UUID.randomUUID.toString
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).filter(_.getProperty("sidx.spec.tag") == tag)
+          .foreach(p => descs.add(p.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty("sidx.spec.tag", tag)
+    sc.setJobDescription("caller")
+    var jobs = 0
+    try {
+      jobs = jobsRunBy(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally {
+      sc.setJobDescription(null)
+      sc.setLocalProperty("sidx.spec.tag", null)
+      sc.removeSparkListener(l)
+    }
+    assert(jobs == 1)
+    assert(descs.toArray.toSeq == Seq("graft:SearchIndex.topK s v1"))
+  }
+
+  /** Batches of doc kinds: 0–3 one of four fixed texts (equal texts tie
+    * on score), 4 a zero-token text, 5 an empty one; 0–5 docs a batch.
+    */
+  private val splits: Gen[List[List[Int]]] =
+    Gen.choose(2, 4).flatMap(Gen.listOfN(_, Gen.frequency(
+        1 -> Gen.const(0), 2 -> Gen.const(1), 3 -> Gen.choose(2, 5))
+      .flatMap(Gen.listOfN(_, Gen.choose(0, 5)))))
+
+  private val texts = Seq("red fox red", "red dog", "blue fox jumps high",
+    "dog dog blue red", "   ", "")
+
+  /** Up to four queries of 1–3 terms: indexed, unknown ("zebra") or null
+    * terms, duplicates allowed.
+    */
+  private val queryGen: Gen[List[(Int, String)]] =
+    Gen.choose(1, 4).flatMap(n => Gen.sequence[List[List[(Int, String)]],
+      List[(Int, String)]]((1 to n).map(q => Gen.choose(1, 3).flatMap(
+        Gen.listOfN(_, Gen.oneOf("red", "fox", "dog", "blue", "jumps",
+          "zebra", null))).map(_.map(q -> _))))).map(_.flatten)
+
+  /** Doc `i`'s id: a Long, or a string with an ASCII, a U+E000–U+FFFF or
+    * a supplementary first character, whose UTF-8 byte order differs from
+    * `String.compareTo`.
+    */
+  private def docId(i: Long, strIds: Boolean): Any =
+    if (!strIds) i
+    else Seq("a", "\uE000", "\uFFFD", "\uD83D\uDE00")(
+      (i % 4).toInt) + i
+
+  test("fold ≡ the one-shot bm25TopK over random batch splits, below the " +
+    "size gate and at maxBytes=0; duplicated terms agree across the gate") {
+    // two fixed splits hold every edge: an empty base, empty, single-row
+    // and zero-token-only folds
+    val all = List(List(0, 1, 4), Nil, List(4, 5), List(1), List(0, 2, 3)) +:
+      List(Nil, List(0, 0), List(1)) +: samples(splits, 4, 43L)
+    val qs = samples(queryGen, all.size, 44L)
+    all.zip(qs).zipWithIndex.foreach { case ((split, q), i) =>
+      val (strIds, longQids) = (i % 2 == 1, i / 2 % 2 == 1)
+      val starts = split.scanLeft(0L)(_ + _.size)
+      val batches = split.zip(starts).map { case (b, s) =>
+        val rs = b.zipWithIndex.map { case (kind, j) =>
+          org.apache.spark.sql.Row(docId(s + j, strIds), texts(kind))
+        }
+        spark.createDataFrame(java.util.Arrays.asList(rs: _*),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("doc_id",
+              if (strIds) org.apache.spark.sql.types.StringType
+              else org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("text",
+              org.apache.spark.sql.types.StringType))))
+      }
+      val qt =
+        if (longQids) q.map { case (id, t) => (id.toLong, t) }
+          .toDF("query_id", "term")
+        else q.toDF("query_id", "term")
+      val dir = tmpDir("sidx_prop")
+      SearchIndex.build(spark, batches.head, dir, "s", "doc_id", "text")
+      batches.tail.foreach(SearchIndex.fold(spark, _, dir, "s", "doc_id",
+        "text"))
+      // bm25TopK counts a duplicated term by doubling its tf; the index
+      // adds its contribution twice. Compare the one-shot on distinct
+      // (query, term) rows; with duplicates, the two index paths agree.
+      val distinctQt = qt.distinct()
+      val want = Retrieval.bm25TopK(batches.reduce(_.unionByName(_)),
+        distinctQt, "doc_id", "text", k = 3)
+      def sorted(df: DataFrame) =
+        df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
+      val answers = Seq(None, Some(0L)).map { gate =>
+        def run(qt: DataFrame) =
+          SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 3)
+        val Seq(got, dup) =
+          Seq(distinctQt, qt).map(t => gate.fold(run(t))(withGate(_)(run(t))))
+        val ctx = s"sample $i gate $gate: $split $q"
+        assert(got.isLocal == gate.isEmpty && dup.isLocal == gate.isEmpty,
+          ctx)
+        assert(shape(got) == shape(want), ctx)
+        assert(sorted(got) == sorted(want), ctx)
+        (dup.schema, sorted(dup))
+      }
+      assert(answers.distinct.size == 1, s"sample $i: $split $q")
+    }
   }
 }
