@@ -108,7 +108,9 @@ object Tuning {
     * [[withSmallInputScope]] and the operators that
     * switch to a driver-local algorithm below the gate
     * (`Clusters.connectedComponents`, `ClusterIndex.fold`,
-    * `DedupIndex.fold`/`pairsAgainst`, `SearchIndex.topK`) decide alike.
+    * `DedupIndex.fold`/`pairsAgainst`, and `SearchIndex.topK`, whose
+    * driver-resident postings hold at most [[smallInputRows]] rows)
+    * decide alike.
     */
   def isSmallInput(spark: SparkSession, bytes: Long): Boolean =
     bytes < smallInputMaxBytes(spark)

@@ -216,7 +216,10 @@ object ClusterIndex {
       generation: Option[Long] = None): DataFrame = {
     val ix = index(spark, dir, name)
     val v = ix.requireCurrent
-    val g = ix.fold(v, generation) { g =>
+    def described[A](g: Long)(body: => A) =
+      graft.io.VersionedIndex.described(spark, "ClusterIndex.fold", name, v,
+        Some(g))(body)
+    val g = ix.fold(v, generation) { g => described(g) {
       // r10 two-phase fold (guide §8's decide-with-small-rows
       // discipline): the caller's fresh frame is typically an
       // UNMATERIALIZED index-fold result (bands join + exact verify over a
@@ -263,8 +266,8 @@ object ClusterIndex {
           }
         }
       } finally graft.io.VersionedIndex.releaseCheckpoint(freshCk)
-    }
-    labelsAt(ix, v, g)
+    }}
+    described(g)(labelsAt(ix, v, g))
   }
 
   /** Rewrite the resolved labels into one base at version N+1, pointer

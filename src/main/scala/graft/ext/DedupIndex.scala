@@ -352,7 +352,10 @@ object DedupIndex {
     val ix = index(spark, dir, name)
     val v = ix.requireCurrent
     graft.functions.VectorExpressions.register(spark)
-    val g = ix.fold(v, generation) { g =>
+    def described[A](g: Long)(body: => A) =
+      graft.io.VersionedIndex.described(spark, "DedupIndex.fold", name, v,
+        Some(g))(body)
+    val g = ix.fold(v, generation) { g => described(g) {
       val (k, numHashes, bandRows) = readParams(ix, v)
       Tuning.withSmallInputScope(spark, Tuning.estimatedBytes(fresh)) {
         val (setsI, bandsI) =
@@ -365,16 +368,19 @@ object DedupIndex {
         try ix.writeSigned(ix.delta(v, g), "overwrite", setsI, bandsI)
         finally setsI.unpersist()
       }
-    }
+    }}
     // pairs off the generation's stored delta (read back — not the
     // lineage of the input frame, so the verify never re-signs fresh
     // docs; on a replay the delta is immutable, an at-least-once source
     // redelivers the same batch) against exactly the committed state
     // that preceded it
-    val Seq(sets, bands) =
-      ix.committedSigned(v, Seq("sets", "bands"), belowGen = g)
-    gatedPairs(ix.deltaSigned(v, g, "sets"), ix.deltaSigned(v, g, "bands"),
-      sets, bands, thresholdNum, thresholdDen)
+    described(g) {
+      val Seq(sets, bands) =
+        ix.committedSigned(v, Seq("sets", "bands"), belowGen = g)
+      gatedPairs(ix.deltaSigned(v, g, "sets"),
+        ix.deltaSigned(v, g, "bands"), sets, bands, thresholdNum,
+        thresholdDen)
+    }
   }
 
   /** Compact the delta dirs back into one base at version N+1 — a pure

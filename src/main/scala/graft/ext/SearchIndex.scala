@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 import graft.conf.Tuning
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,9 +45,11 @@ import org.apache.spark.sql.types._
   * Scale shape: a query keeps only its (few) terms' postings — per-term
   * fanout is that term's df, the inverted-index property; df summing is
   * restricted to query terms before aggregation; totals are one row per
-  * fold. Below the size gate those rows are collected and ranked on the
-  * driver in one job. Fold IO is delta-sized (sign only the fresh batch;
-  * nothing stored is read or rewritten).
+  * fold. Below the size gate committed files, which never change, stay
+  * decoded on the driver: a query reads only the files committed since
+  * the last one (none when warm) and ranks on the driver. Fold IO is
+  * delta-sized (sign only the fresh batch; nothing stored is read or
+  * rewritten).
   */
 object SearchIndex {
 
@@ -136,7 +140,9 @@ object SearchIndex {
     val ix = index(spark, dir, name)
     val v = ix.requireCurrent
     ix.fold(v, generation)(g =>
-      write(ix, fresh, idCol, textCol, ix.delta(v, g), "overwrite"))
+      graft.io.VersionedIndex.described(spark, "SearchIndex.fold", name, v,
+        Some(g))(write(ix, fresh, idCol, textCol, ix.delta(v, g),
+        "overwrite")))
   }
 
   /** The lazy BM25 top-`k` plan over the committed artifacts: query
@@ -163,7 +169,7 @@ object SearchIndex {
       idCol, k)
   }
 
-  /** Bytes one collected artifact row is charged against the size gate:
+  /** Bytes one committed artifact row is charged against the size gate:
     * a (term, doc_id, c, dl) posting with row overhead.
     */
   private val PostingBytes = 64L
@@ -181,23 +187,27 @@ object SearchIndex {
     * ([[Retrieval.bm25ContribMicro]]), so the answer is bit-identical to
     * the one-shot operator over the accumulated corpus. `atVersion`
     * time-travels to a retained historical version. The three artifacts
-    * come from one fold listing, so a fold that commits meanwhile is
-    * invisible to all of them.
+    * come from one listing of the committed files, so a fold that
+    * commits meanwhile is invisible to all of them.
     *
-    * Below the size gate (the committed reads and the query terms each
-    * below it, ids that [[Clusters.driverSolvable]] accepts) the query
-    * runs ONE job, described `graft:SearchIndex.topK <name> v<N>`: a
-    * collect of the query terms' postings and termdf rows and the
-    * totals, bounded at [[PostingBytes]] a row. The contributions are
-    * the shared formula evaluated over the collected rows as a local
-    * projection (no job); sums and the rank cut (score descending, then
-    * id in Spark's ordering) run on the driver, and the result is a
-    * `LocalRelation` with the lazy plan's schema, so a frame derived
-    * from it reads local rows. When the rows pass the bound, or above
-    * either gate, the lazy plan is returned, planned under the size
-    * gate sized by the committed bytes (below it AQE-free). That gate
-    * holds when the returned frame is acted on directly; a frame derived
-    * from it (`.orderBy`, a join) is planned by its own action, with the
+    * Below the size gate (the listed bytes and the query terms each
+    * below it, ids that [[Clusters.driverSolvable]] accepts, and the
+    * index's rows within [[Tuning.smallInputRows]] at [[PostingBytes]] a
+    * row) the query reads the index's driver-resident parts: every
+    * committed file decoded once into primitive arrays, keyed by its
+    * path, length and modification time. Files not seen before (a new
+    * fold's delta, a rebuild) are read by ONE job, described
+    * `graft:SearchIndex.topK <name> v<N>`; a warm query runs none. The
+    * contributions are the shared formula evaluated as an interpreted
+    * expression over the matched postings; sums and the rank cut (score
+    * descending, then id in Spark's ordering) run on the driver, and the
+    * result is a `LocalRelation` with the lazy plan's schema, so a frame
+    * derived from it reads local rows. All resident indexes together hold
+    * at most that row bound; the least recently queried is dropped first.
+    * Otherwise the lazy plan is returned, planned under the size gate
+    * sized by the listed bytes (below it AQE-free). That gate holds when
+    * the returned frame is acted on directly; a frame derived from it
+    * (`.orderBy`, a join) is planned by its own action, with the
     * session's settings.
     */
   def topK(
@@ -206,106 +216,260 @@ object SearchIndex {
       b: Double = 0.75, atVersion: Option[Int] = None): DataFrame = {
     val ix = index(spark, dir, name)
     val v = ix.resolve(atVersion)
-    val Seq(postings, termdf, totals) =
-      ix.committedSigned(v, Seq("postings", "termdf", "totals"))
-    val qt = queryTerms.select(col("query_id"), col("term"))
-    val readBytes = Tuning.estimatedBytes(postings, termdf, totals)
+    val listing = ix.committedFiles(v)
+    val whats = Seq("postings", "termdf", "totals")
+    val readBytes = listing.files.map(_.bytes).sum
     def lazyOut = Tuning.withSmallInputScope(spark, readBytes) {
-      val out = lazyTopK(qt, postings, termdf, totals, idCol, k, k1, b)
+      val Seq(postings, termdf, totals) =
+        whats.map(ix.signedAt(v, listing.generations, _))
+      val out = lazyTopK(queryTerms.select(col("query_id"), col("term")),
+        postings, termdf, totals, idCol, k, k1, b)
       // AQE and shuffle partitions are read when the plan is made, not
       // when the frame is built: plan here, inside the gate
       out.queryExecution.executedPlan
       out
     }
-    val idType = postings.schema("doc_id").dataType
+    val schemas = whats.map(ix.signedSchema(v, _))
+    val idType = schemas.head("doc_id").dataType
+    val qSchema = queryTerms.schema
     if (!Tuning.isSmallInput(spark, readBytes) ||
-        !Tuning.isSmallInput(spark, Tuning.estimatedBytes(qt)) ||
+        !Tuning.isSmallInput(spark, Tuning.estimatedBytes(queryTerms)) ||
         !Clusters.driverSolvable(idType) ||
-        !Clusters.driverSolvable(qt.schema("query_id").dataType) ||
-        qt.schema("term").dataType != StringType) {
+        !Clusters.driverSolvable(qSchema("query_id").dataType) ||
+        qSchema("term").dataType != StringType) {
       return lazyOut
     }
+    val parts = residentParts(ix, name, listing, idType, readBytes,
+      Tuning.smallInputRows(spark, PostingBytes))
+      .getOrElse(return lazyOut)
     // a local frame collects with no job; null terms match nothing
-    val qterms = qt.collect().toSeq.map(r => (r.get(0), r.getString(1)))
-      .filter(_._2 != null)
-    val maxRows = Tuning.smallInputRows(spark, PostingBytes)
-    val rows = Tuning.withSmallInputScope(spark, readBytes) {
-      val sc = spark.sparkContext
-      val descKey = "spark.job.description"
-      val prevDesc = sc.getLocalProperty(descKey)
-      sc.setJobDescription(s"graft:SearchIndex.topK $name v$v")
-      // one partition: the bounded collect is one job, not a take() loop
-      try matchedRows(postings, termdf, totals, qterms.map(_._2).distinct)
-        .coalesce(1).limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1)
-        .collect()
-      finally sc.setLocalProperty(descKey, prevDesc)
-    }
-    if (rows.length > maxRows) return lazyOut
-    val schema = topKSchemas.computeIfAbsent(
-      (Seq(qt, postings, termdf, totals).map(_.schema), idCol),
-      _ => lazyTopK(qt, postings, termdf, totals, idCol, k, k1, b).schema)
-    val top = rankOnDriver(spark, rows, qterms, idType, k, k1, b)
+    val (qi, ti) = (qSchema.fieldIndex("query_id"), qSchema.fieldIndex("term"))
+    val qterms = queryTerms.collect().toSeq
+      .map(r => (r.get(qi), r.getString(ti))).filter(_._2 != null)
+    val schema = topKSchemas.computeIfAbsent((qSchema +: schemas, idCol),
+      _ => lazyOut.schema)
+    val top = rankOnDriver(spark, parts, qterms, idType, k, k1, b)
     spark.createDataFrame(top.asJava, schema)
   }
 
-  /** The rows one query reads, as (what, term, doc_id, x, y) tagged by
-    * artifact: 0 for the query terms' postings (x = c, y = dl), 1 for
-    * their termdf rows (x = df) and 2 for the totals (x = n_docs,
-    * y = total_len).
+  /** One committed file of the index, decoded for the driver path. */
+  private sealed trait Part { def rows: Long }
+
+  /** `term`'s index in the sorted `terms`, negative when absent. */
+  private def find(terms: Array[String], term: String): Int =
+    java.util.Arrays.binarySearch(terms.asInstanceOf[Array[AnyRef]], term)
+
+  /** A postings file: its terms sorted, term `i`'s postings at
+    * `from(i) until from(i + 1)` of `doc` (a slot of `ids` and `dl`) and
+    * `c`.
     */
-  private def matchedRows(
-      postings: DataFrame, termdf: DataFrame, totals: DataFrame,
-      terms: Seq[String]): DataFrame = {
-    val idType = postings.schema("doc_id").dataType
-    val inTerms = col("term").isInCollection(terms)
-    def tagged(df: DataFrame, what: Int, term: Column, id: Column,
-        x: String, y: Column) =
-      df.select(lit(what).as("what"), term.as("term"), id.as("doc_id"),
-        col(x).cast("long").as("x"), y.cast("long").as("y"))
-    tagged(postings.filter(inTerms), 0, col("term"), col("doc_id"), "c",
-      col("dl"))
-      .union(tagged(termdf.filter(inTerms), 1, col("term"),
-        lit(null).cast(idType), "df", lit(null)))
-      .union(tagged(totals, 2, lit(null).cast(StringType),
-        lit(null).cast(idType), "n_docs", col("total_len")))
+  private final class Postings(
+      val terms: Array[String], val from: Array[Int], val doc: Array[Int],
+      val c: Array[Long], val ids: Array[Any], val dl: Array[Long],
+      val rows: Long) extends Part {
+    def slice(term: String): Range = {
+      val i = find(terms, term)
+      if (i < 0) Range(0, 0) else Range(from(i), from(i + 1))
+    }
   }
 
-  /** Score and rank [[matchedRows]] on the driver, as the lazy plan
+  /** A termdf file: its terms sorted, with their dfs. */
+  private final class TermDf(
+      val terms: Array[String], val df: Array[Long], val rows: Long)
+      extends Part {
+    def apply(term: String): Option[Long] =
+      Some(find(terms, term)).filter(_ >= 0).map(df(_))
+  }
+
+  /** A totals file's sums. */
+  private final class Totals(val nDocs: Long, val total: Long,
+      val rows: Long) extends Part
+
+  private type Resident = Map[graft.io.VersionedIndex.CommittedFile, Part]
+
+  /** The decoded committed files per index layout, least recently queried
+    * first.
+    */
+  private val resident =
+    new java.util.LinkedHashMap[String, Resident](16, 0.75f, true)
+
+  /** Rows all resident indexes hold. */
+  private[graft] def residentRows: Long = resident.synchronized {
+    resident.values.asScala.map(_.values.map(_.rows).sum).sum
+  }
+
+  /** The decoded parts of `listing`'s files, or None when they hold more
+    * than `maxRows` rows. Resident parts are reused and the rest decoded
+    * by [[decode]]; the index's entry then holds exactly these parts, and
+    * the least recently queried other indexes are dropped until all
+    * entries together hold at most `maxRows` rows.
+    */
+  private def residentParts(
+      ix: graft.io.VersionedIndex, name: String,
+      listing: graft.io.VersionedIndex.Listing, idType: DataType,
+      readBytes: Long, maxRows: Long): Option[Seq[Part]] = {
+    val key = ix.layout
+    val held: Resident = resident.synchronized {
+      Option(resident.get(key)).getOrElse(Map.empty)
+    }
+    val listed = listing.files.toSet
+    val kept = held.filter(p => listed(p._1))
+    val budget = maxRows - kept.values.map(_.rows).sum
+    val fresh = listing.files.filterNot(kept.contains)
+    val parts =
+      if (budget < 0) None
+      else if (fresh.isEmpty) Some(kept)
+      else decode(ix, name, listing.version, fresh, idType, readBytes,
+        budget).map(kept ++ _)
+    resident.synchronized {
+      parts.fold(resident.remove(key))(resident.put(key, _))
+      var rows = residentRows
+      val lru = resident.entrySet.iterator
+      while (rows > maxRows && lru.hasNext) {
+        val e = lru.next()
+        if (e.getKey != key) {
+          rows -= e.getValue.values.map(_.rows).sum
+          lru.remove()
+        }
+      }
+    }
+    parts.map(p => listing.files.map(p))
+  }
+
+  /** Decode `files` in one bounded job: a collect of at most `budget`
+    * rows (None when they hold more), one partition, so it is one job and
+    * not a `take` loop.
+    */
+  private def decode(
+      ix: graft.io.VersionedIndex, name: String, v: Int,
+      files: Seq[graft.io.VersionedIndex.CommittedFile], idType: DataType,
+      readBytes: Long, budget: Long): Option[Resident] = {
+    val spark = ix.spark
+    // (file, term, doc_id, x, y): x = c and y = dl for a posting, x = df
+    // for a termdf row, x = n_docs and y = total_len for a totals row
+    val tagged = files.zipWithIndex.map { case (f, i) =>
+      val df = ix.readSigned(v, f.artifact, Seq(f.path))
+      def row(term: Column, id: Column, x: String, y: Column) =
+        df.select(lit(i).as("file"), term.as("term"), id.as("doc_id"),
+          col(x).cast("long").as("x"), y.cast("long").as("y"))
+      val noId = lit(null).cast(idType)
+      f.artifact match {
+        case "postings" => row(col("term"), col("doc_id"), "c", col("dl"))
+        case "termdf" => row(col("term"), noId, "df", lit(null))
+        case _ =>
+          row(lit(null).cast(StringType), noId, "n_docs", col("total_len"))
+      }
+    }
+    val rows = Tuning.withSmallInputScope(spark, readBytes) {
+      graft.io.VersionedIndex.described(spark, "SearchIndex.topK", name, v) {
+        tagged.reduce(_.union(_)).coalesce(1)
+          .limit(math.min(budget, Int.MaxValue - 1L).toInt + 1).collect()
+      }
+    }
+    if (rows.length > budget) return None
+    val byFile = rows.groupBy(_.getInt(0))
+    // one String per distinct term across the decoded files
+    val terms = scala.collection.mutable.HashMap.empty[String, String]
+    def term(r: Row) = terms.getOrElseUpdate(r.getString(1), r.getString(1))
+    Some(files.zipWithIndex.map { case (f, i) =>
+      val rs = byFile.getOrElse(i, Array.empty[Row])
+      val named = rs.filterNot(_.isNullAt(1))
+      f -> (f.artifact match {
+        case "postings" => decodePostings(named, term, rs.length)
+        case "termdf" =>
+          val (ts, dfs) = named.groupMapReduce(term)(_.getLong(3))(_ + _)
+            .toArray.sortBy(_._1).unzip
+          new TermDf(ts, dfs, rs.length)
+        case _ => new Totals(rs.map(_.getLong(3)).sum,
+          rs.map(_.getLong(4)).sum, rs.length)
+      })
+    }.toMap)
+  }
+
+  /** A postings file's (file, term, doc_id, c, dl) rows with a term, as
+    * sorted terms over parallel arrays; a doc slot is a distinct
+    * (doc_id, dl).
+    */
+  private def decodePostings(
+      rs: Array[Row], term: Row => String, nRows: Long): Postings = {
+    val sorted = rs.sortBy(term)
+    val slots = scala.collection.mutable.HashMap.empty[(Any, Long), Int]
+    val ids = Array.newBuilder[Any]
+    val dl = Array.newBuilder[Long]
+    val terms = Array.newBuilder[String]
+    val from = Array.newBuilder[Int]
+    val doc = new Array[Int](sorted.length)
+    val c = new Array[Long](sorted.length)
+    var prev: String = null
+    sorted.indices.foreach { j =>
+      val r = sorted(j)
+      val t = term(r)
+      if (t != prev) { terms += t; from += j; prev = t }
+      doc(j) = slots.getOrElseUpdate((r.get(2), r.getLong(4)), {
+        ids += r.get(2); dl += r.getLong(4); slots.size
+      })
+      c(j) = r.getLong(3)
+    }
+    from += sorted.length
+    new Postings(terms.result(), from.result(), doc, c, ids.result(),
+      dl.result(), nRows)
+  }
+
+  /** [[Retrieval.bm25ContribMicro]] analyzed over (c, dl, df, n_docs,
+    * total) and bound to their ordinals, per (k1, b, ANSI mode): what
+    * Catalyst's `ConvertToLocalRelation` evaluates for a projection of
+    * local rows, without building a frame per query.
+    */
+  private val contribExprs = new java.util.concurrent.ConcurrentHashMap[
+    (Double, Double, Boolean), Expression]()
+
+  private def contribMicro(
+      spark: SparkSession, k1: Double, b: Double): Expression =
+    contribExprs.computeIfAbsent(
+      (k1, b, spark.sessionState.conf.ansiEnabled), _ => {
+        val in = StructType(Seq("c", "dl", "df", "n_docs", "total")
+          .map(StructField(_, LongType)))
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), in)
+          .select(Retrieval.bm25ContribMicro(k1, b))
+          .queryExecution.analyzed match {
+            case Project(Seq(e), child) =>
+              BindReferences.bindReference(e, child.output)
+            case p => throw new IllegalStateException(s"unexpected plan $p")
+          }
+      })
+
+  /** Score and rank the resident parts on the driver, as the lazy plan
     * does: the collection df of a term is the sum of its per-batch dfs,
     * a query term's duplicate rows each count (the join repeats them),
-    * a term with no postings adds nothing, and each query keeps its `k`
+    * a term with no df row adds nothing, and each query keeps its `k`
     * best ids by score descending, then id ascending in Spark's ordering
     * for the id type (nulls first). Rows are (query_id, rank, id,
     * score_micro).
     */
   private def rankOnDriver(
-      spark: SparkSession, rows: Array[Row], qterms: Seq[(Any, String)],
+      spark: SparkSession, parts: Seq[Part], qterms: Seq[(Any, String)],
       idType: DataType, k: Int, k1: Double, b: Double): Seq[Row] = {
-    val (postingRows, statRows) = rows.partition(_.getInt(0) == 0)
-    val df = statRows.filter(_.getInt(0) == 1)
-      .groupMapReduce(_.getString(1))(_.getLong(3))(_ + _)
-    val totals = statRows.filter(_.getInt(0) == 2)
-    val (nDocs, total) =
-      (totals.map(_.getLong(3)).sum, totals.map(_.getLong(4)).sum)
-    // a posting whose term has no df row is dropped, as the join drops it
-    val hits = postingRows.filter(r => df.contains(r.getString(1)))
-    def key(r: Row) = (r.getString(1), r.getLong(3), r.getLong(4))
-    // the shared formula once per distinct (term, c, dl): a projection of
-    // a LocalRelation, which Catalyst folds on the driver (no job)
-    val inSchema = StructType(Seq("term" -> StringType, "c" -> LongType,
-      "dl" -> LongType, "df" -> LongType, "n_docs" -> LongType,
-      "total" -> LongType).map { case (n, t) => StructField(n, t) })
-    val micro = spark.createDataFrame(hits.map(key).distinct.toSeq.map {
-        case (t, c, dl) => Row(t, c, dl, df(t), nDocs, total)
-      }.asJava, inSchema)
-      .select(col("term"), col("c"), col("dl"),
-        Retrieval.bm25ContribMicro(k1, b))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
-      .toMap
-    val byTerm = hits.groupMap(_.getString(1))(r => (r.get(2), micro(key(r))))
+    val postings = parts.collect { case p: Postings => p }
+    val termdfs = parts.collect { case p: TermDf => p }
+    val totals = parts.collect { case p: Totals => p }
+    val (nDocs, total) = (totals.map(_.nDocs).sum, totals.map(_.total).sum)
+    val formula = contribMicro(spark, k1, b)
+    val byTerm = qterms.map(_._2).distinct.flatMap { t =>
+      val dfs = termdfs.flatMap(_(t))
+      // a posting whose term has no df row is dropped, as the join drops it
+      Option.when(dfs.nonEmpty) {
+        val df = dfs.sum
+        // the formula once per distinct (c, dl) of the term
+        val micro = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+        t -> postings.flatMap(p => p.slice(t).map { j =>
+          val (c, dl) = (p.c(j), p.dl(p.doc(j)))
+          p.ids(p.doc(j)) -> micro.getOrElseUpdate((c, dl), formula.eval(
+            InternalRow(c, dl, df, nDocs, total)).asInstanceOf[Long])
+        })
+      }
+    }.toMap
     val scores = scala.collection.mutable.HashMap.empty[(Any, Any), Long]
-    for ((q, t) <- qterms; (id, c) <- byTerm.getOrElse(t, Array.empty))
+    for ((q, t) <- qterms; (id, c) <- byTerm.getOrElse(t, Nil))
       scores((q, id)) = scores.getOrElse((q, id), 0L) + c
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
     val ord = PhysicalDataType.ordering(idType)

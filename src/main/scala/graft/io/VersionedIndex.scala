@@ -106,14 +106,17 @@ private[graft] final case class VersionedIndex(
     VersionPointer.retain(spark, layout, v, retainVersions)
   }
 
+  /** The (memoized) schema of the artifact at `schemaKey`: a footer job
+    * the first time, none after.
+    */
+  private def schemaAt(schemaKey: String): StructType =
+    schemas.computeIfAbsent(schemaKey, p => spark.read.parquet(p).schema)
+
   /** `paths` read with the (memoized) schema of the artifact at
     * `schemaKey` — one multi-path scan, no footer job after the first.
     */
-  def read(schemaKey: String, paths: String*): DataFrame = {
-    val sch = schemas.computeIfAbsent(
-      schemaKey, p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(paths: _*)
-  }
+  def read(schemaKey: String, paths: String*): DataFrame =
+    spark.read.schema(schemaAt(schemaKey)).parquet(paths: _*)
 
   /** The artifact `sub` of version `v`. */
   def artifact(v: Int, sub: String): DataFrame =
@@ -153,16 +156,24 @@ private[graft] final case class VersionedIndex(
     }
   }
 
-  /** One artifact out of the sign tables under `roots`, read with the
-    * schema of version `v`'s base partition.
+  /** Artifact `what`'s partition dir of the sign table under `root`. */
+  private def signDir(root: String, what: String): String =
+    s"$root/sign/__what=$what"
+
+  /** The schema of artifact `what` in version `v`, in `signed` column
+    * order (memoized: no job after the first read of the version).
     */
-  private def readSigned(
-      v: Int, roots: Seq[String], what: String): DataFrame = {
-    val cols = signed.toMap.apply(what)
-    read(s"${path(v, "sign")}/__what=$what",
-      roots.map(r => s"$r/sign/__what=$what"): _*)
-      .select(cols.map(col): _*)
+  def signedSchema(v: Int, what: String): StructType = {
+    val sch = schemaAt(signDir(dir(v), what))
+    StructType(signed.toMap.apply(what).map(sch(_)))
   }
+
+  /** Artifact `what` read from `paths` (partition dirs or data files of
+    * it) with the schema of version `v`'s base partition.
+    */
+  def readSigned(v: Int, what: String, paths: Seq[String]): DataFrame =
+    read(signDir(dir(v), what), paths: _*)
+      .select(signed.toMap.apply(what).map(col): _*)
 
   /** Artifact `what` of version `v`: the base plus the fold deltas of
     * `gens`, a [[committedFolds]] listing. Reads that must see one
@@ -170,7 +181,8 @@ private[graft] final case class VersionedIndex(
     * is invisible to all of them.
     */
   def signedAt(v: Int, gens: Seq[Long], what: String): DataFrame =
-    readSigned(v, dir(v) +: gens.map(delta(v, _)), what)
+    readSigned(v, what,
+      (dir(v) +: gens.map(delta(v, _))).map(signDir(_, what)))
 
   /** Artifacts `whats` of version `v`, in order: the base plus every
     * committed fold delta below `belowGen` (a replay reads exactly the
@@ -186,12 +198,81 @@ private[graft] final case class VersionedIndex(
 
   /** Artifact `what` of fold generation `g`'s delta alone. */
   def deltaSigned(v: Int, g: Long, what: String): DataFrame =
-    readSigned(v, Seq(delta(v, g)), what)
+    readSigned(v, what, Seq(signDir(delta(v, g), what)))
+
+  /** The data files of every `signed` artifact in version `v`: the
+    * base's and each committed fold delta's, over ONE [[committedFolds]]
+    * listing (an orphan delta is not listed). Filesystem calls only.
+    */
+  def committedFiles(v: Int): Listing = {
+    val gens = committedFolds(v)
+    val f = fs
+    val files = for {
+      (what, _) <- signed
+      g <- 0L +: gens
+      st <- f.listStatus(
+        new Path(signDir(if (g == 0L) dir(v) else delta(v, g), what)))
+      name = st.getPath.getName
+      if st.isFile && !name.startsWith("_") && !name.startsWith(".")
+    } yield CommittedFile(what, g, st.getPath.toString, st.getLen,
+      st.getModificationTime)
+    Listing(v, gens, files)
+  }
+
+  /** The current version's state, read from the filesystem alone (no
+    * job): its committed fold generations and, per `signed` artifact,
+    * the bytes of its base and of its committed deltas.
+    */
+  def describe(): Description = {
+    val l = committedFiles(requireCurrent)
+    Description(l.version, l.generations, signed.map { case (w, _) =>
+      val (base, deltas) =
+        l.files.filter(_.artifact == w).partition(_.generation == 0L)
+      w -> ArtifactBytes(base.map(_.bytes).sum, deltas.map(_.bytes).sum)
+    }.toMap)
+  }
 }
 
 private[graft] object VersionedIndex {
 
   private val FoldMarkerRe = """g(\d+)\.ok""".r
+
+  /** One committed data file of artifact `artifact`, written by fold
+    * `generation` (0 for the base). A rewrite at the same path is a new
+    * file: its path carries the writing job's id, and its length or
+    * modification time differs.
+    */
+  final case class CommittedFile(
+      artifact: String, generation: Long, path: String, bytes: Long,
+      modified: Long)
+
+  /** Version `version`'s committed fold generations and data files. */
+  final case class Listing(
+      version: Int, generations: Seq[Long], files: Seq[CommittedFile])
+
+  /** Bytes of an artifact's base and of its committed deltas. */
+  final case class ArtifactBytes(base: Long, deltas: Long)
+
+  /** An index's state as [[VersionedIndex.describe]] reads it. */
+  final case class Description(
+      version: Int, generations: Seq[Long],
+      bytes: Map[String, ArtifactBytes]) {
+    def deltas: Int = generations.size
+  }
+
+  /** Runs `body` with its Spark jobs described
+    * `graft:<op> <name> v<v>` (and ` g<G>` for a fold generation), then
+    * restores the caller's description. `op` is `<Index>.<verb>`.
+    */
+  def described[A](
+      spark: SparkSession, op: String, name: String, v: Int,
+      g: Option[Long] = None)(body: => A): A = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(s"graft:$op $name v$v" + g.fold("")(n => s" g$n"))
+    try body finally sc.setLocalProperty(key, prev)
+  }
 
   private val schemas = new ConcurrentHashMap[String, StructType]()
   private val paramRows = new ConcurrentHashMap[String, Row]()

@@ -13,12 +13,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-batch statistics are additive and the scoring core is shared),
   * fold slicing invariant, idempotent generations, compaction
   * invariance, retention + time-travel, and the job budget below the
-  * size gate: a fold runs 1 job, and a warm query 1 job (5 before the
-  * driver path; the older "at most 5" test stays as it was), described
-  * `graft:SearchIndex.topK <name> v<N>`, with local rows back. The
-  * driver path, the lazy plan at `maxBytes=0` and a tripped row bound
-  * answer alike, and a property checks fold ≡ one-shot over random
-  * batch splits on both sides of the gate. Oracle twin: q331.
+  * size gate: a fold runs 1 job, the first query after it 1 job,
+  * described `graft:SearchIndex.topK <name> v<N>`, and a warm query none,
+  * with local rows back (the older "at most 5" and "at most 1" tests stay
+  * as they were). The driver path, the lazy plan at `maxBytes=0` and a
+  * tripped row bound answer alike; resident indexes stay within the row
+  * bound; a rebuild at the same path answers its new corpus; and a
+  * property checks fold ≡ one-shot over random batch splits after every
+  * fold, after compact and at the retained version, on both sides of the
+  * gate. Oracle twin: q331.
   */
 class SearchIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -246,32 +249,95 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
   test("below the size gate the query's one job is described " +
     "graft:SearchIndex.topK <name> v<N> and the caller's description " +
     "comes back") {
+    // the measured query is the first after a fold: it reads the new
+    // delta; the query after it reads nothing
     val dir = budgetIndex("sidx_desc")
     val qt = queries.toDF("query_id", "term")
     SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
+    SearchIndex.fold(spark, docs(35L until 40L), dir, "s", "doc_id", "text")
     val sc = spark.sparkContext
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val tag = java.util.UUID.randomUUID.toString
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).filter(_.getProperty("sidx.spec.tag") == tag)
-          .foreach(p => descs.add(p.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty("sidx.spec.tag", tag)
     sc.setJobDescription("caller")
-    var jobs = 0
-    try {
-      jobs = jobsRunBy(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
-      assert(sc.getLocalProperty("spark.job.description") == "caller")
-    } finally {
-      sc.setJobDescription(null)
-      sc.setLocalProperty("sidx.spec.tag", null)
-      sc.removeSparkListener(l)
+    val descs =
+      try {
+        val d = jobDescriptions(
+          SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        d
+      } finally sc.setJobDescription(null)
+    assert(descs.size == 1, descs)
+    assert(descs == Seq("graft:SearchIndex.topK s v1"))
+    var out: DataFrame = null
+    var got: Seq[(Int, Int, Long, Long)] = Nil
+    val jobs = jobsRunBy {
+      out = SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
+      got = rows(out)
     }
-    assert(jobs == 1)
-    assert(descs.toArray.toSeq == Seq("graft:SearchIndex.topK s v1"))
+    assert(jobs == 0, s"$jobs jobs")
+    assert(out.isLocal)
+    assert(got.nonEmpty && got == top(Retrieval.bm25TopK(
+      docs(0L until 40L), qt, "doc_id", "text", k = 5)))
+  }
+
+  test("resident indexes hold at most the row bound, the least recently " +
+    "queried dropped first, and leave no persisted RDDs") {
+    val qt = queries.toDF("query_id", "term")
+    val dirs = (0 until 4).map { i =>
+      val dir = tmpDir(s"sidx_lru$i")
+      SearchIndex.build(spark, docs(0L until 60L + i), dir, "s", "doc_id",
+        "text")
+      dir
+    }
+    def indexRows(dir: String) = Seq("postings", "termdf", "totals")
+      .map(w => spark.read.parquet(s"$dir/s.searchindex/v1/sign/__what=$w")
+        .count()).sum
+    // two indexes fit below the bound, three do not
+    val per = dirs.map(indexRows).max
+    val bound = 2 * per + per / 2
+    withGate(bound * 64 + 1) {
+      assert(Tuning.smallInputRows(spark, 64) == bound)
+      def query(i: Int): Int = {
+        var out: DataFrame = null
+        var got: Seq[(Int, Int, Long, Long)] = Nil
+        var jobs = 0
+        val left = rddsLeftBy {
+          jobs = jobsRunBy {
+            out = SearchIndex.topK(spark, qt, dirs(i), "s", "doc_id", k = 5)
+            got = rows(out)
+          }
+        }
+        assert(left.isEmpty, left.values.mkString("\n"))
+        assert(out.isLocal, s"index $i")
+        assert(SearchIndex.residentRows <= bound)
+        assert(got == top(Retrieval.bm25TopK(
+          docs(0L until 60L + i), qt, "doc_id", "text", k = 5)))
+        jobs
+      }
+      // the first query of each also fills its schema memo
+      (0 until 4).foreach(query)
+      // 2 and 3 are resident; 0 comes back in place of 3, the least
+      // recently queried, and 3 in place of 2
+      assert(query(3) == 0 && query(2) == 0 && query(0) == 1)
+      assert(query(0) == 0 && query(3) == 1 && query(0) == 0)
+    }
+  }
+
+  test("a rebuild at the same path and version answers the new corpus") {
+    // q331's staging: delete the index dir, then build and fold again
+    val dir = tmpDir("sidx_rebuild")
+    val qt = queries.toDF("query_id", "term")
+    def stage(base: Seq[Long], delta: Seq[Long]) = {
+      graft.io.SingleFile.delete(spark, s"$dir/s.searchindex")
+      SearchIndex.build(spark, docs(base), dir, "s", "doc_id", "text")
+      SearchIndex.fold(spark, docs(delta), dir, "s", "doc_id", "text")
+      assert(SearchIndex.versions(spark, dir, "s") == Seq(1))
+      val got = rows(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
+      assert(got == top(Retrieval.bm25TopK(
+        docs(base ++ delta), qt, "doc_id", "text", k = 5)))
+      got
+    }
+    val first = stage(0L until 20L, 20L until 35L)
+    val second = stage(100L until 110L, 110L until 113L)
+    assert(first.nonEmpty && second.nonEmpty && first != second)
   }
 
   /** Batches of doc kinds: 0–3 one of four fixed texts (equal texts tie
@@ -329,21 +395,34 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
         if (longQids) q.map { case (id, t) => (id.toLong, t) }
           .toDF("query_id", "term")
         else q.toDF("query_id", "term")
-      val dir = tmpDir("sidx_prop")
-      SearchIndex.build(spark, batches.head, dir, "s", "doc_id", "text")
-      batches.tail.foreach(SearchIndex.fold(spark, _, dir, "s", "doc_id",
-        "text"))
       // bm25TopK counts a duplicated term by doubling its tf; the index
       // adds its contribution twice. Compare the one-shot on distinct
       // (query, term) rows; with duplicates, the two index paths agree.
       val distinctQt = qt.distinct()
-      val want = Retrieval.bm25TopK(batches.reduce(_.unionByName(_)),
-        distinctQt, "doc_id", "text", k = 3)
+      val dir = tmpDir("sidx_prop")
+      def oneShot(nBatches: Int) = Retrieval.bm25TopK(
+        batches.take(nBatches).reduce(_.unionByName(_)), distinctQt,
+        "doc_id", "text", k = 3)
       def sorted(df: DataFrame) =
         df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
+      def run(qt: DataFrame, at: Option[Int] = None) =
+        SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 3, atVersion = at)
+      /** The driver path's answer to the distinct terms equals `want`. */
+      def check(step: String, want: DataFrame, at: Option[Int] = None) = {
+        val got = run(distinctQt, at)
+        val ctx = s"sample $i after $step: $split $q"
+        assert(got.isLocal, ctx)
+        assert(shape(got) == shape(want), ctx)
+        assert(sorted(got) == sorted(want), ctx)
+      }
+      SearchIndex.build(spark, batches.head, dir, "s", "doc_id", "text")
+      check("the build", oneShot(1))
+      batches.indices.tail.foreach { j =>
+        SearchIndex.fold(spark, batches(j), dir, "s", "doc_id", "text")
+        check(s"fold $j", oneShot(j + 1))
+      }
+      val want = oneShot(batches.size)
       val answers = Seq(None, Some(0L)).map { gate =>
-        def run(qt: DataFrame) =
-          SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 3)
         val Seq(got, dup) =
           Seq(distinctQt, qt).map(t => gate.fold(run(t))(withGate(_)(run(t))))
         val ctx = s"sample $i gate $gate: $split $q"
@@ -354,6 +433,11 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
         (dup.schema, sorted(dup))
       }
       assert(answers.distinct.size == 1, s"sample $i: $split $q")
+      // compact makes v2; v1 stays retained and answers the same corpus
+      SearchIndex.compact(spark, dir, "s")
+      check("compact", want)
+      check("compact, at v1", want, Some(1))
+      assert(sorted(run(qt)) == answers.head._2, s"sample $i: $split $q")
     }
   }
 }

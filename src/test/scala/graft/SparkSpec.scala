@@ -67,22 +67,27 @@ trait SparkSpec {
   /** Spark jobs `body` submits from this thread (jobs of other threads
     * sharing the session are not counted).
     */
-  def jobsRunBy(body: => Any): Int = {
+  def jobsRunBy(body: => Any): Int = jobDescriptions(body).size
+
+  /** The job description (`spark.job.description`, null when unset) of
+    * each Spark job `body` submits from this thread, in submission order.
+    */
+  def jobDescriptions(body: => Any): Seq[String] = {
     val sc = spark.sparkContext
     val key = "graft.spec.jobTag"
     val tag = java.util.UUID.randomUUID.toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val descs = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String])
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(key) == tag)) {
-          jobs.incrementAndGet(); ()
-        }
+        Option(j.properties).filter(_.getProperty(key) == tag).foreach(p =>
+          descs.add(p.getProperty("spark.job.description")))
     }
     sc.addSparkListener(l)
     sc.setLocalProperty(key, tag)
     try { body; org.apache.spark.graftbench.BusFlush.flush(spark) }
     finally { sc.setLocalProperty(key, null); sc.removeSparkListener(l) }
-    jobs.get
+    descs.toArray(Array.empty[String]).toSeq
   }
 }

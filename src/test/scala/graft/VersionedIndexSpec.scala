@@ -215,6 +215,76 @@ class VersionedIndexSpec extends AnyFunSuite with SparkSpec {
       == 30L)
   }
 
+  test("describe reads the version, its committed generations and the " +
+    "base and delta bytes per artifact from the filesystem alone") {
+    val dir = tmpDir("vidx_describe")
+    SearchIndex.build(spark, docs(0L until 20L), dir, "s", "doc_id", "text")
+    (1 to 3).foreach(g => SearchIndex.fold(spark,
+      docs((15L + 5 * g) until (20L + 5 * g)), dir, "s", "doc_id", "text"))
+    val root = s"$dir/s.searchindex/v1"
+    // an orphan: a delta written without its marker
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$root/deltas/g3"),
+      new java.io.File(s"$root/deltas/g4"))
+    /** Bytes of the files Spark reads for artifact `w` under `roots`. */
+    def bytes(w: String, roots: Seq[String]) =
+      spark.read.parquet(roots.map(r => s"$r/sign/__what=$w"): _*)
+        .inputFiles.map(f => new java.io.File(new java.net.URI(f)).length)
+        .sum
+    val ix = SearchIndex.index(spark, dir, "s")
+    var d: graft.io.VersionedIndex.Description = null
+    assert(jobsRunBy { d = ix.describe() } == 0)
+    assert(d.version == 1 && d.generations == Seq(1L, 2L, 3L) &&
+      d.deltas == 3)
+    assert(d.bytes.keySet == Set("postings", "termdf", "totals"))
+    d.bytes.foreach { case (w, b) =>
+      assert(b.base > 0 && b.base == bytes(w, Seq(root)), w)
+      assert(b.deltas > 0 &&
+        b.deltas == bytes(w, (1 to 3).map(g => s"$root/deltas/g$g")), w)
+    }
+  }
+
+  test("the three folds of an ingest describe every job " +
+    "graft:<Index>.fold <name> v<N> g<G> and run 3, 3 and 1 jobs") {
+    val dir = tmpDir("vidx_fold_desc")
+    DedupIndex.build(spark, docs(0L until 40L), dir, "d", "doc_id", "text")
+    ClusterIndex.build(spark,
+      DedupIndex.pairsWithin(spark, dir, "d").select("id_a", "id_b"), dir,
+      "c")
+    SearchIndex.build(spark, docs(0L until 40L), dir, "s", "doc_id", "text")
+    /** One ingest of `batch` as generation `g`: each fold's job
+      * descriptions.
+      */
+    def ingest(batch: DataFrame, g: Long) = {
+      var pairs: DataFrame = null
+      val dedup = jobDescriptions {
+        pairs = DedupIndex.fold(spark, batch, dir, "d", "doc_id", "text",
+          generation = Some(g)).select("id_a", "id_b")
+      }
+      val cluster = jobDescriptions(
+        ClusterIndex.fold(spark, pairs, dir, "c", generation = Some(g)))
+      val search = jobDescriptions(SearchIndex.fold(spark, batch, dir, "s",
+        "doc_id", "text", generation = Some(g)))
+      (pairs, dedup, cluster, search)
+    }
+    // the first fold of a version fills the params and schema memos
+    ingest(docs(40L until 50L), 1L)
+    val sc = spark.sparkContext
+    var restored: String = null
+    sc.setJobDescription("caller")
+    val (pairs, dedup, cluster, search) =
+      try ingest(docs(50L until 60L), 2L)
+      finally {
+        restored = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(null)
+      }
+    assert(restored == "caller")
+    assert(pairs.count() > 0)
+    assert(dedup == Seq.fill(3)("graft:DedupIndex.fold d v1 g2"))
+    assert(cluster == Seq.fill(3)("graft:ClusterIndex.fold c v1 g2"))
+    assert(search == Seq("graft:SearchIndex.fold s v1 g2"))
+  }
+
   test("DedupIndex and ApssIndex pair reads list the folds once and " +
     "never see a later fold") {
     val a = docs(0L until 20L)
