@@ -3,10 +3,12 @@ package graft.ext
 import scala.jdk.CollectionConverters._
 
 import graft.conf.Tuning
+import graft.io.VersionedIndex.{CommittedFile, Listing}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression,
+  RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
@@ -193,17 +195,22 @@ object SearchIndex {
     * Below the size gate (the listed bytes and the query terms each
     * below it, ids that [[Clusters.driverSolvable]] accepts, and the
     * index's rows within [[Tuning.smallInputRows]] at [[PostingBytes]] a
-    * row) the query reads the index's driver-resident parts: every
-    * committed file decoded once into primitive arrays, keyed by its
-    * path, length and modification time. Files not seen before (a new
-    * fold's delta, a rebuild) are read by ONE job, described
-    * `graft:SearchIndex.topK <name> v<N>`; a warm query runs none. The
-    * contributions are the shared formula evaluated as an interpreted
-    * expression over the matched postings; sums and the rank cut (score
+    * row, counted from the resident files and the others' parquet
+    * footers, so an index past it runs no job) the query reads the
+    * index's driver-resident files: every committed file decoded once
+    * into primitive arrays, keyed by its path, length and modification
+    * time. Files not resident (a new fold's delta, a rebuild) are read by
+    * ONE job, described `graft:SearchIndex.topK <name> v<N>`; a warm
+    * query runs none. The contributions are the shared formula evaluated
+    * as an interpreted expression over the matched postings; sums and the
+    * rank cut (score
     * descending, then id in Spark's ordering) run on the driver, and the
     * result is a `LocalRelation` with the lazy plan's schema, so a frame
-    * derived from it reads local rows. All resident indexes together hold
-    * at most that row bound; the least recently queried is dropped first.
+    * derived from it reads local rows. The resident files of all indexes
+    * and versions together hold at most that row bound, least recently
+    * used dropped first, but only for files queried again since they
+    * were last used; otherwise a query that does not fit reads just its
+    * terms' rows of the files it lacks and keeps nothing.
     * Otherwise the lazy plan is returned, planned under the size gate
     * sized by the listed bytes (below it AQE-free). That gate holds when
     * the returned frame is acted on directly; a frame derived from it
@@ -239,13 +246,13 @@ object SearchIndex {
         qSchema("term").dataType != StringType) {
       return lazyOut
     }
-    val parts = residentParts(ix, name, listing, idType, readBytes,
-      Tuning.smallInputRows(spark, PostingBytes))
-      .getOrElse(return lazyOut)
     // a local frame collects with no job; null terms match nothing
     val (qi, ti) = (qSchema.fieldIndex("query_id"), qSchema.fieldIndex("term"))
-    val qterms = queryTerms.collect().toSeq
+    lazy val qterms = queryTerms.collect().toSeq
       .map(r => (r.get(qi), r.getString(ti))).filter(_._2 != null)
+    val parts = residentParts(ix, name, listing, idType, readBytes,
+      Tuning.smallInputRows(spark, PostingBytes), qterms.map(_._2).distinct)
+      .getOrElse(return lazyOut)
     val schema = topKSchemas.computeIfAbsent((qSchema +: schemas, idCol),
       _ => lazyOut.schema)
     val top = rankOnDriver(spark, parts, qterms, idType, k, k1, b)
@@ -285,70 +292,141 @@ object SearchIndex {
   private final class Totals(val nDocs: Long, val total: Long,
       val rows: Long) extends Part
 
-  private type Resident = Map[graft.io.VersionedIndex.CommittedFile, Part]
-
-  /** The decoded committed files per index layout, least recently queried
-    * first.
+  /** A decoded committed file and the tick of the query that last used
+    * it.
     */
-  private val resident =
-    new java.util.LinkedHashMap[String, Resident](16, 0.75f, true)
+  private final class Resident(val part: Part, var used: Long)
 
-  /** Rows all resident indexes hold. */
-  private[graft] def residentRows: Long = resident.synchronized {
-    resident.values.asScala.map(_.values.map(_.rows).sum).sum
+  /** The driver-resident files: one LRU over the committed files of every
+    * index and version, least recently used first. `missed` holds the
+    * files that queries read filtered instead (see [[residentParts]]),
+    * with the tick of the last such query and their rows. `tick` counts
+    * driver-path queries. Guarded by this object's lock.
+    */
+  private object cache {
+    val files = new java.util.LinkedHashMap[CommittedFile, Resident](
+      16, 0.75f, true)
+    val missed = new java.util.LinkedHashMap[CommittedFile, (Long, Long)](
+      16, 0.75f, true)
+    var tick = 0L
+
+    def rows: Long = files.values.asScala.map(_.part.rows).sum
+
+    /** Drop the least recently used files, and missed entries, until each
+      * map holds at most `maxRows` rows.
+      */
+    def trim(maxRows: Long): Unit = {
+      var n = rows
+      val it = files.values.iterator
+      while (n > maxRows && it.hasNext) {
+        n -= it.next().part.rows
+        it.remove()
+      }
+      var m = missed.values.asScala.map(_._2).sum
+      val jt = missed.values.iterator
+      while (m > maxRows && jt.hasNext) { m -= jt.next()._2; jt.remove() }
+    }
+  }
+
+  /** Rows all resident files hold. */
+  private[graft] def residentRows: Long = cache.synchronized(cache.rows)
+
+  /** Forget every resident and missed file: the next query of each index
+    * reads it again.
+    */
+  private[graft] def dropResident(): Unit = cache.synchronized {
+    cache.files.clear()
+    cache.missed.clear()
   }
 
   /** The decoded parts of `listing`'s files, or None when they hold more
-    * than `maxRows` rows. Resident parts are reused and the rest decoded
-    * by [[decode]]; the index's entry then holds exactly these parts, and
-    * the least recently queried other indexes are dropped until all
-    * entries together hold at most `maxRows` rows.
+    * than `maxRows` rows: the resident files' rows plus the others' rows
+    * from their footers, so an index that does not fit runs no job.
+    * Resident files are reused and the others read by one [[decode]] job.
+    * They are read whole and kept when they fit in the rows the cache has
+    * free, or in the rows of its least recently used files last used
+    * before these files' previous query, which are then dropped: a file
+    * queried again sooner than a resident one was displaces it.
+    * Otherwise only `terms`' rows are read and nothing is kept, so
+    * indexes queried in turn beyond the bound leave the resident ones in
+    * place instead of each evicting the next.
     */
   private def residentParts(
-      ix: graft.io.VersionedIndex, name: String,
-      listing: graft.io.VersionedIndex.Listing, idType: DataType,
-      readBytes: Long, maxRows: Long): Option[Seq[Part]] = {
-    val key = ix.layout
-    val held: Resident = resident.synchronized {
-      Option(resident.get(key)).getOrElse(Map.empty)
+      ix: graft.io.VersionedIndex, name: String, listing: Listing,
+      idType: DataType, readBytes: Long, maxRows: Long,
+      terms: => Seq[String]): Option[Seq[Part]] = {
+    val (now, held) = cache.synchronized {
+      cache.tick += 1
+      val held = listing.files.flatMap(f => Option(cache.files.get(f))
+        .map { r => r.used = cache.tick; f -> r.part }).toMap
+      // a lowered gate drops files now, this listing's last
+      cache.trim(maxRows)
+      (cache.tick, held)
     }
-    val listed = listing.files.toSet
-    val kept = held.filter(p => listed(p._1))
-    val budget = maxRows - kept.values.map(_.rows).sum
-    val fresh = listing.files.filterNot(kept.contains)
+    val fresh = listing.files.filterNot(held.contains)
+    val seen = cache.synchronized(
+      fresh.flatMap(f => Option(cache.missed.get(f)).map(f -> _)).toMap)
+    val unseen = fresh.filterNot(seen.contains)
+    val footers = unseen.zip(ix.rows(unseen)).toMap
+    val rows = fresh.map(f => seen.get(f).fold(footers(f))(_._2))
     val parts =
-      if (budget < 0) None
-      else if (fresh.isEmpty) Some(kept)
-      else decode(ix, name, listing.version, fresh, idType, readBytes,
-        budget).map(kept ++ _)
-    resident.synchronized {
-      parts.fold(resident.remove(key))(resident.put(key, _))
-      var rows = residentRows
-      val lru = resident.entrySet.iterator
-      while (rows > maxRows && lru.hasNext) {
-        val e = lru.next()
-        if (e.getKey != key) {
-          rows -= e.getValue.values.map(_.rows).sum
-          lru.remove()
+      if (held.values.map(_.rows).sum + rows.sum > maxRows) None
+      else if (fresh.isEmpty) Some(held)
+      else {
+        // a file never missed has no previous query: it evicts nothing
+        val since =
+          if (seen.size < fresh.size) 0L else seen.values.map(_._1).min
+        val keep = admit(rows.sum, since, maxRows)
+        decode(ix, name, listing.version, fresh, idType, readBytes, maxRows,
+          Option.when(!keep)(terms)).map { more =>
+          cache.synchronized {
+            if (keep) more.foreach { case (f, p) =>
+              cache.files.put(f, new Resident(p, now))
+              cache.missed.remove(f)
+            }
+            else fresh.zip(rows).foreach { case (f, n) =>
+              cache.missed.put(f, (now, n))
+            }
+            cache.trim(maxRows)
+          }
+          held ++ more
         }
       }
-    }
     parts.map(p => listing.files.map(p))
   }
 
+  /** Whether `need` rows fit in the cache's free rows plus those of its
+    * least recently used files last used before tick `since`; when they
+    * do, just enough of those files are dropped.
+    */
+  private def admit(need: Long, since: Long, maxRows: Long): Boolean =
+    cache.synchronized {
+      val free = maxRows - cache.rows
+      val freed = cache.files.values.asScala.toSeq.takeWhile(_.used < since)
+        .scanLeft(0L)(_ + _.part.rows)
+      val k = freed.indexWhere(free + _ >= need)
+      val it = cache.files.values.iterator
+      (0 until k).foreach { _ => it.next(); it.remove() }
+      k >= 0
+    }
+
   /** Decode `files` in one bounded job: a collect of at most `budget`
     * rows (None when they hold more), one partition, so it is one job and
-    * not a `take` loop.
+    * not a `take` loop. With `only` terms, just their postings and termdf
+    * rows are read.
     */
   private def decode(
       ix: graft.io.VersionedIndex, name: String, v: Int,
-      files: Seq[graft.io.VersionedIndex.CommittedFile], idType: DataType,
-      readBytes: Long, budget: Long): Option[Resident] = {
+      files: Seq[CommittedFile], idType: DataType, readBytes: Long,
+      budget: Long,
+      only: Option[Seq[String]]): Option[Map[CommittedFile, Part]] = {
     val spark = ix.spark
     // (file, term, doc_id, x, y): x = c and y = dl for a posting, x = df
     // for a termdf row, x = n_docs and y = total_len for a totals row
     val tagged = files.zipWithIndex.map { case (f, i) =>
-      val df = ix.readSigned(v, f.artifact, Seq(f.path))
+      val read = ix.readSigned(v, f.artifact, Seq(f.path))
+      val df = only.filter(_ => f.artifact != "totals")
+        .fold(read)(ts => read.filter(col("term").isin(ts: _*)))
       def row(term: Column, id: Column, x: String, y: Column) =
         df.select(lit(i).as("file"), term.as("term"), id.as("doc_id"),
           col(x).cast("long").as("x"), y.cast("long").as("y"))
@@ -432,8 +510,10 @@ object SearchIndex {
         spark.createDataFrame(java.util.Collections.emptyList[Row](), in)
           .select(Retrieval.bm25ContribMicro(k1, b))
           .queryExecution.analyzed match {
-            case Project(Seq(e), child) =>
-              BindReferences.bindReference(e, child.output)
+            // the optimizer's ReplaceExpressions, which eval needs
+            case Project(Seq(e), child) => BindReferences.bindReference(
+              e.transform { case r: RuntimeReplaceable => r.replacement },
+              child.output)
             case p => throw new IllegalStateException(s"unexpected plan $p")
           }
       })

@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge
 import org.apache.spark.sql.types.StructType
@@ -25,6 +27,18 @@ object FooterSchema {
       try Some(p.getFileSystem(conf).getFileStatus(p))
       catch { case _: java.io.FileNotFoundException => None }
     status.filter(_.isFile).map(FooterSchemaBridge.read(spark, conf, _))
+  }
+
+  /** The rows of each parquet file in `files`, read from their footers on
+    * the driver (no job).
+    */
+  def rows(spark: SparkSession, files: Seq[String]): Seq[Long] = {
+    lazy val conf = spark.sessionState.newHadoopConf()
+    files.map { f =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f), conf))
+      try r.getRecordCount finally r.close()
+    }
   }
 
   /** `spark.read.parquet(path)` with no inference job for a single file. */

@@ -219,6 +219,10 @@ private[graft] final case class VersionedIndex(
     Listing(v, gens, files)
   }
 
+  /** The rows of each of `files`, from their parquet footers (no job). */
+  def rows(files: Seq[CommittedFile]): Seq[Long] =
+    FooterSchema.rows(spark, files.map(_.path))
+
   /** The current version's state, read from the filesystem alone (no
     * job): its committed fold generations and, per `signed` artifact,
     * the bytes of its base and of its committed deltas.

@@ -17,8 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * described `graft:SearchIndex.topK <name> v<N>`, and a warm query none,
   * with local rows back (the older "at most 5" and "at most 1" tests stay
   * as they were). The driver path, the lazy plan at `maxBytes=0` and a
-  * tripped row bound answer alike; resident indexes stay within the row
-  * bound; a rebuild at the same path answers its new corpus; and a
+  * tripped row bound answer alike, and a tripped bound runs no job;
+  * resident files stay within the row bound without thrashing indexes
+  * queried in turn, and two retained versions stay resident side by side;
+  * a rebuild at the same path answers its new corpus; and a
   * property checks fold ≡ one-shot over random batch splits after every
   * fold, after compact and at the retained version, on both sides of the
   * gate. Oracle twin: q331.
@@ -207,13 +209,12 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
       docs(0L until 300L), wideQueries, "doc_id", "text", k = 7)))
   }
 
-  /** A gate just above `dir`'s committed reads: they take the driver
-    * path, but the rows `wideQueries` match (about 1,400 at 64 B) do not
-    * fit below it.
+  /** A gate just above `dir`'s listed bytes: they take the driver path,
+    * but its rows, at 64 B a row, do not fit below it.
     */
   private def tripGate(dir: String): Long =
-    Tuning.estimatedBytes(SearchIndex.index(spark, dir, "s")
-      .committedSigned(1, Seq("postings", "termdf", "totals")): _*) + 1
+    SearchIndex.index(spark, dir, "s").committedFiles(1).files
+      .map(_.bytes).sum + 1
 
   /** Names and types: a parquet read's columns are nullable, a local
     * frame's need not be.
@@ -226,7 +227,20 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
     def run = SearchIndex.topK(spark, wideQueries, dir, "s", "doc_id", k = 7)
     val driver = run
     val ungated = withGate(0L)(run)
-    val tripped = withGate(tripGate(dir))(run)
+    // the resident rows, or the footers once nothing is resident, show
+    // the index does not fit, and no job reads it before the lazy plan is
+    // returned
+    val indexRows = Seq("postings", "termdf", "totals")
+      .map(w => spark.read.parquet(s"$dir/s.searchindex/v1/sign/__what=$w")
+        .count()).sum
+    assert(withGate(tripGate(dir))(Tuning.smallInputRows(spark, 64)) <
+      indexRows)
+    var tripped: DataFrame = null
+    assert(jobsRunBy { tripped = withGate(tripGate(dir))(run) } == 0)
+    SearchIndex.dropResident()
+    var cold: DataFrame = null
+    assert(jobsRunBy { cold = withGate(tripGate(dir))(run) } == 0)
+    assert(!cold.isLocal && rows(cold) == rows(tripped))
     assert(driver.isLocal && !ungated.isLocal && !tripped.isLocal)
     val oneShot = Retrieval.bm25TopK(
       docs(0L until 300L), wideQueries, "doc_id", "text", k = 7)
@@ -278,8 +292,9 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
       docs(0L until 40L), qt, "doc_id", "text", k = 5)))
   }
 
-  test("resident indexes hold at most the row bound, the least recently " +
-    "queried dropped first, and leave no persisted RDDs") {
+  test("resident files hold at most the row bound; indexes queried in " +
+    "turn beyond it keep the resident ones, and a file queried again " +
+    "sooner displaces the least recently used") {
     val qt = queries.toDF("query_id", "term")
     val dirs = (0 until 4).map { i =>
       val dir = tmpDir(s"sidx_lru$i")
@@ -312,13 +327,43 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
           docs(0L until 60L + i), qt, "doc_id", "text", k = 5)))
         jobs
       }
-      // the first query of each also fills its schema memo
+      // files other tests left would take the free rows
+      SearchIndex.dropResident()
+      // the first query of each also fills its schema memo; 0 and 1 are
+      // kept, 2 and 3 do not fit and are read filtered
       (0 until 4).foreach(query)
-      // 2 and 3 are resident; 0 comes back in place of 3, the least
-      // recently queried, and 3 in place of 2
-      assert(query(3) == 0 && query(2) == 0 && query(0) == 1)
-      assert(query(0) == 0 && query(3) == 1 && query(0) == 0)
+      // in turn, 0 and 1 stay resident and 2 and 3 run one filtered read
+      // each, every round
+      assert((0 until 4).map(query) == Seq(0, 0, 1, 1))
+      assert((0 until 4).map(query) == Seq(0, 0, 1, 1))
+      // 3, queried again before 0 was, displaces 0; 1 stays
+      assert(query(3) == 1 && query(3) == 0 && query(1) == 0)
+      // 0 was never read filtered, so its first miss displaces nothing;
+      // its second displaces 3, the least recently used
+      assert(query(0) == 1 && query(0) == 1 && query(0) == 0)
+      assert(query(1) == 0 && query(3) == 1)
     }
+  }
+
+  test("queries alternating between two retained versions keep both " +
+    "resident") {
+    val dir = budgetIndex("sidx_versions")
+    val qt = queries.toDF("query_id", "term")
+    def at(v: Int): (Int, Seq[(Int, Int, Long, Long)]) = {
+      var got: Seq[(Int, Int, Long, Long)] = Nil
+      val jobs = jobsRunBy {
+        got = rows(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5,
+          atVersion = Some(v)))
+      }
+      (jobs, got)
+    }
+    at(1)
+    SearchIndex.compact(spark, dir, "s")
+    // the first read of v2 fills its schema memo and its files
+    at(2)
+    val expected = top(Retrieval.bm25TopK(
+      docs(0L until 35L), qt, "doc_id", "text", k = 5))
+    Seq(1, 2, 1, 2).foreach(v => assert(at(v) == ((0, expected)), s"v$v"))
   }
 
   test("a rebuild at the same path and version answers the new corpus") {
