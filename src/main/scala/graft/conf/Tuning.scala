@@ -61,19 +61,6 @@ object Tuning {
     if (s.isValidLong) s.toLong else Long.MaxValue
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to a value
-    * derived from `bytes`, restoring the previous setting afterwards.
-    * NOTE: session conf is thread-global — callers are single-threaded
-    * per session (the engine's query contract).
-    */
-  def withShufflePartitionsForBytes[A](
-      spark: SparkSession, bytes: Long)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, partitionsForBytes(spark, bytes).toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
   /** Size-gated fixed-cost scope for index folds / maintenance bodies
     * (guide §1.2 step 1 + §2.2). Under AQE every Exchange materializes
     * as its OWN Spark job (a query stage), each costing ~100 ms of

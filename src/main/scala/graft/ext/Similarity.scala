@@ -65,8 +65,6 @@ object Similarity {
   private[graft] def dotFast(a: String, b: String): Column =
     expr(s"graft_dot(`$a`, `$b`)")
 
-  def selfNorm(a: String): Column = sqrt(dot(a, a))
-
   private[graft] def selfNormFast(a: String): Column = sqrt(dotFast(a, a))
 
   /** `numPlanes`-bit signed-random-projection bucket of a vector column —

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -28,6 +28,10 @@ object FooterSchema {
       catch { case _: java.io.FileNotFoundException => None }
     status.filter(_.isFile).map(FooterSchemaBridge.read(spark, conf, _))
   }
+
+  /** The schema a read of the parquet file `file` exposes. */
+  def of(spark: SparkSession, file: FileStatus): StructType =
+    FooterSchemaBridge.read(spark, spark.sessionState.newHadoopConf(), file)
 
   /** The rows of each parquet file in `files`, read from their footers on
     * the driver (no job).

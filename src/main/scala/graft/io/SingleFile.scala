@@ -1,7 +1,12 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.conf.Tuning
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Single-file output semantics over Spark's directory-style sinks.
   *
@@ -31,6 +36,14 @@ object SingleFile {
   /** Write `df` through `write` into a temp dir and promote the produced
     * part file to `target` (overwriting). The temp dir lives next to the
     * target so the rename stays within one filesystem.
+    *
+    * A parquet write with no options of an unmodified scan of one parquet
+    * file below the size gate ([[copyableScan]]) runs no Spark job: the
+    * part file is a byte copy of the scanned file, promoted by the same
+    * rename, so a failed copy never leaves a partial target. The copy
+    * keeps the source's encoding (codec, timestamp physical type, row
+    * groups) where the job would re-encode; a read of either file under
+    * the same session confs gives equal rows, in order, and schema.
     */
   def write(
       spark: SparkSession,
@@ -38,13 +51,23 @@ object SingleFile {
       target: String,
       format: String,
       options: Map[String, String] = Map.empty): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
     val targetPath = new Path(target)
-    val f = targetPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val f = targetPath.getFileSystem(conf)
     val tmp = new Path(targetPath.getParent,
       s".${targetPath.getName}.__tmp__${System.nanoTime()}")
     try {
-      df.coalesce(1).write.options(options).format(format)
-        .mode("overwrite").save(tmp.toString)
+      val copied = format == "parquet" && options.isEmpty &&
+        copyableScan(spark, df, conf).exists { src =>
+          val sf = src.getPath.getFileSystem(conf)
+          FileUtil.copy(sf, src.getPath, f, new Path(tmp, "part-00000.parquet"),
+            false, conf)
+          // a rewrite during the copy falls back like one before it
+          unchanged(sf, src)
+        }
+      if (!copied)
+        df.coalesce(1).write.options(options).format(format)
+          .mode("overwrite").save(tmp.toString)
       val part = f.listStatus(tmp).map(_.getPath)
         .find(p => p.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(
@@ -56,6 +79,46 @@ object SingleFile {
       if (f.exists(tmp)) { f.delete(tmp, true); () }
     }
   }
+
+  /** The one file `df` scans, when its analyzed plan is a bare batch scan
+    * of one parquet file: no partition or bucket columns, no read option
+    * beyond the path, a data schema equal to the file's footer schema,
+    * and the file still at its listed length and modification time and
+    * below the size gate ([[graft.conf.Tuning.isSmallInput]]). A scan
+    * that fails any of these runs the job, unchanged.
+    */
+  private def copyableScan(spark: SparkSession, df: DataFrame,
+      conf: Configuration): Option[FileStatus] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation if !l.isStreaming => l.relation match {
+        case h: HadoopFsRelation
+            if h.fileFormat.isInstanceOf[ParquetFileFormat] &&
+              h.partitionSchema.isEmpty && h.bucketSpec.isEmpty &&
+              h.options.keys.forall(_.equalsIgnoreCase("path")) =>
+          h.location.listFiles(Nil, Nil).flatMap(_.files) match {
+            case Seq(file) => Some(file.fileStatus).filter { st =>
+              unchanged(st.getPath.getFileSystem(conf), st) &&
+                Tuning.isSmallInput(spark, st.getLen) &&
+                // a footer Spark cannot read fails in the job, as today
+                scala.util.Try(FooterSchema.of(spark, st)).toOption
+                  .contains(h.dataSchema)
+            }
+            case _ => None
+          }
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** `listed` is still the file at its path: same length and
+    * modification time.
+    */
+  private def unchanged(f: FileSystem, listed: FileStatus): Boolean =
+    try {
+      val now = f.getFileStatus(listed.getPath)
+      now.getLen == listed.getLen &&
+        now.getModificationTime == listed.getModificationTime
+    } catch { case _: java.io.FileNotFoundException => false }
 
   /** Read a whole (small) file as UTF-8 — test/golden support. */
   def readString(spark: SparkSession, path: String): String = {

@@ -2,6 +2,8 @@ package graft.io
 
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.conf.JobDescription
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
@@ -22,10 +24,11 @@ import org.apache.spark.sql.types.StructType
   *    columns, in write order.
   *
   * Artifact schemas and params rows are memoized per version-qualified
-  * path (a schema-inferring read pays a footer job): a published version
-  * is frozen, and [[publish]] forgets every memo under the version dir it
-  * starts, so a rebuild at the same path and version never reads through
-  * a stale schema. `what` names the index in errors.
+  * path (a schema is one footer read on the driver, a params row a job):
+  * a published version is frozen, and [[publish]] forgets every memo
+  * under the version dir it starts, so a rebuild at the same path and
+  * version never reads through a stale schema. `what` names the index in
+  * errors.
   */
 private[graft] final case class VersionedIndex(
     spark: SparkSession, layout: String, what: String,
@@ -106,14 +109,25 @@ private[graft] final case class VersionedIndex(
     VersionPointer.retain(spark, layout, v, retainVersions)
   }
 
-  /** The (memoized) schema of the artifact at `schemaKey`: a footer job
-    * the first time, none after.
+  /** The (memoized) schema of the artifact dir `schemaKey`: one data
+    * file's footer, read on the driver (no job), when the dir holds data
+    * files and no partition subdirs; Spark's inference otherwise. Names
+    * starting with `_` or `.` are skipped, as Spark's listing does.
     */
   private def schemaAt(schemaKey: String): StructType =
-    schemas.computeIfAbsent(schemaKey, p => spark.read.parquet(p).schema)
+    schemas.computeIfAbsent(schemaKey, { p =>
+      // a missing dir falls through to Spark, which raises its own error
+      val listed = try fs.listStatus(new Path(p)).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      val (dirs, files) = listed
+        .filterNot(st => Seq("_", ".").exists(st.getPath.getName.startsWith))
+        .partition(_.isDirectory)
+      files.headOption.filter(_ => dirs.isEmpty)
+        .fold(spark.read.parquet(p).schema)(FooterSchema.of(spark, _))
+    })
 
   /** `paths` read with the (memoized) schema of the artifact at
-    * `schemaKey` — one multi-path scan, no footer job after the first.
+    * `schemaKey` — one multi-path scan, no schema job.
     */
   def read(schemaKey: String, paths: String*): DataFrame =
     spark.read.schema(schemaAt(schemaKey)).parquet(paths: _*)
@@ -161,7 +175,7 @@ private[graft] final case class VersionedIndex(
     s"$root/sign/__what=$what"
 
   /** The schema of artifact `what` in version `v`, in `signed` column
-    * order (memoized: no job after the first read of the version).
+    * order (memoized; a footer read, no job).
     */
   def signedSchema(v: Int, what: String): StructType = {
     val sch = schemaAt(signDir(dir(v), what))
@@ -270,13 +284,9 @@ private[graft] object VersionedIndex {
     */
   def described[A](
       spark: SparkSession, op: String, name: String, v: Int,
-      g: Option[Long] = None)(body: => A): A = {
-    val sc = spark.sparkContext
-    val key = "spark.job.description"
-    val prev = sc.getLocalProperty(key)
-    sc.setJobDescription(s"graft:$op $name v$v" + g.fold("")(n => s" g$n"))
-    try body finally sc.setLocalProperty(key, prev)
-  }
+      g: Option[Long] = None)(body: => A): A =
+    JobDescription.described(spark,
+      s"graft:$op $name v$v" + g.fold("")(n => s" g$n"))(body)
 
   private val schemas = new ConcurrentHashMap[String, StructType]()
   private val paramRows = new ConcurrentHashMap[String, Row]()

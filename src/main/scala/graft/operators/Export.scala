@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.catalog.CatalogSchema
 import graft.conf.GluestickConf
+import graft.conf.JobDescription.described
 import graft.io.SingleFile
 import graft.singer.{SingerOptions, SingerSchema, SingerSink}
 import graft.sources.Reader
@@ -36,6 +37,14 @@ final case class ExportOptions(
   * with `to_json` (vs the reference's `struct.jsonEncode`,
   * ref: src/etl-utils.ts:84-92), JSON/JSONL serialization happens in
   * executors via `to_json(struct(*))` — never a driver-side `toRecords()`.
+  *
+  * A single-file parquet export of an unmodified scan of one parquet file
+  * below the size gate — the frame `Snapshot.snapshotRecords` returns
+  * after a merge — runs no Spark job: [[graft.io.SingleFile.write]]
+  * promotes a byte copy of the scanned file. The copy keeps the source's
+  * encoding (codec, timestamp physical type); readers see the rows, in
+  * order, and the schema the re-encoding job would give. Any other frame
+  * runs one job. Jobs are described `graft:Export.<format> <name>`.
   */
 object Export {
 
@@ -70,7 +79,7 @@ object Export {
     SingleFile.fs(spark, outputDir).mkdirs(new Path(outputDir))
     val outputPath = s"$outputDir/$finalName"
 
-    exportFormat match {
+    described(spark, s"graft:Export.$exportFormat $name")(exportFormat match {
       case "parquet" =>
         if (options.singleFile)
           SingleFile.write(spark, data, s"$outputPath.parquet", "parquet")
@@ -108,7 +117,7 @@ object Export {
             csvWriteOptions)
         else stringified.write.mode("overwrite")
           .options(csvWriteOptions).csv(s"$outputPath.csv")
-    }
+    })
   }
 
   /** Catalog schema properties for a stream, from `{ROOT_DIR}/catalog.json`

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.conf.JobDescription.described
 import graft.conf.Tuning
 import graft.io.{FooterSchema, SingleFile}
 
@@ -174,8 +175,9 @@ object Snapshot {
         // a single-file merge below the size gate runs its shuffle and
         // write as one job
         val scopeBytes = Tuning.estimatedBytes(old, data)
-        try Tuning.withSmallInputScope(spark, scopeBytes)(
-          writeSnapshot(spark, merged, path, opts))
+        try described(spark, s"graft:Snapshot.merge $stream")(
+          Tuning.withSmallInputScope(spark, scopeBytes)(
+            writeSnapshot(spark, merged, path, opts)))
         catch {
           case e: Exception if opts.coerceTypes => throw new RuntimeException(
             "Snapshot failed while trying to convert field during " +

@@ -2,6 +2,7 @@ package graft.singer
 
 import graft.catalog.CatalogSchema
 import graft.conf.GluestickConf
+import graft.conf.JobDescription.described
 import graft.io.SingleFile
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -147,7 +148,7 @@ object SingerSink {
 
   /** Emit the stream to `{outputDir}/{filename}`, appending if the file
     * exists so multiple streams interleave (ref: src/singer.ts:341-342,
-    * 387-391).
+    * 387-391). Its jobs are described `graft:SingerSink.toSinger <stream>`.
     */
   def toSinger(
       df: DataFrame,
@@ -155,7 +156,17 @@ object SingerSink {
       outputDir: String,
       options: SingerOptions = SingerOptions(),
       conf: GluestickConf = GluestickConf.fromEnv(),
-      catalogLookup: String => Option[ObjectNode] = _ => None): Unit = {
+      catalogLookup: String => Option[ObjectNode] = _ => None): Unit =
+    described(df.sparkSession, s"graft:SingerSink.toSinger $stream")(
+      emit(df, stream, outputDir, options, conf, catalogLookup))
+
+  private def emit(
+      df: DataFrame,
+      stream: String,
+      outputDir: String,
+      options: SingerOptions,
+      conf: GluestickConf,
+      catalogLookup: String => Option[ObjectNode]): Unit = {
     val spark = df.sparkSession
     val useCatalog = conf.useCatalogSchema || options.catalogStream.isDefined
 

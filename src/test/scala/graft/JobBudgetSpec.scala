@@ -1,27 +1,34 @@
 package graft
 
+import graft.conf.GluestickConf
 import graft.io.{FooterSchema, SingleFile}
-import graft.operators.Snapshot
+import graft.operators.{Export, ExportOptions, Snapshot, SnapshotOptions}
+import graft.singer.{SingerOptions, SingerSink}
 import graft.sources.{Reader, ReaderOptions}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-/** The reader → snapshot path's Spark-job budget: schema resolution runs
-  * on the driver (parquet footer, CSV header line), so `Reader.get` runs
-  * no job and a small keep-last merge runs one. The footer-resolved
-  * schema must be the one Spark's inference gives.
+import scala.util.{Failure, Success, Try}
+
+/** The tenant sync's Spark-job budget: schema resolution runs on the
+  * driver (parquet footer, CSV header line), so `Reader.get` runs no job,
+  * a small keep-last merge runs one, the parquet export of the merged
+  * frame none (a byte copy of the snapshot file) and the Singer write
+  * one, each job described by its operator. The footer-resolved schema
+  * must be the one Spark's inference gives, and a copied export must read
+  * back as the job's output would.
   */
 class JobBudgetSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 
-  /** The read-only fixture tables of TESTDATA.md, next to the checkout. */
-  private val sf0001 =
-    Paths.get("..", "testdata", "sf0.001").toAbsolutePath.normalize.toString
+  /** The read-only fixture tables TESTDATA.md names. */
+  private val sf0001 = "/root/testdata/sf0.001"
 
   /** One frame per column type a snapshot or export round-trips. */
   private def typed: DataFrame = spark.range(5).selectExpr(
@@ -63,7 +70,9 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("footer schema equals Spark's inferred schema, non-Spark files") {
-    val files = new java.io.File(sf0001).listFiles()
+    val dir = new java.io.File(sf0001)
+    assert(dir.isDirectory, s"fixture dir $sf0001 (TESTDATA.md) is missing")
+    val files = dir.listFiles()
       .map(_.getPath).filter(_.endsWith(".parquet")).sorted.toSeq
     assert(files.size >= 8, s"fixture tables missing under $sf0001")
     files.foreach { p =>
@@ -162,5 +171,149 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     assert(Snapshot.readSnapshots(spark, "s", dir).get.as[(Long, String)]
       .collect().toSet ==
       Set((1L, "v3"), (2L, "new"), (3L, "new"), (4L, "new")))
+  }
+
+  private val noEnv = GluestickConf(Map.empty)
+
+  /** The parquet export of `df` as `<dir>/t.parquet`. */
+  private def exportParquet(df: DataFrame, dir: String): String = {
+    Export.toExport(df, "t", dir,
+      ExportOptions(exportFormat = Some("parquet")), noEnv)
+    s"$dir/t.parquet"
+  }
+
+  /** Two exported files read back to the same schema and rows, in order. */
+  private def sameReadBack(a: String, b: String): Unit = {
+    val (ra, rb) = (spark.read.parquet(a), spark.read.parquet(b))
+    assert(ra.schema == rb.schema, s"$a vs $b")
+    assert(ra.collect().toSeq == rb.collect().toSeq, s"$a vs $b")
+  }
+
+  private def bytes(p: String) = Files.readAllBytes(Paths.get(p)).toSeq
+
+  test("after a merge the parquet export is a byte copy of the snapshot: " +
+      "no job, and it reads back as the job's output, typed and empty") {
+    val dir = tmpDir("budget_copy")
+    val opts = SnapshotOptions(pk = Seq("l"))
+    Snapshot.snapshotRecords(spark, Some(typed), "t", s"$dir/snap", opts)
+    val merged = Snapshot.snapshotRecords(spark,
+      Some(typed.filter("l >= 2")), "t", s"$dir/snap", opts).get
+    val emptyFile = singleFile(typed.filter("l < 0"))
+    Seq("typed" -> (merged, s"$dir/snap/t.snapshot.parquet"),
+      "empty" -> (FooterSchema.read(spark, emptyFile), emptyFile)
+    ).foreach { case (what, (df, source)) =>
+      var copy = ""
+      assert(jobsRunBy { copy = exportParquet(df, s"$dir/copy_$what") } == 0,
+        what)
+      assert(bytes(copy) == bytes(source), what)
+      var job = ""
+      assert(withGate(0L)(jobsRunBy {
+        job = exportParquet(df, s"$dir/job_$what")
+      }) == 1, what)
+      sameReadBack(copy, job)
+    }
+    assert(spark.read.parquet(s"$dir/copy_typed/t.parquet").count() == 5)
+    assert(spark.read.parquet(s"$dir/copy_empty/t.parquet").count() == 0)
+  }
+
+  test("a frame that is not an unmodified scan of one parquet file below " +
+      "the gate keeps its one export job and its read-back") {
+    val dir = tmpDir("budget_nocopy")
+    val src = singleFile(typed)
+    val parts = s"$dir/parts.parquet"
+    typed.repartition(2).write.parquet(parts)
+    val subset = StructType(FooterSchema.read(spark, src).schema.take(3))
+    val frames = Seq(
+      "projected" -> FooterSchema.read(spark, src).select("l", "st"),
+      "filtered" -> FooterSchema.read(spark, src).filter("l > 1"),
+      "two_parts" -> spark.read.parquet(parts),
+      "one_file_twice" -> spark.read.parquet(src, src),
+      "column_subset" -> spark.read.schema(subset).parquet(src),
+      "read_option" -> spark.read.option("mergeSchema", "false").parquet(src))
+    frames.foreach { case (what, df) =>
+      var out = ""
+      assert(jobsRunBy { out = exportParquet(df, s"$dir/$what") } == 1, what)
+      val back = spark.read.parquet(out)
+      assert(back.schema == df.schema, what)
+      assert(back.orderBy("l").collect().toSeq ==
+        df.orderBy("l").collect().toSeq, what)
+    }
+    val scan = FooterSchema.read(spark, src)
+    var gated = ""
+    assert(withGate(0L)(jobsRunBy {
+      gated = exportParquet(scan, s"$dir/gate0")
+    }) == 1)
+    sameReadBack(gated, exportParquet(scan, s"$dir/copied"))
+    Seq("csv", "jsonl").foreach { fmt =>
+      def export(out: String): String = {
+        Export.toExport(scan, "t", out,
+          ExportOptions(exportFormat = Some(fmt)), noEnv)
+        SingleFile.readString(spark, s"$out/t.$fmt")
+      }
+      var text = ""
+      assert(jobsRunBy { text = export(s"$dir/$fmt") } == 1, fmt)
+      assert(text.nonEmpty && text == withGate(0L)(export(s"$dir/${fmt}0")),
+        fmt)
+    }
+  }
+
+  test("a file rewritten or touched after its frame was listed is not " +
+      "copied: the export runs the job path and ends as it does") {
+    val dir = tmpDir("budget_stale")
+    def root(e: Throwable) =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+    Seq("rewritten", "touched").foreach { what =>
+      val src = singleFile(typed)
+      val stale = FooterSchema.read(spark, src) // lists the file now
+      if (what == "rewritten")
+        SingleFile.write(spark, typed.filter("l < 3"), src, "parquet")
+      // a touch keeps the bytes and the length: only the time tells
+      SingleFile.fs(spark, src).setTimes(new org.apache.hadoop.fs.Path(src),
+        System.currentTimeMillis() + 10000, -1)
+      def write(out: String): Try[String] =
+        Try(SingleFile.write(spark, stale, out, "parquet")).map(_ => out)
+      var viaCopy: Try[String] = null
+      assert(jobsRunBy { viaCopy = write(s"$dir/${what}_a.parquet") } == 1,
+        what)
+      val viaJob = withGate(0L)(write(s"$dir/${what}_b.parquet"))
+      (viaCopy, viaJob) match {
+        case (Success(a), Success(b)) => sameReadBack(a, b)
+        case (Failure(a), Failure(b)) =>
+          assert(root(a).getClass == root(b).getClass, s"$what: $a vs $b")
+        case other => fail(s"$what: copy and job paths differ: $other")
+      }
+      if (what == "touched") assert(viaJob.isSuccess)
+    }
+  }
+
+  test("a sync's merge, parquet export and Singer write run 1, 0 and 1 " +
+      "jobs, described by their operators; the caller's description " +
+      "comes back") {
+    val (sync, root) = syncFixture()
+    val r = new Reader(spark, sync, root)
+    val snap = tmpDir("budget_sync")
+    val out = tmpDir("budget_sync_out")
+    val sc = spark.sparkContext
+    Seq("orders", "customers").foreach { s =>
+      val batch = r.get(s, ReaderOptions(catalogTypes = true)).get
+      Snapshot.snapshotRecords(spark, Some(batch), s, snap)
+      var merged: DataFrame = null
+      sc.setJobDescription("caller")
+      try {
+        assert(jobDescriptions {
+          merged = Snapshot.snapshotRecords(spark, Some(batch), s, snap).get
+        } == Seq(s"graft:Snapshot.merge $s"))
+        assert(jobsRunBy(Export.toExport(merged, s, s"$out/export",
+          ExportOptions(exportFormat = Some("parquet")), noEnv)) == 0)
+        assert(jobDescriptions(SingerSink.toSinger(batch, s, out,
+          SingerOptions(keys = Seq("id"), filename = s"$s.singer"), noEnv)) ==
+          Seq(s"graft:SingerSink.toSinger $s"))
+        assert(withGate(0L)(jobDescriptions(Export.toExport(merged, s,
+          s"$out/export_job", ExportOptions(exportFormat = Some("parquet")),
+          noEnv))) == Seq(s"graft:Export.parquet $s"))
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+      } finally sc.setJobDescription(null)
+      sameReadBack(s"$out/export/$s.parquet", s"$out/export_job/$s.parquet")
+    }
   }
 }

@@ -131,6 +131,26 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
     dir
   }
 
+  test("a version's first topK runs 1 job, after a build and after a " +
+    "compact: the artifact schemas come from footers") {
+    val dir = tmpDir("sidx_first")
+    val qt = queries.toDF("query_id", "term")
+    def first(corpus: DataFrame): Unit = {
+      var got: Seq[(Int, Int, Long, Long)] = Nil
+      assert(jobsRunBy {
+        got = rows(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
+      } == 1)
+      assert(got.nonEmpty && got == top(Retrieval.bm25TopK(
+        corpus, qt, "doc_id", "text", k = 5)))
+    }
+    SearchIndex.build(spark, docs(0L until 20L), dir, "s", "doc_id", "text")
+    first(docs(0L until 20L))
+    SearchIndex.fold(spark, docs(20L until 35L), dir, "s", "doc_id", "text")
+    SearchIndex.compact(spark, dir, "s")
+    assert(SearchIndex.currentVersion(spark, dir, "s").contains(2))
+    first(docs(0L until 35L))
+  }
+
   test("below the size gate a fold runs one job and a warm query at " +
     "most 5") {
     val dir = tmpDir("sidx_budget")
@@ -140,7 +160,7 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
     assert(jobsRunBy(SearchIndex.fold(spark, docs(30L until 35L), dir, "s",
       "doc_id", "text")) == 1)
     val qt = queries.toDF("query_id", "term")
-    // the first read memoizes the artifact schemas (one footer job each)
+    // the first read fills the resident postings
     SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
     var got: Seq[(Int, Int, Long, Long)] = Nil
     val jobs = jobsRunBy {

@@ -20,11 +20,13 @@ object SparkSessions {
 trait SparkSpec {
   lazy val spark: SparkSession = SparkSessions.get
 
+  /** A fresh dir under `target/tmp` of the working dir (sbt runs specs
+    * from the checkout's root), as an absolute path.
+    */
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target/tmp").toAbsolutePath match {
-        case p => java.nio.file.Files.createDirectories(p)
-      }, prefix)
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get("target", "tmp").toAbsolutePath), prefix)
     d.toString
   }
 

@@ -20,7 +20,7 @@ class TemplatingSpec extends AnyFunSuite {
   test("buildStringFormatVariables merges tenant metadata + env, reserved keys win") {
     // fixture per FIXTURES.md A6 (ref: src/etl-utils.ts:111-156)
     val root = Files.createTempDirectory(
-      Files.createDirectories(Paths.get("/root/repo/target/tmp")), "tmpl")
+      Files.createDirectories(Paths.get("target", "tmp")), "tmpl")
     Files.createDirectories(root.resolve("snapshots"))
     Files.write(root.resolve("snapshots/tenant-config.json"),
       """{"hotglue_metadata": {"metadata": {

@@ -215,6 +215,38 @@ class VersionedIndexSpec extends AnyFunSuite with SparkSpec {
       == 30L)
   }
 
+  test("artifact schemas read from one footer equal Spark's inferred " +
+    "schemas, for a partition holding only an empty file too; a " +
+    "partitioned artifact keeps Spark's inference") {
+    val ix = graft.io.VersionedIndex(spark, tmpDir("vidx_schema"), "t",
+      Seq("full" -> Seq("x", "id"), "empty" -> Seq("id", "y")))
+    val full = Seq((1L, "a"), (2L, "b")).toDF("id", "x")
+    ix.publish(1, 2) {
+      ix.writeSigned(ix.dir(1), "errorifexists", full,
+        Seq.empty[(Long, Double)].toDF("id", "y"))
+      full.write.parquet(ix.path(1, "plain"))
+      full.write.partitionBy("x").parquet(ix.path(1, "parted"))
+    }
+    def part(w: String) = s"${ix.dir(1)}/sign/__what=$w"
+    val emptyFiles = new java.io.File(part("empty")).listFiles()
+      .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+    assert(emptyFiles.length == 1 &&
+      spark.read.parquet(part("empty")).count() == 0)
+    var schemas: Map[String, org.apache.spark.sql.types.StructType] = Map()
+    assert(jobsRunBy {
+      schemas = ix.signed.map(w => w._1 -> ix.signedSchema(1, w._1)).toMap
+    } == 0)
+    ix.signed.foreach { case (w, cols) =>
+      val inferred = spark.read.parquet(part(w)).schema
+      assert(schemas(w) == org.apache.spark.sql.types.StructType(
+        cols.map(inferred(_))), w)
+    }
+    Seq("plain", "parted").foreach { sub =>
+      assert(ix.artifact(1, sub).schema ==
+        spark.read.parquet(ix.path(1, sub)).schema, sub)
+    }
+  }
+
   test("describe reads the version, its committed generations and the " +
     "base and delta bytes per artifact from the filesystem alone") {
     val dir = tmpDir("vidx_describe")
