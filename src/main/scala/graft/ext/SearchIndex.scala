@@ -3,6 +3,7 @@ package graft.ext
 import scala.jdk.CollectionConverters._
 
 import graft.conf.Tuning
+import graft.io.DriverScan
 import graft.io.VersionedIndex.{CommittedFile, Listing}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -246,10 +247,15 @@ object SearchIndex {
         qSchema("term").dataType != StringType) {
       return lazyOut
     }
-    // a local frame collects with no job; null terms match nothing
+    // a frame the driver can read (a local one) is read with no physical
+    // plan or job; null terms match nothing
     val (qi, ti) = (qSchema.fieldIndex("query_id"), qSchema.fieldIndex("term"))
-    lazy val qterms = queryTerms.collect().toSeq
-      .map(r => (r.get(qi), r.getString(ti))).filter(_._2 != null)
+    lazy val qterms = {
+      val toRow = CatalystTypeConverters.createToScalaConverter(qSchema)
+      DriverScan.rows(queryTerms).fold(queryTerms.collect().toSeq)(
+        _.map(toRow(_).asInstanceOf[Row]).toSeq)
+        .map(r => (r.get(qi), r.getString(ti))).filter(_._2 != null)
+    }
     val parts = residentParts(ix, name, listing, idType, readBytes,
       Tuning.smallInputRows(spark, PostingBytes), qterms.map(_._2).distinct)
       .getOrElse(return lazyOut)

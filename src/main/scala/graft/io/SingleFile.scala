@@ -4,9 +4,14 @@ import graft.conf.Tuning
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
 
 /** Single-file output semantics over Spark's directory-style sinks.
   *
@@ -50,13 +55,9 @@ object SingleFile {
       df: DataFrame,
       target: String,
       format: String,
-      options: Map[String, String] = Map.empty): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val targetPath = new Path(target)
-    val f = targetPath.getFileSystem(conf)
-    val tmp = new Path(targetPath.getParent,
-      s".${targetPath.getName}.__tmp__${System.nanoTime()}")
-    try {
+      options: Map[String, String] = Map.empty): Unit =
+    promote(spark, target) { (tmp, conf) =>
+      val f = tmp.getFileSystem(conf)
       val copied = format == "parquet" && options.isEmpty &&
         copyableScan(spark, df, conf).exists { src =>
           val sf = src.getPath.getFileSystem(conf)
@@ -68,6 +69,49 @@ object SingleFile {
       if (!copied)
         df.coalesce(1).write.options(options).format(format)
           .mode("overwrite").save(tmp.toString)
+    }
+
+  /** Write `rows` (of `schema`) as one parquet file at `target` in the
+    * caller's thread, with no Spark job: Spark's own parquet writer
+    * (`ParquetFileFormat.prepareWrite`, then one `OutputWriter`) under
+    * the session's confs, promoted by the same temp-and-rename as
+    * [[write]], so a failed write never leaves a partial target.
+    */
+  def writeParquetRows(
+      spark: SparkSession,
+      rows: Iterator[InternalRow],
+      schema: StructType,
+      target: String): Unit =
+    promote(spark, target) { (tmp, conf) =>
+      val job = Job.getInstance(conf)
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[InternalRow])
+      FileOutputFormat.setOutputPath(job, tmp)
+      val factory =
+        new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0),
+          0))
+      val out = factory.newInstance(
+        new Path(tmp, s"part-00000${factory.getFileExtension(ctx)}").toString,
+        schema, ctx)
+      try rows.foreach(out.write) finally out.close()
+    }
+
+  /** Run `makePart` to make a `part-` file in a temp dir (given with the
+    * session's Hadoop conf), then promote it to `target` (overwriting).
+    * The temp dir lives next to the target so the rename stays within
+    * one filesystem; it is removed whether or not `makePart` succeeds.
+    */
+  private def promote(spark: SparkSession, target: String)(
+      makePart: (Path, Configuration) => Unit): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val targetPath = new Path(target)
+    val f = targetPath.getFileSystem(conf)
+    val tmp = new Path(targetPath.getParent,
+      s".${targetPath.getName}.__tmp__${System.nanoTime()}")
+    try {
+      makePart(tmp, conf)
       val part = f.listStatus(tmp).map(_.getPath)
         .find(p => p.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(

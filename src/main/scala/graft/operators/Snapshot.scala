@@ -2,11 +2,15 @@ package graft.operators
 
 import graft.conf.JobDescription.described
 import graft.conf.Tuning
-import graft.io.{FooterSchema, SingleFile}
+import graft.io.{DriverScan, FooterSchema, SingleFile}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Options for [[Snapshot.snapshotRecords]]
   * (ref: src/etl-utils.ts:258-268 parameter list).
@@ -43,9 +47,21 @@ final case class SnapshotOptions(
   *    [[BucketedSnapshot]]), so a merge shuffles only the delta;
   *    single-file mode is reference parity for small state;
   *  - job budget of a single-file parquet merge below the
-  *    [[graft.conf.Tuning.withSmallInputScope]] gate: ONE Spark job (the
-  *    shuffle and the write). Both reads resolve their schema from the
-  *    footer ([[graft.io.FooterSchema]]) instead of an inference job.
+  *    [[graft.conf.Tuning.withSmallInputScope]] gate: NO Spark job. Both
+  *    sides are read on the driver ([[graft.io.DriverScan]]), keep-last
+  *    runs in a hash map keyed by the PK's `UnsafeRow`, and Spark's own
+  *    parquet writer writes the file in the caller's thread. This holds
+  *    when both sides are driver-readable, every PK type groups by its
+  *    bytes (not float, double or complex) and the rows stay within
+  *    [[graft.conf.Tuning.smallInputRows]]; otherwise the merge is ONE
+  *    job (the shuffle and the write), with nothing written before it.
+  *    Both reads resolve their schema from the footer
+  *    ([[graft.io.FooterSchema]]) instead of an inference job;
+  *  - row order in the written snapshot is not a contract: the driver
+  *    merge keeps the old rows' order and appends new keys, the job
+  *    writes its window's order. Within one side, duplicate PKs resolve
+  *    to the last row read on the driver and to an arbitrary one of them
+  *    in the job (the reference's choice there is engine-arbitrary too).
   */
 object Snapshot {
 
@@ -138,6 +154,69 @@ object Snapshot {
         Export.csvWriteOptions)
     else SingleFile.write(spark, df, path, "parquet")
 
+  /** PK types whose binary equality (of their `UnsafeRow` form) is
+    * Spark's grouping equality: floats (signed zeros, NaNs), complex
+    * types and non-binary collations are grouped by value, not bytes.
+    */
+  private def binaryKey(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+        DateType | TimestampType | TimestampNTZType | BinaryType |
+        _: DecimalType => true
+    case st: StringType => st == StringType
+    case _ => false
+  }
+
+  /** The keep-last merge of `dataC` over `oldC` (the parquet snapshot at
+    * `path`) on the driver, with no Spark job: each side of their
+    * `unionByName` is read through [[graft.io.DriverScan]] (so casts,
+    * null-filled missing columns and widened types are the union's own
+    * Catalyst expressions), keyed by an `UnsafeProjection` of the PK in a
+    * hash map (a fresh row wins, and within one side the last one read),
+    * and written by [[graft.io.SingleFile.writeParquetRows]]. False, with
+    * nothing written, when a side is not driver-readable, a PK type is
+    * not a [[binaryKey]], or the rows would pass
+    * [[graft.conf.Tuning.smallInputRows]] (the old side counted from its
+    * footer before any read, the batch while it is read). The driver
+    * keeps nothing after the call.
+    */
+  private def mergeOnDriver(
+      spark: SparkSession,
+      oldC: DataFrame,
+      dataC: DataFrame,
+      pk: Seq[String],
+      path: String): Boolean = {
+    val union = oldC.unionByName(dataC, allowMissingColumns = true)
+    val plan = union.queryExecution.analyzed
+    val key = union.select(pk.map(col): _*).queryExecution.analyzed
+      .asInstanceOf[Project].projectList
+    val bound = Tuning.smallInputRows(spark,
+      math.max(1L, union.schema.defaultSize.toLong))
+    val sides = plan match {
+      case Union(Seq(o, n), _, _) if key.forall(k => binaryKey(k.dataType)) &&
+          SingleFile.exists(spark, path) &&
+          FooterSchema.rows(spark, Seq(path)).sum <= bound =>
+        for {
+          o <- DriverScan.rows(spark, o)
+          n <- DriverScan.rows(spark, n)
+        } yield (o, n)
+      case _ => None
+    }
+    sides.exists { case (o, n) =>
+      val keyOf = UnsafeProjection.create(key, plan.output)
+      val kept = new java.util.LinkedHashMap[UnsafeRow, UnsafeRow]()
+      var read = 0L
+      val within = (o ++ n).forall { r =>
+        read += 1
+        val row = r.copy()
+        kept.put(keyOf(row).copy(), row)
+        read <= bound
+      }
+      if (within) SingleFile.writeParquetRows(spark,
+        kept.values.iterator.asScala, union.schema, path)
+      within
+    }
+  }
+
   /** M3 orchestration (ref: src/etl-utils.ts:258-355). Returns, per the
     * reference's flag matrix:
     *  - merge path: `justNew ? streamData : merged` (merged re-read from the
@@ -171,13 +250,18 @@ object Snapshot {
                   s"type coercion: ${e.getMessage}", e)
             }
           else (localized, data)
-        val merged = Upsert.keepLast(oldC, dataC, opts.pk)
-        // a single-file merge below the size gate runs its shuffle and
-        // write as one job
+        // below the size gate a single-file parquet merge runs on the
+        // driver; otherwise, or past its row bound, its shuffle and write
+        // run as one job
         val scopeBytes = Tuning.estimatedBytes(old, data)
         try described(spark, s"graft:Snapshot.merge $stream")(
-          Tuning.withSmallInputScope(spark, scopeBytes)(
-            writeSnapshot(spark, merged, path, opts)))
+          Tuning.withSmallInputScope(spark, scopeBytes) {
+            val onDriver = !opts.useCsv &&
+              Tuning.isSmallInput(spark, scopeBytes) &&
+              mergeOnDriver(spark, oldC, dataC, opts.pk, path)
+            if (!onDriver) writeSnapshot(spark,
+              Upsert.keepLast(oldC, dataC, opts.pk), path, opts)
+          })
         catch {
           case e: Exception if opts.coerceTypes => throw new RuntimeException(
             "Snapshot failed while trying to convert field during " +

@@ -3,7 +3,7 @@ package graft.singer
 import graft.catalog.CatalogSchema
 import graft.conf.GluestickConf
 import graft.conf.JobDescription.described
-import graft.io.SingleFile
+import graft.io.{DriverScan, SingleFile}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
@@ -250,9 +250,12 @@ object SingerSink {
     try {
       writer.write(schemaLine(stream, header, options.keys)); writer.write("\n")
       if (options.exact) {
-        // Driver-streamed, one row at a time — ordering-faithful.
-        val it = lines.toLocalIterator()
-        while (it.hasNext) { writer.write(it.next().getString(0)); writer.write("\n") }
+        // Driver-streamed, one row at a time — ordering-faithful. A frame
+        // the driver can read (a local one, or a small file scan under one
+        // projection) runs no job; the same expressions make the lines.
+        DriverScan.rows(lines).map(_.map(_.getUTF8String(0).toString))
+          .getOrElse(lines.toLocalIterator().asScala.map(_.getString(0)))
+          .foreach { line => writer.write(line); writer.write("\n") }
       } else {
         // Scale path: distributed text write, then a driver-side streamed
         // concat of part files (no row ever deserialized on the driver).

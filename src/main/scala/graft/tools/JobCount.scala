@@ -35,9 +35,10 @@ object JobCount {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        val desc = Option(
-          j.properties.getProperty("spark.job.description"))
-          .orElse(Option(j.properties.getProperty("callSite.short")))
+        // properties is null for a job submitted without any
+        val desc = Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))
+            .orElse(Option(p.getProperty("callSite.short"))))
           .getOrElse("")
         jobStart.put(j.jobId, (j.time, desc))
         ()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.conf.GluestickConf
+import graft.conf.{GluestickConf, Tuning}
 import graft.io.{FooterSchema, SingleFile}
 import graft.operators.{Export, ExportOptions, Snapshot, SnapshotOptions}
 import graft.singer.{SingerOptions, SingerSink}
@@ -16,10 +16,11 @@ import java.nio.file.{Files, Paths}
 import scala.util.{Failure, Success, Try}
 
 /** The tenant sync's Spark-job budget: schema resolution runs on the
-  * driver (parquet footer, CSV header line), so `Reader.get` runs no job,
-  * a small keep-last merge runs one, the parquet export of the merged
-  * frame none (a byte copy of the snapshot file) and the Singer write
-  * one, each job described by its operator. The footer-resolved schema
+  * driver (parquet footer, CSV header line), so `Reader.get` runs no job;
+  * below the size gate a small keep-last merge and the Singer write run
+  * on the driver and the parquet export of the merged frame is a byte
+  * copy of the snapshot file, so none of them runs a job. At the gate
+  * each job is described by its operator. The footer-resolved schema
   * must be the one Spark's inference gives, and a copied export must read
   * back as the job's output would.
   */
@@ -152,25 +153,69 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     assert(plain.get.schema == customers.get.schema)
   }
 
-  test("a small snapshot merge runs one job; at the gate it keeps AQE") {
+  test("a small snapshot merge runs no job; at the gate it keeps AQE") {
     val dir = tmpDir("budget_snap")
-    val gate = "spark.graft.smallInput.maxBytes"
     def batch(i: Long) = Seq((1L, s"v$i"), (i + 1, "new")).toDF("id", "v")
     Snapshot.snapshotRecords(spark, Some(batch(1)), "s", dir)
     var merged: Option[DataFrame] = None
     assert(jobsRunBy {
       merged = Snapshot.snapshotRecords(spark, Some(batch(2)), "s", dir)
-    } == 1)
+    } == 0)
     assert(merged.get.as[(Long, String)].collect().toSet ==
       Set((1L, "v2"), (2L, "new"), (3L, "new")))
     assert(jobsRunBy(Snapshot.readSnapshots(spark, "s", dir)) == 0)
-    spark.conf.set(gate, "0")
-    try assert(jobsRunBy(
-      Snapshot.snapshotRecords(spark, Some(batch(3)), "s", dir)) > 1)
-    finally spark.conf.unset(gate)
+    assert(withGate(0L)(jobsRunBy(
+      Snapshot.snapshotRecords(spark, Some(batch(3)), "s", dir))) > 1)
     assert(Snapshot.readSnapshots(spark, "s", dir).get.as[(Long, String)]
       .collect().toSet ==
       Set((1L, "v3"), (2L, "new"), (3L, "new"), (4L, "new")))
+  }
+
+  test("a merge past the driver's row bound runs the one-job path and " +
+      "leaves no partial target") {
+    // 2,000 rows of 28 B (a long and a string at Spark's default sizes)
+    // compress to a few KB of parquet: a gate just above the files' bytes
+    // holds far fewer rows than they do
+    def rows(from: Long, n: Long) = spark.range(from, from + n)
+      .selectExpr("id", "CAST(id % 7 AS STRING) AS v")
+    def parquet(df: DataFrame): DataFrame = {
+      val p = s"${tmpDir("budget_bound_in")}/b.parquet"
+      SingleFile.write(spark, df, p, "parquet")
+      FooterSchema.read(spark, p)
+    }
+    Seq("old side" -> (rows(0, 2000), rows(1990, 20)),
+      "batch" -> (rows(0, 20), rows(10, 2000))).foreach {
+      case (what, (old, fresh)) =>
+        val expected = old.join(fresh, Seq("id"), "left_anti")
+          .union(fresh).as[(Long, String)].collect().toSet
+        def merge(dir: String): Int = {
+          Snapshot.snapshotRecords(spark, Some(old), "s", dir)
+          val batch = parquet(fresh)
+          val gate = Tuning.estimatedBytes(
+            FooterSchema.read(spark, s"$dir/s.snapshot.parquet"), batch) +
+            1024
+          assert(withGate(gate)(Tuning.smallInputRows(spark, 28)) < 2000,
+            what)
+          withGate(gate)(jobsRunBy(
+            Snapshot.snapshotRecords(spark, Some(batch), "s", dir)))
+        }
+        val dir = tmpDir("budget_bound")
+        assert(merge(dir) == 1, what)
+        // no temp dir or partial file left beside the target (the local
+        // filesystem keeps a checksum file next to each file)
+        assert(new java.io.File(dir).list().filterNot(_.endsWith(".crc"))
+          .toSeq == Seq("s.snapshot.parquet"), what)
+        assert(Snapshot.readSnapshots(spark, "s", dir).get.as[(Long, String)]
+          .collect().toSet == expected, what)
+        // the same merge with the rows inside the bound runs no job
+        val roomy = tmpDir("budget_bound_roomy")
+        Snapshot.snapshotRecords(spark, Some(old), "s", roomy)
+        val batch = parquet(fresh)
+        assert(jobsRunBy(
+          Snapshot.snapshotRecords(spark, Some(batch), "s", roomy)) == 0, what)
+        assert(Snapshot.readSnapshots(spark, "s", roomy).get
+          .as[(Long, String)].collect().toSet == expected, what)
+    }
   }
 
   private val noEnv = GluestickConf(Map.empty)
@@ -286,34 +331,50 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("a sync's merge, parquet export and Singer write run 1, 0 and 1 " +
-      "jobs, described by their operators; the caller's description " +
-      "comes back") {
+  test("a sync's merge, parquet export and Singer write run 0, 0 and 0 " +
+      "jobs; at the gate their jobs are described by their operators, the " +
+      "caller's description comes back and the outputs are the same") {
     val (sync, root) = syncFixture()
     val r = new Reader(spark, sync, root)
-    val snap = tmpDir("budget_sync")
-    val out = tmpDir("budget_sync_out")
+    val (snap, snapJob) = (tmpDir("budget_sync"), tmpDir("budget_sync_job"))
+    val (out, outJob) = (tmpDir("budget_sync_out"), tmpDir("budget_sync_oj"))
     val sc = spark.sparkContext
+    def singer(batch: DataFrame, s: String, dir: String): Unit =
+      SingerSink.toSinger(batch, s, dir,
+        SingerOptions(keys = Seq("id"), filename = s"$s.singer"), noEnv)
+    def exportStream(merged: DataFrame, s: String, dir: String): Unit =
+      Export.toExport(merged, s, dir,
+        ExportOptions(exportFormat = Some("parquet")), noEnv)
     Seq("orders", "customers").foreach { s =>
       val batch = r.get(s, ReaderOptions(catalogTypes = true)).get
-      Snapshot.snapshotRecords(spark, Some(batch), s, snap)
+      Seq(snap, snapJob).foreach(d =>
+        Snapshot.snapshotRecords(spark, Some(batch), s, d))
       var merged: DataFrame = null
+      assert(jobsRunBy {
+        merged = Snapshot.snapshotRecords(spark, Some(batch), s, snap).get
+      } == 0)
+      assert(jobsRunBy(exportStream(merged, s, s"$out/export")) == 0)
+      assert(jobsRunBy(singer(batch, s, out)) == 0)
       sc.setJobDescription("caller")
-      try {
+      try withGate(0L) {
+        var mergedJob: DataFrame = null
         assert(jobDescriptions {
-          merged = Snapshot.snapshotRecords(spark, Some(batch), s, snap).get
-        } == Seq(s"graft:Snapshot.merge $s"))
-        assert(jobsRunBy(Export.toExport(merged, s, s"$out/export",
-          ExportOptions(exportFormat = Some("parquet")), noEnv)) == 0)
-        assert(jobDescriptions(SingerSink.toSinger(batch, s, out,
-          SingerOptions(keys = Seq("id"), filename = s"$s.singer"), noEnv)) ==
+          mergedJob =
+            Snapshot.snapshotRecords(spark, Some(batch), s, snapJob).get
+        }.distinct == Seq(s"graft:Snapshot.merge $s"))
+        assert(jobDescriptions(
+          exportStream(mergedJob, s, s"$outJob/export")) ==
+          Seq(s"graft:Export.parquet $s"))
+        assert(jobDescriptions(singer(batch, s, outJob)).distinct ==
           Seq(s"graft:SingerSink.toSinger $s"))
-        assert(withGate(0L)(jobDescriptions(Export.toExport(merged, s,
-          s"$out/export_job", ExportOptions(exportFormat = Some("parquet")),
-          noEnv))) == Seq(s"graft:Export.parquet $s"))
         assert(sc.getLocalProperty("spark.job.description") == "caller")
       } finally sc.setJobDescription(null)
-      sameReadBack(s"$out/export/$s.parquet", s"$out/export_job/$s.parquet")
+      val (a, b) = (spark.read.parquet(s"$out/export/$s.parquet"),
+        spark.read.parquet(s"$outJob/export/$s.parquet"))
+      assert(a.schema == b.schema)
+      assert(a.collect().toSet == b.collect().toSet)
+      assert(SingleFile.readString(spark, s"$out/$s.singer") ==
+        SingleFile.readString(spark, s"$outJob/$s.singer"))
     }
   }
 }
