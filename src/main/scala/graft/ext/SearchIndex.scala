@@ -253,7 +253,7 @@ object SearchIndex {
     lazy val qterms = {
       val toRow = CatalystTypeConverters.createToScalaConverter(qSchema)
       DriverScan.rows(queryTerms).fold(queryTerms.collect().toSeq)(
-        _.map(toRow(_).asInstanceOf[Row]).toSeq)
+        _.read(_.map(toRow(_).asInstanceOf[Row]).toVector))
         .map(r => (r.get(qi), r.getString(ti))).filter(_._2 != null)
     }
     val parts = residentParts(ix, name, listing, idType, readBytes,

@@ -4,10 +4,11 @@ import graft.conf.Tuning
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, SubqueryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression, SubqueryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.storage.graftio.ReaderTask
 import org.apache.spark.sql.types.StructType
 
 /** Reads a small frame's rows on the driver, with no Spark job.
@@ -22,56 +23,76 @@ import org.apache.spark.sql.types.StructType
   * the ones a `toLocalIterator()` of the frame gives; the `Project` is
   * evaluated with `UnsafeProjection`, the same Catalyst expressions the
   * job would run. Anything else returns None, and the caller keeps its
-  * job.
+  * job. A file's reader is opened in a [[ReaderTask]], so a read that
+  * stops early closes it as a task's end would.
   */
 object DriverScan {
 
-  /** The rows of `df`, in its columns' order: each an `UnsafeRow` that
-    * the next call of `next()` may reuse (copy a row to keep it). Files
-    * are opened one at a time as the iterator reaches them.
+  /** The rows of a frame the driver can read, read on demand. */
+  final class Rows private[DriverScan] (
+      spark: SparkSession, open: ReaderTask => Iterator[UnsafeRow]) {
+
+    /** `use` applied to the rows, in the frame's columns' order: each an
+      * `UnsafeRow` that the next call of `next()` may reuse (copy a row to
+      * keep it). Files are opened one at a time as the iterator reaches
+      * them; a file `use` leaves unread (it stops early or throws) is
+      * closed before this returns.
+      */
+    def read[T](use: Iterator[UnsafeRow] => T): T = {
+      val task = new ReaderTask(spark)
+      try use(open(task)) finally task.close()
+    }
+  }
+
+  /** The rows of `df`, or None when the driver cannot read them as the
+    * job would.
     */
-  def rows(df: DataFrame): Option[Iterator[UnsafeRow]] =
-    read(df.sparkSession, df.queryExecution.optimizedPlan)
+  def rows(df: DataFrame): Option[Rows] =
+    plan(df.sparkSession, df.queryExecution.optimizedPlan)
 
   /** [[rows]] of an analyzed plan of `spark` (a child of a union, say). */
-  def rows(spark: SparkSession, analyzed: LogicalPlan)
-      : Option[Iterator[UnsafeRow]] =
-    read(spark, spark.sessionState.executePlan(analyzed).optimizedPlan)
+  def rows(spark: SparkSession, analyzed: LogicalPlan): Option[Rows] =
+    plan(spark, spark.sessionState.executePlan(analyzed).optimizedPlan)
 
-  private def read(spark: SparkSession, plan: LogicalPlan)
-      : Option[Iterator[UnsafeRow]] = {
+  private def plan(spark: SparkSession, plan: LogicalPlan): Option[Rows] = {
     val (exprs, leaf) = plan match {
       case Project(list, child) if list.forall(evaluable) => (list, child)
       case other => (other.output, other)
     }
     val refs = AttributeSet(exprs)
     // the leaf's rows and the attributes they hold
-    val raw = leaf match {
-      case l: LocalRelation if !l.isStreaming =>
-        Some(l.data.iterator -> l.output)
-      case l: LogicalRelation if !l.isStreaming &&
-          refs.subsetOf(AttributeSet(l.output)) => l.relation match {
-        case h: HadoopFsRelation
-            if h.partitionSchema.isEmpty && h.bucketSpec.isEmpty =>
-          val input = l.output.filter(refs.contains)
-          scan(spark, h, StructType(input.map(a => h.dataSchema(a.name))))
-            .map(_ -> input)
+    val raw: Option[(ReaderTask => Iterator[InternalRow], Seq[Attribute])] =
+      leaf match {
+        case l: LocalRelation if !l.isStreaming =>
+          Some(((_: ReaderTask) => l.data.iterator) -> l.output)
+        case l: LogicalRelation if !l.isStreaming &&
+            refs.subsetOf(AttributeSet(l.output)) => l.relation match {
+          case h: HadoopFsRelation
+              if h.partitionSchema.isEmpty && h.bucketSpec.isEmpty =>
+            val input = l.output.filter(refs.contains)
+            scan(spark, h, StructType(input.map(a => h.dataSchema(a.name))))
+              .map(_ -> input)
+          case _ => None
+        }
         case _ => None
       }
-      case _ => None
-    }
     raw.map { case (it, input) =>
-      val project = UnsafeProjection.create(exprs, input)
-      it.map(project(_))
+      new Rows(spark, task => {
+        val project = UnsafeProjection.create(exprs, input)
+        it(task).map(project(_))
+      })
     }
   }
 
   private def evaluable(e: Expression): Boolean =
     e.deterministic && !SubqueryExpression.hasSubquery(e)
 
-  /** The `required` columns of `h`'s files, as Spark's scan reads them. */
+  /** The `required` columns of `h`'s files, as Spark's scan reads them,
+    * each file opened in the given task.
+    */
   private def scan(spark: SparkSession, h: HadoopFsRelation,
-      required: StructType): Option[Iterator[InternalRow]] = {
+      required: StructType)
+      : Option[ReaderTask => Iterator[InternalRow]] = {
     val dirs = h.location.listFiles(Nil, Nil)
     val files = dirs.flatMap(_.files)
     if (!Tuning.isSmallInput(spark, files.map(_.getLen).sum)) None
@@ -86,7 +107,7 @@ object DriverScan {
         h.dataSchema, new StructType(), required, Nil,
         h.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConfWithOptions(h.options))
-      Some(splits.iterator.flatMap(read))
+      Some(task => splits.iterator.flatMap(s => task.open(read(s))))
     }
   }
 }

@@ -51,9 +51,10 @@ final case class SnapshotOptions(
   *    sides are read on the driver ([[graft.io.DriverScan]]), keep-last
   *    runs in a hash map keyed by the PK's `UnsafeRow`, and Spark's own
   *    parquet writer writes the file in the caller's thread. This holds
-  *    when both sides are driver-readable, every PK type groups by its
-  *    bytes (not float, double or complex) and the rows stay within
-  *    [[graft.conf.Tuning.smallInputRows]]; otherwise the merge is ONE
+  *    when the PK is not empty, both sides are driver-readable, every PK
+  *    type groups by its bytes (not float, double or complex) and the
+  *    rows, keys and map entries held stay below the gate's bytes
+  *    ([[graft.conf.Tuning.smallInputRows]]); otherwise the merge is ONE
   *    job (the shuffle and the write), with nothing written before it.
   *    Both reads resolve their schema from the footer
   *    ([[graft.io.FooterSchema]]) instead of an inference job;
@@ -166,6 +167,12 @@ object Snapshot {
     case _ => false
   }
 
+  /** Bytes an entry of the driver merge's map holds besides its two rows'
+    * data: the map entry, two `UnsafeRow` objects and their byte arrays'
+    * headers (compressed pointers), and its slot in the table.
+    */
+  private val EntryBytes = 160L
+
   /** The keep-last merge of `dataC` over `oldC` (the parquet snapshot at
     * `path`) on the driver, with no Spark job: each side of their
     * `unionByName` is read through [[graft.io.DriverScan]] (so casts,
@@ -173,11 +180,13 @@ object Snapshot {
     * Catalyst expressions), keyed by an `UnsafeProjection` of the PK in a
     * hash map (a fresh row wins, and within one side the last one read),
     * and written by [[graft.io.SingleFile.writeParquetRows]]. False, with
-    * nothing written, when a side is not driver-readable, a PK type is
-    * not a [[binaryKey]], or the rows would pass
-    * [[graft.conf.Tuning.smallInputRows]] (the old side counted from its
-    * footer before any read, the batch while it is read). The driver
-    * keeps nothing after the call.
+    * nothing written, when the PK is empty, a side is not
+    * driver-readable, a PK type is not a [[binaryKey]], or the map would
+    * hold more bytes than the size gate
+    * ([[graft.conf.Tuning.smallInputRows]]): its rows, keys and entries,
+    * counted as they are inserted, after the old side's footer row count
+    * at the least bytes an entry holds is checked before any read. The
+    * driver keeps nothing after the call.
     */
   private def mergeOnDriver(
       spark: SparkSession,
@@ -189,12 +198,17 @@ object Snapshot {
     val plan = union.queryExecution.analyzed
     val key = union.select(pk.map(col): _*).queryExecution.analyzed
       .asInstanceOf[Project].projectList
-    val bound = Tuning.smallInputRows(spark,
-      math.max(1L, union.schema.defaultSize.toLong))
+    val heldMax = Tuning.smallInputRows(spark, 1L) // bytes below the gate
+    def fixedBytes(fields: Int) =
+      UnsafeRow.calculateBitSetWidthInBytes(fields) + 8L * fields
+    val leastEntry =
+      EntryBytes + fixedBytes(plan.output.size) + fixedBytes(key.size)
     val sides = plan match {
-      case Union(Seq(o, n), _, _) if key.forall(k => binaryKey(k.dataType)) &&
+      case Union(Seq(o, n), _, _) if key.nonEmpty &&
+          key.forall(k => binaryKey(k.dataType)) &&
           SingleFile.exists(spark, path) &&
-          FooterSchema.rows(spark, Seq(path)).sum <= bound =>
+          FooterSchema.rows(spark, Seq(path)).sum <=
+            Tuning.smallInputRows(spark, leastEntry) =>
         for {
           o <- DriverScan.rows(spark, o)
           n <- DriverScan.rows(spark, n)
@@ -204,13 +218,16 @@ object Snapshot {
     sides.exists { case (o, n) =>
       val keyOf = UnsafeProjection.create(key, plan.output)
       val kept = new java.util.LinkedHashMap[UnsafeRow, UnsafeRow]()
-      var read = 0L
-      val within = (o ++ n).forall { r =>
-        read += 1
+      var held = 0L
+      val within = o.read(old => n.read(fresh => (old ++ fresh).forall { r =>
         val row = r.copy()
-        kept.put(keyOf(row).copy(), row)
-        read <= bound
-      }
+        val k = keyOf(row).copy()
+        val prev = kept.put(k, row)
+        held += row.getSizeInBytes +
+          (if (prev == null) k.getSizeInBytes + EntryBytes
+           else -prev.getSizeInBytes)
+        held <= heldMax
+      }))
       if (within) SingleFile.writeParquetRows(spark,
         kept.values.iterator.asScala, union.schema, path)
       within

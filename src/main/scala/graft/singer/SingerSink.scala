@@ -253,9 +253,13 @@ object SingerSink {
         // Driver-streamed, one row at a time — ordering-faithful. A frame
         // the driver can read (a local one, or a small file scan under one
         // projection) runs no job; the same expressions make the lines.
-        DriverScan.rows(lines).map(_.map(_.getUTF8String(0).toString))
-          .getOrElse(lines.toLocalIterator().asScala.map(_.getString(0)))
-          .foreach { line => writer.write(line); writer.write("\n") }
+        def put(line: String): Unit = { writer.write(line); writer.write("\n") }
+        DriverScan.rows(lines) match {
+          case Some(rows) =>
+            rows.read(_.foreach(r => put(r.getUTF8String(0).toString)))
+          case None =>
+            lines.toLocalIterator().asScala.foreach(r => put(r.getString(0)))
+        }
       } else {
         // Scale path: distributed text write, then a driver-side streamed
         // concat of part files (no row ever deserialized on the driver).

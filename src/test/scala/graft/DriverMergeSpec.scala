@@ -192,6 +192,19 @@ class DriverMergeSpec extends AnyFunSuite with SparkSpec {
       .collect().toSet == Set((0.5, "a"), (1.5, "c"), (2.5, "d")))
   }
 
+  test("an empty PK fails below the gate as at it, and leaves the " +
+      "snapshot as it was") {
+    val dir = tmpDir("drv_nopk")
+    Snapshot.snapshotRecords(spark,
+      Some(Seq((1L, "a"), (2L, "b")).toDF("id", "v")), "t", dir)
+    val e = intercept[IllegalArgumentException](Snapshot.snapshotRecords(
+      spark, Some(Seq((3L, "c")).toDF("id", "v")), "t", dir,
+      SnapshotOptions(pk = Nil)))
+    assert(e.getMessage.contains("primary-key"))
+    assert(Snapshot.readSnapshots(spark, "t", dir).get.as[(Long, String)]
+      .collect().toSet == Set((1L, "a"), (2L, "b")))
+  }
+
   test("duplicate PKs within one side resolve to one row of the winning " +
       "side, the last one read on the driver") {
     val old = Seq((1L, "o1"), (1L, "o2"), (3L, "o3"), (3L, "o4"))
@@ -237,9 +250,44 @@ class DriverMergeSpec extends AnyFunSuite with SparkSpec {
         val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToScalaConverter(df.schema)
         rows = DriverScan.rows(df).get
-          .map(r => conv(r).asInstanceOf[Row]).toSeq
+          .read(_.map(r => conv(r).asInstanceOf[Row]).toVector)
       } == 0, what)
       assert(rows == df.toLocalIterator().asScala.toSeq, what)
+    }
+  }
+
+  test("a DriverScan read that stops early or throws closes the file it " +
+      "was reading") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs the process's open descriptors listed")
+    def opened(path: String): Boolean = {
+      val abs = new java.io.File(path).getCanonicalPath
+      Option(fds.listFiles()).toSeq.flatten.exists { fd =>
+        scala.util.Try(java.nio.file.Files.readSymbolicLink(fd.toPath))
+          .toOption.exists(_.toString.startsWith(abs))
+      }
+    }
+    val dir = tmpDir("drv_close")
+    val rows = spark.range(0, 5000).selectExpr("id", "CAST(id AS STRING) v")
+    val pq = s"$dir/t.parquet"
+    SingleFile.write(spark, rows, pq, "parquet")
+    val csv = s"$dir/t.csv"
+    rows.coalesce(1).write.option("header", "true").csv(csv)
+    Seq(pq -> FooterSchema.read(spark, pq),
+      csv -> spark.read.schema("id LONG, v STRING").option("header", "true")
+        .csv(csv)).foreach { case (path, df) =>
+      val scan = DriverScan.rows(df).get
+      assert(scan.read { it =>
+        it.next()
+        opened(path) // the reader is open while it is read
+      }, path)
+      assert(!opened(path), path)
+      intercept[IllegalStateException](scan.read { it =>
+        it.next()
+        throw new IllegalStateException("stop")
+      })
+      assert(!opened(path), path)
+      assert(scan.read(_.size) == 5000, path)
     }
   }
 

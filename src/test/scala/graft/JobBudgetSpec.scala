@@ -171,11 +171,12 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
       Set((1L, "v3"), (2L, "new"), (3L, "new"), (4L, "new")))
   }
 
-  test("a merge past the driver's row bound runs the one-job path and " +
+  test("a merge past the driver's byte bound runs the one-job path and " +
       "leaves no partial target") {
-    // 2,000 rows of 28 B (a long and a string at Spark's default sizes)
-    // compress to a few KB of parquet: a gate just above the files' bytes
-    // holds far fewer rows than they do
+    // on the driver each of 2,000 rows of a long and a short string holds
+    // at least 48 B (a 32 B row and its 16 B key, before the map's own
+    // objects), but they compress to a few KB of parquet: a gate just
+    // above the files' bytes holds far fewer rows than they are
     def rows(from: Long, n: Long) = spark.range(from, from + n)
       .selectExpr("id", "CAST(id % 7 AS STRING) AS v")
     def parquet(df: DataFrame): DataFrame = {
@@ -194,8 +195,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
           val gate = Tuning.estimatedBytes(
             FooterSchema.read(spark, s"$dir/s.snapshot.parquet"), batch) +
             1024
-          assert(withGate(gate)(Tuning.smallInputRows(spark, 28)) < 2000,
-            what)
+          assert(gate < 2000 * 48, what)
           withGate(gate)(jobsRunBy(
             Snapshot.snapshotRecords(spark, Some(batch), "s", dir)))
         }
