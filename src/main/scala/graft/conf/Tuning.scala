@@ -93,11 +93,14 @@ object Tuning {
     * `spark.graft.smallInput.maxBytes` (default 64 MiB). With
     * [[smallInputRows]], the one place that key is read —
     * [[withSmallInputScope]] and the operators that
-    * switch to a driver-local algorithm below the gate
-    * (`Clusters.connectedComponents`, `ClusterIndex.fold`,
-    * `DedupIndex.fold`/`pairsAgainst`, and `SearchIndex.topK`, whose
-    * driver-resident postings hold at most [[smallInputRows]] rows)
-    * decide alike.
+    * switch to a driver-local algorithm below the gate decide alike:
+    * `Clusters.connectedComponents`; the three ingest folds
+    * `DedupIndex.fold` (and `pairsAgainst`), `ClusterIndex.fold` and
+    * `SearchIndex.fold`, which read their batch with
+    * `io.DriverScan.local` and sign, match, label and write on the
+    * driver; `SearchIndex.topK`, whose driver-resident postings hold at
+    * most [[smallInputRows]] rows; and the single-file parquet
+    * keep-last merge and Singer exact mode, read through `io.DriverScan`.
     */
   def isSmallInput(spark: SparkSession, bytes: Long): Boolean =
     bytes < smallInputMaxBytes(spark)

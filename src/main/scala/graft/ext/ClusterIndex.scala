@@ -1,10 +1,13 @@
 package graft.ext
 
 import graft.conf.Tuning
+import graft.io.{DriverScan, SingleFile}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Persisted, incrementally-maintained dedup-CLUSTER labels — the third
   * stage of the maintained dedup pipeline and the artifact form of
@@ -113,7 +116,7 @@ object ClusterIndex {
   /** The CHANGED labels a batch of fresh pairs implies against prior
     * labels, computed with the distributed [[Clusters.connectedComponents]]
     * rounds — [[fold]]'s path at or above the size gate
-    * ([[changedLabelsLocal]] is the driver-local twin below it). Output:
+    * ([[foldOnDriver]] is the driver twin below it). Output:
     * (node, cluster_id) rows for exactly the nodes whose label changes
     * (including fresh nodes' first labels), plus the cache handle of the
     * mapped-edge CC output so the caller can unpersist it, and release
@@ -157,45 +160,59 @@ object ClusterIndex {
     (relabeled.unionByName(freshFirst), Seq(cc))
   }
 
-  /** [[changedLabels]] solved on the driver, for a batch below the size
-    * gate. One collect reads the fresh pairs with their endpoints' prior
-    * labels (`prior` joined once; a null label marks an unseen node); a
-    * union-find ([[Clusters.minRoots]]) solves the `coalesce(rep, id)`
-    * edges; the result reads `prior` only for the members of components
-    * whose root moved, joined to that small `rep → new_root` map, plus
-    * the fresh nodes' first labels — both maps are `LocalRelation`s, so
-    * the caller's write of the result is one job. The shuffled-hash hints
-    * keep either small side from being broadcast, which would cost a job.
+  /** [[changedLabels]] solved by the driver with no Spark job, for the
+    * rows of `edges` (`id_a`, `id_b` of type `dt`, readable by
+    * [[DriverScan]]), written as the one file of the delta dir `out`.
+    * The committed labels of version `v` are read keep-last by generation
+    * (one [[DriverScan]] read per generation, base first), the edges
+    * mapped to their endpoints' representatives and solved by
+    * [[Clusters.minRoots]]; the changed labels are the members of every
+    * stored component whose root moved, plus the fresh nodes' first
+    * labels. False, with nothing written, when a generation's files are
+    * not readable on the driver or the labels held pass the gate's row
+    * bound at [[Clusters.EdgeBytes]] each.
     */
-  private def changedLabelsLocal(
-      fresh: DataFrame, prior: DataFrame): DataFrame = {
-    val spark = prior.sparkSession
-    val dt = prior.schema("cluster_id").dataType
-    val ends = fresh
-      .select(col("id_a").cast(dt).as("id_a"),
-        col("id_b").cast(dt).as("id_b"))
-      .withColumn("node", explode(array(col("id_a"), col("id_b"))))
-      .join(prior.hint("shuffle_hash"), Seq("node"), "left")
-      .select("id_a", "id_b", "node", "cluster_id")
-      .collect()
-    val label = ends.iterator.filterNot(_.isNullAt(3))
-      .map(r => r.get(2) -> r.get(3)).toMap
-    def rep(x: Any): Any = label.getOrElse(x, x)
-    val roots = Clusters.minRoots(
-      ends.iterator.map(r => (rep(r.get(0)), rep(r.get(1)))), dt)
-    val moved = label.values.toSet[Any]
-      .flatMap(r => roots.get(r).filter(_ != r).map(r -> _))
-    val firsts = ends.iterator.map(_.get(2))
-      .filter(n => n != null && !label.contains(n))
-      .flatMap(n => roots.get(n).map(n -> _)).toMap
-    val freshFirst =
-      Clusters.localFrame(spark, dt, firsts, "node", "cluster_id")
-    if (moved.isEmpty) freshFirst
-    else prior
-      .join(Clusters.localFrame(spark, dt, moved, "rep", "new_root")
-        .hint("shuffle_hash"), col("cluster_id") === col("rep"))
-      .select(col("node"), col("new_root").as("cluster_id"))
-      .unionByName(freshFirst)
+  private def foldOnDriver(
+      ix: graft.io.VersionedIndex, v: Int, edges: DataFrame, dt: DataType,
+      out: String): Boolean = {
+    val spark = ix.spark
+    val maxRows = Tuning.smallInputRows(spark, Clusters.EdgeBytes)
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    def value(r: InternalRow, i: Int): Any =
+      if (r.isNullAt(i)) null else toScala(r.get(i, dt))
+    val label = collection.mutable.HashMap.empty[Any, Any]
+    val stored = (0L +: ix.committedFolds(v)).forall(g =>
+      DriverScan.rows(labelsAt(ix, v, g).select("node", "cluster_id"))
+        .exists(_.read(_.forall { r =>
+          label(value(r, 0)) = value(r, 1)
+          label.size <= maxRows
+        })))
+    val fresh = DriverScan.rows(edges).filter(_ => stored)
+      .map(_.read(_.map(r => (value(r, 0), value(r, 1))).toVector))
+    fresh.foreach { pairs =>
+      def rep(x: Any): Any = label.getOrElse(x, x)
+      val roots = Clusters.minRoots(
+        pairs.iterator.map { case (a, b) => (rep(a), rep(b)) }, dt)
+      val moved = roots.filter { case (r, root) =>
+        root != r && label.get(r).contains(r)
+      }
+      val relabeled = label.iterator.flatMap { case (n, c) =>
+        moved.get(c).map(n -> _)
+      }
+      val firsts = pairs.iterator.flatMap { case (a, b) => Iterator(a, b) }
+        .filter(n => n != null && !label.contains(n))
+        .flatMap(n => roots.get(n).map(n -> _))
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+      val changed = (relabeled ++ firsts).toMap
+      SingleFile.delete(spark, out)
+      SingleFile.writeParquetRows(spark,
+        changed.iterator.map { case (n, c) =>
+          InternalRow(toCatalyst(n), toCatalyst(c))
+        },
+        labelsAt(ix, v, 0L).select("node", "cluster_id").schema,
+        s"$out/part-00000-${java.util.UUID.randomUUID}.parquet")
+    }
+    fresh.isDefined
   }
 
   /** Fold a batch of fresh near-dup pairs (columns `id_a`, `id_b` — a
@@ -206,10 +223,12 @@ object ClusterIndex {
     * `generation` is the caller's batch identity: a committed
     * generation replays its stored delta without writing.
     *
-    * Below the size gate (the measured pair count at
-    * [[Clusters.EdgeBytes]] each) a fold runs three jobs: the pairs'
-    * checkpoint, one collect ([[changedLabelsLocal]]) and the delta
-    * write. At or above it the distributed [[changedLabels]] runs.
+    * Below the size gate a fold runs no job for pairs the driver can
+    * read (a [[DedupIndex.fold]] result below the gate is local) and one,
+    * the bounded collect of [[DriverScan.local]], for any other: the
+    * driver reads the labels, solves and writes the delta
+    * ([[foldOnDriver]]). At or above the gate the pairs are checkpointed
+    * and the distributed [[changedLabels]] runs.
     */
   def fold(
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
@@ -220,39 +239,31 @@ object ClusterIndex {
       graft.io.VersionedIndex.described(spark, "ClusterIndex.fold", name, v,
         Some(g))(body)
     val g = ix.fold(v, generation) { g => described(g) {
-      // r10 two-phase fold (guide §8's decide-with-small-rows
-      // discipline): the caller's fresh frame is typically an
-      // UNMATERIALIZED index-fold result (bands join + exact verify over a
-      // shingle-exploded working set) — materialize it FIRST, eagerly and
-      // UNSCOPED, so the heavy verify keeps its parallelism, counting the
-      // pairs on the same action via observe(). Everything after is label
-      // algebra over that measured pair count: below the gate it is solved
-      // on the driver between one collect and the delta write; above it
-      // the prior resolve, endpoint mapping, CC rounds over |batch| edges
-      // and the delta write run under the size-gated fixed-cost scope
-      // (a TB-scale fold exceeds the gate and keeps AQE).
-      val obs = org.apache.spark.sql.Observation()
-      val freshCk = fresh.select("id_a", "id_b")
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val nPairs = obs.get("n").asInstanceOf[Long]
       val out = s"${ix.delta(v, g)}/labels"
-      val prior = resolved(ix, v)
-      val bytes = nPairs * Clusters.EdgeBytes
-      val local = Tuning.isSmallInput(spark, bytes) &&
-        Clusters.driverSolvable(prior.schema("cluster_id").dataType)
-      // the write is the last action over the checkpointed pairs (and,
-      // above the gate, the cached frames) — release them all afterwards
-      // (the returned frame reads the written delta) so a long-lived
-      // session calling fold() repeatedly doesn't accumulate blocks
-      try {
-        if (local) Tuning.withSmallInputScope(spark, bytes) {
-          // one file: the delta is below the gate, and every later
-          // resolve opens each of its files
-          changedLabelsLocal(freshCk, prior).coalesce(1)
-            .write.mode("overwrite").parquet(out)
-        }
-        else Tuning.withSmallInputScope(spark, nPairs * 32L) {
+      val dt = labelsAt(ix, v, 0L).schema("cluster_id").dataType
+      val onDriver = Clusters.driverSolvable(dt) &&
+        DriverScan.local(fresh.select(col("id_a").cast(dt).as("id_a"),
+          col("id_b").cast(dt).as("id_b")))
+          .exists(foldOnDriver(ix, v, _, dt, out))
+      // above the gate the caller's fresh frame is typically an
+      // UNMATERIALIZED index-fold result (bands join + exact verify over
+      // a shingle-exploded working set) — materialize it FIRST, eagerly
+      // and UNSCOPED, so the heavy verify keeps its parallelism, counting
+      // the pairs on the same action via observe(). The prior resolve,
+      // endpoint mapping, CC rounds over |batch| edges and the delta
+      // write then run under the size-gated fixed-cost scope.
+      if (!onDriver) {
+        val obs = org.apache.spark.sql.Observation()
+        val freshCk = fresh.select("id_a", "id_b")
+          .observe(obs, count(lit(1)).as("n"))
+          .localCheckpoint()
+        val nPairs = obs.get("n").asInstanceOf[Long]
+        val prior = resolved(ix, v)
+        // the write is the last action over the checkpointed pairs and
+        // the cached frames — release them all afterwards (the returned
+        // frame reads the written delta) so a long-lived session calling
+        // fold() repeatedly doesn't accumulate blocks
+        try Tuning.withSmallInputScope(spark, nPairs * 32L) {
           // persist (not eager checkpoint): prior is referenced four ways
           // in changedLabels; the write action below materializes the
           // cache once
@@ -264,8 +275,8 @@ object ClusterIndex {
             // the CC rounds' final checkpoint backs the cached output
             graft.io.VersionedIndex.releaseCheckpoint(handles: _*)
           }
-        }
-      } finally graft.io.VersionedIndex.releaseCheckpoint(freshCk)
+        } finally graft.io.VersionedIndex.releaseCheckpoint(freshCk)
+      }
     }}
     described(g)(labelsAt(ix, v, g))
   }

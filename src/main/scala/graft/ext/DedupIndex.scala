@@ -1,13 +1,16 @@
 package graft.ext
 
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable
 
 import graft.conf.Tuning
-import graft.io.VersionedIndex.releaseCheckpoint
+import graft.io.DriverScan
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Persisted, incrementally-maintained MinHash-LSH dedup index — the
   * artifact form of [[Dedup.minhashNearDupPairsIncremental]]. That
@@ -110,23 +113,73 @@ object DedupIndex {
   private def signAndBand(
       docs: DataFrame, idCol: String, textCol: String, k: Int,
       numHashes: Int, bandRows: Int): (DataFrame, DataFrame) = {
-    val numBands = numHashes / bandRows
     // persisted (r9): sets and bands are materialized by SEPARATE write
     // actions at build/fold — without the cache the bands write re-runs
     // the whole fused shingle + minhash pass
     val sets = Dedup.withShingleHashSets(docs, idCol, textCol, k).persist()
-    val bands = sets
-      .select(col("doc_id"),
-        expr(s"graft_minhash(hsh, $numHashes)").as("sig"))
-      .select(
-        col("doc_id"),
-        posexplode(expr(
-          s"transform(sequence(0, ${numBands - 1}), b -> concat_ws(':', " +
-            s"transform(slice(sig, b * $bandRows + 1, $bandRows), " +
-            "x -> CAST(x AS STRING))))"))
-          .as(Seq("band", "bucket")))
-    (sets, bands)
+    (sets, bandsOf(sets, numHashes, bandRows))
   }
+
+  /** `sets` with the minhash signature `sig` of each `hsh`. */
+  private def withSig(sets: DataFrame, numHashes: Int): DataFrame =
+    sets.select(col("doc_id"), col("hsh"),
+      expr(s"graft_minhash(hsh, $numHashes)").as("sig"))
+
+  /** The bucket array of a `sig` column: band b's bucket is its
+    * `bandRows` minhash values joined by ':'.
+    */
+  private def buckets(numHashes: Int, bandRows: Int): Column = expr(
+    s"transform(sequence(0, ${numHashes / bandRows - 1}), b -> " +
+      s"concat_ws(':', transform(slice(sig, b * $bandRows + 1, $bandRows), " +
+      "x -> CAST(x AS STRING))))")
+
+  /** (doc_id, band, bucket) of `sets`: the [[buckets]] array exploded by
+    * position.
+    */
+  private def bandsOf(
+      sets: DataFrame, numHashes: Int, bandRows: Int): DataFrame =
+    withSig(sets, numHashes).select(col("doc_id"),
+      posexplode(buckets(numHashes, bandRows)).as(Seq("band", "bucket")))
+
+  /** [[signAndBand]] run by the driver for `docs` over a `LocalRelation`
+    * (no job): Catalyst's `ConvertToLocalRelation` folds the same fused
+    * exprs and the [[buckets]] array, [[DriverScan]] reads them, and each
+    * doc's bands are its buckets' positions. The (sets, bands) come back
+    * over `LocalRelation`s with [[signAndBand]]'s schemas; None when the
+    * projection is not readable on the driver.
+    */
+  private def signOnDriver(
+      docs: DataFrame, idCol: String, textCol: String, k: Int,
+      numHashes: Int, bandRows: Int): Option[(DataFrame, DataFrame)] = {
+    val sets = Dedup.withShingleHashSets(docs, idCol, textCol, k)
+    val bands = bandsOf(sets, numHashes, bandRows)
+    val idType = sets.schema("doc_id").dataType
+    DriverScan.rows(withSig(sets, numHashes).select(col("doc_id"),
+        col("hsh"), buckets(numHashes, bandRows).as("buckets")))
+      .map(_.read { it =>
+        val setRows = Vector.newBuilder[InternalRow]
+        val bandOut = Vector.newBuilder[InternalRow]
+        it.foreach { r =>
+          val row = r.copy()
+          val id = idOf(row, idType)
+          setRows += InternalRow(id, row.getArray(1))
+          val bs = row.getArray(2)
+          (0 until bs.numElements).foreach(b =>
+            bandOut += InternalRow(id, b, bs.getUTF8String(b)))
+        }
+        val spark = docs.sparkSession
+        (DriverScan.frame(spark, sets.schema, setRows.result()),
+          DriverScan.frame(spark, bands.schema, bandOut.result()))
+      })
+  }
+
+  /** Column 0 of `r`, a `dt` id, copied out of a row that may be reused. */
+  private def idOf(r: InternalRow, dt: DataType): Any =
+    if (r.isNullAt(0)) null
+    else r.get(0, dt) match {
+      case s: UTF8String => s.clone()
+      case x => x
+    }
 
   /** Write the params and the (sets, bands) sign table of (unpublished)
     * version `version` — r10: both artifacts in ONE write action.
@@ -204,19 +257,12 @@ object DedupIndex {
   private val pairsSchemas =
     new java.util.concurrent.ConcurrentHashMap[Seq[StructType], StructType]()
 
-  /** [[pairsOf]] under the size gate, decided in two steps. When the
-    * sets and bands it reads are below the gate, one job collects the
-    * band matches, at most as many as stay below the gate at
-    * [[Clusters.EdgeBytes]] each. When they fit, a second job collects
-    * the candidates' own sets (an `InSet` filter on their ids: a subset
-    * of the sets just measured), the exact Jaccard runs on the driver
-    * (`hsh` is a distinct set, so `|A ∩ B|` is the overlap join's count),
-    * and the qualifying pairs come back as a `LocalRelation` with
-    * [[pairsOf]]'s schema: two jobs, nothing persisted. Above either
-    * gate, or for ids whose external values do not compare like Spark's
-    * `=` ([[Clusters.driverSolvable]]), the lazy [[pairsOf]] plan is
-    * returned. The shuffled-hash hint keeps the fresh bands from being
-    * broadcast, which costs a job with AQE off.
+  /** [[pairsOf]] under the size gate. When the four frames are below it,
+    * [[DriverScan]] reads them and their ids are a type whose values
+    * compare like Spark's `=` ([[Clusters.driverSolvable]]), the driver
+    * computes the pairs with no job ([[pairsOnDriver]]) and returns them
+    * as a `LocalRelation` with [[pairsOf]]'s schema. Otherwise, or past
+    * the band-match bound, the lazy [[pairsOf]] plan is returned.
     */
   private def gatedPairs(
       setsI: DataFrame, bandsI: DataFrame, priorSets: DataFrame,
@@ -225,52 +271,115 @@ object DedupIndex {
     val spark = setsI.sparkSession
     lazy val lazyPairs = pairsOf(setsI, bandsI, priorSets, priorBands,
       thresholdNum, thresholdDen)
-    val readBytes = Tuning.estimatedBytes(setsI, bandsI, priorSets, priorBands)
-    if (!Tuning.isSmallInput(spark, readBytes) ||
-        !Clusters.driverSolvable(bandsI.schema("doc_id").dataType)) {
-      return lazyPairs
+    val frames = Seq(setsI, bandsI, priorSets, priorBands)
+    val idType = bandsI.schema("doc_id").dataType
+    val readable =
+      if (!Tuning.isSmallInput(spark, Tuning.estimatedBytes(frames: _*)) ||
+          !Clusters.driverSolvable(idType)) Nil
+      else frames.flatMap(DriverScan.rows)
+    val pairs = readable match {
+      case Seq(si, bi, ps, pb) => pairsOnDriver(si, bi, ps, pb, idType,
+        Tuning.smallInputRows(spark, Clusters.EdgeBytes))
+      case _ => None
     }
-    val maxRows = Tuning.smallInputRows(spark, Clusters.EdgeBytes)
-    val matches = Tuning.withSmallInputScope(spark, readBytes) {
-      bandMatches(bandsI.hint("shuffle_hash"), priorBands)
-        .limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1).collect()
+    pairs.fold(lazyPairs) { ps =>
+      val schema = pairsSchemas.computeIfAbsent(frames.map(_.schema),
+        _ => lazyPairs.schema)
+      val qualifying = ps.collect {
+        case (a, b, inter, union)
+            if inter * thresholdDen >= union * thresholdNum =>
+          InternalRow.fromSeq(schema.fieldNames.toSeq.map(Map("id_a" -> a,
+            "id_b" -> b, "inter_size" -> inter, "union_size" -> union)))
+      }
+      DriverScan.frame(spark, schema, qualifying)
     }
-    if (matches.length > maxRows) return lazyPairs
-    val cands = matches.iterator.map(r => (r.get(0), r.get(1))).toSet
-    val sets = priorSets.unionByName(setsI)
-      .filter(col("doc_id").isInCollection(
-        cands.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet))
-      .collect().iterator.map(r => r.get(0) -> r.getSeq[Long](1).toSet)
-      .toMap
-    val schema = pairsSchemas.computeIfAbsent(
-      Seq(setsI, bandsI, priorSets, priorBands).map(_.schema),
-      _ => lazyPairs.schema)
-    val out = for {
-      (ida, idb) <- cands.toSeq
-      a <- sets.get(ida)
-      b <- sets.get(idb)
-      inter = a.count(b).toLong
-      union = a.size + b.size - inter
-      if inter * thresholdDen >= union * thresholdNum
-    } yield Row.fromSeq(schema.fieldNames.toSeq.map(Map("id_a" -> ida,
-      "id_b" -> idb, "inter_size" -> inter, "union_size" -> union)))
-    spark.createDataFrame(out.asJava, schema)
+  }
+
+  /** The candidate pairs of [[pairsOf]] with their exact (intersection,
+    * union) sizes, computed by the driver from the rows of the fresh and
+    * prior (sets, bands). The fresh (band, bucket) keys go into one hash
+    * map per band; every prior and fresh band row probes it, and each
+    * match of two distinct ids is a candidate in canonical order (Spark's
+    * ordering for `idType`, as `least`/`greatest`). Only the candidates'
+    * sets are then kept, sorted, and intersected by a merge (`hsh` is a
+    * distinct set). None once the band matches, counted one per shared
+    * band as the lazy join emits them, pass `maxMatches`.
+    */
+  private def pairsOnDriver(
+      setsI: DriverScan.Rows, bandsI: DriverScan.Rows,
+      priorSets: DriverScan.Rows, priorBands: DriverScan.Rows,
+      idType: DataType,
+      maxMatches: Long): Option[Seq[(Any, Any, Long, Long)]] = {
+    val ord = PhysicalDataType.ordering(idType)
+    val fresh =
+      mutable.HashMap.empty[Int, mutable.HashMap[UTF8String, List[Any]]]
+    bandsI.read(_.foreach { r =>
+      val byBucket =
+        fresh.getOrElseUpdate(r.getInt(1), mutable.HashMap.empty)
+      val b = r.getUTF8String(2).clone()
+      byBucket(b) = idOf(r, idType) :: byBucket.getOrElse(b, Nil)
+    })
+    val cands = mutable.HashSet.empty[(Any, Any)]
+    var matches = 0L
+    def probe(r: InternalRow): Boolean = {
+      for (ns <- fresh.get(r.getInt(1)).flatMap(_.get(r.getUTF8String(2)))) {
+        val o = idOf(r, idType)
+        ns.foreach { n =>
+          if (n != null && o != null && n != o) {
+            matches += 1
+            cands += (if (ord.lt(n, o)) (n, o) else (o, n))
+          }
+        }
+      }
+      matches <= maxMatches
+    }
+    if (!priorBands.read(_.forall(probe)) || !bandsI.read(_.forall(probe))) {
+      return None
+    }
+    val ids = cands.flatMap { case (a, b) => Seq(a, b) }
+    val sets = mutable.HashMap.empty[Any, Array[Long]]
+    Seq(priorSets, setsI).foreach(_.read(_.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1) && ids(r.get(0, idType))) {
+        val h = r.getArray(1).toLongArray()
+        java.util.Arrays.sort(h)
+        sets(idOf(r, idType)) = h
+      }
+    }))
+    Some(cands.toSeq.flatMap { case (a, b) =>
+      for (x <- sets.get(a); y <- sets.get(b)) yield {
+        val inter = overlap(x, y)
+        (a, b, inter, x.length + y.length - inter)
+      }
+    })
+  }
+
+  /** Values two ascending arrays of distinct longs share. */
+  private def overlap(a: Array[Long], b: Array[Long]): Long = {
+    var (i, j, n) = (0, 0, 0L)
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
   }
 
   /** READ-ONLY preview of an ingest batch against the index: every
     * qualifying near-dup pair involving ≥ 1 `fresh` doc, under the
     * index's frozen banding scheme — nothing is written or committed
     * (the admission check a pipeline runs before deciding what to keep;
-    * [[fold]] is the committing form). The fresh side is signed once and
-    * lineage-cut so the candidate and verify legs can't re-shingle it.
+    * [[fold]] is the committing form). The fresh side is signed once, so
+    * the candidate and verify legs never re-shingle it.
     * `atVersion` time-travels to a retained historical version (its
     * committed folds included) — auditing what an admission decision
     * WOULD have been against last week's corpus.
     *
-    * Below the size gate the pairs are collected and returned as a local
-    * frame, and the fresh side's two checkpoints are released. Above it
-    * the returned lazy frame reads them, so they stay persisted until a
-    * GC lets the context cleaner drop them.
+    * Below the size gate ([[DriverScan.local]]) the fresh side is signed
+    * on the driver and the pairs come from [[gatedPairs]], with no
+    * checkpoint. Above it the signed side is lineage-cut, and the
+    * returned lazy frame reads the two checkpoints,
+    * so they stay persisted until a GC lets the context cleaner drop
+    * them.
     */
   def pairsAgainst(
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
@@ -280,18 +389,21 @@ object DedupIndex {
     val v = ix.resolve(atVersion)
     graft.functions.VectorExpressions.register(spark)
     val (k, numHashes, bandRows) = readParams(ix, v)
-    val (setsI0, bandsI0) =
-      signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
-    val setsI = setsI0.localCheckpoint()
-    val bandsI = bandsI0.localCheckpoint()
-    // both checkpoints are materialized — the sign-pass cache has no
-    // consumers left (the pair path reads the checkpoints)
-    setsI0.unpersist()
     val Seq(sets, bands) = ix.committedSigned(v, Seq("sets", "bands"))
-    val out = gatedPairs(setsI, bandsI, sets, bands, thresholdNum,
-      thresholdDen)
-    if (out.isLocal) releaseCheckpoint(setsI, bandsI)
-    out
+    DriverScan.local(fresh)
+      .flatMap(signOnDriver(_, idCol, textCol, k, numHashes, bandRows))
+      .fold {
+        val (setsI0, bandsI0) =
+          signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
+        val setsI = setsI0.localCheckpoint()
+        val bandsI = bandsI0.localCheckpoint()
+        // both checkpoints are materialized — the sign-pass cache has no
+        // consumers left (the pair plan reads the checkpoints)
+        setsI0.unpersist()
+        pairsOf(setsI, bandsI, sets, bands, thresholdNum, thresholdDen)
+      } { case (setsI, bandsI) =>
+        gatedPairs(setsI, bandsI, sets, bands, thresholdNum, thresholdDen)
+      }
   }
 
   /** Every qualifying near-dup pair WITHIN the indexed corpus itself —
@@ -339,11 +451,15 @@ object DedupIndex {
     * Omitted, the generation auto-increments (safe against pre-marker
     * crashes only; at-least-once callers must pass their identity).
     *
-    * Below the size gate a fold runs three jobs: the delta's sign write
-    * (gated on `fresh`'s estimated bytes), one collect of the candidates
-    * and one of their sets; the exact verify runs on the driver and the
+    * Below the size gate a fold runs no job for a batch the driver can
+    * read (a local or small file-backed frame) and one, the bounded
+    * collect of [[DriverScan.local]], for any other (a streaming
+    * `foreachBatch` batch): the driver signs the batch, writes the delta
+    * ([[graft.io.VersionedIndex.writeSignedOnDriver]]), matches its
+    * bands against the committed ones and runs the exact verify, and the
     * returned frame is a local one that holds no cached blocks. Above
-    * the gate it is a lazy plan over every stored set and band.
+    * the gate the sign write is a job, and the pairs a lazy plan over
+    * every stored set and band.
     */
   def fold(
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
@@ -357,17 +473,21 @@ object DedupIndex {
         Some(g))(body)
     val g = ix.fold(v, generation) { g => described(g) {
       val (k, numHashes, bandRows) = readParams(ix, v)
-      Tuning.withSmallInputScope(spark, Tuning.estimatedBytes(fresh)) {
-        val (setsI, bandsI) =
-          signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
-        // overwrite mode: a retry of a crashed fold recomputes the same
-        // generation and replaces the orphan before committing. r10: both
-        // artifacts commit in ONE __what-partitioned write (one job
-        // instead of two); it is the sign-pass cache's only consumer —
-        // release it afterwards (advisor).
-        try ix.writeSigned(ix.delta(v, g), "overwrite", setsI, bandsI)
-        finally setsI.unpersist()
-      }
+      // overwrite mode: a retry of a crashed fold recomputes the same
+      // generation and replaces the orphan before committing
+      DriverScan.local(fresh)
+        .flatMap(signOnDriver(_, idCol, textCol, k, numHashes, bandRows))
+        .fold(Tuning.withSmallInputScope(spark, Tuning.estimatedBytes(fresh)) {
+          val (setsI, bandsI) =
+            signAndBand(fresh, idCol, textCol, k, numHashes, bandRows)
+          // both artifacts commit in ONE __what-partitioned write (one job
+          // instead of two); it is the sign-pass cache's only consumer —
+          // release it afterwards
+          try ix.writeSigned(ix.delta(v, g), "overwrite", setsI, bandsI)
+          finally setsI.unpersist()
+        }) { case (setsI, bandsI) =>
+          ix.writeSignedOnDriver(ix.delta(v, g), setsI, bandsI)
+        }
     }}
     // pairs off the generation's stored delta (read back — not the
     // lineage of the input frame, so the verify never re-signs fresh

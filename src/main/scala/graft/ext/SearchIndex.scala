@@ -1,5 +1,6 @@
 package graft.ext
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import graft.conf.Tuning
@@ -72,26 +73,23 @@ object SearchIndex {
       spark: SparkSession, dir: String, name: String): Seq[Int] =
     index(spark, dir, name).versions
 
-  /** One batch's three artifacts, normalized to internal column names —
-    * the SAME tokenization as [[Retrieval.bm25TopK]] ([[Dedup.tokens]]),
-    * empty-token docs excluded from every table (the in-memory path's
-    * `size > 0` filter). The document length rides denormalized on every
-    * posting row (a batch-sized one-time join at sign time buys a
-    * lengths-table-free query plan forever).
+  /** (doc_id, toks, dl) of `docs`: the SAME tokenization as
+    * [[Retrieval.bm25TopK]] ([[Dedup.tokens]]), empty-token docs excluded
+    * (the in-memory path's `size > 0` filter).
     */
-  private def sign(
-      docs: DataFrame, idCol: String,
-      textCol: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // persisted (r9): the tokenizer pass feeds the postings, termdf and
-    // totals legs, which are materialized by SEPARATE write actions —
-    // without the cache it re-tokenizes per write. The 4th element is
-    // the cache handle: callers unpersist once their writes have run
-    // (r10, advisor).
-    val tk = docs
+  private def tokenized(
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs
       .select(col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)
       .withColumn("dl", size(col("toks")).cast("long"))
-      .persist()
+
+  /** One batch's three artifacts from its [[tokenized]] rows, normalized
+    * to internal column names. The document length rides denormalized
+    * on every posting row (a batch-sized one-time join at sign time buys
+    * a lengths-table-free query plan forever).
+    */
+  private def sign(tk: DataFrame): Seq[DataFrame] = {
     val tc = tk.select(col("doc_id"), col("dl"),
       explode(col("toks")).as("term"))
     val postings = tc.groupBy("term", "doc_id", "dl")
@@ -100,7 +98,7 @@ object SearchIndex {
     val termdf = tc.groupBy("term").agg(countDistinct("doc_id").as("df"))
     val totals = tk.agg(count(lit(1)).as("n_docs"),
       coalesce(sum("dl"), lit(0L)).as("total_len"))
-    (postings, termdf, totals, tk)
+    Seq(postings, termdf, totals)
   }
 
   /** Sign `docs` and write the batch to `root`, under the size gate
@@ -113,10 +111,60 @@ object SearchIndex {
       textCol: String, root: String, mode: String): Unit =
     Tuning.withSmallInputScope(docs.sparkSession,
         Tuning.estimatedBytes(docs)) {
-      val (p, t, s, tkCache) = sign(docs, idCol, textCol)
-      try ix.writeSigned(root, mode, p, t, s)
-      finally tkCache.unpersist()
+      // persisted: the tokenizer pass feeds the postings, termdf and
+      // totals legs — without the cache it re-tokenizes per leg; released
+      // once the write has run
+      val tk = tokenized(docs, idCol, textCol).persist()
+      try ix.writeSigned(root, mode, sign(tk): _*)
+      finally tk.unpersist()
     }
+
+  /** [[sign]] run by the driver for `docs` over a `LocalRelation` (no
+    * job): Catalyst's `ConvertToLocalRelation` folds the [[tokenized]]
+    * projection, [[DriverScan]] reads it, and hash maps count the
+    * postings, each term's distinct non-null doc ids and the totals. The
+    * three artifacts come back over `LocalRelation`s with [[sign]]'s
+    * schemas; None when the projection is not readable on the driver.
+    */
+  private def signOnDriver(docs: DataFrame, idCol: String,
+      textCol: String): Option[Seq[DataFrame]] = {
+    val tk = tokenized(docs, idCol, textCol)
+    val idType = tk.schema("doc_id").dataType
+    DriverScan.rows(tk).map(_.read { it =>
+      // first-seen order, as the job's aggregation emits its groups: a
+      // batch's postings stay grouped by doc, which parquet encodes in
+      // about two thirds of the bytes of a hashed order
+      val postings = mutable.LinkedHashMap.empty[(Any, Any, Long), Long]
+      val docsOf = mutable.LinkedHashMap.empty[Any, mutable.HashSet[Any]]
+      var (nDocs, total) = (0L, 0L)
+      it.foreach { r =>
+        // the copy owns the bytes its id and terms point into
+        val row = r.copy()
+        val id = if (row.isNullAt(0)) null else row.get(0, idType)
+        val dl = row.getLong(2)
+        nDocs += 1
+        total += dl
+        val toks = row.getArray(1)
+        (0 until toks.numElements).foreach { i =>
+          val term = toks.getUTF8String(i)
+          postings((term, id, dl)) = postings.getOrElse((term, id, dl), 0L) + 1
+          val ids = docsOf.getOrElseUpdate(term, mutable.HashSet.empty)
+          if (id != null) ids += id
+        }
+      }
+      sign(tk).map(_.schema).zip(Seq(
+        postings.iterator.map { case ((t, id, dl), c) =>
+          InternalRow(t, id, c, dl)
+        },
+        docsOf.iterator.map { case (t, ids) =>
+          InternalRow(t, ids.size.toLong)
+        },
+        Iterator(InternalRow(nDocs, total))))
+        .map { case (schema, rows) =>
+          DriverScan.frame(docs.sparkSession, schema, rows.toVector)
+        }
+    })
+  }
 
   /** Sign + index `corpus` as version 1 (or N+1 — a rebuild), then apply
     * the retention window.
@@ -135,6 +183,14 @@ object SearchIndex {
     * write its three delta tables, commit with one marker PUT.
     * `generation` is the caller's batch identity: a committed
     * generation is a pure no-op on retry.
+    *
+    * Below the size gate a fold runs no job for a batch the driver can
+    * read (a local or small file-backed frame) and one, the bounded
+    * collect of [[DriverScan.local]], for any other (a streaming
+    * `foreachBatch` batch): the driver counts the artifacts
+    * ([[signOnDriver]]) and writes them
+    * ([[graft.io.VersionedIndex.writeSignedOnDriver]]). Above it the sign
+    * write is one job.
     */
   def fold(
       spark: SparkSession, fresh: DataFrame, dir: String, name: String,
@@ -144,8 +200,11 @@ object SearchIndex {
     val v = ix.requireCurrent
     ix.fold(v, generation)(g =>
       graft.io.VersionedIndex.described(spark, "SearchIndex.fold", name, v,
-        Some(g))(write(ix, fresh, idCol, textCol, ix.delta(v, g),
-        "overwrite")))
+        Some(g)) {
+        DriverScan.local(fresh).flatMap(signOnDriver(_, idCol, textCol))
+          .fold(write(ix, fresh, idCol, textCol, ix.delta(v, g), "overwrite"))(
+            ix.writeSignedOnDriver(ix.delta(v, g), _: _*))
+      })
   }
 
   /** The lazy BM25 top-`k` plan over the committed artifacts: query

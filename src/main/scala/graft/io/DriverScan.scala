@@ -6,8 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression, SubqueryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
-import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{PartitionedFileUtil, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graftplan.PlanBuilder
 import org.apache.spark.storage.graftio.ReaderTask
 import org.apache.spark.sql.types.StructType
 
@@ -49,6 +51,54 @@ object DriverScan {
     */
   def rows(df: DataFrame): Option[Rows] =
     plan(df.sparkSession, df.queryExecution.optimizedPlan)
+
+  /** `df`'s rows as a frame over a `LocalRelation`, below the size gate
+    * ([[graft.conf.Tuning.isSmallInput]]): read by [[rows]] when the
+    * driver can read `df`, otherwise by one bounded collect (one
+    * partition, at most the gate's row bound at the least bytes a row of
+    * `df` holds, so one job: a streaming `foreachBatch` batch takes this
+    * branch). The bytes of the copied rows are counted as they arrive.
+    * None, and the caller keeps its lazy path, when `df`'s estimated
+    * bytes or the rows held reach the gate. Catalyst's
+    * `ConvertToLocalRelation` folds a projection or filter of the result
+    * on the driver, so [[rows]] reads it with no job.
+    */
+  def local(df: DataFrame): Option[DataFrame] = {
+    val spark = df.sparkSession
+    if (!Tuning.isSmallInput(spark, Tuning.estimatedBytes(df))) return None
+    val maxBytes = Tuning.smallInputRows(spark, 1L)
+    def held(it: Iterator[UnsafeRow]): Option[Seq[InternalRow]] = {
+      val kept = Vector.newBuilder[InternalRow]
+      var bytes = 0L
+      val within = it.forall { r =>
+        val row = r.copy()
+        kept += row
+        bytes += row.getSizeInBytes
+        bytes <= maxBytes
+      }
+      Option.when(within)(kept.result())
+    }
+    rows(df).fold {
+      val n = df.schema.size
+      val least =
+        math.max(1L, UnsafeRow.calculateBitSetWidthInBytes(n) + 8L * n)
+      val qe = df.coalesce(1)
+        .limit(math.min(Tuning.smallInputRows(spark, least),
+          Int.MaxValue - 1L).toInt + 1)
+        .queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("collect"))(held(
+        qe.executedPlan.executeToIterator().map(_.asInstanceOf[UnsafeRow])))
+    }(_.read(held)).map(frame(spark, df.schema, _))
+  }
+
+  /** `rows` (Catalyst values of `schema`) as a frame over a
+    * `LocalRelation`: [[rows]] reads it, and a plan over it reads a
+    * `LocalTableScan`, with no job.
+    */
+  def frame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    PlanBuilder.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** [[rows]] of an analyzed plan of `spark` (a child of a union, say). */
   def rows(spark: SparkSession, analyzed: LogicalPlan): Option[Rows] =

@@ -140,33 +140,64 @@ private[graft] final case class VersionedIndex(
   def params(v: Int, sub: String = "params"): Row =
     paramRows.computeIfAbsent(path(v, sub), p => spark.read.parquet(p).head())
 
-  /** Write one batch's `frames` (one per `signed` artifact, same order)
-    * as the `__what`-partitioned table `<root>/sign` in one write action.
-    * A column an artifact lacks is a null of the type it has in the
-    * artifact that carries it. Every artifact gets its partition: one
-    * that came out empty is written as an empty parquet file, so readers
-    * never meet a missing partition dir.
+  /** Each of `frames` (one per `signed` artifact, same order) as a row
+    * of the `__what` table's data columns: its artifact's columns, and a
+    * null of the type it has in the artifact that carries it for each
+    * column it lacks.
     */
-  def writeSigned(root: String, mode: String, frames: DataFrame*): Unit = {
+  private def unionParts(frames: Seq[DataFrame]): Seq[(String, DataFrame)] = {
     val parts = signed.zip(frames).map { case ((w, cols), df) =>
       w -> df.select(cols.map(col): _*)
     }
     val fields = parts.flatMap(_._2.schema.fields)
     val names = fields.map(_.name).distinct
     val types = fields.reverse.map(f => f.name -> f.dataType).toMap
-    val union = parts.map { case (w, df) =>
-      df.select(lit(w).as("__what") +: names.map(c =>
+    parts.map { case (w, df) =>
+      w -> df.select(names.map(c =>
         if (df.columns.contains(c)) col(c)
         else lit(null).cast(types(c)).as(c)): _*)
+    }
+  }
+
+  /** Write one batch's `frames` (one per `signed` artifact, same order)
+    * as the `__what`-partitioned table `<root>/sign` in one write action.
+    * Every artifact gets its partition: one that came out empty is
+    * written as an empty parquet file, so readers never meet a missing
+    * partition dir.
+    */
+  def writeSigned(root: String, mode: String, frames: DataFrame*): Unit = {
+    val union = unionParts(frames).map { case (w, df) =>
+      df.select(lit(w).as("__what") +: df.columns.toSeq.map(col): _*)
     }.reduce(_.unionByName(_))
     union.write.partitionBy("__what").mode(mode).parquet(s"$root/sign")
     val f = fs
-    val missing = signed.map(w => s"$root/sign/__what=${w._1}")
+    val missing = signed.map(w => signDir(root, w._1))
       .filterNot(p => f.exists(new Path(p)))
     if (missing.nonEmpty) {
       val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](),
         StructType(union.schema.filterNot(_.name == "__what")))
       missing.foreach(p => empty.write.parquet(p))
+    }
+  }
+
+  /** [[writeSigned]] in mode overwrite, run by the driver for `frames`
+    * that [[DriverScan.rows]] reads (a batch below the size gate, over
+    * `LocalRelation`s): with no Spark job, each artifact's rows become
+    * one parquet file of its partition dir
+    * ([[SingleFile.writeParquetRows]]) with the columns and nullability
+    * of [[writeSigned]]'s union, an empty artifact an empty file. Like
+    * the job, it first drops `<root>/sign`.
+    */
+  def writeSignedOnDriver(root: String, frames: DataFrame*): Unit = {
+    val parts = unionParts(frames)
+    val schema = parts.map(_._2).reduce(_.unionByName(_)).schema
+    VersionPointer.dropDir(spark, s"$root/sign")
+    parts.foreach { case (w, df) =>
+      val rows = DriverScan.rows(df).getOrElse(
+        throw new IllegalArgumentException(
+          s"$what: the $w rows are not readable on the driver"))
+      rows.read(it => SingleFile.writeParquetRows(spark, it, schema,
+        s"${signDir(root, w)}/part-00000-${java.util.UUID.randomUUID}.parquet"))
     }
   }
 

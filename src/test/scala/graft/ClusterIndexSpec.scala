@@ -3,6 +3,7 @@ package graft
 import graft.ext.{ClusterIndex, Clusters}
 
 import org.apache.spark.sql.DataFrame
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.ext.ClusterIndex]]: maintained connected-component labels —
@@ -10,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * fold slicing (incl. cross-component merges chained THROUGH a fresh
   * batch and a fresh node becoming the new component min), delta-sized
   * relabels, idempotent generations, compaction invariance, retention +
-  * time-travel. Oracle twin: q329.
+  * time-travel, and a property over random batches of long and string
+  * ids on both sides of the size gate. Below the gate a fold of local
+  * pairs runs no job. Oracle twin: q329.
   */
 class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -152,7 +155,7 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
   test("below the size gate a 12-pair fold into a 2,000-pair index runs " +
     "at most 3 jobs; the rounds give the same labels") {
     val (jobs, changed, labels) = budgetFold("clidx_budget")
-    assert(jobs <= 3, s"$jobs jobs")
+    assert(jobs == 0, s"$jobs jobs")
     val (roundJobs, roundChanged, roundLabels) =
       withGate(0L)(budgetFold("clidx_budget_rounds"))
     assert(roundJobs > 3, s"$roundJobs jobs")
@@ -206,5 +209,71 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     val (parts, labels) = built(Long.MaxValue)
     assert(parts == 1, s"$parts part files")
     assert(labels == oneShot(seed) && labels == built(0L)._2)
+  }
+
+  /** A build batch, then fold batches, of edges over nodes 0–11. */
+  private val graphs: Gen[List[List[(Int, Int)]]] = {
+    val edge = Gen.zip(Gen.choose(0, 11), Gen.choose(0, 11))
+    Gen.choose(2, 4).flatMap(Gen.listOfN(_, Gen.choose(0, 4)
+      .flatMap(Gen.listOfN(_, edge))))
+  }
+
+  /** Node `i` as a string id: the three prefixes order differently by
+    * UTF-8 bytes than by `String.compareTo`.
+    */
+  private def named(i: Int): String =
+    Seq("\uD83D\uDE00", "\uE000", "n")(i % 3) + i
+
+  test("fold ≡ one-shot CC over random batches of long and string ids, " +
+    "below the size gate and at maxBytes=0; a replay returns its delta") {
+    // fixed samples: stored components merged by a fold, a new node
+    // becoming a component's min, an empty fold and a self-loop
+    val fixed = List(List((5, 6), (7, 8), (9, 10)), List((6, 7)),
+      List((1, 8), (3, 3)), Nil, List((10, 2)))
+    val all = fixed +: List(List((4, 4)), List((2, 3), (0, 4))) +:
+      samples(graphs, 4, 29L)
+    all.zipWithIndex.foreach { case (batches, i) =>
+      Seq(false, true).filter(str => i < 2 || str == (i % 2 == 1))
+        .foreach { str =>
+          def frame(es: List[(Int, Int)]): DataFrame =
+            if (str) es.map { case (a, b) => (named(a), named(b)) }
+              .toDF("id_a", "id_b")
+            else es.map { case (a, b) => (a.toLong, b.toLong) }
+              .toDF("id_a", "id_b")
+          def labels(df: DataFrame): Map[Any, Any] =
+            df.select("node", "cluster_id").collect()
+              .map(r => r.get(0) -> r.get(1)).toMap
+          val oneShot = batches.indices.map(n => labels(
+            Clusters.connectedComponents(
+              frame(batches.take(n + 1).flatten).toDF("src", "dst"))))
+          Seq(None, Some(0L)).foreach { gate =>
+            def run = {
+              val dir = tmpDir("clidx_prop")
+              ClusterIndex.build(spark, frame(batches.head), dir, "d")
+              val folds = batches.zipWithIndex.tail.map { case (b, n) =>
+                val before = labels(ClusterIndex.labels(spark, dir, "d"))
+                val delta = labels(ClusterIndex.fold(spark, frame(b), dir,
+                  "d", generation = Some(n.toLong)))
+                val after = labels(ClusterIndex.labels(spark, dir, "d"))
+                (before, delta, after)
+              }
+              val last = batches.size - 1
+              val replay = labels(ClusterIndex.fold(spark,
+                frame(batches(last)), dir, "d",
+                generation = Some(last.toLong)))
+              (folds, replay, labels(ClusterIndex.labels(spark, dir, "d")))
+            }
+            val (folds, replay, end) = gate.fold(run)(withGate(_)(run))
+            val at = s"sample $i str $str gate $gate: $batches"
+            folds.zip(oneShot.tail).foreach {
+              case ((before, delta, after), want) =>
+                assert(after == want, at)
+                assert(delta == after.filter { case (n, c) =>
+                  !before.get(n).contains(c) }, at)
+            }
+            assert(replay == folds.last._2 && end == oneShot.last, at)
+          }
+        }
+    }
   }
 }

@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[graft.ext.DedupIndex]]: versioned persisted MinHash-LSH dedup index —
   * fold/pairsAgainst ≡ the in-memory incremental operator on either side
   * of the size gate, marker-gated delta commits, params frozen in the
-  * artifact, compaction is a pure rewrite. Below the gate a warm fold runs
-  * at most 3 jobs and returns local rows. Oracle twin: q313.
+  * artifact, compaction is a pure rewrite. Below the gate a warm fold of
+  * local docs runs no job and returns local rows. Oracle twin: q313.
   */
 class DedupIndexSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -270,7 +270,7 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
           "doc_id", "text")
         out.collect()
       }
-      assert(jobs <= 3, s"$jobs jobs")
+      assert(jobs == 0, s"$jobs jobs")
       assert(out.isLocal)
       assert(jobsRunBy(out.collect()) == 0)
       assert(pairs(out) == pairs(Dedup.minhashNearDupPairsIncremental(

@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-batch statistics are additive and the scoring core is shared),
   * fold slicing invariant, idempotent generations, compaction
   * invariance, retention + time-travel, and the job budget below the
-  * size gate: a fold runs 1 job, the first query after it 1 job,
-  * described `graft:SearchIndex.topK <name> v<N>`, and a warm query none,
+  * size gate: a fold of a local batch runs no job, the first query after
+  * it 1 job, described `graft:SearchIndex.topK <name> v<N>`, and a warm
+  * query none,
   * with local rows back (the older "at most 5" and "at most 1" tests stay
   * as they were). The driver path, the lazy plan at `maxBytes=0` and a
   * tripped row bound answer alike, and a tripped bound runs no job;
@@ -151,14 +152,14 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
     first(docs(0L until 35L))
   }
 
-  test("below the size gate a fold runs one job and a warm query at " +
+  test("below the size gate a fold runs no job and a warm query at " +
     "most 5") {
     val dir = tmpDir("sidx_budget")
     SearchIndex.build(spark, docs(0L until 20L), dir, "s", "doc_id", "text")
     assert(jobsRunBy(SearchIndex.fold(spark, docs(20L until 30L), dir, "s",
-      "doc_id", "text")) == 1)
+      "doc_id", "text")) == 0)
     assert(jobsRunBy(SearchIndex.fold(spark, docs(30L until 35L), dir, "s",
-      "doc_id", "text")) == 1)
+      "doc_id", "text")) == 0)
     val qt = queries.toDF("query_id", "term")
     // the first read fills the resident postings
     SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)

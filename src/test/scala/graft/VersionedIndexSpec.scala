@@ -276,8 +276,9 @@ class VersionedIndexSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("the three folds of an ingest describe every job " +
-    "graft:<Index>.fold <name> v<N> g<G> and run 3, 3 and 1 jobs") {
+  test("the three folds of an ingest run 0, 0 and 0 jobs below the size " +
+    "gate; at maxBytes=0 they describe every job " +
+    "graft:<Index>.fold <name> v<N> g<G>") {
     val dir = tmpDir("vidx_fold_desc")
     DedupIndex.build(spark, docs(0L until 40L), dir, "d", "doc_id", "text")
     ClusterIndex.build(spark,
@@ -301,20 +302,138 @@ class VersionedIndexSpec extends AnyFunSuite with SparkSpec {
     }
     // the first fold of a version fills the params and schema memos
     ingest(docs(40L until 50L), 1L)
+    val (pairs, dedup, cluster, search) = ingest(docs(50L until 60L), 2L)
+    assert(pairs.count() > 0)
+    assert((dedup, cluster, search) == ((Nil, Nil, Nil)))
     val sc = spark.sparkContext
     var restored: String = null
     sc.setJobDescription("caller")
-    val (pairs, dedup, cluster, search) =
-      try ingest(docs(50L until 60L), 2L)
+    val (jobPairs, jobDedup, jobCluster, jobSearch) =
+      try withGate(0L)(ingest(docs(60L until 70L), 3L))
       finally {
         restored = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(null)
       }
     assert(restored == "caller")
-    assert(pairs.count() > 0)
-    assert(dedup == Seq.fill(3)("graft:DedupIndex.fold d v1 g2"))
-    assert(cluster == Seq.fill(3)("graft:ClusterIndex.fold c v1 g2"))
-    assert(search == Seq("graft:SearchIndex.fold s v1 g2"))
+    assert(jobPairs.count() > 0)
+    Seq(jobDedup -> "graft:DedupIndex.fold d v1 g3",
+      jobCluster -> "graft:ClusterIndex.fold c v1 g3",
+      jobSearch -> "graft:SearchIndex.fold s v1 g3").foreach {
+      case (descs, name) => assert(descs.nonEmpty && descs.forall(_ == name),
+        descs)
+    }
+  }
+
+  test("folding a foreachBatch micro-batch runs 1, 0 and 1 jobs") {
+    val dir = tmpDir("vidx_stream_fold")
+    DedupIndex.build(spark, docs(0L until 40L), dir, "d", "doc_id", "text")
+    ClusterIndex.build(spark,
+      DedupIndex.pairsWithin(spark, dir, "d").select("id_a", "id_b"), dir,
+      "c")
+    SearchIndex.build(spark, docs(0L until 40L), dir, "s", "doc_id", "text")
+    // the first fold of a version fills the params and schema memos
+    ClusterIndex.fold(spark, DedupIndex.fold(spark, docs(40L until 50L), dir,
+      "d", "doc_id", "text", generation = Some(1L)).select("id_a", "id_b"),
+      dir, "c", generation = Some(1L))
+    SearchIndex.fold(spark, docs(40L until 50L), dir, "s", "doc_id", "text",
+      generation = Some(1L))
+    docs(50L until 70L).coalesce(1).write.parquet(s"$dir/watch")
+    val jobs = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[(Int, Int, Int)]())
+    val query = spark.readStream.schema(docs(Nil).schema)
+      .parquet(s"$dir/watch")
+      .writeStream
+      .option("checkpointLocation", s"$dir/checkpoint")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        val g = Some(id + 2)
+        var pairs: DataFrame = null
+        val dedup = jobsRunBy {
+          pairs = DedupIndex.fold(b.sparkSession, b, dir, "d", "doc_id",
+            "text", generation = g).select("id_a", "id_b")
+        }
+        val cluster = jobsRunBy(
+          ClusterIndex.fold(b.sparkSession, pairs, dir, "c", generation = g))
+        val search = jobsRunBy(SearchIndex.fold(b.sparkSession, b, dir, "s",
+          "doc_id", "text", generation = g))
+        jobs.add((dedup, cluster, search))
+        ()
+      }
+      .start()
+    query.awaitTermination()
+    assert(jobs.toArray.toSeq == Seq((1, 0, 1)))
+    assert(DedupIndex.pairsWithin(spark, dir, "d").count() ==
+      Dedup.minhashNearDupPairs(docs(0L until 70L), "doc_id", "text").count())
+    assert(searchTop(dir) == searchOneShot(docs(0L until 70L)))
+  }
+
+  /** Per artifact of the sign table under `root`: the footer schemas of
+    * its data files, and its rows.
+    */
+  private def signTable(root: String, whats: Seq[String]) = whats.map { w =>
+    val part = new java.io.File(s"$root/sign/__what=$w")
+    assert(part.isDirectory, part)
+    val footers = part.listFiles().filter(f => f.isFile &&
+        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(f => graft.io.FooterSchema.of(spark, f.getPath).get).toSet
+    w -> (footers, spark.read.parquet(part.getPath).collect().toSet)
+  }
+
+  /** Files of `root` with their lengths and modification times. */
+  private def files(root: String): Set[(String, Long, Long)] =
+    org.apache.commons.io.FileUtils.listFiles(new java.io.File(root), null,
+      true).toArray(Array.empty[java.io.File])
+      .map(f => (f.getPath, f.length, f.lastModified)).toSet
+
+  test("driver-written and job-written (maxBytes=0) fold deltas have equal " +
+    "footers and rows and give equal pairs: empty, blank, string-id and " +
+    "replayed batches") {
+    Seq(false, true).foreach { str =>
+      def ids(df: DataFrame) = if (str) named(df) else df
+      val batches = Seq(none, blank(100L until 106L), docs(20L until 35L))
+        .map(ids)
+      def run = {
+        val dir = tmpDir("vidx_driver_delta")
+        DedupIndex.build(spark, ids(docs(0L until 20L)), dir, "d", "doc_id",
+          "text")
+        SearchIndex.build(spark, ids(docs(0L until 20L)), dir, "s",
+          "doc_id", "text")
+        def fold(b: DataFrame, g: Long) = {
+          val out = DedupIndex.fold(spark, b, dir, "d", "doc_id", "text",
+            generation = Some(g))
+          SearchIndex.fold(spark, b, dir, "s", "doc_id", "text",
+            generation = Some(g))
+          (out.isLocal, out.select("id_a", "id_b", "inter_size",
+            "union_size").collect().toSet)
+        }
+        val pairs = batches.zipWithIndex.map { case (b, g) => fold(b, g + 1L) }
+        val before = files(dir)
+        val replay = fold(batches.last, batches.size.toLong)
+        assert(files(dir) == before && replay == pairs.last)
+        val deltas = batches.indices.map { g =>
+          signTable(s"$dir/d.dedupindex/v1/deltas/g${g + 1}",
+            Seq("sets", "bands")) ++
+            signTable(s"$dir/s.searchindex/v1/deltas/g${g + 1}",
+              Seq("postings", "termdf", "totals"))
+        }
+        (pairs, deltas, searchTop(dir),
+          DedupIndex.pairsWithin(spark, dir, "d").collect().toSet)
+      }
+      val onDriver = run
+      val byJob = withGate(0L)(run)
+      assert(onDriver._1.forall(_._1) && !byJob._1.exists(_._1))
+      assert(onDriver._1.map(_._2) == byJob._1.map(_._2))
+      assert(onDriver._1.last._2.nonEmpty)
+      onDriver._2.zip(byJob._2).foreach { case (d, j) =>
+        d.zip(j).foreach {
+          case ((w, (dFooters, dRows)), (_, (jFooters, jRows))) =>
+            assert(dFooters.size == 1 && dFooters == jFooters, s"$str $w")
+            assert(dRows == jRows, s"$str $w")
+        }
+      }
+      assert(onDriver._3.nonEmpty && onDriver._3 == byJob._3 &&
+        onDriver._4 == byJob._4, s"str $str")
+    }
   }
 
   test("DedupIndex and ApssIndex pair reads list the folds once and " +
