@@ -7,7 +7,7 @@ import graft.conf.Tuning
 import graft.io.DriverScan
 import graft.io.VersionedIndex.{CommittedFile, Listing}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression,
   RuntimeReplaceable}
@@ -252,18 +252,18 @@ object SearchIndex {
     * come from one listing of the committed files, so a fold that
     * commits meanwhile is invisible to all of them.
     *
-    * Below the size gate (the listed bytes and the query terms each
-    * below it, ids that [[Clusters.driverSolvable]] accepts, and the
-    * index's rows within [[Tuning.smallInputRows]] at [[PostingBytes]] a
-    * row, counted from the resident files and the others' parquet
-    * footers, so an index past it runs no job) the query reads the
-    * index's driver-resident files: every committed file decoded once
-    * into primitive arrays, keyed by its path, length and modification
-    * time. Files not resident (a new fold's delta, a rebuild) are read by
-    * ONE job, described `graft:SearchIndex.topK <name> v<N>`; a warm
-    * query runs none. The contributions are the shared formula evaluated
-    * as an interpreted expression over the matched postings; sums and the
-    * rank cut (score
+    * Below the size gate (the listed bytes below it, query terms that
+    * [[DriverScan.localRows]] reads, ids that [[Clusters.driverSolvable]]
+    * accepts, and the index's rows within [[Tuning.smallInputRows]] at
+    * [[PostingBytes]] a row, counted from the resident files and the
+    * others' parquet footers, so an index past it reads nothing) the
+    * query reads the index's driver-resident files: every committed file
+    * decoded once into primitive arrays, keyed by its path, length and
+    * modification time. Files not resident (a new fold's delta, a
+    * rebuild) are read on the driver by [[DriverScan]], so a query of
+    * local terms runs no job. The contributions are the shared formula
+    * evaluated as an interpreted expression over the matched postings;
+    * sums and the rank cut (score
     * descending, then id in Spark's ordering) run on the driver, and the
     * result is a `LocalRelation` with the lazy plan's schema, so a frame
     * derived from it reads local rows. The resident files of all indexes
@@ -300,22 +300,19 @@ object SearchIndex {
     val idType = schemas.head("doc_id").dataType
     val qSchema = queryTerms.schema
     if (!Tuning.isSmallInput(spark, readBytes) ||
-        !Tuning.isSmallInput(spark, Tuning.estimatedBytes(queryTerms)) ||
         !Clusters.driverSolvable(idType) ||
         !Clusters.driverSolvable(qSchema("query_id").dataType) ||
         qSchema("term").dataType != StringType) {
       return lazyOut
     }
-    // a frame the driver can read (a local one) is read with no physical
-    // plan or job; null terms match nothing
+    // a local frame's rows are read with no job; null terms match nothing
     val (qi, ti) = (qSchema.fieldIndex("query_id"), qSchema.fieldIndex("term"))
-    lazy val qterms = {
-      val toRow = CatalystTypeConverters.createToScalaConverter(qSchema)
-      DriverScan.rows(queryTerms).fold(queryTerms.collect().toSeq)(
-        _.read(_.map(toRow(_).asInstanceOf[Row]).toVector))
-        .map(r => (r.get(qi), r.getString(ti))).filter(_._2 != null)
-    }
-    val parts = residentParts(ix, name, listing, idType, readBytes,
+    val qType = qSchema(qi).dataType
+    val qid = CatalystTypeConverters.createToScalaConverter(qType)
+    val qterms = DriverScan.localRows(queryTerms).getOrElse(return lazyOut)
+      .filterNot(_.isNullAt(ti))
+      .map(r => (qid(r.get(qi, qType)), r.getString(ti)))
+    val parts = residentParts(ix, listing, idType,
       Tuning.smallInputRows(spark, PostingBytes), qterms.map(_._2).distinct)
       .getOrElse(return lazyOut)
     val schema = topKSchemas.computeIfAbsent((qSchema +: schemas, idCol),
@@ -393,8 +390,9 @@ object SearchIndex {
     }
   }
 
-  /** Rows all resident files hold. */
-  private[graft] def residentRows: Long = cache.synchronized(cache.rows)
+  /** The resident files' paths and rows. */
+  private[graft] def residentFiles: Map[String, Long] = cache.synchronized(
+    cache.files.asScala.map { case (f, r) => f.path -> r.part.rows }.toMap)
 
   /** Forget every resident and missed file: the next query of each index
     * reads it again.
@@ -407,7 +405,7 @@ object SearchIndex {
   /** The decoded parts of `listing`'s files, or None when they hold more
     * than `maxRows` rows: the resident files' rows plus the others' rows
     * from their footers, so an index that does not fit runs no job.
-    * Resident files are reused and the others read by one [[decode]] job.
+    * Resident files are reused and the others read by [[decode]].
     * They are read whole and kept when they fit in the rows the cache has
     * free, or in the rows of its least recently used files last used
     * before these files' previous query, which are then dropped: a file
@@ -417,9 +415,8 @@ object SearchIndex {
     * place instead of each evicting the next.
     */
   private def residentParts(
-      ix: graft.io.VersionedIndex, name: String, listing: Listing,
-      idType: DataType, readBytes: Long, maxRows: Long,
-      terms: => Seq[String]): Option[Seq[Part]] = {
+      ix: graft.io.VersionedIndex, listing: Listing, idType: DataType,
+      maxRows: Long, terms: Seq[String]): Option[Seq[Part]] = {
     val (now, held) = cache.synchronized {
       cache.tick += 1
       val held = listing.files.flatMap(f => Option(cache.files.get(f))
@@ -442,7 +439,7 @@ object SearchIndex {
         val since =
           if (seen.size < fresh.size) 0L else seen.values.map(_._1).min
         val keep = admit(rows.sum, since, maxRows)
-        decode(ix, name, listing.version, fresh, idType, readBytes, maxRows,
+        decode(ix, listing.version, fresh.zip(rows), idType,
           Option.when(!keep)(terms)).map { more =>
           cache.synchronized {
             if (keep) more.foreach { case (f, p) =>
@@ -475,87 +472,72 @@ object SearchIndex {
       k >= 0
     }
 
-  /** Decode `files` in one bounded job: a collect of at most `budget`
-    * rows (None when they hold more), one partition, so it is one job and
-    * not a `take` loop. With `only` terms, just their postings and termdf
-    * rows are read.
+  /** Decode `files`, each with its footer rows, on the driver through
+    * [[DriverScan]] (no job); None when it cannot read one of them. With
+    * `only` terms, just their postings and termdf rows are kept.
     */
   private def decode(
-      ix: graft.io.VersionedIndex, name: String, v: Int,
-      files: Seq[CommittedFile], idType: DataType, readBytes: Long,
-      budget: Long,
+      ix: graft.io.VersionedIndex, v: Int, files: Seq[(CommittedFile, Long)],
+      idType: DataType,
       only: Option[Seq[String]]): Option[Map[CommittedFile, Part]] = {
-    val spark = ix.spark
-    // (file, term, doc_id, x, y): x = c and y = dl for a posting, x = df
-    // for a termdf row, x = n_docs and y = total_len for a totals row
-    val tagged = files.zipWithIndex.map { case (f, i) =>
-      val read = ix.readSigned(v, f.artifact, Seq(f.path))
-      val df = only.filter(_ => f.artifact != "totals")
-        .fold(read)(ts => read.filter(col("term").isin(ts: _*)))
-      def row(term: Column, id: Column, x: String, y: Column) =
-        df.select(lit(i).as("file"), term.as("term"), id.as("doc_id"),
-          col(x).cast("long").as("x"), y.cast("long").as("y"))
-      val noId = lit(null).cast(idType)
-      f.artifact match {
-        case "postings" => row(col("term"), col("doc_id"), "c", col("dl"))
-        case "termdf" => row(col("term"), noId, "df", lit(null))
-        case _ =>
-          row(lit(null).cast(StringType), noId, "n_docs", col("total_len"))
-      }
+    val reads = files.map { case (f, n) =>
+      DriverScan.rows(ix.readSigned(v, f.artifact, Seq(f.path)))
+        .map((f, n, _))
     }
-    val rows = Tuning.withSmallInputScope(spark, readBytes) {
-      graft.io.VersionedIndex.described(spark, "SearchIndex.topK", name, v) {
-        tagged.reduce(_.union(_)).coalesce(1)
-          .limit(math.min(budget, Int.MaxValue - 1L).toInt + 1).collect()
-      }
-    }
-    if (rows.length > budget) return None
-    val byFile = rows.groupBy(_.getInt(0))
+    if (reads.contains(None)) return None
+    val keep = only.map(_.toSet)
     // one String per distinct term across the decoded files
-    val terms = scala.collection.mutable.HashMap.empty[String, String]
-    def term(r: Row) = terms.getOrElseUpdate(r.getString(1), r.getString(1))
-    Some(files.zipWithIndex.map { case (f, i) =>
-      val rs = byFile.getOrElse(i, Array.empty[Row])
-      val named = rs.filterNot(_.isNullAt(1))
-      f -> (f.artifact match {
-        case "postings" => decodePostings(named, term, rs.length)
-        case "termdf" =>
-          val (ts, dfs) = named.groupMapReduce(term)(_.getLong(3))(_ + _)
-            .toArray.sortBy(_._1).unzip
-          new TermDf(ts, dfs, rs.length)
-        case _ => new Totals(rs.map(_.getLong(3)).sum,
-          rs.map(_.getLong(4)).sum, rs.length)
-      })
+    val terms = mutable.HashMap.empty[String, String]
+    def term(r: InternalRow): Option[String] =
+      Option.when(!r.isNullAt(0)) {
+        val t = r.getUTF8String(0).toString
+        terms.getOrElseUpdate(t, t)
+      }.filter(t => keep.forall(_(t)))
+    Some(reads.flatten.map { case (f, n, rows) =>
+      f -> rows.read[Part] { it =>
+        f.artifact match {
+          case "postings" => decodePostings(it, term, idType, n)
+          case "termdf" =>
+            val dfs = mutable.HashMap.empty[String, Long]
+            it.foreach(r => term(r).foreach(t =>
+              dfs(t) = dfs.getOrElse(t, 0L) + r.getLong(1)))
+            val (ts, df) = dfs.toArray.sortBy(_._1).unzip
+            new TermDf(ts, df, n)
+          case _ =>
+            var (nDocs, total) = (0L, 0L)
+            it.foreach { r => nDocs += r.getLong(0); total += r.getLong(1) }
+            new Totals(nDocs, total, n)
+        }
+      }
     }.toMap)
   }
 
-  /** A postings file's (file, term, doc_id, c, dl) rows with a term, as
+  /** A postings file's (term, doc_id, c, dl) rows with a kept term, as
     * sorted terms over parallel arrays; a doc slot is a distinct
-    * (doc_id, dl).
+    * (doc_id, dl), its id a Catalyst value copied out of the reused row.
     */
   private def decodePostings(
-      rs: Array[Row], term: Row => String, nRows: Long): Postings = {
-    val sorted = rs.sortBy(term)
-    val slots = scala.collection.mutable.HashMap.empty[(Any, Long), Int]
+      it: Iterator[InternalRow], term: InternalRow => Option[String],
+      idType: DataType, nRows: Long): Postings = {
+    val slots = mutable.HashMap.empty[(Any, Long), Int]
     val ids = Array.newBuilder[Any]
     val dl = Array.newBuilder[Long]
-    val terms = Array.newBuilder[String]
-    val from = Array.newBuilder[Int]
-    val doc = new Array[Int](sorted.length)
-    val c = new Array[Long](sorted.length)
-    var prev: String = null
-    sorted.indices.foreach { j =>
-      val r = sorted(j)
-      val t = term(r)
-      if (t != prev) { terms += t; from += j; prev = t }
-      doc(j) = slots.getOrElseUpdate((r.get(2), r.getLong(4)), {
-        ids += r.get(2); dl += r.getLong(4); slots.size
+    val byTerm = mutable.HashMap.empty[String,
+      (mutable.ArrayBuilder.ofInt, mutable.ArrayBuilder.ofLong)]
+    it.foreach(r => term(r).foreach { t =>
+      val id = if (r.isNullAt(1)) null
+        else InternalRow.copyValue(r.get(1, idType))
+      val (doc, c) = byTerm.getOrElseUpdate(t,
+        (new mutable.ArrayBuilder.ofInt, new mutable.ArrayBuilder.ofLong))
+      doc += slots.getOrElseUpdate((id, r.getLong(3)), {
+        ids += id; dl += r.getLong(3); slots.size
       })
-      c(j) = r.getLong(3)
-    }
-    from += sorted.length
-    new Postings(terms.result(), from.result(), doc, c, ids.result(),
-      dl.result(), nRows)
+      c += r.getLong(2)
+    })
+    val terms = byTerm.keys.toArray.sorted
+    new Postings(terms, terms.scanLeft(0)(_ + byTerm(_)._1.length),
+      terms.flatMap(byTerm(_)._1.result()),
+      terms.flatMap(byTerm(_)._2.result()), ids.result(), dl.result(), nRows)
   }
 
   /** [[Retrieval.bm25ContribMicro]] analyzed over (c, dl, df, n_docs,
@@ -589,7 +571,8 @@ object SearchIndex {
     * a term with no df row adds nothing, and each query keeps its `k`
     * best ids by score descending, then id ascending in Spark's ordering
     * for the id type (nulls first). Rows are (query_id, rank, id,
-    * score_micro).
+    * score_micro), the ids decoded as Catalyst values and returned as
+    * external ones.
     */
   private def rankOnDriver(
       spark: SparkSession, parts: Seq[Part], qterms: Seq[(Any, String)],
@@ -616,7 +599,7 @@ object SearchIndex {
     val scores = scala.collection.mutable.HashMap.empty[(Any, Any), Long]
     for ((q, t) <- qterms; (id, c) <- byTerm.getOrElse(t, Nil))
       scores((q, id)) = scores.getOrElse((q, id), 0L) + c
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
     val ord = PhysicalDataType.ordering(idType)
     val byScore = Ordering.fromLessThan[(Long, Any)] {
       case ((s1, i1), (s2, i2)) =>
@@ -625,9 +608,9 @@ object SearchIndex {
         else ord.lt(i1, i2)
     }
     scores.toSeq.groupBy(_._1._1).toSeq.flatMap { case (q, qs) =>
-      qs.map { case ((_, id), s) => (s, toCatalyst(id), id) }
-        .sortBy(h => (h._1, h._2))(byScore).take(math.max(k, 0))
-        .zipWithIndex.map { case ((s, _, id), i) => Row(q, i + 1, id, s) }
+      qs.map { case ((_, id), s) => (s, id) }.sorted(byScore)
+        .take(math.max(k, 0)).zipWithIndex
+        .map { case ((s, id), i) => Row(q, i + 1, toScala(id), s) }
     }
   }
 

@@ -63,7 +63,13 @@ object DriverScan {
     * `ConvertToLocalRelation` folds a projection or filter of the result
     * on the driver, so [[rows]] reads it with no job.
     */
-  def local(df: DataFrame): Option[DataFrame] = {
+  def local(df: DataFrame): Option[DataFrame] =
+    localRows(df).map(frame(df.sparkSession, df.schema, _))
+
+  /** The copied rows (Catalyst values of `df`'s schema) of [[local]]'s
+    * frame, for a caller that reads them itself.
+    */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] = {
     val spark = df.sparkSession
     if (!Tuning.isSmallInput(spark, Tuning.estimatedBytes(df))) return None
     val maxBytes = Tuning.smallInputRows(spark, 1L)
@@ -88,7 +94,7 @@ object DriverScan {
         .queryExecution
       SQLExecution.withNewExecutionId(qe, Some("collect"))(held(
         qe.executedPlan.executeToIterator().map(_.asInstanceOf[UnsafeRow])))
-    }(_.read(held)).map(frame(spark, df.schema, _))
+    }(_.read(held))
   }
 
   /** `rows` (Catalyst values of `schema`) as a frame over a

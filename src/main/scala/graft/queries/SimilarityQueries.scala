@@ -147,7 +147,7 @@ object SimilarityQueries {
     * random 64-dim cosines concentrate near 0, planted near-dups sit at
     * 0.4–0.5), so this is the most indexing-friendly threshold the oracle
     * can adjudicate non-vacuously. Measured with 6-bit × 32-band signatures
-    * (ProfileBandedNearDup): sf0.1 candidates 813,628 of 1,999,000 pairs
+    * (a one-off dev probe, since deleted): sf0.1 candidates 813,628 of 1,999,000 pairs
     * (40.7% — a 2.5× cut vs all-pairs, vs q41's near-100% at 0.4) at
     * recall 14/14 = 100%. The genuinely-high regime (≥ 0.9, ~7% candidates
     * at 8 bits × 16 bands) has no pairs in this corpus at all, so it is

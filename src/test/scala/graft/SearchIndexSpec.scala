@@ -5,6 +5,7 @@ import graft.ext.{Retrieval, SearchIndex}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,9 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-batch statistics are additive and the scoring core is shared),
   * fold slicing invariant, idempotent generations, compaction
   * invariance, retention + time-travel, and the job budget below the
-  * size gate: a fold of a local batch runs no job, the first query after
-  * it 1 job, described `graft:SearchIndex.topK <name> v<N>`, and a warm
-  * query none,
+  * size gate: a fold of a local batch runs no job, nor does the first
+  * query after it (which leaves the caller's job description in place),
+  * the first at a new version, or a warm query,
   * with local rows back (the older "at most 5" and "at most 1" tests stay
   * as they were). The driver path, the lazy plan at `maxBytes=0` and a
   * tripped row bound answer alike, and a tripped bound runs no job;
@@ -132,7 +133,7 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
     dir
   }
 
-  test("a version's first topK runs 1 job, after a build and after a " +
+  test("a version's first topK runs 0 jobs, after a build and after a " +
     "compact: the artifact schemas come from footers") {
     val dir = tmpDir("sidx_first")
     val qt = queries.toDF("query_id", "term")
@@ -140,7 +141,7 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
       var got: Seq[(Int, Int, Long, Long)] = Nil
       assert(jobsRunBy {
         got = rows(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
-      } == 1)
+      } == 0)
       assert(got.nonEmpty && got == top(Retrieval.bm25TopK(
         corpus, qt, "doc_id", "text", k = 5)))
     }
@@ -281,11 +282,10 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("below the size gate the query's one job is described " +
-    "graft:SearchIndex.topK <name> v<N> and the caller's description " +
-    "comes back") {
+  test("below the size gate the first query after a fold runs 0 jobs " +
+    "and the caller's description comes back") {
     // the measured query is the first after a fold: it reads the new
-    // delta; the query after it reads nothing
+    // delta on the driver; the query after it reads nothing
     val dir = budgetIndex("sidx_desc")
     val qt = queries.toDF("query_id", "term")
     SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)
@@ -299,8 +299,7 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
         assert(sc.getLocalProperty("spark.job.description") == "caller")
         d
       } finally sc.setJobDescription(null)
-    assert(descs.size == 1, descs)
-    assert(descs == Seq("graft:SearchIndex.topK s v1"))
+    assert(descs.isEmpty, descs)
     var out: DataFrame = null
     var got: Seq[(Int, Int, Long, Long)] = Nil
     val jobs = jobsRunBy {
@@ -329,40 +328,46 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
     // two indexes fit below the bound, three do not
     val per = dirs.map(indexRows).max
     val bound = 2 * per + per / 2
+    val files = dirs.map(
+      SearchIndex.index(spark, _, "s").committedFiles(1).files.map(_.path))
+    def resident(i: Int) = files(i).forall(SearchIndex.residentFiles.contains)
+    val (warm, kept, filtered) = ("warm", "kept", "filtered")
     withGate(bound * 64 + 1) {
       assert(Tuning.smallInputRows(spark, 64) == bound)
-      def query(i: Int): Int = {
+      /** Whether index `i`'s files were resident already, were read and
+        * kept, or were read filtered and not kept.
+        */
+      def query(i: Int): String = {
         var out: DataFrame = null
         var got: Seq[(Int, Int, Long, Long)] = Nil
-        var jobs = 0
+        val before = resident(i)
         val left = rddsLeftBy {
-          jobs = jobsRunBy {
+          assert(jobsRunBy {
             out = SearchIndex.topK(spark, qt, dirs(i), "s", "doc_id", k = 5)
             got = rows(out)
-          }
+          } == 0, s"index $i")
         }
         assert(left.isEmpty, left.values.mkString("\n"))
         assert(out.isLocal, s"index $i")
-        assert(SearchIndex.residentRows <= bound)
+        assert(SearchIndex.residentFiles.values.sum <= bound)
         assert(got == top(Retrieval.bm25TopK(
           docs(0L until 60L + i), qt, "doc_id", "text", k = 5)))
-        jobs
+        if (before) warm else if (resident(i)) kept else filtered
       }
       // files other tests left would take the free rows
       SearchIndex.dropResident()
-      // the first query of each also fills its schema memo; 0 and 1 are
-      // kept, 2 and 3 do not fit and are read filtered
-      (0 until 4).foreach(query)
-      // in turn, 0 and 1 stay resident and 2 and 3 run one filtered read
-      // each, every round
-      assert((0 until 4).map(query) == Seq(0, 0, 1, 1))
-      assert((0 until 4).map(query) == Seq(0, 0, 1, 1))
+      // 0 and 1 are kept, 2 and 3 do not fit and are read filtered
+      assert((0 until 4).map(query) == Seq(kept, kept, filtered, filtered))
+      // in turn, 0 and 1 stay resident and 2 and 3 are read filtered,
+      // every round
+      assert((0 until 4).map(query) == Seq(warm, warm, filtered, filtered))
+      assert((0 until 4).map(query) == Seq(warm, warm, filtered, filtered))
       // 3, queried again before 0 was, displaces 0; 1 stays
-      assert(query(3) == 1 && query(3) == 0 && query(1) == 0)
+      assert(Seq(3, 3, 1).map(query) == Seq(kept, warm, warm))
       // 0 was never read filtered, so its first miss displaces nothing;
       // its second displaces 3, the least recently used
-      assert(query(0) == 1 && query(0) == 1 && query(0) == 0)
-      assert(query(1) == 0 && query(3) == 1)
+      assert(Seq(0, 0, 0).map(query) == Seq(filtered, kept, warm))
+      assert(Seq(1, 3).map(query) == Seq(warm, filtered))
     }
   }
 
@@ -426,36 +431,45 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
         Gen.listOfN(_, Gen.oneOf("red", "fox", "dog", "blue", "jumps",
           "zebra", null))).map(_.map(q -> _))))).map(_.flatten)
 
-  /** Doc `i`'s id: a Long, or a string with an ASCII, a U+E000–U+FFFF or
-    * a supplementary first character, whose UTF-8 byte order differs from
-    * `String.compareTo`.
-    */
-  private def docId(i: Long, strIds: Boolean): Any =
-    if (!strIds) i
-    else Seq("a", "\uE000", "\uFFFD", "\uD83D\uDE00")(
-      (i % 4).toInt) + i
+  /** The id types of the property's docs. */
+  private val idTypes = Seq(LongType, StringType, TimestampType,
+    DecimalType(38, 6))
 
-  test("fold ≡ the one-shot bm25TopK over random batch splits, below the " +
-    "size gate and at maxBytes=0; duplicated terms agree across the gate") {
+  /** Doc `i`'s id of `idTypes(kind)`: a Long; a string with an ASCII, a
+    * U+E000–U+FFFF or a supplementary first character, whose UTF-8 byte
+    * order differs from `String.compareTo`; a timestamp with microseconds,
+    * before or after the epoch; or a decimal of either sign beyond a
+    * Long's digits.
+    */
+  private def docId(i: Long, kind: Int): Any = kind match {
+    case 0 => i
+    case 1 => Seq("a", "\uE000", "\uFFFD", "\uD83D\uDE00")((i % 4).toInt) + i
+    case 2 => java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
+      (i % 3 - 1) * 86400L * 400 + i, i * 1000L))
+    case _ => ((BigDecimal(i) * BigDecimal(10).pow(19) -
+      BigDecimal("0.000003")) * (1 - 2 * (i % 2))).bigDecimal
+  }
+
+  test("fold ≡ the one-shot bm25TopK over random batch splits and long, " +
+    "string, timestamp and decimal ids, below the size gate and at " +
+    "maxBytes=0; duplicated terms agree across the gate") {
     // two fixed splits hold every edge: an empty base, empty, single-row
     // and zero-token-only folds
     val all = List(List(0, 1, 4), Nil, List(4, 5), List(1), List(0, 2, 3)) +:
       List(Nil, List(0, 0), List(1)) +: samples(splits, 4, 43L)
     val qs = samples(queryGen, all.size, 44L)
     all.zip(qs).zipWithIndex.foreach { case ((split, q), i) =>
-      val (strIds, longQids) = (i % 2 == 1, i / 2 % 2 == 1)
+      // six samples: every id type, long and string ids with both
+      // query id types
+      val (idKind, longQids) = (i % idTypes.size, i % 3 == 1)
       val starts = split.scanLeft(0L)(_ + _.size)
       val batches = split.zip(starts).map { case (b, s) =>
         val rs = b.zipWithIndex.map { case (kind, j) =>
-          org.apache.spark.sql.Row(docId(s + j, strIds), texts(kind))
+          org.apache.spark.sql.Row(docId(s + j, idKind), texts(kind))
         }
         spark.createDataFrame(java.util.Arrays.asList(rs: _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              if (strIds) org.apache.spark.sql.types.StringType
-              else org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))))
+          StructType(Seq(StructField("doc_id", idTypes(idKind)),
+            StructField("text", StringType))))
       }
       val qt =
         if (longQids) q.map { case (id, t) => (id.toLong, t) }
