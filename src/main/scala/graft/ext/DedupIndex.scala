@@ -161,7 +161,7 @@ object DedupIndex {
         val bandOut = Vector.newBuilder[InternalRow]
         it.foreach { r =>
           val row = r.copy()
-          val id = idOf(row, idType)
+          val id = if (row.isNullAt(0)) null else row.get(0, idType)
           setRows += InternalRow(id, row.getArray(1))
           val bs = row.getArray(2)
           (0 until bs.numElements).foreach(b =>
@@ -172,14 +172,6 @@ object DedupIndex {
           DriverScan.frame(spark, bands.schema, bandOut.result()))
       })
   }
-
-  /** Column 0 of `r`, a `dt` id, copied out of a row that may be reused. */
-  private def idOf(r: InternalRow, dt: DataType): Any =
-    if (r.isNullAt(0)) null
-    else r.get(0, dt) match {
-      case s: UTF8String => s.clone()
-      case x => x
-    }
 
   /** Write the params and the (sets, bands) sign table of (unpublished)
     * version `version` — r10: both artifacts in ONE write action.
@@ -317,13 +309,16 @@ object DedupIndex {
       val byBucket =
         fresh.getOrElseUpdate(r.getInt(1), mutable.HashMap.empty)
       val b = r.getUTF8String(2).clone()
-      byBucket(b) = idOf(r, idType) :: byBucket.getOrElse(b, Nil)
+      val id = if (r.isNullAt(0)) null
+        else InternalRow.copyValue(r.get(0, idType))
+      byBucket(b) = id :: byBucket.getOrElse(b, Nil)
     })
     val cands = mutable.HashSet.empty[(Any, Any)]
     var matches = 0L
     def probe(r: InternalRow): Boolean = {
       for (ns <- fresh.get(r.getInt(1)).flatMap(_.get(r.getUTF8String(2)))) {
-        val o = idOf(r, idType)
+        val o = if (r.isNullAt(0)) null
+          else InternalRow.copyValue(r.get(0, idType))
         ns.foreach { n =>
           if (n != null && o != null && n != o) {
             matches += 1
@@ -342,7 +337,7 @@ object DedupIndex {
       if (!r.isNullAt(0) && !r.isNullAt(1) && ids(r.get(0, idType))) {
         val h = r.getArray(1).toLongArray()
         java.util.Arrays.sort(h)
-        sets(idOf(r, idType)) = h
+        sets(InternalRow.copyValue(r.get(0, idType))) = h
       }
     }))
     Some(cands.toSeq.flatMap { case (a, b) =>

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   *  - the query set is tiny and BROADCAST — the corpus is scanned once
   *    map-side; no corpus shuffle ever happens for candidate generation.
   *  - [[bm25TopK]] prunes at the tokenizer: the exploded (term, doc)
-  *    stream inner-joins the broadcast query-term list FIRST, so only
+  *    stream semi-joins the broadcast query-term list FIRST, so only
   *    postings of query terms survive into the two aggregations
-  *    (tf per (query, term, doc); df per term). Both are partial-agg
-  *    (map-side combine) shuffles of id-sized rows.
+  *    (postings per (term, doc); df per term). Both are partial-agg
+  *    (map-side combine) shuffles of id-sized rows, and they form the
+  *    same artifacts [[SearchIndex]] stores, scored by the same plan.
   *  - scoring is float-minimal: every per-term BM25 contribution is
   *    rounded to integer micro-units and summed as BIGINT, so the final
   *    score is order-independent (double addition is not associative;
@@ -40,7 +41,10 @@ object Retrieval {
     * Output: (query_id, rank, <idCol>, score_micro BIGINT) where
     * score_micro is the BM25 score in integer micro-units: each term
     * contribution is `floor(contrib * 1e6 + 0.5)` and the per-doc sum is
-    * exact BIGINT — hash-stable across engines and partitionings.
+    * exact BIGINT — hash-stable across engines and partitionings. The
+    * plan is [[SearchIndex]]'s over a one-batch index, so both answer
+    * alike: a (query, term) row listed twice adds its contribution twice,
+    * and docs with a null id rank as one null id.
     */
   def bm25TopK(
       docs: DataFrame,
@@ -55,9 +59,10 @@ object Retrieval {
   }
 
   /** The BM25 scoring stage without the rank cut: exact integer
-    * micro-unit scores per (query, unit) — [[bm25TopK]] ranks whole
-    * documents off it; [[maxPassageTopK]] scores CHUNKS off it and
-    * max-pools per document.
+    * micro-unit scores per (query, unit) off [[bm25Artifacts]] of the
+    * query terms, scored as [[SearchIndex.topK]] scores its stored ones —
+    * [[bm25TopK]] ranks whole documents off it; [[maxPassageTopK]] scores
+    * CHUNKS off it and max-pools per document.
     */
   private def bm25ScoresMicro(
       docs: DataFrame,
@@ -66,54 +71,80 @@ object Retrieval {
       textCol: String,
       k1: Double,
       b: Double): DataFrame = {
-    val tk = docs.select(col(idCol), Dedup.tokens(col(textCol)).as("toks"))
-    val dl = tk.filter(size(col("toks")) > 0)
-      .select(col(idCol), size(col("toks")).cast("long").as("dl"))
-    // one row: corpus size and total length (avgdl = total/n as DOUBLE)
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total"))
-    val qt = broadcast(queryTerms.select(col("query_id"), col("term")))
-    val tc = tk.select(col(idCol), explode(col("toks")).as("term"))
-    // prune to query-term postings BEFORE any shuffle
-    val tcq = tc.join(qt, "term")
-    val tf = tcq.groupBy("query_id", "term", idCol)
-      .agg(count(lit(1)).as("c"))
-    val dft = tc.join(broadcast(queryTerms.select("term").distinct), "term")
-      .groupBy("term").agg(countDistinct(idCol).as("df"))
-    bm25ScoreFromPostings(tf, dft, dl, stats, idCol, k1, b)
+    val qt = queryTerms.select(col("query_id"), col("term"))
+    val Seq(postings, termdf, totals) =
+      bm25Artifacts(bm25Tokens(docs, idCol, textCol), Some(qt))
+    bm25Scores(qt, postings, termdf, totals, idCol, k1, b)
   }
 
-  /** The BM25 formula off prepared relational inputs — the shared core
-    * of the in-memory path and the persisted [[SearchIndex]], so the
-    * maintained index provably computes the IDENTICAL double expression
-    * sequence (and therefore identical rounded micro-units):
-    *  - `tf`    (query_id, term, <idCol>, c) — query-pruned postings;
-    *  - `dft`   (term, df) — collection document frequencies;
-    *  - `dl`    (<idCol>, dl) — unit lengths;
-    *  - `stats` one row (n_docs, total).
+  /** (doc_id, toks, dl) of `docs`: the [[Dedup.tokens]] of `textCol`,
+    * empty-token docs excluded.
     */
-  private[ext] def bm25ScoreFromPostings(
-      tf: DataFrame,
-      dft: DataFrame,
-      dl: DataFrame,
-      stats: DataFrame,
+  private[ext] def bm25Tokens(
+      docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs
+      .select(col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
+      .filter(size(col("toks")) > 0)
+      .withColumn("dl", size(col("toks")).cast("long"))
+
+  /** The three BM25 artifacts of [[bm25Tokens]] rows — the one plan
+    * that forms them, for the one-shot and for [[SearchIndex]]'s sign:
+    *  - postings (term, doc_id, c, dl): per-doc term frequencies with the
+    *    document length denormalized onto every posting, so scoring never
+    *    joins a corpus-sized lengths table;
+    *  - termdf (term, df): distinct non-null doc ids per term;
+    *  - totals, one row (n_docs, total_len).
+    * With `terms` (a `term` column), only their postings and dfs are
+    * formed: a `left_semi` join against the broadcast terms prunes the
+    * exploded stream before any shuffle.
+    */
+  private[ext] def bm25Artifacts(
+      tk: DataFrame, terms: Option[DataFrame] = None): Seq[DataFrame] = {
+    val all = tk.select(col("doc_id"), col("dl"),
+      explode(col("toks")).as("term"))
+    val tc = terms.fold(all)(t =>
+      all.join(broadcast(t.select("term")), Seq("term"), "left_semi"))
+    val postings = tc.groupBy("term", "doc_id", "dl")
+      .agg(count(lit(1)).as("c"))
+      .select("term", "doc_id", "c", "dl")
+    val termdf = tc.groupBy("term").agg(countDistinct("doc_id").as("df"))
+    val totals = tk.agg(count(lit(1)).as("n_docs"),
+      coalesce(sum("dl"), lit(0L)).as("total_len"))
+    Seq(postings, termdf, totals)
+  }
+
+  /** BM25 micro-unit scores per (query_id, <idCol>) off [[bm25Artifacts]]
+    * — one batch's, or the per-batch artifacts of an index, since every
+    * statistic is additive over disjoint batches: dfs are summed per
+    * query term, totals summed. Query terms are broadcast against the
+    * postings; a duplicated (query, term) row counts its contribution
+    * once per row. Null doc ids group as one id.
+    */
+  private[ext] def bm25Scores(
+      queryTerms: DataFrame, // (query_id, term)
+      postings: DataFrame,
+      termdf: DataFrame,
+      totals: DataFrame,
       idCol: String,
       k1: Double,
       b: Double): DataFrame = {
-    // a tf that already CARRIES `dl` (denormalized postings — the
-    // SearchIndex layout) skips the corpus-sized length join entirely
-    val withDl =
-      if (tf.columns.contains("dl")) tf.join(broadcast(dft), "term")
-      else tf.join(broadcast(dft), "term").join(dl, idCol)
-    val scored = withDl
+    val qt = broadcast(queryTerms.select(col("query_id"), col("term")))
+    // restrict to query terms before the aggregate
+    val df = termdf.join(qt, Seq("term"), "left_semi")
+      .groupBy("term").agg(sum("df").as("df"))
+    val stats = totals
+      .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total"))
+    postings.join(qt, "term")
+      .join(broadcast(df), "term")
       .crossJoin(broadcast(stats))
       .withColumn("cmicro", bm25ContribMicro(k1, b))
-    scored.groupBy("query_id", idCol)
+      .groupBy(col("query_id"), col("doc_id").as(idCol))
       .agg(sum("cmicro").as("score_micro"))
   }
 
   /** One posting's BM25 contribution in integer micro-units, over the
     * columns `c` (term frequency), `dl` (unit length), `df`, `n_docs`
-    * and `total` — the one formula [[bm25ScoreFromPostings]] and
+    * and `total` — the one formula [[bm25Scores]] and
     * [[SearchIndex.topK]]'s driver path both evaluate.
     */
   private[ext] def bm25ContribMicro(k1: Double, b: Double): Column = {

@@ -28,10 +28,10 @@ import org.apache.spark.sql.types._
   * collection statistic is ADDITIVE over disjoint document batches
   * (fold ids are new, the family contract), so per-batch partials sum to
   * the whole-corpus values bit-for-bit:
-  *  - `v<N>/sign` — the three artifacts as one `__what`-partitioned
-  *    table (r10: a batch commits in ONE write action; readers address
-  *    the partition subdirs directly so each artifact scans only its
-  *    own files):
+  *  - `v<N>/sign` — a batch's [[Retrieval.bm25Artifacts]] as one
+  *    `__what`-partitioned table (r10: a batch commits in ONE write
+  *    action; readers address the partition subdirs directly so each
+  *    artifact scans only its own files):
   *    `__what=postings` (term, doc_id, c, dl): per-doc term frequencies
   *    with the document length DENORMALIZED onto every posting (the
   *    norms-in-postings layout real engines use) — scoring needs dl only
@@ -41,10 +41,13 @@ import org.apache.spark.sql.types._
   *    per batch (n_docs, total_len) — readers sum both.
   * [[topK]] therefore answers IDENTICALLY to a one-shot
   * [[Retrieval.bm25TopK]] over the accumulated corpus — not just
-  * approximately: both score through the shared
-  * [[Retrieval.bm25ContribMicro]] formula, so the double expression
-  * sequence (idf, length normalization, micro-unit rounding) is the same
-  * code (q331 adjudicates against the from-scratch SQL replay).
+  * approximately: the one-shot forms the same artifacts for its one
+  * batch and scores them with the same plan ([[Retrieval.bm25Scores]]),
+  * and the driver path evaluates the same [[Retrieval.bm25ContribMicro]]
+  * formula, so the double expression sequence (idf, length
+  * normalization, micro-unit rounding) is the same code, for duplicated
+  * query terms and null doc ids too (q331 adjudicates against the
+  * from-scratch SQL replay).
   *
   * Scale shape: a query keeps only its (few) terms' postings — per-term
   * fanout is that term's df, the inverted-index property; df summing is
@@ -73,34 +76,6 @@ object SearchIndex {
       spark: SparkSession, dir: String, name: String): Seq[Int] =
     index(spark, dir, name).versions
 
-  /** (doc_id, toks, dl) of `docs`: the SAME tokenization as
-    * [[Retrieval.bm25TopK]] ([[Dedup.tokens]]), empty-token docs excluded
-    * (the in-memory path's `size > 0` filter).
-    */
-  private def tokenized(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .withColumn("dl", size(col("toks")).cast("long"))
-
-  /** One batch's three artifacts from its [[tokenized]] rows, normalized
-    * to internal column names. The document length rides denormalized
-    * on every posting row (a batch-sized one-time join at sign time buys
-    * a lengths-table-free query plan forever).
-    */
-  private def sign(tk: DataFrame): Seq[DataFrame] = {
-    val tc = tk.select(col("doc_id"), col("dl"),
-      explode(col("toks")).as("term"))
-    val postings = tc.groupBy("term", "doc_id", "dl")
-      .agg(count(lit(1)).as("c"))
-      .select("term", "doc_id", "c", "dl")
-    val termdf = tc.groupBy("term").agg(countDistinct("doc_id").as("df"))
-    val totals = tk.agg(count(lit(1)).as("n_docs"),
-      coalesce(sum("dl"), lit(0L)).as("total_len"))
-    Seq(postings, termdf, totals)
-  }
-
   /** Sign `docs` and write the batch to `root`, under the size gate
     * sized by `docs`' estimated bytes: below it the tokenizer cache and
     * the sign write run as one job (a frame without file statistics
@@ -114,21 +89,22 @@ object SearchIndex {
       // persisted: the tokenizer pass feeds the postings, termdf and
       // totals legs — without the cache it re-tokenizes per leg; released
       // once the write has run
-      val tk = tokenized(docs, idCol, textCol).persist()
-      try ix.writeSigned(root, mode, sign(tk): _*)
+      val tk = Retrieval.bm25Tokens(docs, idCol, textCol).persist()
+      try ix.writeSigned(root, mode, Retrieval.bm25Artifacts(tk): _*)
       finally tk.unpersist()
     }
 
-  /** [[sign]] run by the driver for `docs` over a `LocalRelation` (no
-    * job): Catalyst's `ConvertToLocalRelation` folds the [[tokenized]]
-    * projection, [[DriverScan]] reads it, and hash maps count the
-    * postings, each term's distinct non-null doc ids and the totals. The
-    * three artifacts come back over `LocalRelation`s with [[sign]]'s
-    * schemas; None when the projection is not readable on the driver.
+  /** [[Retrieval.bm25Artifacts]] run by the driver for `docs` over a
+    * `LocalRelation` (no job): Catalyst's `ConvertToLocalRelation` folds
+    * the [[Retrieval.bm25Tokens]] projection, [[DriverScan]] reads it,
+    * and hash maps count the postings, each term's distinct non-null doc
+    * ids and the totals. The three artifacts come back over
+    * `LocalRelation`s with the job's schemas; None when the projection is
+    * not readable on the driver.
     */
   private def signOnDriver(docs: DataFrame, idCol: String,
       textCol: String): Option[Seq[DataFrame]] = {
-    val tk = tokenized(docs, idCol, textCol)
+    val tk = Retrieval.bm25Tokens(docs, idCol, textCol)
     val idType = tk.schema("doc_id").dataType
     DriverScan.rows(tk).map(_.read { it =>
       // first-seen order, as the job's aggregation emits its groups: a
@@ -152,7 +128,7 @@ object SearchIndex {
           if (id != null) ids += id
         }
       }
-      sign(tk).map(_.schema).zip(Seq(
+      Retrieval.bm25Artifacts(tk).map(_.schema).zip(Seq(
         postings.iterator.map { case ((t, id, dl), c) =>
           InternalRow(t, id, c, dl)
         },
@@ -207,37 +183,14 @@ object SearchIndex {
       })
   }
 
-  /** The lazy BM25 top-`k` plan over the committed artifacts: query
-    * terms broadcast against the postings, dfs summed per query term,
-    * totals summed, scored by the shared core.
-    */
-  private def lazyTopK(
-      qt: DataFrame, postings: DataFrame, termdf: DataFrame,
-      totals: DataFrame, idCol: String, k: Int, k1: Double,
-      b: Double): DataFrame = {
-    val bqt = broadcast(qt)
-    // postings carry dl: the shared core skips the lengths join
-    val tf = postings.join(bqt, "term")
-      .select(col("query_id"), col("term"), col("doc_id").as(idCol),
-        col("c"), col("dl"))
-    // per-batch dfs SUM to collection dfs (disjoint doc sets); restrict
-    // to query terms before the aggregate
-    val dft = termdf.join(bqt, Seq("term"), "left_semi")
-      .groupBy("term").agg(sum("df").as("df"))
-    val stats = totals
-      .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total"))
-    Retrieval.bm25RankCut(
-      Retrieval.bm25ScoreFromPostings(tf, dft, tf, stats, idCol, k1, b),
-      idCol, k)
-  }
-
   /** Bytes one committed artifact row is charged against the size gate:
     * a (term, doc_id, c, dl) posting with row overhead.
     */
   private val PostingBytes = 64L
 
-  /** [[lazyTopK]]'s output schema per input schemas and id column, since
-    * building the lazy plan to read it costs planning time per query.
+  /** The lazy plan's output schema per input schemas and id column,
+    * since building the lazy plan to read it costs planning time per
+    * query.
     */
   private val topKSchemas = new java.util.concurrent.ConcurrentHashMap[
     (Seq[StructType], String), StructType]()
@@ -245,7 +198,8 @@ object SearchIndex {
   /** BM25 top-`k` per query against the maintained index — the
     * [[Retrieval.bm25TopK]] output contract
     * (query_id, rank, <idCol>, score_micro), computed from summed
-    * per-batch statistics through the SHARED contribution formula
+    * per-batch statistics through the SHARED plan
+    * ([[Retrieval.bm25Scores]]) and contribution formula
     * ([[Retrieval.bm25ContribMicro]]), so the answer is bit-identical to
     * the one-shot operator over the accumulated corpus. `atVersion`
     * time-travels to a retained historical version. The three artifacts
@@ -289,8 +243,8 @@ object SearchIndex {
     def lazyOut = Tuning.withSmallInputScope(spark, readBytes) {
       val Seq(postings, termdf, totals) =
         whats.map(ix.signedAt(v, listing.generations, _))
-      val out = lazyTopK(queryTerms.select(col("query_id"), col("term")),
-        postings, termdf, totals, idCol, k, k1, b)
+      val out = Retrieval.bm25RankCut(Retrieval.bm25Scores(queryTerms,
+        postings, termdf, totals, idCol, k1, b), idCol, k)
       // AQE and shuffle partitions are read when the plan is made, not
       // when the frame is built: plan here, inside the gate
       out.queryExecution.executedPlan

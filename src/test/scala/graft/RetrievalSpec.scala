@@ -1,11 +1,14 @@
 package graft
 
-import graft.ext.{Hits, Retrieval}
+import graft.ext.{Hits, Retrieval, SearchIndex}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[Retrieval.bm25TopK]] against a hand-computed corpus,
+/** [[Retrieval.bm25TopK]] against a hand-computed corpus (a duplicated
+  * query term counted twice, null-id docs ranked as [[SearchIndex]]
+  * ranks them on both sides of the size gate),
   * [[Retrieval.rrfFuse]] exact integer fusion, [[Retrieval.int8TopK]]
   * integer-dot scoring, and [[Hits.hubsAuthorities]] against the
   * hand-unrolled mutual-reinforcement recurrence — all partition-invariant
@@ -15,23 +18,60 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 
-  test("bm25TopK matches the hand-computed Okapi score") {
-    // 3 docs, lengths 4/4/2; term 'x' appears 2/1/0 times
-    val docs = Seq(
-      (1L, "x x y z"), (2L, "x y y z"), (3L, "y z")).toDF("doc_id", "text")
-    val qt = Seq((1, "x")).toDF("query_id", "term")
-    val out = Retrieval.bm25TopK(docs, qt, "doc_id", "text", k = 10)
-      .orderBy("rank").collect()
+  // 3 docs, lengths 4/4/2; term 'x' appears 2/1/0 times
+  private def handDocs = Seq(
+    (1L, "x x y z"), (2L, "x y y z"), (3L, "y z")).toDF("doc_id", "text")
+
+  /** One posting's hand-computed Okapi contribution to a query of 'x'
+    * over [[handDocs]], in micro-units.
+    */
+  private def handContrib(c: Long, dl: Long): Long = {
     // N=3 docs, df(x)=2, avgdl=10/3; idf = ln(1 + (3-2+0.5)/(2+0.5))
     val idf = math.log(1.0 + ((3L - 2L) + 0.5) / (2L + 0.5))
-    def contrib(c: Long, dl: Long): Long = {
-      val tfn = (c * 2.2) / (c + 1.2 * (0.25 + 0.75 * (dl / (10.0 / 3))))
-      math.floor(idf * tfn * 1000000.0 + 0.5).toLong
-    }
+    val tfn = (c * 2.2) / (c + 1.2 * (0.25 + 0.75 * (dl / (10.0 / 3))))
+    math.floor(idf * tfn * 1000000.0 + 0.5).toLong
+  }
+
+  test("bm25TopK matches the hand-computed Okapi score") {
+    val qt = Seq((1, "x")).toDF("query_id", "term")
+    val out = Retrieval.bm25TopK(handDocs, qt, "doc_id", "text", k = 10)
+      .orderBy("rank").collect()
     assert(out.map(r => (r.getLong(2), r.getLong(3))).toSeq ==
-      Seq((1L, contrib(2, 4)), (2L, contrib(1, 4))))
+      Seq((1L, handContrib(2, 4)), (2L, handContrib(1, 4))))
     // doc 3 has no query term -> absent entirely
     assert(out.length == 2)
+  }
+
+  test("bm25TopK scores a query term listed twice as twice its " +
+    "contribution, as SearchIndex does") {
+    val qt = Seq((1, "x"), (1, "x")).toDF("query_id", "term")
+    val out = Retrieval.bm25TopK(handDocs, qt, "doc_id", "text", k = 10)
+      .orderBy("rank").collect()
+    assert(out.map(r => (r.getLong(2), r.getLong(3))).toSeq ==
+      Seq((1L, 2 * handContrib(2, 4)), (2L, 2 * handContrib(1, 4))))
+  }
+
+  test("bm25TopK, SearchIndex.topK below the size gate and topK at " +
+    "maxBytes=0 return the same rows for null-id docs") {
+    val docs = Seq[(Option[Long], String)]((Some(1L), "x x y z"),
+      (None, "x y"), (Some(2L), "x y y z"), (None, "y z z"))
+      .toDF("doc_id", "text")
+    val qt = Seq((1, "x"), (1, "y"), (2, "z")).toDF("query_id", "term")
+    val dir = tmpDir("bm25_nullid")
+    SearchIndex.build(spark, docs, dir, "s", "doc_id", "text")
+    def rows(df: DataFrame) =
+      df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
+    def topK = SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 10)
+    val oneShot = rows(Retrieval.bm25TopK(docs, qt, "doc_id", "text", k = 10))
+    assert(oneShot.count(_(2) == null) == 2, oneShot)
+    val below = topK
+    assert(below.isLocal)
+    assert(rows(below) == oneShot)
+    withGate(0L) {
+      val gated = topK
+      assert(!gated.isLocal)
+      assert(rows(gated) == oneShot)
+    }
   }
 
   test("bm25TopK is partition-invariant") {

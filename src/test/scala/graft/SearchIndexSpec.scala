@@ -450,9 +450,9 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
       BigDecimal("0.000003")) * (1 - 2 * (i % 2))).bigDecimal
   }
 
-  test("fold ≡ the one-shot bm25TopK over random batch splits and long, " +
-    "string, timestamp and decimal ids, below the size gate and at " +
-    "maxBytes=0; duplicated terms agree across the gate") {
+  test("fold ≡ the one-shot bm25TopK over random batch splits, long, " +
+    "string, timestamp and decimal ids and duplicated and null query " +
+    "terms, below the size gate and at maxBytes=0") {
     // two fixed splits hold every edge: an empty base, empty, single-row
     // and zero-token-only folds
     val all = List(List(0, 1, 4), Nil, List(4, 5), List(1), List(0, 2, 3)) +:
@@ -475,23 +475,22 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
         if (longQids) q.map { case (id, t) => (id.toLong, t) }
           .toDF("query_id", "term")
         else q.toDF("query_id", "term")
-      // bm25TopK counts a duplicated term by doubling its tf; the index
-      // adds its contribution twice. Compare the one-shot on distinct
-      // (query, term) rows; with duplicates, the two index paths agree.
-      val distinctQt = qt.distinct()
       val dir = tmpDir("sidx_prop")
       def oneShot(nBatches: Int) = Retrieval.bm25TopK(
-        batches.take(nBatches).reduce(_.unionByName(_)), distinctQt,
+        batches.take(nBatches).reduce(_.unionByName(_)), qt,
         "doc_id", "text", k = 3)
       def sorted(df: DataFrame) =
         df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
-      def run(qt: DataFrame, at: Option[Int] = None) =
-        SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 3, atVersion = at)
-      /** The driver path's answer to the distinct terms equals `want`. */
-      def check(step: String, want: DataFrame, at: Option[Int] = None) = {
-        val got = run(distinctQt, at)
-        val ctx = s"sample $i after $step: $split $q"
-        assert(got.isLocal, ctx)
+      /** The index's answer, on the driver path without `gate` and on
+        * the lazy plan at `gate`, equals `want`.
+        */
+      def check(step: String, want: DataFrame, at: Option[Int] = None,
+          gate: Option[Long] = None) = {
+        def run = SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 3,
+          atVersion = at)
+        val got = gate.fold(run)(withGate(_)(run))
+        val ctx = s"sample $i after $step, gate $gate: $split $q"
+        assert(got.isLocal == gate.isEmpty, ctx)
         assert(shape(got) == shape(want), ctx)
         assert(sorted(got) == sorted(want), ctx)
       }
@@ -502,22 +501,11 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
         check(s"fold $j", oneShot(j + 1))
       }
       val want = oneShot(batches.size)
-      val answers = Seq(None, Some(0L)).map { gate =>
-        val Seq(got, dup) =
-          Seq(distinctQt, qt).map(t => gate.fold(run(t))(withGate(_)(run(t))))
-        val ctx = s"sample $i gate $gate: $split $q"
-        assert(got.isLocal == gate.isEmpty && dup.isLocal == gate.isEmpty,
-          ctx)
-        assert(shape(got) == shape(want), ctx)
-        assert(sorted(got) == sorted(want), ctx)
-        (dup.schema, sorted(dup))
-      }
-      assert(answers.distinct.size == 1, s"sample $i: $split $q")
+      check("the last fold", want, gate = Some(0L))
       // compact makes v2; v1 stays retained and answers the same corpus
       SearchIndex.compact(spark, dir, "s")
       check("compact", want)
       check("compact, at v1", want, Some(1))
-      assert(sorted(run(qt)) == answers.head._2, s"sample $i: $split $q")
     }
   }
 }
